@@ -1621,8 +1621,9 @@ def q_tokens_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sketch facts ship as Spark-verified bound flags: cuckoo FN
     (zero, guaranteed — no false negatives), observed FP vs the
     analytic bound, HLL distinct, CMS point frequency, KLL n_tok
-    median. bench.py runs the same pipeline over the large synthetic
-    tokens_table (sources/tokens.py) for the throughput headline."""
+    median. perfbench's ``build`` workload (``python3 perfbench/run.py
+    --workload build``) times the same sketch calls over the large
+    synthetic tokens_table (sources/tokens.py)."""
     from cuckoofilter_spark.ops.text import md5hex_to_le64, words
     from cuckoofilter_spark.sketch.aggregates import cms_sketch, hll_sketch, kll_sketch
     from cuckoofilter_spark.sketch.membership import cuckoo_build, cuckoo_contains_col
@@ -1879,7 +1880,7 @@ def oracle_sql() -> dict[str, str]:
                        CAST(md5_number_upper(CAST(doc_id AS VARCHAR)
                                              || '#prio')
                             & 4503599627370495 AS BIGINT) | 1 AS u
-                FROM documents),
+                FROM documents WHERE doc_id IS NOT NULL),
             s AS (SELECT source, doc_id, w, (u * 1024) // w AS s FROM h),
             r AS (SELECT source, doc_id, w, s,
                          row_number() OVER (PARTITION BY source
@@ -1900,7 +1901,7 @@ def oracle_sql() -> dict[str, str]:
                        CAST(md5_number_upper(CAST(doc_id AS VARCHAR)
                                              || '#prio')
                             & 4503599627370495 AS BIGINT) | 1 AS u
-                FROM documents),
+                FROM documents WHERE doc_id IS NOT NULL),
             s AS (SELECT source, doc_id, w, (u * 1024) // w AS s FROM h),
             r AS (SELECT source, w, s,
                          row_number() OVER (PARTITION BY source

@@ -409,6 +409,10 @@ def embedding_centroids(emb: DataFrame, vec_col: str, group_col: str,
       var_micro2 = (n * sum(xm^2) - sum(xm)^2) div n^2 — the
       population variance of the quantized coordinates.
 
+    A NULL coordinate still counts toward its cell's n_vecs but adds 0
+    to the sums, so it pulls the centroid toward 0 (the DuckDB oracle
+    counts it the same way). A NULL or empty vector adds no row.
+
     Engine-reproducibility: float sums are order-dependent (Spark's
     partial aggregation order is nondeterministic), so each coordinate
     is quantized ONCE to an integer (round of the same IEEE double in

@@ -10,7 +10,7 @@ event log (``spark.eventLog.enabled`` — one JSON object per listener
 event, a stable public format since Spark 1.x), which needs no UI, no
 REST server, and no py4j callback listener.
 
-Usage (what ``bench.py`` does)::
+Usage::
 
     conf = event_log_conf(log_dir)          # pass to get_spark(extra_conf=)
     ... run the job ...

@@ -1,8 +1,9 @@
 """SparkSession factory with the configs this library assumes.
 
-Local defaults target the sandbox (local[N] single JVM); on a real
-cluster only the master/shuffle-partition settings change — the
-library's operators depend on nothing here except Arrow being enabled.
+Local defaults fit the host: local[N] over the CPUs this process may
+use, and a driver heap of half the physical memory. On a real cluster
+only the master/shuffle-partition settings change — the library's
+operators depend on nothing here except Arrow being enabled.
 """
 
 from __future__ import annotations
@@ -15,10 +16,23 @@ from pyspark.sql import SparkSession
 _PKG_ROOT = str(pathlib.Path(__file__).resolve().parent.parent)
 
 
+def default_cores() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
+def default_driver_mem() -> str:
+    """``$SPARK_DRIVER_MEM``, else half of physical memory, at most 32g."""
+    half_mb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+               // 2) >> 20
+    return os.environ.get("SPARK_DRIVER_MEM") or f"{min(half_mb, 32 << 10)}m"
+
+
 def get_spark(app: str = "cuckoofilter-spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or cores
     # Python workers must import this package regardless of driver cwd.
     # Local-mode stand-in for `spark-submit --py-files cuckoofilter_spark.zip`.
@@ -51,10 +65,10 @@ def get_spark(app: str = "cuckoofilter-spark", cores: int | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.executorEnv.PYTHONPATH", worker_pp)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", default_driver_mem())
         .config("spark.ui.enabled", "false")
     )
-    # e.g. spark.eventLog.* for the bench's task-metrics capture
+    # e.g. spark.eventLog.* for the task-metrics capture
     # (plans/metrics.py) — session-level knobs only, never operator deps
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, str(v))

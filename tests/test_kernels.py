@@ -3,6 +3,8 @@
 - e2e insert-all/contain-all with FPR measurement (example/test.cc:30-58)
 - serialize round-trip (example/test1.cc:38-74)
 - AltIndex involution property (cuckoofilter.h:194 assert)
+- fill-to-failure space/FPR (conext-table3.cc) and lookup rate flat in
+  the hit fraction (conext-figure5.cc)
 - adversarial sequential/rotated keys (bulk-insert-and-query.cc:747-767)
 - merge associativity/commutativity (north rule; gqf.c:2428-2475 pattern)
 - statistical bounds for Bloom/HLL/CMS/KLL (published bounds)
@@ -140,6 +142,49 @@ def test_occupancy_before_failure():
     stream = splitmix64_seq(5, int(f.size_in_tags() * 1.05))
     f.add_many(stream, raise_on_full=False)
     assert f.load_factor() >= 0.94
+
+
+@pytest.mark.parametrize("kwargs,paper_bits_per_item", [
+    (dict(bits=12), 12.60),
+    (dict(bits=13, mode="semisort"), 12.59),
+], ids=["cf12", "sscf13"])
+def test_table3_fill_to_failure(kwargs, paper_bits_per_item):
+    """conext-table3.cc: Add until the first NotEnoughSpace, then check
+    load, bits/item and the FPR over 1M absent keys. The capacity sits
+    just under the 0.94 doubling threshold (cuckoofilter.h:91-100), so
+    the table is exactly 2^19 slots. Paper: 12.60 / 12.59 bits/item."""
+    f = CuckooFilter.create(492_000, seed=0x5EED, **kwargs)
+    assert f.size_in_tags() == 1 << 19
+    for part in np.split(splitmix64_seq(1, 1 << 20), 16):
+        if f.add_many(part, raise_on_full=False) < part.size:
+            break
+    assert f.load_factor() >= 0.95
+    assert f.bits_per_item() <= paper_bits_per_item
+    fpr = f.contains_many(splitmix64_seq(10**12, 1_000_000)).mean()
+    assert fpr <= f.expected_fpp()
+
+
+def test_figure5_lookup_rate_flat_in_hit_fraction():
+    """conext-figure5.cc: lookup throughput on a 1M-key cf12 is flat
+    from 0% to 100% positive probes. Fractions are interleaved and each
+    keeps its best of 7 reps, so a host stall hits no single point."""
+    import time
+
+    n = 1_000_000
+    keys = splitmix64_seq(1, n)
+    f = CuckooFilter.create(n, bits=12, seed=0x5EED)
+    f.add_many(keys)
+    absent = splitmix64_seq(10**12, n)
+    rng = np.random.default_rng(0)
+    probes = [np.where(rng.random(n) < pct / 100, keys, absent)
+              for pct in (0, 25, 50, 75, 100)]
+    best = [float("inf")] * len(probes)
+    for _ in range(7):
+        for i, p in enumerate(probes):
+            t0 = time.perf_counter()
+            f.contains_many(p)
+            best[i] = min(best[i], time.perf_counter() - t0)
+    assert min(best) / max(best) >= 0.7, best
 
 
 def test_not_enough_space_raises():

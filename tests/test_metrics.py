@@ -78,13 +78,28 @@ def test_event_log_conf_shape(tmp_path):
 def test_task_metrics_capture_live(tmp_path):
     """End-to-end: an event-logged session running a real build+probe
     yields nonzero counters. Subprocess-isolated (see module docstring);
-    the tiny sf keeps it to one small build."""
+    1k docs keep it to one small build."""
     script = tmp_path / "drive.py"
     script.write_text(f"""
 import json, sys
 sys.path.insert(0, {ROOT!r})
-import bench
-m = bench.task_metrics_suite(sf=0.0005, cpus=4)
+from cuckoofilter_spark.plans.metrics import event_log_conf, parse_event_log
+from cuckoofilter_spark.session import get_spark
+from cuckoofilter_spark.sketch.membership import (cuckoo_build,
+                                                  cuckoo_contains_col)
+from cuckoofilter_spark.sources.tokens import tokens_table
+
+vocab = 50_000
+spark = get_spark("metrics-live", cores=4,
+                  extra_conf=event_log_conf({str(tmp_path / "ev")!r}))
+toks = tokens_table(spark, 1_000, seed=42, vocab_size=vocab)
+cf = cuckoo_build(toks, "tokens", capacity=vocab, bits=12, seed=0x5EED,
+                  num_shards=32, stable=True)
+fp = spark.range(vocab, vocab + 20_000_000).where(
+    cuckoo_contains_col(spark, cf, "id")).count()
+spark.stop()
+m = parse_event_log({str(tmp_path / "ev")!r})
+m["probe_false_positives"] = fp
 print(json.dumps(m))
 """, encoding="utf-8")
     env = dict(os.environ)

@@ -1,5 +1,7 @@
 """Round-5 surfaces: shared near-dup pair graph memo, GCS multi-code
-windowed decode, packing column-collision guards, bench summary line."""
+windowed decode, packing column-collision guards."""
+
+import math
 
 import numpy as np
 import pytest
@@ -105,45 +107,6 @@ def test_packing_column_collision_guards(spark):
             .withColumn("s", F.lit("a")), "id", "s")
     # clean frames still flow
     assert hash_split(spark.range(4), "id", [("a", 1)], den=1).count() == 4
-
-
-# ---------------------------------------------------------------------------
-# bench: the driver-tail summary line stays compact and parseable
-# ---------------------------------------------------------------------------
-def test_bench_summary_line_fits_tail_capture():
-    """The driver json-parses its last ~2000 captured stdout chars;
-    bench.py must end with one compact JSON object (VERDICT r4 #4).
-    Reconstruct the summary from the committed BENCH_DETAIL.json the
-    same way bench.__main__ does and bound its size."""
-    import json
-    import os
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    res = json.load(open(os.path.join(here, "BENCH_DETAIL.json")))
-    q = res.get("queries") or {}
-    qsec = {k: v for k, v in q.items() if isinstance(v, (int, float))}
-    slowest = dict(sorted(qsec.items(), key=lambda kv: -kv[1])[:5])
-    summary = {
-        "metric": res["metric"],
-        "value": res["value"],
-        "unit": res["unit"],
-        "sf": res["sf"],
-        "cpus": res["cpus"],
-        "n_queries": len(q),
-        "queries_total_sec": round(sum(qsec.values()), 2),
-        "queries": {k: round(v, 2) for k, v in slowest.items()},
-        "queries_note": f"slowest 5 of {len(q)}; full per-query "
-                        f"table in BENCH_DETAIL.json",
-        "cf_probes_per_sec": res["build"].get("cf_probes_per_sec"),
-        "total_bench_sec": res["total_bench_sec"],
-        "loadavg_start": res["loadavg_start"],
-        "loadavg_end": res["loadavg_end"],
-        "detail_file": "BENCH_DETAIL.json",
-    }
-    line = json.dumps(summary)
-    assert len(line) < 1500, f"summary line {len(line)} chars — may " \
-        "truncate inside the driver's 2000-char tail capture"
-    assert json.loads(line)["value"] == res["value"]
 
 
 # ---------------------------------------------------------------------------
@@ -695,10 +658,12 @@ def test_priority_sum_estimate_matches_manual(spark):
     samp = priority_sample(df, "id", "wgt", "grp", k=64).collect()
     s_k1 = next(r["_s"] for r in samp if r["grp"] == "s" and r["rk"] == 65)
     tau = float(1 << 62) / float(s_k1)
-    want = sum(int(round(max(float(r["_w"]), tau) * 1e6))
+    # the op rounds HALF_UP; every value here is positive, so
+    # floor(x + 0.5) matches it (Python's round() is half-to-even)
+    want = sum(math.floor(max(float(r["_w"]), tau) * 1e6 + 0.5)
                for r in samp if r["grp"] == "s" and r["in_sample"])
     assert got["s"]["est_micro"] == want
-    assert got["s"]["tau_micro"] == int(round(tau * 1e6))
+    assert got["s"]["tau_micro"] == math.floor(tau * 1e6 + 0.5)
     assert got["s"]["n_rows"] == 64
     exact = sum(w for _, w, g in rows if g == "s")
     assert abs(got["s"]["est_micro"] / 1e6 - exact) / exact < 0.15
