@@ -20,8 +20,8 @@ from ..kernels.cms import CountMinSketch
 from ..kernels.hll import HyperLogLog
 from ..kernels.kll import KLLSketch
 from ..kernels.mg import MisraGries
-from .udaf import aggregate_sketch, grouped_aggregate_sketch, keys_to_u64, \
-    require_key_col, tokens_to_u64
+from .udaf import aggregate_sketch, drop_archive_finders, grouped_aggregate_sketch, \
+    keys_to_u64, require_key_col, tokens_to_u64
 
 
 def _series_to_keys(s: pd.Series, is_array: bool) -> np.ndarray:
@@ -91,6 +91,7 @@ def grouped_hll_distinct(df: DataFrame, group_col: str, col: str, p: int = 14,
     """Per-group distinct-count estimates: ``(group, est_distinct)``."""
     @F.pandas_udf(T.DoubleType())
     def est(b: pd.Series) -> pd.Series:
+        drop_archive_finders()
         return b.map(lambda x: HyperLogLog.from_bytes(bytes(x)).estimate())
 
     return (grouped_hll_sketch(df, group_col, col, p=p, seed=seed)
@@ -117,6 +118,7 @@ def grouped_kll_quantiles(df: DataFrame, group_col: str, col: str,
     qlist = [float(q) for q in qs]
 
     def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         for pdf in batches:
             for g, blob in zip(pdf["g"], pdf["blob"]):
                 sk = KLLSketch.from_bytes(bytes(blob))
@@ -155,6 +157,7 @@ def grouped_mg_topk(df: DataFrame, group_col: str, col: str, k: int = 256,
     gtype = df.schema[group_col].dataType.simpleString()
 
     def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         for pdf in batches:
             for g, blob in zip(pdf["g"], pdf["blob"]):
                 mg = MisraGries.from_bytes(bytes(blob))

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from ..kernels.gcs import GcsFilter
-from .udaf import keys_to_u64, require_key_col
+from .udaf import drop_archive_finders, keys_to_u64, require_key_col
 
 
 def gcs_build(df: DataFrame, col: str, log2fpp: int = 10, log2bucket: int = 4,
@@ -48,6 +48,7 @@ def gcs_build(df: DataFrame, col: str, log2fpp: int = 10, log2bucket: int = 4,
         return proto
 
     def fingerprint(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         f = GcsFilter(log2fpp, log2bucket, seed, layout=layout)
         for pdf in batches:
             b, v = f._fingerprints(keys_to_u64(pdf["k"]), n)
@@ -57,6 +58,7 @@ def gcs_build(df: DataFrame, col: str, log2fpp: int = 10, log2bucket: int = 4,
     fps = uniq.mapInPandas(fingerprint, schema="bucket long, value long, grp long")
 
     def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_archive_finders()
         f = GcsFilter(log2fpp, log2bucket, seed, layout=layout)
         grp = int(pdf["grp"].iloc[0])
         lo = grp * buckets_per_group
@@ -106,6 +108,7 @@ def gcs_contains_col(spark: SparkSession, filt: GcsFilter, col) -> Column:
 
     @F.pandas_udf(T.BooleanType())
     def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_archive_finders()
         local = GcsFilter.from_bytes(bc.value)
         for s in it:
             yield pd.Series(local.contains_many(keys_to_u64(s)))

@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types a
 
 from ..kernels.cuckoo import CuckooFilter
 from ..kernels.hashing import U64, xxhash64_long
-from .udaf import keys_to_u64
+from .udaf import drop_archive_finders, keys_to_u64
 
 _CHUNK = 1 << 18  # all kernels chunked: sandbox DRAM bandwidth saturates fast
 
@@ -198,14 +198,16 @@ def _sharded_build_blobs(df: DataFrame, col: str, num_shards: int,
     kernel's own duplicate handling.
     """
     from ..kernels.hashing import simple_mix_split
-    from .udaf import require_key_col, tokens_to_u64
+    from .udaf import _null_safe_key, require_key_col, tokens_to_u64
 
     is_array = require_key_col(df, col)
-    base = df.select(F.col(col).alias("k")).where(F.col(col).isNotNull())
+    kc, nn = _null_safe_key(df, col)
+    base = df.where(nn).select(kc.alias("k"))
     transform = (None if hash_seed is None
                  else (lambda seg: simple_mix_split(seg, hash_seed)))
 
     def partial_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         parts = [tokens_to_u64(pdf["k"]) if is_array else keys_to_u64(pdf["k"])
                  for pdf in batches]
         keys = (np.concatenate(parts) if parts else np.empty(0, dtype=np.uint64))
@@ -219,6 +221,7 @@ def _sharded_build_blobs(df: DataFrame, col: str, num_shards: int,
     rededupe = dedupe and hash_seed is None
 
     def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_archive_finders()
         keys = np.concatenate(
             [np.frombuffer(b, dtype=np.uint64) for b in pdf["keys"]])
         if rededupe:
@@ -385,6 +388,7 @@ def cuckoo_contains_col(spark: SparkSession, filt: ShardedCuckooFilter, col) -> 
 
     @F.pandas_udf(T.BooleanType())
     def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_archive_finders()
         from ..kernels import cuckoo as _ck
 
         local = _cached_probe(
@@ -430,12 +434,14 @@ def distinct_keys_u64(df: DataFrame, col: str, num_shards: int = 64) -> np.ndarr
     receives exactly the distinct key set — the same contract as a
     broadcast-join build side. Returned sorted.
     """
-    from .udaf import require_key_col, tokens_to_u64
+    from .udaf import _null_safe_key, require_key_col, tokens_to_u64
 
     is_array = require_key_col(df, col)
-    base = df.select(F.col(col).alias("k")).where(F.col(col).isNotNull())
+    kc, nn = _null_safe_key(df, col)
+    base = df.where(nn).select(kc.alias("k"))
 
     def part_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         parts = [tokens_to_u64(pdf["k"]) if is_array else keys_to_u64(pdf["k"])
                  for pdf in batches]
         keys = (np.unique(np.concatenate(parts)) if parts
@@ -445,6 +451,7 @@ def distinct_keys_u64(df: DataFrame, col: str, num_shards: int = 64) -> np.ndarr
                             "keys": blobs})
 
     def uniq_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_archive_finders()
         uniq = np.unique(np.concatenate(
             [np.frombuffer(b, dtype=np.uint64) for b in pdf["keys"]]))
         return pd.DataFrame({"keys": [uniq.tobytes()]})
@@ -550,6 +557,7 @@ def xor_sharded_contains_col(spark: SparkSession, filt: ShardedXorFilter,
 
     @F.pandas_udf(T.BooleanType())
     def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_archive_finders()
         local = _cached_probe(bc, lambda v: ShardedXorFilter(v[0], v[1]))
         for s in it:
             yield pd.Series(local.contains_u64(keys_to_u64(s)))
@@ -710,6 +718,7 @@ def _contains_sharded_cogroup(df: DataFrame, col: str, filt,
     colname = col
 
     def probe_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        drop_archive_finders()
         out = left.drop(columns=["_shard"])
         if len(left) and len(right):
             fn = _SHARD_PROBES[kind]
@@ -762,6 +771,7 @@ def _blob_method_col(spark: SparkSession, obj, col, cls,
 
     @F.pandas_udf(rettype)
     def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_archive_finders()
         local = _cached_probe(bc, cls.from_bytes)
         fn = getattr(local, method)
         for s in it:
@@ -958,6 +968,7 @@ def shingle_contains_col(spark: SparkSession, filt: ShardedShingleFilter,
 
     @F.pandas_udf(T.BooleanType())
     def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_archive_finders()
         local = _cached_probe(bc, _ShingleFlatProbe)
         for s in it:
             yield pd.Series(local.contains_u64(keys_to_u64(s)))
@@ -1068,6 +1079,7 @@ def tail_contains_col(spark: SparkSession, filt: ShardedTailFilter,
 
     @F.pandas_udf(T.BooleanType())
     def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_archive_finders()
         local = _cached_probe(bc, lambda v: ShardedTailFilter(v[0], v[1]))
         for s in it:
             yield pd.Series(local.contains_u64(keys_to_u64(s)))
@@ -1163,6 +1175,7 @@ def crate_contains_col(spark: SparkSession, filt: ShardedCrateFilter,
 
     @F.pandas_udf(T.BooleanType())
     def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_archive_finders()
         local = _cached_probe(bc, lambda v: ShardedCrateFilter(v[0], v[1]))
         for s in it:
             yield pd.Series(local.contains_u64(keys_to_u64(s)))

@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 
 from ..kernels.dysect import QuotientMultimap
 from .membership import _cached_probe, shard_of
-from .udaf import keys_to_u64, require_key_col
+from .udaf import drop_archive_finders, keys_to_u64, require_key_col
 
 
 class ShardedMultimap:
@@ -110,6 +110,7 @@ def multimap_build(df: DataFrame, key_col: str, val_col: str,
             .where(F.col(key_col).isNotNull() & F.col(val_col).isNotNull()))
 
     def partial_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         ks, vs = [], []
         for pdf in batches:
             ks.append(keys_to_u64(pdf["k"]))
@@ -133,6 +134,7 @@ def multimap_build(df: DataFrame, key_col: str, val_col: str,
     packed = base.mapInPandas(partial_shards, schema="shard int, pairs binary")
 
     def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_archive_finders()
         inter = np.concatenate(
             [np.frombuffer(b, dtype=np.uint64) for b in pdf["pairs"]])
         mm = QuotientMultimap.from_pairs(inter[0::2], inter[1::2])
@@ -158,6 +160,7 @@ def multimap_values_col(spark: SparkSession, mm: ShardedMultimap,
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_archive_finders()
         local = _cached_probe(bc, ShardedMultimap)
         for s in it:
             if not len(s):
@@ -201,6 +204,7 @@ def multimap_lookup_sharded(df: DataFrame, col: str, mm: ShardedMultimap,
     colname = col
 
     def lookup_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        drop_archive_finders()
         left = left.drop(columns=["_shard"])
         if not len(left) or not len(right):
             out = left.iloc[0:0].copy()
@@ -225,6 +229,7 @@ def multimap_count_col(spark: SparkSession, mm: ShardedMultimap,
 
     @F.pandas_udf(T.LongType())
     def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_archive_finders()
         local = _cached_probe(bc, ShardedMultimap)
         for s in it:
             yield pd.Series(local.count_many(keys_to_u64(s)))

@@ -188,7 +188,7 @@ def contains_store(df: DataFrame, col: str, store: ShardBlobStore | str,
     if isinstance(store, str):
         store = ShardBlobStore.open(store)
     from .membership import shard_col
-    from .udaf import keys_to_u64
+    from .udaf import drop_archive_finders, keys_to_u64
 
     path, store_id, kind = store.path, store.store_id, store.kind
     seed, num_shards = store.seed, store.num_shards
@@ -198,6 +198,7 @@ def contains_store(df: DataFrame, col: str, store: ShardBlobStore | str,
 
     @F.pandas_udf(T.BooleanType())
     def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_archive_finders()
         from ..kernels.hashing import simple_mix_split
         from .membership import shard_of
 

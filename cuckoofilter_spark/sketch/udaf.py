@@ -29,6 +29,9 @@ matter here (no groupBy on data keys — partials are positional).
 from __future__ import annotations
 
 import math
+import os
+import sys
+import zipimport
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -36,6 +39,35 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 BLOB_SCHEMA = "pid long, blob binary"
+
+
+def drop_archive_finders() -> None:
+    """Drop Spark's own zip-archive finders from the import cache.
+
+    Before every task a reused Python worker calls
+    ``importlib.invalidate_caches()`` (pyspark ``setup_spark_files``).
+    On CPython 3.11 every cached ``zipimporter`` then re-reads its whole
+    archive directory: a worker holds about a dozen over ``pyspark.zip``
+    and two over the spark-core jar, ~0.2 cpu-s per task — more than a
+    small sketch partial's data work. A dropped finder is re-created on
+    the next import from its path out of zipimport's directory cache, so
+    imports keep working. Archives shipped with the job (``--py-files``,
+    ``addPyFile``) live under the SparkFiles root and keep their
+    finders, so the per-task invalidation still covers them. With no
+    root set, every zip finder is dropped.
+
+    Call it as the first statement of each library Python worker
+    function (a plain call: a decorator could hide the type hints an
+    iterator ``pandas_udf`` takes its UDF type from).
+    """
+    from pyspark import SparkFiles
+
+    root = SparkFiles._root_directory if SparkFiles._is_running_on_worker else None
+    keep = os.path.join(os.path.abspath(root), "") if root else None
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and not (
+                keep and os.path.abspath(finder.archive).startswith(keep)):
+            sys.path_importer_cache.pop(path, None)
 
 
 def _null_safe_key(df: DataFrame, col: str):
@@ -147,6 +179,7 @@ def aggregate_sketch(
     proj = df.where(nn).select(kc.alias("k"))
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         kern = make()
         pid = 0
         for pdf in batches:
@@ -167,6 +200,7 @@ def aggregate_sketch(
     num_partials = df.rdd.getNumPartitions()
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_archive_finders()
         kern = from_bytes(bytes(pdf["blob"].iloc[0]))
         for b in pdf["blob"].iloc[1:]:
             kern = merge(kern, from_bytes(bytes(b)))
@@ -245,6 +279,7 @@ def grouped_aggregate_sketch(
                                kc.alias("k"))
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         kerns: dict = {}
         for pdf in batches:
             for g, sub in pdf.groupby("g", dropna=False, sort=False):
@@ -261,6 +296,7 @@ def grouped_aggregate_sketch(
     blob_df = proj.mapInPandas(partials, schema=schema)
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_archive_finders()
         kern = from_bytes(bytes(pdf["blob"].iloc[0]))
         for b in pdf["blob"].iloc[1:]:
             kern = merge(kern, from_bytes(bytes(b)))

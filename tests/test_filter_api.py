@@ -2,6 +2,7 @@
 family builds through one entry and probes through one dispatcher,
 with zero false negatives on real parquet keys."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -78,3 +79,23 @@ def test_array_token_column_all_families(spark):
         rows = probe.withColumn("hit", contains_col(spark, filt, "t")).collect()
         fn = [r.t for r in rows if r.t in want and not r.hit]
         assert not fn, (kind, fn[:5])
+
+
+@pytest.mark.parametrize("kind", ["cuckoo", "xor_sharded", "tail"])
+def test_sharded_build_ignores_null_array_elements(spark, kind):
+    """A NULL element inside an array cell is stripped JVM-side: it used
+    to reach pandas as NaN, and the int64 cast turned it into a garbage
+    INT64_MIN key (num_items 5, contains(INT64_MIN) True)."""
+    df = spark.createDataFrame([([1, None, 3],), ([4, 5],)], "k array<long>")
+    filt = build_filter(df, "k", kind=kind)
+    assert filt.num_items() == 4
+    keys = np.array([1, 3, 4, 5, -(2**63)], dtype=np.int64).view(np.uint64)
+    assert filt.contains_u64(keys).tolist() == [True] * 4 + [False]
+
+
+def test_distinct_keys_ignores_null_array_elements(spark):
+    from cuckoofilter_spark.sketch.membership import distinct_keys_u64
+
+    df = spark.createDataFrame([([1, None, 3],), ([4, 5],), (None,)],
+                               "k array<long>")
+    assert distinct_keys_u64(df, "k").view(np.int64).tolist() == [1, 3, 4, 5]
