@@ -1,0 +1,192 @@
+"""Golden blobs: every Spark sketch builder on fixed small inputs
+produces exactly these bytes (sha256 of ``to_bytes()``; sharded
+families hash their shard blobs in shard order).
+
+A refactor of the build engine must keep these values. Inputs use at
+most 16 partitions, so no tree level runs and every merge happens in a
+fixed order. The 40-partition cases run one tree level; they cover only
+kernels whose merge does not depend on order, and they must match the
+flat build over the same rows.
+"""
+
+import hashlib
+
+import pytest
+from pyspark.sql import functions as F
+
+from cuckoofilter_spark.sketch import aggregates as agg, membership as mem
+from cuckoofilter_spark.streaming.sketch_stream import \
+    GroupedStreamingSketchState
+
+
+def _sha(b: bytes) -> str:
+    return hashlib.sha256(b).hexdigest()[:16]
+
+
+def _table(spark, n: int, parts: int):
+    """``k`` long keys (negatives, duplicates), ``t`` array<bigint>
+    with NULL elements, ``v`` doubles, ``g`` a 5-value group."""
+    i = F.col("id")
+    k = (i * 2654435761) % 20011 - 10000
+    t = F.array(k, F.when(i % 13 == 0, F.lit(None)).otherwise(k * 3 + 1),
+                i % 97)
+    return spark.range(0, n, numPartitions=parts).select(
+        k.alias("k"), t.alias("t"), ((i * 37) % 1000 / 7.0).alias("v"),
+        (i % 5).alias("g"))
+
+
+@pytest.fixture(scope="module")
+def tables(spark):
+    return {"flat": _table(spark, 6000, 8),
+            "tree": _table(spark, 6000, 40),
+            "one": _table(spark, 6000, 1),
+            # 6 keys over 8-16 shards: most shards are empty
+            "tiny": _table(spark, 6, 3)}
+
+
+def _blob(x) -> str:
+    return _sha(b"".join(x.blobs) if hasattr(x, "blobs") else x.to_bytes())
+
+
+def _rows(df, *cols) -> str:
+    return _sha(repr(sorted(tuple(r[c] for c in cols)
+                            for r in df.collect())).encode())
+
+
+def _grouped_state(tmp, df, kind, **params) -> str:
+    st = GroupedStreamingSketchState(str(tmp), kind, "g",
+                                     "v" if kind == "kll" else "t", **params)
+    st.update(df, 0)
+    return _sha(b"".join(b.to_bytes() for _g, b in sorted(st.load().items())))
+
+
+# name -> (table, build(df, tmp_path) -> sha)
+BUILDS = {
+    "hll": ("flat", lambda d, _: _blob(agg.hll_sketch(d, "t", p=12, seed=7))),
+    "cms": ("flat", lambda d, _: _blob(
+        agg.cms_sketch(d, "t", eps=0.01, delta=0.05, seed=7))),
+    "kll": ("flat", lambda d, _: _blob(agg.kll_sketch(d, "v", k=64, seed=7))),
+    "mg": ("flat", lambda d, _: _blob(agg.mg_sketch(d, "t", k=32))),
+    "ams": ("flat", lambda d, _: _blob(
+        agg.ams_f2_sketch(d, "k", width=256, depth=3, seed=7))),
+    "cqf": ("flat", lambda d, _: _blob(
+        agg.cqf_sketch(d, "k", q=14, r=20, seed=7))),
+    "tdigest": ("flat", lambda d, _: _blob(agg.tdigest_sketch(d, "v", delta=50))),
+    "bloom": ("flat", lambda d, _: _blob(
+        agg.bloom_sketch(d, "k", capacity=8000, seed=7))),
+    "blocked_bloom": ("flat", lambda d, _: _blob(
+        agg.blocked_bloom_sketch(d, "t", capacity=8000, seed=7))),
+    "blocked_bloom64": ("flat", lambda d, _: _blob(
+        agg.blocked_bloom64_sketch(d, "k", capacity=8000, seed=7))),
+    "fixed_blocked_bloom": ("flat", lambda d, _: _blob(
+        agg.fixed_blocked_bloom_sketch(d, "k", capacity=8000, seed=7))),
+    "blocked_bloom_jvm": ("flat", lambda d, _: _blob(
+        agg.blocked_bloom_jvm_sketch(d, "k", capacity=8000, seed=7))),
+    "cuckoo": ("flat", lambda d, _: _blob(mem.cuckoo_build(
+        d, "t", capacity=20000, bits=12, seed=7, num_shards=16))),
+    "cuckoo_semisort": ("flat", lambda d, _: _blob(mem.cuckoo_build(
+        d, "k", capacity=8000, bits=13, seed=7, num_shards=8,
+        mode="semisort"))),
+    "cuckoo_stable": ("flat", lambda d, _: _blob(mem.cuckoo_build(
+        d, "k", capacity=8000, seed=7, num_shards=8, stable=True))),
+    "cuckoo_jvm": ("flat", lambda d, _: _blob(mem.cuckoo_jvm_build(
+        d, "k", capacity=8000, bits=16, seed=7, num_shards=8))),
+    "shingle": ("flat", lambda d, _: _blob(mem.shingle_build(
+        d, "k", capacity=8000, seed=7, num_shards=8))),
+    "tail": ("flat", lambda d, _: _blob(mem.tail_build(
+        d, "k", seed=7, num_shards=8))),
+    "crate": ("flat", lambda d, _: _blob(mem.crate_build(
+        d, "k", capacity=8000, seed=7, num_shards=8))),
+    "xor_sharded": ("flat", lambda d, _: _blob(mem.xor_build_sharded(
+        d, "k", seed=7, num_shards=8))),
+    "distinct_keys": ("flat", lambda d, _: _sha(
+        mem.distinct_keys_u64(d, "t").tobytes())),
+    # empty shards: the builder's empty-shard blob fills them
+    "tiny_cuckoo": ("tiny", lambda d, _: _blob(mem.cuckoo_build(
+        d, "k", seed=7, num_shards=16))),
+    "tiny_cuckoo_semisort": ("tiny", lambda d, _: _blob(mem.cuckoo_build(
+        d, "k", capacity=100, bits=13, seed=7, mode="semisort"))),
+    "tiny_cuckoo_stable": ("tiny", lambda d, _: _blob(mem.cuckoo_build(
+        d, "t", capacity=100, seed=7, stable=True))),
+    "tiny_cuckoo_jvm": ("tiny", lambda d, _: _blob(mem.cuckoo_jvm_build(
+        d, "k", capacity=100, seed=7, num_shards=16))),
+    "tiny_shingle": ("tiny", lambda d, _: _blob(mem.shingle_build(
+        d, "k", capacity=100, seed=7, num_shards=16))),
+    "tiny_tail": ("tiny", lambda d, _: _blob(mem.tail_build(
+        d, "k", seed=7, num_shards=16))),
+    "tiny_crate": ("tiny", lambda d, _: _blob(mem.crate_build(
+        d, "k", capacity=100, seed=7, num_shards=16))),
+    "tiny_xor_sharded": ("tiny", lambda d, _: _blob(mem.xor_build_sharded(
+        d, "k", seed=7, num_shards=16))),
+    "tiny_distinct_keys": ("tiny", lambda d, _: _sha(
+        mem.distinct_keys_u64(d, "k").tobytes())),
+    # grouped builds; merge order is fixed by one input partition unless
+    # the kernel's merge does not depend on it (HLL, CMS)
+    "grouped_hll": ("flat", lambda d, _: _rows(
+        agg.grouped_hll_sketch(d, "g", "t", p=10, seed=7), "g", "blob")),
+    "grouped_kll": ("one", lambda d, _: _rows(
+        agg.grouped_kll_quantiles(d, "g", "v", qs=(0.1, 0.5, 0.9), k=32,
+                                  seed=7), "g", "q", "value")),
+    "grouped_mg": ("one", lambda d, _: _rows(
+        agg.grouped_mg_topk(d, "g", "t", k=16, topn=5), "g", "key", "est")),
+    "grouped_state_kll": ("one", lambda d, tmp: _grouped_state(
+        tmp, d, "kll", k=32, seed=7)),
+    "grouped_state_cms": ("flat", lambda d, tmp: _grouped_state(
+        tmp, d, "cms", eps=0.01, delta=0.05, seed=7)),
+}
+
+# One tree level (40 partials, fanout 16): kernels whose merge does not
+# depend on order give the flat build's bytes.
+TREE = ("hll", "cms", "ams", "cqf", "bloom", "blocked_bloom",
+        "blocked_bloom64", "fixed_blocked_bloom", "blocked_bloom_jvm")
+
+GOLDEN = {
+    "ams": "39839a9b929a467d",
+    "blocked_bloom": "bd2c3ffb49e68b50",
+    "blocked_bloom64": "106a6f394dcc370f",
+    "blocked_bloom_jvm": "1c4c0036238e0b78",
+    "bloom": "ba6b726d10b8eb04",
+    "cms": "8424a8db5d0fb8e2",
+    "cqf": "bc62a2e68c4db888",
+    "crate": "6d88f3d60e62bbee",
+    "cuckoo": "5e3f93d091ea4042",
+    "cuckoo_jvm": "9493568541d5fb6b",
+    "cuckoo_semisort": "b71e7c416aac4095",
+    "cuckoo_stable": "a711ad0293a467dd",
+    "distinct_keys": "7410a379d8015d9b",
+    "fixed_blocked_bloom": "f5dbffdbadbb6f4b",
+    "grouped_hll": "759ac2e53ae8e4a2",
+    "grouped_kll": "009b921843a15d42",
+    "grouped_mg": "9c2d86bd7325cf84",
+    "grouped_state_cms": "adfe03e29d7c4bd0",
+    "grouped_state_kll": "fafd887e156e12c2",
+    "hll": "0fa9f5c522dbfb67",
+    "kll": "3c57720d2553cfd2",
+    "mg": "8de60a05c732111d",
+    "shingle": "6d8165096d1f51ce",
+    "tail": "e358e6ad275b2556",
+    "tdigest": "87bb19ab053ff83e",
+    "tiny_crate": "db1727f629d511af",
+    "tiny_cuckoo": "e79a50e041bae745",
+    "tiny_cuckoo_jvm": "f08d41718a201a31",
+    "tiny_cuckoo_semisort": "07a6c499dca6de88",
+    "tiny_cuckoo_stable": "932d28759eac2a01",
+    "tiny_distinct_keys": "afd6878ea9b5a001",
+    "tiny_shingle": "efa4c76e6ef24667",
+    "tiny_tail": "7d6ea4fac90033f3",
+    "tiny_xor_sharded": "d9d4c40894c71a63",
+    "xor_sharded": "5ea00210d3777480",
+}
+
+
+@pytest.mark.parametrize("name", sorted(BUILDS))
+def test_golden_blob(spark, tables, tmp_path, name):
+    table, build = BUILDS[name]
+    assert build(tables[table], tmp_path) == GOLDEN[name]
+
+
+@pytest.mark.parametrize("name", TREE)
+def test_golden_blob_tree_merge(spark, tables, tmp_path, name):
+    _, build = BUILDS[name]
+    assert tables["tree"].rdd.getNumPartitions() == 40
+    assert build(tables["tree"], tmp_path) == GOLDEN[name]
