@@ -1,9 +1,10 @@
 """Column-level sketch aggregates: HLL, count-min, KLL, Bloom.
 
-Thin wrappers binding the numpy kernels into the partial/tree-merge
-protocol of ``udaf.aggregate_sketch``. Each accepts either a scalar
-integer key column or a pre-tokenized ``array<int>`` column (flattened
-inside the Arrow batch — the 10^12-sequence token table never pays a
+Each builder hands ``udaf.aggregate_sketch`` (or its grouped form) a
+kernel factory and the kernel class; the engine derives update, merge
+and decode from the kernel. Key sketches accept either a scalar integer
+key column or a pre-tokenized ``array<int>`` column (flattened inside
+the Arrow batch — the 10^12-sequence token table never pays a
 Spark-side explode, which would multiply shuffle rows by ~250x).
 """
 
@@ -20,54 +21,25 @@ from ..kernels.cms import CountMinSketch
 from ..kernels.hll import HyperLogLog
 from ..kernels.kll import KLLSketch
 from ..kernels.mg import MisraGries
-from .udaf import aggregate_sketch, drop_archive_finders, grouped_aggregate_sketch, \
-    keys_to_u64, require_key_col, tokens_to_u64
+from .udaf import aggregate_sketch, drop_archive_finders, grouped_aggregate_sketch
 
 
-def _series_to_keys(s: pd.Series, is_array: bool) -> np.ndarray:
-    return tokens_to_u64(s) if is_array else keys_to_u64(s)
-
-
-def _is_array_col(df: DataFrame, col: str) -> bool:
-    return require_key_col(df, col)
-
-
-def hll_sketch(df: DataFrame, col: str, p: int = 14, seed: int = 0x5EED,
-               fanout: int = 16) -> HyperLogLog:
+def hll_sketch(df: DataFrame, col: str, p: int = 14,
+               seed: int = 0x5EED) -> HyperLogLog:
     """Distributed distinct-count sketch (count_distinct analogue,
     bulk-insert-and-query.cc:456-468, as a mergeable aggregate)."""
-    arr = _is_array_col(df, col)
-    return aggregate_sketch(
-        df, col,
-        make=lambda: HyperLogLog(p=p, seed=seed),
-        update=lambda k, s: k.add_many(_series_to_keys(s, arr)),
-        merge=HyperLogLog.merge,
-        from_bytes=HyperLogLog.from_bytes,
-        fanout=fanout,
-    )
+    return aggregate_sketch(df, col, lambda: HyperLogLog(p=p, seed=seed),
+                            HyperLogLog)
 
 
-def mg_sketch(df: DataFrame, col: str, k: int = 256, fanout: int = 16,
-              final_compact: bool = False) -> MisraGries:
+def mg_sketch(df: DataFrame, col: str, k: int = 256) -> MisraGries:
     """Distributed Misra-Gries heavy hitters (the deterministic top-k
     companion to ``cms_sketch``: exact keys, guaranteed undercount
     bound). Per-partition compaction keeps each partial at <= k
     counters; the tree merge is the exact sparse sum (associative), so
     the result is partition-order independent and holds at most
-    ``num_partials * k`` entries. ``final_compact=True`` re-bounds the
-    returned summary to k entries (adds one more decrement step)."""
-    arr = _is_array_col(df, col)
-    out = aggregate_sketch(
-        df, col,
-        make=lambda: MisraGries(k=k),
-        update=lambda s, col_s: s.add_many(_series_to_keys(col_s, arr)),
-        merge=MisraGries.merge,
-        from_bytes=MisraGries.from_bytes,
-        fanout=fanout,
-    )
-    if final_compact:
-        out.compact()
-    return out
+    ``num_partials * k`` entries (``compact()`` re-bounds it to k)."""
+    return aggregate_sketch(df, col, lambda: MisraGries(k=k), MisraGries)
 
 
 def grouped_hll_sketch(df: DataFrame, group_col: str, col: str, p: int = 14,
@@ -76,13 +48,8 @@ def grouped_hll_sketch(df: DataFrame, group_col: str, col: str, p: int = 14,
     ``group_col`` value (the corpus-accounting axis: distinct tokens
     per source / language / date shard). Map-side combine — shuffle
     carries at most partitions x groups blobs, never rows."""
-    arr = _is_array_col(df, col)
     return grouped_aggregate_sketch(
-        df, group_col, col,
-        make=lambda: HyperLogLog(p=p, seed=seed),
-        update=lambda k, s: k.add_many(_series_to_keys(s, arr)),
-        merge=HyperLogLog.merge,
-        from_bytes=HyperLogLog.from_bytes,
+        df, group_col, col, lambda: HyperLogLog(p=p, seed=seed), HyperLogLog,
     ).withColumnRenamed("g", group_col)
 
 
@@ -104,16 +71,8 @@ def grouped_kll_quantiles(df: DataFrame, group_col: str, col: str,
     """Per-group KLL quantiles over a numeric column:
     ``(group, q, value)`` — the sequence-length-distribution-per-source
     question. Same blob-only shuffle as grouped_hll_sketch."""
-    def upd(kern, s: pd.Series):
-        kern.add_many(s.to_numpy(dtype=np.float64, na_value=np.nan))
-
     blobs = grouped_aggregate_sketch(
-        df, group_col, col,
-        make=lambda: KLLSketch(k=k, seed=seed),
-        update=upd,
-        merge=KLLSketch.merge,
-        from_bytes=KLLSketch.from_bytes,
-    )
+        df, group_col, col, lambda: KLLSketch(k=k, seed=seed), KLLSketch)
     gtype = df.schema[group_col].dataType.simpleString()
     qlist = [float(q) for q in qs]
 
@@ -140,20 +99,9 @@ def grouped_mg_topk(df: DataFrame, group_col: str, col: str, k: int = 256,
     the ``topn`` largest surviving counters per group (``est`` is the
     guaranteed undercount; true count is in ``[est, est + n_g/(k+1)]``).
     Compact-after-merge bounds every shuffled blob to k entries."""
-    arr = _is_array_col(df, col)
-
-    def fin(kern):
-        kern.compact()
-        return kern
-
     blobs = grouped_aggregate_sketch(
-        df, group_col, col,
-        make=lambda: MisraGries(k=k),
-        update=lambda s, col_s: s.add_many(_series_to_keys(col_s, arr)),
-        merge=MisraGries.merge,
-        from_bytes=MisraGries.from_bytes,
-        finalize=fin,
-    )
+        df, group_col, col, lambda: MisraGries(k=k), MisraGries,
+        finalize=MisraGries.compact)
     gtype = df.schema[group_col].dataType.simpleString()
 
     def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -175,70 +123,42 @@ def grouped_mg_topk(df: DataFrame, group_col: str, col: str, k: int = 256,
 
 
 def cms_sketch(df: DataFrame, col: str, eps: float = 0.0005, delta: float = 0.01,
-               seed: int = 0x5EED, fanout: int = 16) -> CountMinSketch:
+               seed: int = 0x5EED) -> CountMinSketch:
     """Distributed point-frequency sketch (CQF counting capability,
     gqf.h:137-201, as an elementwise-add mergeable aggregate)."""
-    arr = _is_array_col(df, col)
     return aggregate_sketch(
-        df, col,
-        make=lambda: CountMinSketch.create(eps=eps, delta=delta, seed=seed),
-        update=lambda k, s: k.add_many(_series_to_keys(s, arr)),
-        merge=CountMinSketch.merge,
-        from_bytes=CountMinSketch.from_bytes,
-        fanout=fanout,
-    )
+        df, col, lambda: CountMinSketch.create(eps=eps, delta=delta, seed=seed),
+        CountMinSketch)
 
 
 def ams_f2_sketch(df: DataFrame, col: str, width: int = 4096,
-                  depth: int = 5, seed: int = 0x5EED,
-                  fanout: int = 16) -> "AmsF2":
+                  depth: int = 5, seed: int = 0x5EED) -> "AmsF2":
     """Distributed second-moment (F2 / self-join size / key-skew)
     sketch: one AMS tug-of-war table per partition, tree-merged by
     elementwise add (kernels/ams.py). Blob-only shuffle — the key
     column never re-partitions."""
     from ..kernels.ams import AmsF2
 
-    arr = _is_array_col(df, col)
     return aggregate_sketch(
-        df, col,
-        make=lambda: AmsF2(width=width, depth=depth, seed=seed),
-        update=lambda k_, s: k_.add_many(_series_to_keys(s, arr)),
-        merge=AmsF2.merge,
-        from_bytes=AmsF2.from_bytes,
-        fanout=fanout,
-    )
+        df, col, lambda: AmsF2(width=width, depth=depth, seed=seed), AmsF2)
 
 
-def kll_sketch(df: DataFrame, col: str, k: int = 200, seed: int = 0x5EED,
-               fanout: int = 16) -> KLLSketch:
+def kll_sketch(df: DataFrame, col: str, k: int = 200,
+               seed: int = 0x5EED) -> KLLSketch:
     """Distributed quantile sketch over a numeric column."""
-    def upd(kern, s: pd.Series):
-        kern.add_many(s.to_numpy(dtype=np.float64, na_value=np.nan))
-    return aggregate_sketch(
-        df, col,
-        make=lambda: KLLSketch(k=k, seed=seed),
-        update=upd,
-        merge=KLLSketch.merge,
-        from_bytes=KLLSketch.from_bytes,
-        fanout=fanout,
-    )
+    return aggregate_sketch(df, col, lambda: KLLSketch(k=k, seed=seed),
+                            KLLSketch)
 
 
 def cqf_sketch(df: DataFrame, col: str, q: int = 20, r: int = 28,
-               seed: int = 0x5EED, fanout: int = 16) -> "CountingQuotientFilter":
+               seed: int = 0x5EED) -> "CountingQuotientFilter":
     """Distributed counting-quotient-filter build (gqf.h semantics:
     exact multiset counts at fingerprint resolution, lossless merge)."""
     from ..kernels.cqf import CountingQuotientFilter
 
-    arr = _is_array_col(df, col)
     return aggregate_sketch(
-        df, col,
-        make=lambda: CountingQuotientFilter(q=q, r=r, seed=seed),
-        update=lambda k, s: k.add_many(_series_to_keys(s, arr)),
-        merge=CountingQuotientFilter.merge,
-        from_bytes=CountingQuotientFilter.from_bytes,
-        fanout=fanout,
-    )
+        df, col, lambda: CountingQuotientFilter(q=q, r=r, seed=seed),
+        CountingQuotientFilter)
 
 
 def cqf_count_col(spark: SparkSession, sketch, col) -> Column:
@@ -250,57 +170,35 @@ def cqf_count_col(spark: SparkSession, sketch, col) -> Column:
                             method="count_many", rettype=T.LongType())
 
 
-def tdigest_sketch(df: DataFrame, col: str, delta: float = 200.0,
-                   fanout: int = 16) -> "TDigest":
+def tdigest_sketch(df: DataFrame, col: str, delta: float = 200.0) -> "TDigest":
     """Distributed t-digest over a numeric column (tail-accurate
     quantiles; the north rule's companion to KLL)."""
     from ..kernels.tdigest import TDigest
 
-    def upd(kern, s: pd.Series):
-        kern.add_many(s.to_numpy(dtype=np.float64, na_value=np.nan))
-
-    return aggregate_sketch(
-        df, col,
-        make=lambda: TDigest(delta=delta),
-        update=upd,
-        merge=TDigest.merge,
-        from_bytes=TDigest.from_bytes,
-        fanout=fanout,
-    )
+    return aggregate_sketch(df, col, lambda: TDigest(delta=delta), TDigest)
 
 
 def bloom_sketch(df: DataFrame, col: str, capacity: int, bits_per_item: int = 10,
-                 seed: int = 0x5EED, fanout: int = 16) -> BloomFilter:
+                 seed: int = 0x5EED) -> BloomFilter:
     """Distributed Bloom build (bloom.h semantics, OR-mergeable)."""
-    arr = _is_array_col(df, col)
     return aggregate_sketch(
-        df, col,
-        make=lambda: BloomFilter.create(capacity, bits_per_item, seed=seed),
-        update=lambda k, s: k.add_many(_series_to_keys(s, arr)),
-        merge=BloomFilter.merge,
-        from_bytes=BloomFilter.from_bytes,
-        fanout=fanout,
-    )
+        df, col, lambda: BloomFilter.create(capacity, bits_per_item, seed=seed),
+        BloomFilter)
 
 
 def blocked_bloom_sketch(df: DataFrame, col: str, capacity: int,
-                         seed: int = 0x5EED, fanout: int = 16,
+                         seed: int = 0x5EED,
                          bits_per_key: int | None = None) -> "BlockedBloomFilter":
     """Distributed blocked-Bloom build (simd-block.h semantics,
     OR-mergeable 256-bit buckets). ``bits_per_key=8`` matches the
     reference benchmark's 2^ceil(log2(n))-byte sizing."""
     from ..kernels.blocked_bloom import BlockedBloomFilter
 
-    arr = _is_array_col(df, col)
     return aggregate_sketch(
         df, col,
-        make=lambda: BlockedBloomFilter.create(capacity, seed=seed,
-                                               bits_per_key=bits_per_key),
-        update=lambda k, s: k.add_many(_series_to_keys(s, arr)),
-        merge=BlockedBloomFilter.merge,
-        from_bytes=BlockedBloomFilter.from_bytes,
-        fanout=fanout,
-    )
+        lambda: BlockedBloomFilter.create(capacity, seed=seed,
+                                          bits_per_key=bits_per_key),
+        BlockedBloomFilter)
 
 
 def blocked_bloom_contains_col(spark: SparkSession, filt, col) -> Column:
@@ -313,7 +211,7 @@ def blocked_bloom_contains_col(spark: SparkSession, filt, col) -> Column:
 
 
 def blocked_bloom_jvm_sketch(df: DataFrame, col: str, capacity: int,
-                             seed: int = 0x5EED, fanout: int = 16,
+                             seed: int = 0x5EED,
                              bits_per_key: int | None = None
                              ) -> "JvmBlockedBloomFilter":
     """Distributed build of the JVM-probeable blocked Bloom (same
@@ -322,16 +220,11 @@ def blocked_bloom_jvm_sketch(df: DataFrame, col: str, capacity: int,
     broadcast join — see sketch/membership.blocked_bloom_jvm_filter)."""
     from ..kernels.blocked_bloom import JvmBlockedBloomFilter
 
-    arr = _is_array_col(df, col)
     return aggregate_sketch(
         df, col,
-        make=lambda: JvmBlockedBloomFilter.create(capacity, seed=seed,
-                                                  bits_per_key=bits_per_key),
-        update=lambda k, s: k.add_many(_series_to_keys(s, arr)),
-        merge=JvmBlockedBloomFilter.merge,
-        from_bytes=JvmBlockedBloomFilter.from_bytes,
-        fanout=fanout,
-    )
+        lambda: JvmBlockedBloomFilter.create(capacity, seed=seed,
+                                             bits_per_key=bits_per_key),
+        JvmBlockedBloomFilter)
 
 
 def blocked_bloom_jvm_contains_col(spark: SparkSession, filt, col) -> Column:
@@ -346,7 +239,7 @@ def blocked_bloom_jvm_contains_col(spark: SparkSession, filt, col) -> Column:
 
 
 def blocked_bloom64_sketch(df: DataFrame, col: str, capacity: int,
-                           seed: int = 0x5EED, fanout: int = 16,
+                           seed: int = 0x5EED,
                            bits_per_key: int | None = None
                            ) -> "BlockedBloomFilter64":
     """Distributed 64-byte-block blocked-Bloom build (SimdBlockFilter64,
@@ -354,16 +247,11 @@ def blocked_bloom64_sketch(df: DataFrame, col: str, capacity: int,
     64-bit lane; OR-mergeable like the 256-bit variant."""
     from ..kernels.blocked_bloom import BlockedBloomFilter64
 
-    arr = _is_array_col(df, col)
     return aggregate_sketch(
         df, col,
-        make=lambda: BlockedBloomFilter64.create(capacity, seed=seed,
-                                                 bits_per_key=bits_per_key),
-        update=lambda k, s: k.add_many(_series_to_keys(s, arr)),
-        merge=BlockedBloomFilter64.merge,
-        from_bytes=BlockedBloomFilter64.from_bytes,
-        fanout=fanout,
-    )
+        lambda: BlockedBloomFilter64.create(capacity, seed=seed,
+                                            bits_per_key=bits_per_key),
+        BlockedBloomFilter64)
 
 
 def blocked_bloom64_contains_col(spark: SparkSession, filt, col) -> Column:
@@ -376,7 +264,7 @@ def blocked_bloom64_contains_col(spark: SparkSession, filt, col) -> Column:
 
 
 def fixed_blocked_bloom_sketch(df: DataFrame, col: str, capacity: int,
-                               seed: int = 0x5EED, fanout: int = 16,
+                               seed: int = 0x5EED,
                                bits_per_key: int = 12
                                ) -> "FixedBlockedBloomFilter":
     """Distributed fixed-fpp blocked-Bloom build (SimdBlockFilterFixed,
@@ -384,16 +272,11 @@ def fixed_blocked_bloom_sketch(df: DataFrame, col: str, capacity: int,
     ``capacity * bits_per_key`` bits, Lemire-reduced bucket index."""
     from ..kernels.blocked_bloom import FixedBlockedBloomFilter
 
-    arr = _is_array_col(df, col)
     return aggregate_sketch(
         df, col,
-        make=lambda: FixedBlockedBloomFilter.create(
-            capacity, seed=seed, bits_per_key=bits_per_key),
-        update=lambda k, s: k.add_many(_series_to_keys(s, arr)),
-        merge=FixedBlockedBloomFilter.merge,
-        from_bytes=FixedBlockedBloomFilter.from_bytes,
-        fanout=fanout,
-    )
+        lambda: FixedBlockedBloomFilter.create(capacity, seed=seed,
+                                               bits_per_key=bits_per_key),
+        FixedBlockedBloomFilter)
 
 
 def fixed_blocked_bloom_contains_col(spark: SparkSession, filt,
@@ -451,5 +334,3 @@ def cms_lookup_col(spark: SparkSession, sketch: CountMinSketch, col) -> Column:
 
     return _blob_method_col(spark, sketch, col, CountMinSketch,
                             method="query_many", rettype=T.LongType())
-
-

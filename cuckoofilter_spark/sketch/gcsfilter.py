@@ -26,7 +26,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..kernels.gcs import GcsFilter
 from .udaf import drop_archive_finders, keys_to_u64, require_key_col
@@ -104,13 +104,6 @@ def gcs_build(df: DataFrame, col: str, log2fpp: int = 10, log2bucket: int = 4,
 
 def gcs_contains_col(spark: SparkSession, filt: GcsFilter, col) -> Column:
     """Boolean membership Column against a broadcast GCS blob."""
-    bc = spark.sparkContext.broadcast(filt.to_bytes())
+    from .membership import _blob_method_col
 
-    @F.pandas_udf(T.BooleanType())
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        drop_archive_finders()
-        local = GcsFilter.from_bytes(bc.value)
-        for s in it:
-            yield pd.Series(local.contains_many(keys_to_u64(s)))
-
-    return probe(F.col(col).cast("long") if isinstance(col, str) else col)
+    return _blob_method_col(spark, filt, col, GcsFilter)

@@ -1,9 +1,10 @@
 """Distributed cuckoo-filter build and membership probes.
 
 The cuckoo filter is not loss-free under arbitrary merges (unlike
-Bloom), so the distributed build does NOT use the generic partial-merge
-protocol. Instead it uses the distribution insight the reference lacks
-(it is single-threaded, SURVEY.md §3.4): **shard by key**.
+Bloom), so the distributed build does NOT use the global tree shape of
+the build engine (sketch/udaf.py). It uses the engine's by-key shape,
+the distribution insight the reference lacks (it is single-threaded,
+SURVEY.md §3.4): **shard by key**.
 
 - ``shard_of(key) = xxhash64(key) & (num_shards - 1)`` is a pure key
   function (bit-exact between numpy and Spark's ``F.xxhash64``, so the
@@ -178,18 +179,17 @@ def _pack_shards(keys: np.ndarray, num_shards: int, transform=None):
 
 
 def _sharded_build_blobs(df: DataFrame, col: str, num_shards: int,
-                         make_shard, empty_blob: bytes,
-                         hash_seed: int | None = None,
-                         dedupe: bool = True) -> list[bytes]:
-    """The scaffold shared by every sharded filter build (cuckoo,
-    shingle, tail, crate): per input partition, flatten token arrays,
+                         make_shard, hash_seed: int | None = None) -> list[bytes]:
+    """The by-key shape of the build engine (sketch/udaf.py), shared by
+    every sharded build (cuckoo, xor, shingle, tail, crate) and by
+    ``distinct_keys_u64``: per input partition, flatten token arrays,
     np.unique-dedupe, split by shard, and emit ONE binary row of packed
     uint64 payloads per (partition, shard) — the shuffle moves
     P x num_shards small blobs instead of per-key rows, and no Python
     UDF sits in the exchange. Then one groupBy(shard) builds each
-    shard's kernel (``make_shard(keys) -> kernel``) and the driver
-    collects num_shards blobs, filling absent shards with
-    ``empty_blob``.
+    shard's blob (``make_shard(keys) -> bytes``) and the driver
+    collects num_shards blobs; a shard no key routes to gets
+    ``make_shard`` of zero keys.
 
     ``hash_seed`` set = ship ``simple_mix_split(keys, hash_seed)``
     (the pre-hashed input domain of tail/crate; sharding stays on raw
@@ -210,31 +210,31 @@ def _sharded_build_blobs(df: DataFrame, col: str, num_shards: int,
         drop_archive_finders()
         parts = [tokens_to_u64(pdf["k"]) if is_array else keys_to_u64(pdf["k"])
                  for pdf in batches]
-        keys = (np.concatenate(parts) if parts else np.empty(0, dtype=np.uint64))
-        if dedupe:
-            keys = np.unique(keys)
+        keys = np.unique(np.concatenate(parts) if parts
+                         else np.empty(0, dtype=np.uint64))
         shards, blobs = _pack_shards(keys, num_shards, transform)
         yield pd.DataFrame({"shard": pd.Series(shards, dtype="int32"),
                             "keys": blobs})
 
     packed = base.mapInPandas(partial_shards, schema="shard int, keys binary")
-    rededupe = dedupe and hash_seed is None
 
     def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         drop_archive_finders()
         keys = np.concatenate(
             [np.frombuffer(b, dtype=np.uint64) for b in pdf["keys"]])
-        if rededupe:
+        if hash_seed is None:
             keys = np.unique(keys)
-        filt = make_shard(keys)
         return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
-                             "blob": [filt.to_bytes()]})
+                             "blob": [make_shard(keys)]})
 
     rows = (packed.groupBy("shard")
             .applyInPandas(build_shard, "shard int, blob binary")
             .collect())
     blob_by_shard = {r["shard"]: bytes(r["blob"]) for r in rows}
-    return [blob_by_shard.get(s, empty_blob) for s in range(num_shards)]
+    if len(blob_by_shard) < num_shards:
+        empty = make_shard(np.empty(0, dtype=np.uint64))
+        return [blob_by_shard.get(s, empty) for s in range(num_shards)]
+    return [blob_by_shard[s] for s in range(num_shards)]
 
 
 class ShardedCuckooFilter:
@@ -317,7 +317,6 @@ def cuckoo_build(
     bits: int = 12,
     seed: int = 0x5EED,
     num_shards: int = 32,
-    dedupe: bool = True,
     mode: str = "single",
     stable: bool = False,
 ) -> ShardedCuckooFilter:
@@ -327,6 +326,13 @@ def cuckoo_build(
     distinct count when omitted (costs one extra aggregate job) —
     callers at scale should pass the known/estimated cardinality.
     """
+    return _cuckoo_build(CuckooFilter, df, col, capacity, bits, seed,
+                         num_shards, mode=mode, stable=stable)
+
+
+def _cuckoo_build(kernel_cls, df: DataFrame, col: str, capacity: int | None,
+                  bits: int, seed: int, num_shards: int,
+                  **create_kw) -> ShardedCuckooFilter:
     from .udaf import approx_distinct_capacity
 
     # _sharded_build_blobs does the map-side combine: one packed-key
@@ -337,17 +343,15 @@ def cuckoo_build(
         capacity = approx_distinct_capacity(df, col)
     shard_cap = max(64, capacity // num_shards)
 
-    def make_shard(keys: np.ndarray):
-        filt = CuckooFilter.create(max(shard_cap, keys.size), bits=bits,
-                                   seed=seed, mode=mode, stable=stable)
+    def make_shard(keys: np.ndarray) -> bytes:
+        filt = kernel_cls.create(max(shard_cap, keys.size), bits=bits,
+                                 seed=seed, **create_kw)
         filt.add_many(keys)
-        return filt
+        return filt.to_bytes()
 
-    empty = CuckooFilter.create(shard_cap, bits=bits, seed=seed, mode=mode,
-                                stable=stable).to_bytes()
-    blobs = _sharded_build_blobs(df, col, num_shards, make_shard, empty,
-                                 dedupe=dedupe)
-    return ShardedCuckooFilter(blobs, bits=bits, seed=seed)
+    blobs = _sharded_build_blobs(df, col, num_shards, make_shard)
+    return ShardedCuckooFilter(blobs, bits=bits, seed=seed,
+                               kernel_cls=kernel_cls)
 
 
 # Worker-process cache of deserialized probe structures, keyed by the
@@ -374,6 +378,34 @@ def _cached_probe(bc, build):
     return obj
 
 
+def _broadcast_probe_col(spark: SparkSession, payload, load, col,
+                         rettype=None) -> Column:
+    """Column answering each key batch with ``load(payload)(keys)`` —
+    the ONE broadcast probe shape: the payload is broadcast once, and
+    each worker builds the probe function once per filter, cached
+    across tasks by ``_cached_probe`` (a probe that decodes its blob
+    per task pays that on every task). ``load`` is pickled with the
+    UDF: keep it a module-level function or a lambda over module-level
+    names. Keys are uint64 (``keys_to_u64``) at build and probe alike."""
+    bc = spark.sparkContext.broadcast(payload)
+    rettype = T.BooleanType() if rettype is None else rettype
+
+    @F.pandas_udf(rettype)
+    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        drop_archive_finders()
+        fn = _cached_probe(bc, load)
+        for s in it:
+            yield pd.Series(fn(keys_to_u64(s)))
+
+    return probe(F.col(col).cast("long") if isinstance(col, str) else col)
+
+
+def _load_cuckoo_probe(v):
+    from ..kernels import cuckoo
+
+    return _FlatProbe(v[0], getattr(cuckoo, v[1])).contains_u64
+
+
 def cuckoo_contains_col(spark: SparkSession, filt: ShardedCuckooFilter, col) -> Column:
     """Boolean Column: approximate membership of ``col`` in the filter.
 
@@ -384,19 +416,8 @@ def cuckoo_contains_col(spark: SparkSession, filt: ShardedCuckooFilter, col) -> 
     """
     # kernel class rides as its NAME (cloudpickle pickles classes by
     # value when captured, dragging module globals — CLAUDE.md trap)
-    bc = spark.sparkContext.broadcast((filt.blobs, filt.kernel_cls.__name__))
-
-    @F.pandas_udf(T.BooleanType())
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        drop_archive_finders()
-        from ..kernels import cuckoo as _ck
-
-        local = _cached_probe(
-            bc, lambda v: _FlatProbe(v[0], getattr(_ck, v[1])))
-        for s in it:
-            yield pd.Series(local.contains_u64(keys_to_u64(s)))
-
-    return probe(F.col(col).cast("long") if isinstance(col, str) else col)
+    return _broadcast_probe_col(
+        spark, (filt.blobs, filt.kernel_cls.__name__), _load_cuckoo_probe, col)
 
 
 def approx_semi_join(
@@ -426,43 +447,15 @@ def cuckoo_delete(filt: ShardedCuckooFilter, df: DataFrame, col: str) -> int:
 def distinct_keys_u64(df: DataFrame, col: str, num_shards: int = 64) -> np.ndarray:
     """Distributed distinct of an integer or array<int> column -> driver.
 
-    Two stages so driver memory is bounded by the KEY UNIVERSE (vocab),
-    not partitions x vocab: (1) per-partition flatten + np.unique inside
-    the Arrow pass, split by key shard, one packed binary row per
-    (partition, shard); (2) groupBy(shard) dedupes each shard to one
-    packed row. Shards are disjoint by construction, so the driver
-    receives exactly the distinct key set — the same contract as a
-    broadcast-join build side. Returned sorted.
+    The by-key build with each shard's sorted unique keys as its blob,
+    so driver memory is bounded by the KEY UNIVERSE (vocab), not
+    partitions x vocab: shards are disjoint by construction, so the
+    driver receives exactly the distinct key set — the same contract as
+    a broadcast-join build side. Returned sorted.
     """
-    from .udaf import _null_safe_key, require_key_col, tokens_to_u64
-
-    is_array = require_key_col(df, col)
-    kc, nn = _null_safe_key(df, col)
-    base = df.where(nn).select(kc.alias("k"))
-
-    def part_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_archive_finders()
-        parts = [tokens_to_u64(pdf["k"]) if is_array else keys_to_u64(pdf["k"])
-                 for pdf in batches]
-        keys = (np.unique(np.concatenate(parts)) if parts
-                else np.empty(0, dtype=np.uint64))
-        shards, blobs = _pack_shards(keys, num_shards)
-        yield pd.DataFrame({"shard": pd.Series(shards, dtype="int32"),
-                            "keys": blobs})
-
-    def uniq_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        drop_archive_finders()
-        uniq = np.unique(np.concatenate(
-            [np.frombuffer(b, dtype=np.uint64) for b in pdf["keys"]]))
-        return pd.DataFrame({"keys": [uniq.tobytes()]})
-
-    rows = (base.mapInPandas(part_shards, schema="shard int, keys binary")
-            .groupBy("shard").applyInPandas(uniq_shard, "keys binary")
-            .collect())
-    if not rows:
-        return np.empty(0, dtype=np.uint64)
+    blobs = _sharded_build_blobs(df, col, num_shards, lambda keys: keys.tobytes())
     return np.sort(np.concatenate(
-        [np.frombuffer(bytes(r["keys"]), dtype=np.uint64) for r in rows]))
+        [np.frombuffer(b, dtype=np.uint64) for b in blobs]))
 
 
 class ShardedXorFilter:
@@ -540,12 +533,10 @@ def xor_build_sharded(df: DataFrame, col: str, fp_bits: int = 8,
     """
     from ..kernels.xor import XorFilter
 
-    def make_shard(keys: np.ndarray):
-        return XorFilter.build(keys, fp_bits=fp_bits, seed=seed)
+    def make_shard(keys: np.ndarray) -> bytes:
+        return XorFilter.build(keys, fp_bits=fp_bits, seed=seed).to_bytes()
 
-    empty = XorFilter.build(np.empty(0, dtype=np.uint64), fp_bits=fp_bits,
-                            seed=seed).to_bytes()
-    blobs = _sharded_build_blobs(df, col, num_shards, make_shard, empty)
+    blobs = _sharded_build_blobs(df, col, num_shards, make_shard)
     return ShardedXorFilter(blobs, seed=seed)
 
 
@@ -553,16 +544,8 @@ def xor_sharded_contains_col(spark: SparkSession, filt: ShardedXorFilter,
                              col) -> Column:
     """Broadcast-probe Column for a sharded xor filter (route by shard,
     3 gathers in the owning shard's fingerprint array)."""
-    bc = spark.sparkContext.broadcast((filt.blobs, filt.seed))
-
-    @F.pandas_udf(T.BooleanType())
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        drop_archive_finders()
-        local = _cached_probe(bc, lambda v: ShardedXorFilter(v[0], v[1]))
-        for s in it:
-            yield pd.Series(local.contains_u64(keys_to_u64(s)))
-
-    return probe(F.col(col).cast("long") if isinstance(col, str) else col)
+    return _broadcast_probe_col(spark, (filt.blobs, filt.seed),
+                                lambda v: ShardedXorFilter(*v).contains_u64, col)
 
 
 # -- shard-partitioned probe (no whole-filter broadcast) ---------------------
@@ -762,42 +745,25 @@ def _blob_method_col(spark: SparkSession, obj, col, cls,
                      method: str = "contains_many",
                      rettype=None) -> Column:
     """Column applying ``cls.from_bytes(blob).<method>`` to a key batch
-    — the ONE broadcast-blob probe shape every single-blob kernel
-    shares (membership booleans, CMS/CQF counts). Deserialization is
-    cached per worker via ``_cached_probe``; re-implementing this
-    per family silently loses that cache (review r4)."""
-    bc = spark.sparkContext.broadcast(obj.to_bytes())
-    rettype = T.BooleanType() if rettype is None else rettype
-
-    @F.pandas_udf(rettype)
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        drop_archive_finders()
-        local = _cached_probe(bc, cls.from_bytes)
-        fn = getattr(local, method)
-        for s in it:
-            yield pd.Series(fn(keys_to_u64(s)))
-
-    return probe(F.col(col).cast("long") if isinstance(col, str) else col)
-
-
-def _blob_contains_col(spark: SparkSession, filt, col, cls) -> Column:
-    """Membership Column for any single-blob kernel with from_bytes +
-    contains_many; blob deserialization cached per worker."""
-    return _blob_method_col(spark, filt, col, cls)
+    — the broadcast probe of every single-blob kernel (membership
+    booleans, CMS/CQF counts)."""
+    return _broadcast_probe_col(
+        spark, obj.to_bytes(), lambda b: getattr(cls.from_bytes(b), method),
+        col, rettype)
 
 
 def xor_contains_col(spark: SparkSession, filt, col) -> Column:
     """Boolean membership Column against a broadcast xor-filter blob."""
     from ..kernels.xor import XorFilter
 
-    return _blob_contains_col(spark, filt, col, XorFilter)
+    return _blob_method_col(spark, filt, col, XorFilter)
 
 
 def xorplus_contains_col(spark: SparkSession, filt, col) -> Column:
     """Boolean membership Column against a broadcast xor+ blob."""
     from ..kernels.xorplus import XorFilterPlus
 
-    return _blob_contains_col(spark, filt, col, XorFilterPlus)
+    return _blob_method_col(spark, filt, col, XorFilterPlus)
 
 
 def approx_anti_join(
@@ -936,7 +902,6 @@ def shingle_build(
     slot_bits: int = 12,
     seed: int = 0x5EED,
     num_shards: int = 8,
-    dedupe: bool = True,
 ) -> ShardedShingleFilter:
     """Build a sharded shingle filter over an integer key column — one
     groupBy(shard) shuffle of packed key blobs, the cuckoo_build plan
@@ -948,32 +913,21 @@ def shingle_build(
         capacity = approx_distinct_capacity(df, col)
     shard_cap = max(64, capacity // num_shards)
 
-    def make_shard(keys: np.ndarray):
+    def make_shard(keys: np.ndarray) -> bytes:
         filt = ShingleFilter.create(max(shard_cap, keys.size),
                                     slot_bits=slot_bits, seed=seed)
         filt.add_many(keys)
-        return filt
+        return filt.to_bytes()
 
-    empty = ShingleFilter.create(shard_cap, slot_bits=slot_bits,
-                                 seed=seed).to_bytes()
-    blobs = _sharded_build_blobs(df, col, num_shards, make_shard, empty,
-                                 dedupe=dedupe)
+    blobs = _sharded_build_blobs(df, col, num_shards, make_shard)
     return ShardedShingleFilter(blobs, slot_bits=slot_bits, seed=seed)
 
 
 def shingle_contains_col(spark: SparkSession, filt: ShardedShingleFilter,
                          col) -> Column:
     """Boolean membership Column against broadcast shingle shards."""
-    bc = spark.sparkContext.broadcast(filt.blobs)
-
-    @F.pandas_udf(T.BooleanType())
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        drop_archive_finders()
-        local = _cached_probe(bc, _ShingleFlatProbe)
-        for s in it:
-            yield pd.Series(local.contains_u64(keys_to_u64(s)))
-
-    return probe(F.col(col).cast("long") if isinstance(col, str) else col)
+    return _broadcast_probe_col(
+        spark, filt.blobs, lambda v: _ShingleFlatProbe(v).contains_u64, col)
 
 
 # -- Tail filter (adaptive-epsilon growing AMQ, tail-filter.hpp) ------------
@@ -1061,13 +1015,12 @@ def tail_build(
 
     # hash_seed: ship the HASH, not the raw key (the filter's input
     # domain — tail-filter.hpp:119 takes a pre-hashed uint64)
-    def make_shard(hashes: np.ndarray):
+    def make_shard(hashes: np.ndarray) -> bytes:
         filt = TailFilter(lgm=lgm, epsilon=epsilon, seed=seed)
         filt.add_many(hashes)
-        return filt
+        return filt.to_bytes()
 
-    empty = TailFilter(lgm=lgm, epsilon=epsilon, seed=seed).to_bytes()
-    blobs = _sharded_build_blobs(df, col, num_shards, make_shard, empty,
+    blobs = _sharded_build_blobs(df, col, num_shards, make_shard,
                                  hash_seed=seed)
     return ShardedTailFilter(blobs, seed=seed)
 
@@ -1075,16 +1028,8 @@ def tail_build(
 def tail_contains_col(spark: SparkSession, filt: ShardedTailFilter,
                       col) -> Column:
     """Boolean membership Column against broadcast tail-filter shards."""
-    bc = spark.sparkContext.broadcast((filt.blobs, filt.seed))
-
-    @F.pandas_udf(T.BooleanType())
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        drop_archive_finders()
-        local = _cached_probe(bc, lambda v: ShardedTailFilter(v[0], v[1]))
-        for s in it:
-            yield pd.Series(local.contains_u64(keys_to_u64(s)))
-
-    return probe(F.col(col).cast("long") if isinstance(col, str) else col)
+    return _broadcast_probe_col(spark, (filt.blobs, filt.seed),
+                                lambda v: ShardedTailFilter(*v).contains_u64, col)
 
 
 # -- Crate / pocket dictionaries (crate.h, arXiv:1911.05060) ----------------
@@ -1157,13 +1102,12 @@ def crate_build(
         capacity = approx_distinct_capacity(df, col, headroom=1.0, slack=0)
     shard_cap = max(64, int(capacity) // num_shards)
 
-    def make_shard(hashes: np.ndarray):
+    def make_shard(hashes: np.ndarray) -> bytes:
         filt = CrateFilter(add_count=max(shard_cap, hashes.size), seed=seed)
         filt.add_many(hashes)
-        return filt
+        return filt.to_bytes()
 
-    empty = CrateFilter(shard_cap, seed=seed).to_bytes()
-    blobs = _sharded_build_blobs(df, col, num_shards, make_shard, empty,
+    blobs = _sharded_build_blobs(df, col, num_shards, make_shard,
                                  hash_seed=seed)
     return ShardedCrateFilter(blobs, seed=seed)
 
@@ -1171,16 +1115,8 @@ def crate_build(
 def crate_contains_col(spark: SparkSession, filt: ShardedCrateFilter,
                        col) -> Column:
     """Boolean membership Column against broadcast crate shards."""
-    bc = spark.sparkContext.broadcast((filt.blobs, filt.seed))
-
-    @F.pandas_udf(T.BooleanType())
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        drop_archive_finders()
-        local = _cached_probe(bc, lambda v: ShardedCrateFilter(v[0], v[1]))
-        for s in it:
-            yield pd.Series(local.contains_u64(keys_to_u64(s)))
-
-    return probe(F.col(col).cast("long") if isinstance(col, str) else col)
+    return _broadcast_probe_col(spark, (filt.blobs, filt.seed),
+                                lambda v: ShardedCrateFilter(*v).contains_u64, col)
 
 
 # -- JVM-native blocked-Bloom probe (zero Python in the probe path) ---------
@@ -1350,32 +1286,17 @@ def cuckoo_jvm_build(
     bits: int = 12,
     seed: int = 0x5EED,
     num_shards: int = 32,
-    dedupe: bool = True,
 ) -> ShardedCuckooFilter:
     """``cuckoo_build`` with the JVM-probeable kernel (single-table,
     non-stable — the probe arithmetic the JVM path compiles; same
     one-shuffle sharded build scaffold)."""
     from ..kernels.cuckoo import JvmCuckooFilter
-    from .udaf import approx_distinct_capacity
 
     if bits > 16:
         raise ValueError("JVM probe packs tags into 64-bit words; "
                          "bits must be <= 16")
-    if capacity is None:
-        capacity = approx_distinct_capacity(df, col)
-    shard_cap = max(64, capacity // num_shards)
-
-    def make_shard(keys: np.ndarray):
-        filt = JvmCuckooFilter.create(max(shard_cap, keys.size), bits=bits,
-                                      seed=seed)
-        filt.add_many(keys)
-        return filt
-
-    empty = JvmCuckooFilter.create(shard_cap, bits=bits, seed=seed).to_bytes()
-    blobs = _sharded_build_blobs(df, col, num_shards, make_shard, empty,
-                                 dedupe=dedupe)
-    return ShardedCuckooFilter(blobs, bits=bits, seed=seed,
-                               kernel_cls=JvmCuckooFilter)
+    return _cuckoo_build(JvmCuckooFilter, df, col, capacity, bits, seed,
+                         num_shards)
 
 
 def _cf_jvm_tables(spark: SparkSession, filt: ShardedCuckooFilter):

@@ -1,29 +1,47 @@
-"""Distributed mergeable-sketch aggregation protocol (the UDAF layer).
+"""The partial -> merge engine every Spark sketch build runs on.
 
-The reference's extension surface is the ``FilterAPI<Table>`` adapter
-(benchmarks/filter-api.h:13-63) — construct / add / contain normalized
-per structure. In Spark that becomes this module's protocol:
+The reference makes every structure look the same through one adapter:
+construct, add, contain (``FilterAPI<Table>``,
+benchmarks/filter-api.h:13-63). Here the adapter is the kernel itself.
+A builder hands the engine a kernel factory (plus the kernel class when
+the factory is not the class), and the kernel's own ``add_many``,
+``merge``, ``to_bytes`` and ``from_bytes`` are the whole protocol:
 
-    partial (per partition, Arrow-vectorized)  ->  tree merge  ->  final
+- **update** is ``add_many`` of one Arrow batch of the key column: the
+  flattened uint64 keys (``keys_to_u64`` for an integer column,
+  ``tokens_to_u64`` for ``array<int>``), or float64 values for a kernel
+  whose class sets ``takes_values`` (KLL, t-digest);
+- **merge** and **decode** are the class's ``merge`` and ``from_bytes``.
+  One function (``_merge_blobs``) merges blobs in arrival order for the
+  tree levels, the grouped merge and the driver's final merge.
 
-- **Stage 1 (partial):** ``mapInPandas`` over the projected key column
-  only (Catalyst prunes the scan to that column); each task folds its
-  Arrow batches into one numpy kernel and emits a single
-  ``(pid, blob)`` row. This is the map-side combine: shuffle volume is
-  one sketch blob per partition regardless of row count.
-- **Stage 2 (tree merge):** while more blobs than ``fanout``, group by
-  ``pid % ceil(P/fanout)`` and merge within groups via
-  ``applyInPandas`` — the treeAggregate shape, so the driver never
-  receives more than ``fanout`` blobs even at 10^5 partitions.
-- **Stage 3 (final):** driver merges the surviving handful of blobs.
+Three shapes share it:
 
-Associativity/commutativity of the kernel merge (tested bit-exact in
-tests/test_kernels.py) is what makes the tree shape legal.
+- **Global tree** (``aggregate_sketch``): ``mapInPandas`` over the
+  projected key column only (Catalyst prunes the scan to it); each task
+  folds its batches into one kernel and emits one blob, so the shuffle
+  carries one blob per partition, whatever the row count. While more
+  than ``fanout`` blobs remain, ``groupBy(pid % ceil(P/fanout))``
+  merges them (the treeAggregate shape, so the driver never receives
+  more than ``fanout`` blobs even at 10^5 partitions); the driver
+  merges the rest.
+- **Grouped** (``grouped_aggregate_sketch``): each task keeps one
+  kernel per group it sees and emits ``(group, blob)`` partials; one
+  blob-only ``groupBy(group)`` merges each group's partials.
+- **By key** (``membership._sharded_build_blobs``): for kernels that do
+  not merge (cuckoo, xor, shingle, tail, crate) the partial is the
+  task's deduplicated keys, packed per key shard; one
+  ``groupBy(shard)`` builds each shard's kernel from all of its keys.
+  ``distinct_keys_u64`` is the same shape with the sorted keys as the
+  payload.
 
-Scale notes (100 TB / 1000 executors): stage 1 reads everything but
-shuffles only P blobs; stage 2 moves ≤ P blobs once; no stage depends
-on collecting row data to the driver. Skewed key distributions do not
-matter here (no groupBy on data keys — partials are positional).
+Associativity and commutativity of the kernel merge (tested bit-exact
+in tests/test_kernels.py) make the tree shape legal.
+
+Scale notes (100 TB / 1000 executors): the partial stage reads
+everything but shuffles only blobs; no stage collects row data to the
+driver. Skewed keys do not matter to the tree (partials are
+positional), and the by-key shape shuffles at most P x vocab keys.
 """
 
 from __future__ import annotations
@@ -37,9 +55,6 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-
-BLOB_SCHEMA = "pid long, blob binary"
-
 
 def drop_archive_finders() -> None:
     """Drop Spark's own zip-archive finders from the import cache.
@@ -157,75 +172,93 @@ def approx_distinct_capacity(df: DataFrame, col: str,
     return int(n * headroom) + int(slack)
 
 
-def aggregate_sketch(
-    df: DataFrame,
-    col: str,
-    make: Callable[[], object],
-    update: Callable[[object, pd.Series], None],
-    merge: Callable[[object, object], object],
-    from_bytes: Callable[[bytes], object],
-    fanout: int = 16,
-):
+def _values_f64(s: pd.Series) -> np.ndarray:
+    return s.to_numpy(dtype=np.float64, na_value=np.nan)
+
+
+def _batch_input(df: DataFrame, col: str, cls) -> Callable[[pd.Series], np.ndarray]:
+    """What the update step hands ``add_many``: float64 values for a
+    ``takes_values`` kernel, else the batch's uint64 keys (validated
+    driver-side by ``require_key_col``)."""
+    if getattr(cls, "takes_values", False):
+        return _values_f64
+    return tokens_to_u64 if require_key_col(df, col) else keys_to_u64
+
+
+def _merge_blobs(cls, blobs) -> object:
+    """Decode and merge blobs left to right with the kernel's own merge:
+    the merge step of the tree levels, the grouped merge and the
+    driver's final merge."""
+    it = iter(blobs)
+    kern = cls.from_bytes(bytes(next(it)))
+    for b in it:
+        kern = cls.merge(kern, cls.from_bytes(bytes(b)))
+    return kern
+
+
+def _merge_group(cls, finalize=None) -> Callable[[pd.DataFrame], pd.DataFrame]:
+    """``applyInPandas`` body merging one group's ``(g, blob)`` rows into
+    one row, keeping ``g``."""
+    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_archive_finders()
+        kern = _merge_blobs(cls, pdf["blob"])
+        if finalize is not None:
+            kern = finalize(kern) or kern
+        return pd.DataFrame({"g": pdf["g"].iloc[:1], "blob": [kern.to_bytes()]})
+
+    return merge_group
+
+
+def aggregate_sketch(df: DataFrame, col: str, make: Callable[[], object],
+                     cls=None, *, fanout: int = 16):
     """Run the partial -> tree-merge -> final protocol; return the kernel.
 
-    ``update(kernel, series)`` folds one Arrow batch of ``col`` into the
-    kernel; ``merge`` must be the kernel's associative merge.
+    ``make()`` builds an empty kernel and ``cls`` is its class (omit it
+    when ``make`` is the class). ``fanout`` is the tree's merge width.
 
     NULL keys contribute nothing (rows dropped, array elements
     stripped — JVM-side, see ``_null_safe_key``), matching
     ``approx_distinct_capacity``'s sizing convention.
     """
+    cls = cls or make
+    to_input = _batch_input(df, col, cls)
     kc, nn = _null_safe_key(df, col)
     proj = df.where(nn).select(kc.alias("k"))
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         drop_archive_finders()
         kern = make()
-        pid = 0
         for pdf in batches:
-            update(kern, pdf["k"])
-        yield pd.DataFrame({"pid": [pid], "blob": [kern.to_bytes()]})
+            kern.add_many(to_input(pdf["k"]))
+        yield pd.DataFrame({"blob": [kern.to_bytes()]})
 
-    blob_df = proj.mapInPandas(partial, schema=BLOB_SCHEMA)
-    # re-key pids DENSE (0..P-1) so every tree level's pmod buckets are
+    # key partials DENSE (0..P-1) so every tree level's pmod buckets are
     # balanced: one blob row per input partition, still sitting in that
     # partition, so spark_partition_id IS a dense row number.
     # monotonically_increasing_id is NOT usable here — it is
     # partitionId << 33, and pmod(p << 33, groups) is 0 for every p
     # whenever groups is even, which would collapse the whole tree into
     # ONE merge task (the degenerate shape this stage exists to avoid).
-    blob_df = blob_df.withColumn(
-        "pid", F.spark_partition_id().cast("long"))
+    blob_df = proj.mapInPandas(partial, schema="blob binary").select(
+        F.spark_partition_id().cast("long").alias("g"), "blob")
 
-    num_partials = df.rdd.getNumPartitions()
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        drop_archive_finders()
-        kern = from_bytes(bytes(pdf["blob"].iloc[0]))
-        for b in pdf["blob"].iloc[1:]:
-            kern = merge(kern, from_bytes(bytes(b)))
-        # emit the GROUP id as the new pid: group ids are dense
-        # 0..groups-1, so the next level's pmod stays balanced
-        return pd.DataFrame({"pid": [int(pdf["g"].iloc[0])],
-                             "blob": [kern.to_bytes()]})
-
-    level = num_partials
+    # each merged row keeps its group id: ids are dense 0..groups-1, so
+    # the next level's pmod stays balanced
+    merge_group = _merge_group(cls)
+    level = df.rdd.getNumPartitions()
     while level > fanout:
         groups = math.ceil(level / fanout)
         blob_df = (
-            blob_df.withColumn("g", F.pmod(F.col("pid"), F.lit(groups)))
+            blob_df.withColumn("g", F.pmod(F.col("g"), F.lit(groups)))
             .groupBy("g")
-            .applyInPandas(merge_group, BLOB_SCHEMA)
+            .applyInPandas(merge_group, "g long, blob binary")
         )
         level = groups
 
     rows = blob_df.collect()
     if not rows:
         return make()
-    kern = from_bytes(bytes(rows[0]["blob"]))
-    for r in rows[1:]:
-        kern = merge(kern, from_bytes(bytes(r["blob"])))
-    return kern
+    return _merge_blobs(cls, (r["blob"] for r in rows))
 
 
 def grouped_aggregate_sketch(
@@ -233,9 +266,7 @@ def grouped_aggregate_sketch(
     group_col: str,
     col: str,
     make: Callable[[], object],
-    update: Callable[[object, pd.Series], None],
-    merge: Callable[[object, object], object],
-    from_bytes: Callable[[bytes], object],
+    cls=None,
     finalize: Callable[[object], object] | None = None,
 ) -> DataFrame:
     """Per-GROUP mergeable sketch: returns a ``(group, blob)`` DataFrame
@@ -255,8 +286,9 @@ def grouped_aggregate_sketch(
     streaming stateful op (``streaming/stateful.py``); a sketch blob
     per key would cost more than the answer.
 
-    ``finalize`` (optional) post-processes each merged kernel before
-    serialization (e.g. MG ``compact``).
+    ``make``/``cls`` are ``aggregate_sketch``'s. ``finalize``
+    (optional) post-processes each merged kernel before serialization
+    (e.g. MG ``compact``).
 
     Group column must be string or integral. Integer groups travel
     through the pandas stages as their exact STRING form and are cast
@@ -272,6 +304,8 @@ def grouped_aggregate_sketch(
         raise TypeError(
             f"group column {group_col!r} has type {dt.simpleString()}; "
             "grouped sketches support string or integer groups")
+    cls = cls or make
+    to_input = _batch_input(df, col, cls)
     gtype = dt.simpleString()
     schema = "g string, blob binary"
     kc, nn = _null_safe_key(df, col)
@@ -287,23 +321,12 @@ def grouped_aggregate_sketch(
                 kern = kerns.get(g)
                 if kern is None:
                     kern = kerns[g] = make()
-                update(kern, sub["k"])
+                kern.add_many(to_input(sub["k"]))
         if kerns:
             yield pd.DataFrame(
                 {"g": pd.Series(list(kerns.keys()), dtype=object),
                  "blob": [k.to_bytes() for k in kerns.values()]})
 
-    blob_df = proj.mapInPandas(partials, schema=schema)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        drop_archive_finders()
-        kern = from_bytes(bytes(pdf["blob"].iloc[0]))
-        for b in pdf["blob"].iloc[1:]:
-            kern = merge(kern, from_bytes(bytes(b)))
-        if finalize is not None:
-            kern = finalize(kern) or kern
-        return pd.DataFrame({"g": pdf["g"].iloc[:1],
-                             "blob": [kern.to_bytes()]})
-
-    out = blob_df.groupBy("g").applyInPandas(merge_group, schema)
+    out = (proj.mapInPandas(partials, schema=schema).groupBy("g")
+           .applyInPandas(_merge_group(cls, finalize), schema))
     return out.select(F.col("g").cast(gtype).alias("g"), "blob")

@@ -241,27 +241,11 @@ class GroupedStreamingSketchState(_SketchStateBase):
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= self.last_batch_id():
             return
-        from ..sketch.aggregates import _is_array_col, _series_to_keys
         from ..sketch.udaf import grouped_aggregate_sketch
 
         cls, _build = _KINDS[self.kind]
-
-        if self.kind == "kll":
-            # numeric values, not integer keys — do NOT type-gate with
-            # require_key_col (KLL's primary use is double columns)
-            def upd(k, s):
-                import numpy as _np
-                k.add_many(s.to_numpy(dtype="float64", na_value=_np.nan))
-        else:
-            arr = _is_array_col(batch_df, self.col)
-
-            def upd(k, s):
-                k.add_many(_series_to_keys(s, arr))
-
         partial_rows = grouped_aggregate_sketch(
-            batch_df, self.group_col, self.col,
-            make=lambda: self._make(cls),
-            update=upd, merge=cls.merge, from_bytes=cls.from_bytes,
+            batch_df, self.group_col, self.col, lambda: self._make(cls), cls,
         ).collect()
         cur = self.load()
         for r in partial_rows:

@@ -73,10 +73,10 @@ def test_worker_functions_run_without_spark_archive_finders(spark):
     no finder over a Spark archive (pyspark.zip, py4j, spark-core jar)
     is left for the next task's cache invalidation to re-read.
 
-    Each callback records the finders it sees, then re-creates the
-    top-level ones (a lookup of a missing module scans ``sys.path``), so
-    every later call on the same worker sees them unless the library
-    function dropped them first. A fresh worker may record them once:
+    The ``Records`` kernel's ``add_many`` records the finders it sees,
+    then re-creates the top-level ones (a lookup of a missing module
+    scans ``sys.path``), so every later call on the same worker sees
+    them unless the library function dropped them first. A fresh worker may record them once:
     its first batch imports ``concurrent`` after the drop."""
     from cuckoofilter_spark.sketch.membership import _sharded_build_blobs
     from cuckoofilter_spark.sketch.udaf import aggregate_sketch
@@ -97,10 +97,13 @@ def test_worker_functions_run_without_spark_archive_finders(spark):
         return [[os.getpid(), archives]]
 
     class Records:
-        """(pid, Spark archives with a finder) per call, as a kernel."""
+        """(pid, Spark archives with a finder) per ``add_many`` call."""
 
         def __init__(self, recs=()):
             self.recs = list(recs)
+
+        def add_many(self, keys):
+            self.recs += record()
 
         def to_bytes(self):
             return json.dumps(self.recs).encode()
@@ -113,17 +116,16 @@ def test_worker_functions_run_without_spark_archive_finders(spark):
         def merge(a, b):
             return Records(a.recs + b.recs)
 
-    def update(kern, s):
-        kern.recs += record()
+    def shard(keys):
+        kern = Records()
+        kern.add_many(keys)
+        return kern.to_bytes()
 
     df = spark.range(0, 4000, numPartitions=8).withColumnRenamed("id", "k")
     stages = []
     for _ in range(3):
-        stages.append(aggregate_sketch(
-            df, "k", make=Records, update=update, merge=Records.merge,
-            from_bytes=Records.from_bytes, fanout=2).recs)
-        blobs = _sharded_build_blobs(df, "k", 16, lambda keys: Records(record()),
-                                     empty_blob=b"[]")
+        stages.append(aggregate_sketch(df, "k", Records, fanout=2).recs)
+        blobs = _sharded_build_blobs(df, "k", 16, shard)
         stages.append([r for b in blobs for r in json.loads(b)])
 
     earlier, dirty = set(), []

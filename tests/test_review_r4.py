@@ -11,13 +11,8 @@ def _hll_agg(df, fanout):
     from cuckoofilter_spark.kernels.hll import HyperLogLog
     from cuckoofilter_spark.sketch.udaf import aggregate_sketch
 
-    return aggregate_sketch(
-        df, "k",
-        make=lambda: HyperLogLog(p=14, seed=7),
-        update=lambda k, s: k.add_many(
-            s.to_numpy("int64").view("uint64")),
-        merge=HyperLogLog.merge,
-        from_bytes=HyperLogLog.from_bytes, fanout=fanout)
+    return aggregate_sketch(df, "k", lambda: HyperLogLog(p=14, seed=7),
+                            HyperLogLog, fanout=fanout)
 
 
 def test_tree_merge_balanced_and_exact(spark):
