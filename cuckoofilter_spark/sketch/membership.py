@@ -231,10 +231,9 @@ def _sharded_build_blobs(df: DataFrame, col: str, num_shards: int,
             .applyInPandas(build_shard, "shard int, blob binary")
             .collect())
     blob_by_shard = {r["shard"]: bytes(r["blob"]) for r in rows}
-    if len(blob_by_shard) < num_shards:
-        empty = make_shard(np.empty(0, dtype=np.uint64))
-        return [blob_by_shard.get(s, empty) for s in range(num_shards)]
-    return [blob_by_shard[s] for s in range(num_shards)]
+    empty = (make_shard(np.empty(0, dtype=np.uint64))
+             if len(blob_by_shard) < num_shards else None)
+    return [blob_by_shard.get(s, empty) for s in range(num_shards)]
 
 
 class ShardedCuckooFilter:
@@ -381,12 +380,11 @@ def _cached_probe(bc, build):
 def _broadcast_probe_col(spark: SparkSession, payload, load, col,
                          rettype=None) -> Column:
     """Column answering each key batch with ``load(payload)(keys)`` —
-    the ONE broadcast probe shape: the payload is broadcast once, and
-    each worker builds the probe function once per filter, cached
-    across tasks by ``_cached_probe`` (a probe that decodes its blob
-    per task pays that on every task). ``load`` is pickled with the
-    UDF: keep it a module-level function or a lambda over module-level
-    names. Keys are uint64 (``keys_to_u64``) at build and probe alike."""
+    the ONE broadcast probe shape. The payload is broadcast once; each
+    worker runs ``load`` once per filter, cached across tasks by
+    ``_cached_probe``, instead of decoding the blob on every task.
+    ``load`` is pickled with the UDF: a module-level function, or a
+    lambda over module-level names."""
     bc = spark.sparkContext.broadcast(payload)
     rettype = T.BooleanType() if rettype is None else rettype
 

@@ -56,6 +56,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+
 def drop_archive_finders() -> None:
     """Drop Spark's own zip-archive finders from the import cache.
 
