@@ -106,14 +106,6 @@ def count_distinct_exact(df: DataFrame, col: str) -> DataFrame:
     return df.agg(F.countDistinct(col).alias("distinct_cnt"))
 
 
-def count_distinct_both(df: DataFrame, col: str, rsd: float = 0.02) -> DataFrame:
-    """Exact + built-in HLL++ estimate side by side (one pass each)."""
-    return df.agg(
-        F.countDistinct(col).alias("distinct_cnt"),
-        F.approx_count_distinct(col, rsd).alias("approx_cnt"),
-    )
-
-
 def has_duplicates(df: DataFrame, col: str) -> DataFrame:
     """``has_duplicates`` (bulk-insert-and-query.cc:481-484): one bool row."""
     return df.agg(

@@ -7,18 +7,20 @@ only persistence is the raw Serialize dump (cuckoofilter.h:104-119). We
 generalize that into a two-stage checkpointed build:
 
 Stage 1 (scan, the expensive pass over the data):
-    every input partition folds its rows into per-shard partial states
-    (packed key blocks for the cuckoo path, sketch blobs for the
-    mergeable path) and the result is written to
+    every input partition folds its rows into per-shard packed key
+    blocks (``membership._sharded_partials``, the first half of the
+    by-key build) and the result is written to
     ``{ckpt}/partials/`` as Parquet rows
     ``(lineage: string, shard: int, payload: binary)`` where ``lineage``
-    identifies the input partition deterministically. A JSON manifest
+    (``p%06d`` of the input partition id) identifies the input
+    partition deterministically. A JSON manifest
     ``{ckpt}/manifest.json`` pins the build parameters (seed, bits,
     shards, source fingerprint) — resuming with different parameters is
     refused, mirroring qf_merge's seed check (gqf.c:2434-2440).
 
 Stage 2 (merge, cheap):
-    group partials by shard and build/merge the final filter blobs.
+    group partials by shard and build the final filter blobs
+    (``membership._build_shards``, the by-key build's second half).
 
 Resume semantics: stage 1 output is written atomically by Spark's
 Parquet committer; on restart, if the partials dataset exists and the
@@ -39,17 +41,12 @@ from __future__ import annotations
 import json
 import os
 import time
-from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..kernels.cuckoo import CuckooFilter
-from ..sketch.membership import ShardedCuckooFilter
-from ..sketch.udaf import keys_to_u64, require_key_col, tokens_to_u64
-
-PARTIAL_SCHEMA = "lineage string, shard int, payload binary"
+from ..sketch.membership import (ShardedCuckooFilter, _build_shards,
+                                 _cuckoo_shard_maker, _sharded_partials)
 
 
 def _manifest_path(ckpt_dir: str) -> str:
@@ -161,54 +158,16 @@ def cuckoo_build_checkpointed(
                 f"({stale} vs {params}); refusing to resume (qf_merge seed-check "
                 "semantics, gqf.c:2434-2440)")
     else:
-        is_array = require_key_col(df, col)
-        base = df.select(F.col(col).alias("k")).where(F.col(col).isNotNull())
-        shards = num_shards
-
-        def partial_shards(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from pyspark import TaskContext
-
-            from ..sketch.membership import _pack_shards
-
-            pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-            parts = [tokens_to_u64(pdf["k"]) if is_array else keys_to_u64(pdf["k"])
-                     for pdf in it]
-            keys = np.unique(np.concatenate(parts)) if parts else np.empty(0, np.uint64)
-            # the ONE shard-packing implementation (membership._pack_shards)
-            # so a routing change can never diverge between the
-            # checkpointed build and the live builds (the manifest's
-            # shard_fn guard exists because that already happened once)
-            out_s, out_b = _pack_shards(keys, shards)
-            yield pd.DataFrame({
-                "lineage": [f"p{pid:06d}"] * len(out_s),
-                "shard": pd.Series(out_s, dtype="int32"),
-                "payload": out_b,
-            })
-
-        base.mapInPandas(partial_shards, schema=PARTIAL_SCHEMA) \
-            .write.mode("overwrite").parquet(partials)
+        (_sharded_partials(df, col, num_shards)
+         .select(F.format_string("p%06d", F.spark_partition_id())
+                 .alias("lineage"), "shard", "payload")
+         .write.mode("overwrite").parquet(partials))
         _write_manifest(ckpt_dir, dict(params, stage1_committed_at=time.time()))
 
-    # Stage 2: merge partials per shard (reads only the checkpoint)
-    shard_cap = max(64, capacity // num_shards)
-
-    def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = np.unique(np.concatenate(
-            [np.frombuffer(b, dtype=np.uint64) for b in pdf["payload"]]))
-        filt = CuckooFilter.create(max(shard_cap, keys.size), bits=bits, seed=seed)
-        filt.add_many(keys)
-        return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
-                             "blob": [filt.to_bytes()]})
-
-    rows = (
-        spark.read.parquet(partials)
-        .groupBy("shard")
-        .applyInPandas(build_shard, "shard int, blob binary")
-        .collect()
-    )
-    blob_by_shard = {r["shard"]: bytes(r["blob"]) for r in rows}
-    empty = CuckooFilter.create(shard_cap, bits=bits, seed=seed).to_bytes()
-    blobs = [blob_by_shard.get(s, empty) for s in range(num_shards)]
+    # Stage 2: build each shard from the checkpoint alone
+    blobs = _build_shards(
+        spark.read.parquet(partials).select("shard", "payload"), num_shards,
+        _cuckoo_shard_maker(CuckooFilter, capacity, bits, seed, num_shards))
     return ShardedCuckooFilter(blobs, bits=bits, seed=seed)
 
 

@@ -20,7 +20,7 @@ Guarantees (inherited from the kernels' no-false-negative property):
 Scale shape: the index build shuffles packed key blobs per
 (input-partition, file) — never rows — exactly like the sharded
 filter builds (sketch/membership._sharded_build_blobs). The index
-itself stays a DataFrame: probing it is a mapInPandas over index rows
+itself stays a DataFrame: probing it is a mapInArrow over index rows
 with the (small, bounded) probe-key set broadcast, so per-file blobs
 never collect to the driver — only the surviving file NAMES do. At
 10^5-10^6 files that is a list of strings, not gigabytes of filter.
@@ -30,12 +30,13 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels.cuckoo import CuckooFilter, CuckooFullError
-from ..sketch.udaf import keys_to_u64, require_key_col, tokens_to_u64
+from ..sketch.udaf import (_null_safe_key, _row_groups, drop_archive_finders,
+                           keys_u64, require_key_col)
 
 _INDEX_SCHEMA = "file string, n_keys long, blob binary"
 
@@ -80,36 +81,36 @@ def _index_files(spark: SparkSession, path: str, files: list[str], col: str,
 
 
 def _index_df(df: DataFrame, col: str, bits: int, seed: int) -> DataFrame:
-    is_array = require_key_col(df, col)
-    base = (df.select(F.col("_metadata.file_path").alias("file"),
-                      F.col(col).alias("k"))
-              .where(F.col("k").isNotNull()))
+    require_key_col(df, col)
+    kc, nn = _null_safe_key(df, col)
+    base = df.where(nn).select(F.col("_metadata.file_path").alias("file"),
+                               kc.alias("k"))
 
-    def partial_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partial_blobs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        drop_archive_finders()
         per_file: dict[str, list[np.ndarray]] = {}
-        for pdf in batches:
-            for fname, grp in pdf.groupby("file", sort=False):
-                keys = (tokens_to_u64(grp["k"]) if is_array
-                        else keys_to_u64(grp["k"]))
-                per_file.setdefault(str(fname), []).append(keys)
-        files, blobs = [], []
-        for fname, parts in per_file.items():
-            files.append(fname)
-            blobs.append(np.unique(np.concatenate(parts)).tobytes())
-        yield pd.DataFrame({"file": pd.Series(files, dtype="string"),
-                            "keys": blobs})
+        for b in batches:
+            for fname, rows in _row_groups(b.column("file")):
+                per_file.setdefault(fname, []).append(
+                    keys_u64(b.column("k").take(rows)))
+        yield pa.RecordBatch.from_pydict({
+            "file": pa.array(list(per_file), pa.string()),
+            "keys": pa.array([np.unique(np.concatenate(parts)).tobytes()
+                              for parts in per_file.values()], pa.binary())})
 
-    packed = base.mapInPandas(partial_blobs, schema="file string, keys binary")
+    packed = base.mapInArrow(partial_blobs, schema="file string, keys binary")
 
-    def build_file(pdf: pd.DataFrame) -> pd.DataFrame:
+    def build_file(table: pa.Table) -> pa.Table:
+        drop_archive_finders()
         keys = np.unique(np.concatenate(
-            [np.frombuffer(b, dtype=np.uint64) for b in pdf["keys"]]))
+            [np.frombuffer(b, dtype=np.uint64)
+             for b in table.column("keys").to_pylist()]))
         filt = _build_file_filter(keys, bits=bits, seed=seed)
-        return pd.DataFrame({"file": [str(pdf["file"].iloc[0])],
-                             "n_keys": [int(keys.size)],
-                             "blob": [filt.to_bytes()]})
+        return pa.table({"file": table.column("file").slice(0, 1),
+                         "n_keys": pa.array([keys.size], pa.int64()),
+                         "blob": pa.array([filt.to_bytes()], pa.binary())})
 
-    return packed.groupBy("file").applyInPandas(build_file, _INDEX_SCHEMA)
+    return packed.groupBy("file").applyInArrow(build_file, _INDEX_SCHEMA)
 
 
 def update_file_sketch_index(spark: SparkSession, path: str, col: str,
@@ -160,7 +161,7 @@ def prune_files(spark: SparkSession, index: DataFrame,
     """Files that MAY contain at least one probe key (no false
     negatives; false positives bounded by the filters' epsilon).
 
-    Distributed probe: broadcast the key set, mapInPandas over index
+    Distributed probe: broadcast the key set, mapInArrow over index
     rows — each task deserializes only its files' blobs.
     """
     keys = _probe_keys_u64(probe, col)
@@ -168,15 +169,16 @@ def prune_files(spark: SparkSession, index: DataFrame,
         return []
     bc = spark.sparkContext.broadcast(keys)
 
-    def probe_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def probe_rows(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        drop_archive_finders()
         ks = bc.value
-        for pdf in batches:
-            hits = [bool(CuckooFilter.from_bytes(bytes(b)).contains_many(ks).any())
-                    for b in pdf["blob"]]
-            yield pd.DataFrame({"file": pdf["file"],
-                                "hit": pd.Series(hits, dtype="bool")})
+        for b in batches:
+            hits = [bool(CuckooFilter.from_bytes(x).contains_many(ks).any())
+                    for x in b.column("blob").to_pylist()]
+            yield pa.RecordBatch.from_pydict(
+                {"file": b.column("file"), "hit": pa.array(hits, pa.bool_())})
 
-    out = (index.mapInPandas(probe_rows, schema="file string, hit boolean")
+    out = (index.mapInArrow(probe_rows, schema="file string, hit boolean")
                 .where(F.col("hit")).select("file").collect())
     # set(): a duplicate index row (e.g. a user union of two builds)
     # must not read its file twice — pruned_parquet duplicating rows

@@ -13,7 +13,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from ..kernels.bloom import BloomFilter
@@ -56,10 +56,11 @@ def grouped_hll_sketch(df: DataFrame, group_col: str, col: str, p: int = 14,
 def grouped_hll_distinct(df: DataFrame, group_col: str, col: str, p: int = 14,
                          seed: int = 0x5EED) -> DataFrame:
     """Per-group distinct-count estimates: ``(group, est_distinct)``."""
-    @F.pandas_udf(T.DoubleType())
-    def est(b: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.DoubleType())
+    def est(b: pa.Array) -> pa.Array:
         drop_archive_finders()
-        return b.map(lambda x: HyperLogLog.from_bytes(bytes(x)).estimate())
+        return pa.array([HyperLogLog.from_bytes(x).estimate()
+                         for x in b.to_pylist()], pa.float64())
 
     return (grouped_hll_sketch(df, group_col, col, p=p, seed=seed)
             .select(F.col(group_col), est(F.col("blob")).alias("est_distinct")))
@@ -76,21 +77,18 @@ def grouped_kll_quantiles(df: DataFrame, group_col: str, col: str,
     gtype = df.schema[group_col].dataType.simpleString()
     qlist = [float(q) for q in qs]
 
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def explode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         drop_archive_finders()
-        for pdf in batches:
-            for g, blob in zip(pdf["g"], pdf["blob"]):
-                sk = KLLSketch.from_bytes(bytes(blob))
-                yield pd.DataFrame(
-                    {"g": pd.Series([g] * len(qlist), dtype=object),
-                     "q": qlist,
+        for b in batches:
+            for i, blob in enumerate(b.column("blob").to_pylist()):
+                sk = KLLSketch.from_bytes(blob)
+                yield pa.RecordBatch.from_pydict(
+                    {"g": b.column("g").take(np.full(len(qlist), i)),
+                     "q": pa.array(qlist, pa.float64()),
                      "value": sk.quantile(np.array(qlist)).astype(float)})
 
-    # string-encode integer groups through the pandas stage (exact; a
-    # nullable int64 would arrive as float64 — see grouped_aggregate_sketch)
-    return (blobs.select(F.col("g").cast("string").alias("g"), "blob")
-            .mapInPandas(explode, schema="g string, q double, value double")
-            .select(F.col("g").cast(gtype).alias(group_col), "q", "value"))
+    return (blobs.mapInArrow(explode, schema=f"g {gtype}, q double, value double")
+            .withColumnRenamed("g", group_col))
 
 
 def grouped_mg_topk(df: DataFrame, group_col: str, col: str, k: int = 256,
@@ -104,22 +102,19 @@ def grouped_mg_topk(df: DataFrame, group_col: str, col: str, k: int = 256,
         finalize=MisraGries.compact)
     gtype = df.schema[group_col].dataType.simpleString()
 
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def explode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         drop_archive_finders()
-        for pdf in batches:
-            for g, blob in zip(pdf["g"], pdf["blob"]):
-                mg = MisraGries.from_bytes(bytes(blob))
+        for b in batches:
+            for i, blob in enumerate(b.column("blob").to_pylist()):
+                mg = MisraGries.from_bytes(blob)
                 order = np.argsort(-mg.counts, kind="stable")[:topn]
-                yield pd.DataFrame(
-                    {"g": pd.Series([g] * order.size, dtype=object),
+                yield pa.RecordBatch.from_pydict(
+                    {"g": b.column("g").take(np.full(order.size, i)),
                      "key": mg.keys[order].view(np.int64),
                      "est": mg.counts[order]})
 
-    # string-encode integer groups through the pandas stage (exact; a
-    # nullable int64 would arrive as float64 — see grouped_aggregate_sketch)
-    return (blobs.select(F.col("g").cast("string").alias("g"), "blob")
-            .mapInPandas(explode, schema="g string, key long, est long")
-            .select(F.col("g").cast(gtype).alias(group_col), "key", "est"))
+    return (blobs.mapInArrow(explode, schema=f"g {gtype}, key long, est long")
+            .withColumnRenamed("g", group_col))
 
 
 def cms_sketch(df: DataFrame, col: str, eps: float = 0.0005, delta: float = 0.01,
@@ -229,7 +224,7 @@ def blocked_bloom_jvm_sketch(df: DataFrame, col: str, capacity: int,
 
 def blocked_bloom_jvm_contains_col(spark: SparkSession, filt, col) -> Column:
     """Boolean membership Column for the JVM-hash variant through the
-    BLOB path (pandas probe) — the parity twin of the pure-JVM join in
+    BLOB path (Arrow probe) — the parity twin of the pure-JVM join in
     sketch/membership.py; answers are bit-identical by construction."""
     from ..kernels.blocked_bloom import JvmBlockedBloomFilter
     from .membership import _blob_method_col

@@ -154,7 +154,7 @@ _BUILDERS = {
     "cuckoo": _build_cuckoo,
     # JVM-probeable variants (round 5): same structures, xxhash64 key
     # hash — probe via the zero-Python joins in sketch/membership, or
-    # through this facade's contains_col (pandas blob path, identical
+    # through this facade's contains_col (Arrow blob path, identical
     # answers)
     "cuckoo_jvm": _build_cuckoo_jvm,
     "blocked_bloom_jvm": _build_blocked_bloom_jvm,

@@ -6,7 +6,7 @@ is the declarative sort-agg plan:
 
     distinct keys -> (bucket, value) fingerprints (vectorized UDF)
     -> range-repartition + sort by (bucket, value)   [Catalyst sort]
-    -> per bucket-group rice encode (applyInPandas)  [grouped agg]
+    -> per bucket-group rice encode (applyInArrow)   [grouped agg]
     -> driver assembles bit stream + offsets in group order
 
 Because rice deltas reset at every bucket boundary, each contiguous
@@ -25,11 +25,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..kernels.gcs import GcsFilter
-from .udaf import drop_archive_finders, keys_to_u64, require_key_col
+from .udaf import drop_archive_finders, keys_u64, require_key_col
 
 
 def gcs_build(df: DataFrame, col: str, log2fpp: int = 10, log2bucket: int = 4,
@@ -47,34 +47,36 @@ def gcs_build(df: DataFrame, col: str, log2fpp: int = 10, log2bucket: int = 4,
     if n == 0:
         return proto
 
-    def fingerprint(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fingerprint(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         drop_archive_finders()
         f = GcsFilter(log2fpp, log2bucket, seed, layout=layout)
-        for pdf in batches:
-            b, v = f._fingerprints(keys_to_u64(pdf["k"]), n)
-            yield pd.DataFrame({"bucket": b, "value": v.view(np.int64),
-                                "grp": b // buckets_per_group})
+        for rb in batches:
+            b, v = f._fingerprints(keys_u64(rb.column("k")), n)
+            yield pa.RecordBatch.from_pydict(
+                {"bucket": b, "value": v.view(np.int64),
+                 "grp": b // buckets_per_group})
 
-    fps = uniq.mapInPandas(fingerprint, schema="bucket long, value long, grp long")
+    fps = uniq.mapInArrow(fingerprint, schema="bucket long, value long, grp long")
 
-    def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def encode_group(table: pa.Table) -> pa.Table:
         drop_archive_finders()
         f = GcsFilter(log2fpp, log2bucket, seed, layout=layout)
-        grp = int(pdf["grp"].iloc[0])
+        grp = table.column("grp")[0].as_py()
         lo = grp * buckets_per_group
         hi = min(lo + buckets_per_group, num_buckets)
-        bucket = pdf["bucket"].to_numpy() - lo  # group-local bucket ids
-        value = pdf["value"].to_numpy().view(np.uint64)
+        bucket = table.column("bucket").to_numpy() - lo  # group-local ids
+        value = table.column("value").to_numpy().view(np.uint64)
         bits, offsets = f._encode_all(bucket, value, hi - lo)
-        return pd.DataFrame({
-            "grp": [grp],
-            "nbits": [int(bits.size)],
-            "bits": [np.packbits(bits).tobytes()],
-            "lengths": [np.diff(offsets).astype("<i8").tobytes()],
+        return pa.table({
+            "grp": pa.array([grp], pa.int64()),
+            "nbits": pa.array([bits.size], pa.int64()),
+            "bits": pa.array([np.packbits(bits).tobytes()], pa.binary()),
+            "lengths": pa.array([np.diff(offsets).astype("<i8").tobytes()],
+                                pa.binary()),
         })
 
     rows = (fps.groupBy("grp")
-            .applyInPandas(encode_group, "grp long, nbits long, bits binary, lengths binary")
+            .applyInArrow(encode_group, "grp long, nbits long, bits binary, lengths binary")
             .collect())
     by_grp = {int(r["grp"]): r for r in rows}
 

@@ -11,7 +11,7 @@ SURVEY.md §3.4): **shard by key**.
   route can be computed JVM-side), so both candidate buckets of a key
   live in the same shard's private table and kick chains never cross
   shards.
-- Build = ONE shuffle: ``groupBy(shard).applyInPandas`` where each task
+- Build = ONE shuffle: ``groupBy(shard).applyInArrow`` where each task
   np.unique-dedupes its keys (global dedup is free because sharding is
   by key) and bulk-inserts into a private numpy cuckoo table sized
   ``capacity / num_shards``. Output: one ``(shard, blob)`` row each.
@@ -37,12 +37,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from ..kernels.cuckoo import CuckooFilter
 from ..kernels.hashing import U64, xxhash64_long
-from .udaf import drop_archive_finders, keys_to_u64
+from .udaf import drop_archive_finders, keys_u64
 
 _CHUNK = 1 << 18  # all kernels chunked: sandbox DRAM bandwidth saturates fast
 
@@ -61,8 +61,7 @@ def shard_col(col, num_shards: int) -> Column:
     masked to the shard count — whole-stage codegen, no Python.
     Bit-exactness is pinned by tests/test_round4.py."""
     c = F.col(col) if isinstance(col, str) else col
-    # NULL routes like key 0: keys_to_u64 normalizes NULL to 0 when a
-    # nullable-int batch reaches it (and refuses float64 batches), so
+    # NULL routes like key 0: keys_u64 decodes a NULL as key 0, so
     # every delivery must agree on the NULL shard — without this a
     # NULL row would hash-exchange to xxhash64(seed-only)'s shard and
     # be probed against the wrong blob
@@ -178,62 +177,77 @@ def _pack_shards(keys: np.ndarray, num_shards: int, transform=None):
     return shards, blobs
 
 
-def _sharded_build_blobs(df: DataFrame, col: str, num_shards: int,
-                         make_shard, hash_seed: int | None = None) -> list[bytes]:
-    """The by-key shape of the build engine (sketch/udaf.py), shared by
-    every sharded build (cuckoo, xor, shingle, tail, crate) and by
-    ``distinct_keys_u64``: per input partition, flatten token arrays,
-    np.unique-dedupe, split by shard, and emit ONE binary row of packed
-    uint64 payloads per (partition, shard) — the shuffle moves
-    P x num_shards small blobs instead of per-key rows, and no Python
-    UDF sits in the exchange. Then one groupBy(shard) builds each
-    shard's blob (``make_shard(keys) -> bytes``) and the driver
-    collects num_shards blobs; a shard no key routes to gets
-    ``make_shard`` of zero keys.
+def _sharded_partials(df: DataFrame, col: str, num_shards: int,
+                      hash_seed: int | None = None) -> DataFrame:
+    """First half of the by-key shape of the build engine
+    (sketch/udaf.py): per input partition, flatten token arrays,
+    np.unique-dedupe, split by shard, and emit ONE row
+    ``(shard int, payload binary)`` of packed uint64 payloads per
+    (partition, shard) — the shuffle moves P x num_shards small blobs
+    instead of per-key rows, and no Python UDF sits in the exchange.
 
     ``hash_seed`` set = ship ``simple_mix_split(keys, hash_seed)``
-    (the pre-hashed input domain of tail/crate; sharding stays on raw
-    keys so probes agree); raw-key variants re-dedupe reduce-side
-    (cross-partition duplicates), hashed variants preserve the
-    kernel's own duplicate handling.
+    (the pre-hashed input domain of tail/crate); sharding stays on raw
+    keys so probes agree.
     """
     from ..kernels.hashing import simple_mix_split
-    from .udaf import _null_safe_key, require_key_col, tokens_to_u64
+    from .udaf import _null_safe_key, require_key_col
 
-    is_array = require_key_col(df, col)
+    require_key_col(df, col)
     kc, nn = _null_safe_key(df, col)
     base = df.where(nn).select(kc.alias("k"))
     transform = (None if hash_seed is None
                  else (lambda seg: simple_mix_split(seg, hash_seed)))
 
-    def partial_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partial_shards(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         drop_archive_finders()
-        parts = [tokens_to_u64(pdf["k"]) if is_array else keys_to_u64(pdf["k"])
-                 for pdf in batches]
+        parts = [keys_u64(b.column("k")) for b in batches]
         keys = np.unique(np.concatenate(parts) if parts
                          else np.empty(0, dtype=np.uint64))
         shards, blobs = _pack_shards(keys, num_shards, transform)
-        yield pd.DataFrame({"shard": pd.Series(shards, dtype="int32"),
-                            "keys": blobs})
+        yield pa.RecordBatch.from_pydict(
+            {"shard": pa.array(shards, pa.int32()),
+             "payload": pa.array(blobs, pa.binary())})
 
-    packed = base.mapInPandas(partial_shards, schema="shard int, keys binary")
+    return base.mapInArrow(partial_shards, schema="shard int, payload binary")
 
-    def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+
+def _build_shards(packed: DataFrame, num_shards: int, make_shard,
+                  dedupe: bool = True) -> list[bytes]:
+    """Second half of the by-key shape: one groupBy(shard) over the
+    ``(shard, payload)`` partials builds each shard's blob
+    (``make_shard(keys) -> bytes``) and the driver collects num_shards
+    blobs; a shard no key routes to gets ``make_shard`` of zero keys.
+    ``dedupe`` re-dedupes raw keys reduce-side (cross-partition
+    duplicates); pre-hashed payloads keep the kernel's own duplicate
+    handling."""
+    def build_shard(table: pa.Table) -> pa.Table:
         drop_archive_finders()
-        keys = np.concatenate(
-            [np.frombuffer(b, dtype=np.uint64) for b in pdf["keys"]])
-        if hash_seed is None:
+        keys = np.concatenate([np.frombuffer(b, dtype=np.uint64)
+                               for b in table.column("payload").to_pylist()])
+        if dedupe:
             keys = np.unique(keys)
-        return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
-                             "blob": [make_shard(keys)]})
+        return pa.table({"shard": table.column("shard").slice(0, 1),
+                         "blob": pa.array([make_shard(keys)], pa.binary())})
 
     rows = (packed.groupBy("shard")
-            .applyInPandas(build_shard, "shard int, blob binary")
+            .applyInArrow(build_shard, "shard int, blob binary")
             .collect())
     blob_by_shard = {r["shard"]: bytes(r["blob"]) for r in rows}
     empty = (make_shard(np.empty(0, dtype=np.uint64))
              if len(blob_by_shard) < num_shards else None)
     return [blob_by_shard.get(s, empty) for s in range(num_shards)]
+
+
+def _sharded_build_blobs(df: DataFrame, col: str, num_shards: int,
+                         make_shard, hash_seed: int | None = None) -> list[bytes]:
+    """The by-key shape of the build engine, shared by every sharded
+    build (cuckoo, xor, shingle, tail, crate) and by
+    ``distinct_keys_u64``: ``_sharded_partials`` then ``_build_shards``
+    (``plans/checkpoint.py`` runs the two halves with a Parquet
+    checkpoint between them)."""
+    return _build_shards(_sharded_partials(df, col, num_shards, hash_seed),
+                         num_shards, make_shard, dedupe=hash_seed is None)
 
 
 class ShardedCuckooFilter:
@@ -340,6 +354,18 @@ def _cuckoo_build(kernel_cls, df: DataFrame, col: str, capacity: int | None,
     # one groupBy(shard) shuffle total.
     if capacity is None:
         capacity = approx_distinct_capacity(df, col)
+    make_shard = _cuckoo_shard_maker(kernel_cls, capacity, bits, seed,
+                                     num_shards, **create_kw)
+    blobs = _sharded_build_blobs(df, col, num_shards, make_shard)
+    return ShardedCuckooFilter(blobs, bits=bits, seed=seed,
+                               kernel_cls=kernel_cls)
+
+
+def _cuckoo_shard_maker(kernel_cls, capacity: int, bits: int, seed: int,
+                        num_shards: int, **create_kw):
+    """``make_shard`` of the sharded cuckoo build: each shard's table
+    sized ``capacity / num_shards`` (at least 64, and never below its
+    own key count)."""
     shard_cap = max(64, capacity // num_shards)
 
     def make_shard(keys: np.ndarray) -> bytes:
@@ -348,9 +374,7 @@ def _cuckoo_build(kernel_cls, df: DataFrame, col: str, capacity: int | None,
         filt.add_many(keys)
         return filt.to_bytes()
 
-    blobs = _sharded_build_blobs(df, col, num_shards, make_shard)
-    return ShardedCuckooFilter(blobs, bits=bits, seed=seed,
-                               kernel_cls=kernel_cls)
+    return make_shard
 
 
 # Worker-process cache of deserialized probe structures, keyed by the
@@ -388,12 +412,12 @@ def _broadcast_probe_col(spark: SparkSession, payload, load, col,
     bc = spark.sparkContext.broadcast(payload)
     rettype = T.BooleanType() if rettype is None else rettype
 
-    @F.pandas_udf(rettype)
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @F.arrow_udf(rettype)
+    def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         drop_archive_finders()
         fn = _cached_probe(bc, load)
-        for s in it:
-            yield pd.Series(fn(keys_to_u64(s)))
+        for arr in it:
+            yield pa.array(fn(keys_u64(arr)))
 
     return probe(F.col(col).cast("long") if isinstance(col, str) else col)
 
@@ -633,7 +657,7 @@ def contains_sharded(df: DataFrame, col: str, filt,
     - **store** (default in local mode, or whenever ``store`` names a
       path all executors can read): the filter is persisted once as
       one blob file per shard (``sketch.store.ShardBlobStore``) and the
-      probe is a plain iterator pandas_udf that lazily loads + LRU
+      probe is a plain iterator arrow_udf that lazily loads + LRU
       caches only the shards its batches touch. Broadcast-speed
       (measured 1.4 s vs 0.9-1.8 s broadcast at 20M probes), zero
       exchanges; ``max_cached_shards`` bounds per-worker filter memory
@@ -643,8 +667,8 @@ def contains_sharded(df: DataFrame, col: str, filt,
     - **cogroup** (fallback when there is no shared filesystem): blobs
       travel as DataFrame rows through a cogroup on the shard id; each
       task deserializes exactly its shard's blob. Correct on any
-      cluster, but pays the FlatMapCoGroupsInPandas machinery
-      (measured ~17 s at the same 20M probes).
+      cluster, but pays the cogroup machinery (measured ~17 s at the
+      same 20M probes, when it ran on pandas).
 
     Any Sharded* family (cuckoo, shingle, tail, crate, xor) works;
     answers are bit-identical across broadcast/store/cogroup paths.
@@ -692,27 +716,27 @@ def _contains_sharded_cogroup(df: DataFrame, col: str, filt,
         "shard int, blob binary")
 
     # shard id is pure JVM arithmetic (shard_col == shard_of bit-exact),
-    # so the only Python crossing in the whole plan is the cogroup probe
+    # so the only Python crossing in the whole plan is the cogroup probe;
+    # the caller's columns pass through as Arrow, exact whatever their type
     keyed = df.withColumn("_shard", shard_col(col, num_shards))
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField(out_col, T.BooleanType())])
     colname = col
 
-    def probe_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def probe_group(left: pa.Table, right: pa.Table) -> pa.Table:
         drop_archive_finders()
-        out = left.drop(columns=["_shard"])
-        if len(left) and len(right):
+        out = left.drop_columns(["_shard"])
+        if left.num_rows and right.num_rows:
             fn = _SHARD_PROBES[kind]
-            hit = fn(bytes(right["blob"].iloc[0]),
-                     keys_to_u64(left[colname]), seed)
+            hit = fn(right.column("blob")[0].as_py(),
+                     keys_u64(left.column(colname)), seed)
         else:
-            hit = np.zeros(len(out), dtype=bool)
-        out[out_col] = pd.Series(hit, index=out.index, dtype=bool)
-        return out
+            hit = np.zeros(out.num_rows, dtype=bool)
+        return out.append_column(out_col, pa.array(hit, pa.bool_()))
 
     return (keyed.groupBy("_shard")
             .cogroup(blob_df.groupBy("shard"))
-            .applyInPandas(probe_group, out_schema))
+            .applyInArrow(probe_group, out_schema))
 
 
 def xor_build(df: DataFrame, col: str, fp_bits: int = 8, seed: int = 0x5EED):
@@ -1131,7 +1155,7 @@ def crate_contains_col(spark: SparkSession, filt: ShardedCrateFilter,
 # DATA. The probe plan has no Python stage at all; at 100 TB it is a
 # map-side broadcast join running at JVM scan speed, and the broadcast
 # payload is the filter itself (the family's existing contract — the
-# blob broadcast the pandas probes ship is the same bytes).
+# blob broadcast the Python probes ship is the same bytes).
 #
 # ANSI-safe MakeMask (simd-block.h:158-172): the reference's per-lane
 # 32-bit wrapping multiply (h32 * salt) mod 2^32 cannot be written as a
@@ -1150,10 +1174,10 @@ def blocked_bloom_jvm_bucket_df(spark: SparkSession, filt) -> DataFrame:
     """The filter's bucket directory as a DataFrame: one row per
     256-bit bucket, the 8 uint32 lanes packed pairwise into four
     64-bit words (lane 2j = low half, LE). This is the broadcast side
-    of the JVM probe join — same bytes the pandas probe ships as a
+    of the JVM probe join — same bytes the Python probe ships as a
     blob, reshaped into a relation Catalyst can join.
 
-    Memoized per (session, n_added): the driver-side pandas->Spark
+    Memoized per (session, n_added): the driver-side local->Spark
     conversion costs ~0.5 s at 32k buckets, which would otherwise be
     paid on every probe call (measured 27 -> 83 M probes/s)."""
     cached = getattr(filt, "_jvm_bucket_df", None)
@@ -1162,10 +1186,10 @@ def blocked_bloom_jvm_bucket_df(spark: SparkSession, filt) -> DataFrame:
     nb = filt.num_buckets
     words = (filt.buckets.reshape(-1).view(np.uint64)
              .reshape(nb, 4).view(np.int64))
-    pdf = pd.DataFrame({"_bb_bucket": np.arange(nb, dtype=np.int64)})
+    cols = {"_bb_bucket": np.arange(nb, dtype=np.int64)}
     for j in range(4):
-        pdf[f"_bb_w{j}"] = words[:, j]
-    bdf = spark.createDataFrame(pdf)
+        cols[f"_bb_w{j}"] = np.ascontiguousarray(words[:, j])
+    bdf = spark.createDataFrame(pa.table(cols))
     filt._jvm_bucket_df = (spark, filt.n_added, bdf)
     return bdf
 
@@ -1305,7 +1329,7 @@ def _cf_jvm_tables(spark: SparkSession, filt: ShardedCuckooFilter):
     _cf_sb = shard<<32 | bucket and _cf_w packs up to 63//bits stored
     tags LSB-first; cells with more entries span extra rows (the semi
     join makes row multiplicity harmless). Driver cost is the same
-    bytes the pandas probe broadcasts."""
+    bytes the Python probe broadcasts."""
     from ..kernels.cuckoo import JvmCuckooFilter
 
     cached = getattr(filt, "_jvm_dfs", None)
@@ -1366,11 +1390,10 @@ def _cf_jvm_tables(spark: SparkSession, filt: ShardedCuckooFilter):
                                   pair & np.uint64(0xFFFF))
         row_parts.append(rows)
         word_parts.append(words)
-    meta_df = spark.createDataFrame(
-        pd.DataFrame(metas, columns=["_cf_shard", "_cf_mask"]))
+    meta = np.array(metas, dtype=np.int64).reshape(-1, 2)
+    meta_df = spark.createDataFrame(pa.table(
+        {"_cf_shard": meta[:, 0], "_cf_mask": meta[:, 1]}))
     # pyarrow Table, not pandas: no full-copy of the mirror arrays
-    import pyarrow as pa
-
     word_rows = (np.concatenate(row_parts) if row_parts
                  else np.empty(0, dtype=np.int64))
     words = (np.concatenate(word_parts) if word_parts

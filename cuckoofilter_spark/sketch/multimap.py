@@ -15,13 +15,13 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..kernels.dysect import QuotientMultimap
-from .membership import _cached_probe, shard_of
-from .udaf import drop_archive_finders, keys_to_u64, require_key_col
+from .membership import _build_shards, _cached_probe, shard_of
+from .udaf import drop_archive_finders, keys_u64, require_key_col
 
 
 class ShardedMultimap:
@@ -99,7 +99,8 @@ def multimap_build(df: DataFrame, key_col: str, val_col: str,
     quotient-dysect.hpp:134-227).  Map side packs each partition's
     pairs per key-shard into ONE interleaved-uint64 binary row — the
     shuffle moves P x num_shards blobs, not pairs — and
-    ``groupBy(shard)`` builds each shard inside its task.
+    ``groupBy(shard)`` builds each shard inside its task (the by-key
+    scaffold's second half, ``membership._build_shards``).
     """
     if num_shards & (num_shards - 1) or num_shards <= 0:
         raise ValueError("num_shards must be a power of two")
@@ -109,12 +110,12 @@ def multimap_build(df: DataFrame, key_col: str, val_col: str,
     base = (df.select(F.col(key_col).alias("k"), F.col(val_col).alias("v"))
             .where(F.col(key_col).isNotNull() & F.col(val_col).isNotNull()))
 
-    def partial_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partial_shards(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         drop_archive_finders()
         ks, vs = [], []
-        for pdf in batches:
-            ks.append(keys_to_u64(pdf["k"]))
-            vs.append(keys_to_u64(pdf["v"]))
+        for b in batches:
+            ks.append(keys_u64(b.column("k")))
+            vs.append(keys_u64(b.column("v")))
         keys = np.concatenate(ks) if ks else np.empty(0, dtype=np.uint64)
         vals = np.concatenate(vs) if vs else np.empty(0, dtype=np.uint64)
         sh = shard_of(keys, num_shards)
@@ -128,26 +129,16 @@ def multimap_build(df: DataFrame, key_col: str, val_col: str,
                 inter[0::2], inter[1::2] = keys[seg], vals[seg]
                 shards.append(s)
                 blobs.append(inter.tobytes())
-        yield pd.DataFrame({"shard": pd.Series(shards, dtype="int32"),
-                            "pairs": blobs})
+        yield pa.RecordBatch.from_pydict(
+            {"shard": pa.array(shards, pa.int32()),
+             "payload": pa.array(blobs, pa.binary())})
 
-    packed = base.mapInPandas(partial_shards, schema="shard int, pairs binary")
+    def make_shard(inter: np.ndarray) -> bytes:
+        return QuotientMultimap.from_pairs(inter[0::2], inter[1::2]).to_bytes()
 
-    def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        drop_archive_finders()
-        inter = np.concatenate(
-            [np.frombuffer(b, dtype=np.uint64) for b in pdf["pairs"]])
-        mm = QuotientMultimap.from_pairs(inter[0::2], inter[1::2])
-        return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
-                             "blob": [mm.to_bytes()]})
-
-    rows = (packed.groupBy("shard")
-            .applyInPandas(build_shard, "shard int, blob binary")
-            .collect())
-    blob_by_shard = {r["shard"]: bytes(r["blob"]) for r in rows}
-    empty = QuotientMultimap.empty().to_bytes()
+    packed = base.mapInArrow(partial_shards, schema="shard int, payload binary")
     return ShardedMultimap(
-        [blob_by_shard.get(s, empty) for s in range(num_shards)])
+        _build_shards(packed, num_shards, make_shard, dedupe=False))
 
 
 def multimap_values_col(spark: SparkSession, mm: ShardedMultimap,
@@ -158,20 +149,18 @@ def multimap_values_col(spark: SparkSession, mm: ShardedMultimap,
     Find order, see kernels/dysect.py)."""
     bc = spark.sparkContext.broadcast(mm.blobs)
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @F.arrow_udf(T.ArrayType(T.LongType()))
+    def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         drop_archive_finders()
         local = _cached_probe(bc, ShardedMultimap)
-        for s in it:
-            if not len(s):
-                yield pd.Series([], dtype=object)
-                continue
-            counts, flat = local.get_many(keys_to_u64(s))
+        for arr in it:
+            counts, flat = local.get_many(keys_u64(arr))
+            offsets = np.zeros(counts.size + 1, dtype=np.int32)
+            np.cumsum(counts, out=offsets[1:])
             # bit-view back to int64 (values >= 2^63 must round-trip,
-            # same normalization as keys_to_u64's int64 bit-view)
-            parts = np.split(np.ascontiguousarray(flat).view(np.int64),
-                             np.cumsum(counts)[:-1])
-            yield pd.Series(parts)
+            # same normalization as keys_u64's int64 bit-view)
+            yield pa.ListArray.from_arrays(
+                pa.array(offsets), pa.array(flat.view(np.int64)))
 
     return probe(F.col(col).cast("long") if isinstance(col, str) else col)
 
@@ -203,23 +192,21 @@ def multimap_lookup_sharded(df: DataFrame, col: str, mm: ShardedMultimap,
         list(df.schema.fields) + [T.StructField(out_col, T.LongType())])
     colname = col
 
-    def lookup_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def lookup_group(left: pa.Table, right: pa.Table) -> pa.Table:
         drop_archive_finders()
-        left = left.drop(columns=["_shard"])
-        if not len(left) or not len(right):
-            out = left.iloc[0:0].copy()
-            out[out_col] = pd.Series([], dtype="int64")
-            return out
-        m = QuotientMultimap.from_bytes(bytes(right["blob"].iloc[0]))
-        counts, flat = m.get_many(keys_to_u64(left[colname]))
-        out = left.iloc[np.repeat(np.arange(len(left)), counts)]
-        out = out.reset_index(drop=True)
-        out[out_col] = pd.Series(np.ascontiguousarray(flat).view(np.int64))
-        return out
+        left = left.drop_columns(["_shard"])
+        if not left.num_rows or not right.num_rows:
+            return left.slice(0, 0).append_column(
+                out_col, pa.array([], pa.int64()))
+        m = QuotientMultimap.from_bytes(right.column("blob")[0].as_py())
+        counts, flat = m.get_many(keys_u64(left.column(colname)))
+        out = left.take(np.repeat(np.arange(left.num_rows), counts))
+        return out.append_column(
+            out_col, pa.array(np.ascontiguousarray(flat).view(np.int64)))
 
     return (keyed.groupBy("_shard")
             .cogroup(blob_df.groupBy("shard"))
-            .applyInPandas(lookup_group, out_schema))
+            .applyInArrow(lookup_group, out_schema))
 
 
 def multimap_count_col(spark: SparkSession, mm: ShardedMultimap,
@@ -227,11 +214,11 @@ def multimap_count_col(spark: SparkSession, mm: ShardedMultimap,
     """long Column: number of values stored under ``col`` (0 if absent)."""
     bc = spark.sparkContext.broadcast(mm.blobs)
 
-    @F.pandas_udf(T.LongType())
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @F.arrow_udf(T.LongType())
+    def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         drop_archive_finders()
         local = _cached_probe(bc, ShardedMultimap)
-        for s in it:
-            yield pd.Series(local.count_many(keys_to_u64(s)))
+        for arr in it:
+            yield pa.array(local.count_many(keys_u64(arr)))
 
     return probe(F.col(col).cast("long") if isinstance(col, str) else col)

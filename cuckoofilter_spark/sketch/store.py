@@ -2,16 +2,16 @@
 
 The broadcast probe ships the WHOLE filter to every executor; the
 cogroup probe (``membership.contains_sharded`` fallback) delivers each
-shard's blob to exactly its task but pays the FlatMapCoGroupsInPandas
-machinery (measured 17-20 s vs 0.9 s broadcast at 20M probes — the
-cogroup exec materializes whole groups as single pandas frames). The
-store probe is the scale path that is ALSO broadcast-speed:
+shard's blob to exactly its task but pays the cogroup machinery
+(measured 17-20 s vs 0.9 s broadcast at 20M probes, when it ran on
+pandas — the cogroup exec materializes whole groups as single frames).
+The store probe is the scale path that is ALSO broadcast-speed:
 
 - the filter is persisted once as one blob file per shard plus a
   ``manifest.json`` (kind, seed, num_shards, per-shard sha256) on a
   filesystem every executor can read — local disk in local mode, a
   shared/distributed FS (NFS, HDFS/S3 via a mount) on a cluster;
-- the probe is a plain iterator ``pandas_udf``: each Arrow batch
+- the probe is a plain iterator ``arrow_udf``: each Arrow batch
   computes shard routes (the same XXH64 route as ``shard_col``),
   argsort-groups keys by shard, and answers each group against that
   shard's filter, loaded lazily from the store and LRU-cached per
@@ -36,7 +36,7 @@ from collections import OrderedDict
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -188,7 +188,7 @@ def contains_store(df: DataFrame, col: str, store: ShardBlobStore | str,
     if isinstance(store, str):
         store = ShardBlobStore.open(store)
     from .membership import shard_col
-    from .udaf import drop_archive_finders, keys_to_u64
+    from .udaf import drop_archive_finders, keys_u64
 
     path, store_id, kind = store.path, store.store_id, store.kind
     seed, num_shards = store.seed, store.num_shards
@@ -196,14 +196,14 @@ def contains_store(df: DataFrame, col: str, store: ShardBlobStore | str,
     cap = num_shards if max_cached_shards is None else int(max_cached_shards)
     premix = kind in ("tail", "crate")
 
-    @F.pandas_udf(T.BooleanType())
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @F.arrow_udf(T.BooleanType())
+    def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         drop_archive_finders()
         from ..kernels.hashing import simple_mix_split
         from .membership import shard_of
 
-        for s_ser in it:
-            ks = keys_to_u64(s_ser)
+        for arr in it:
+            ks = keys_u64(arr)
             sh = shard_of(ks, num_shards)
             pk = simple_mix_split(ks, seed) if premix else ks
             hit = np.zeros(ks.size, dtype=bool)
@@ -216,7 +216,7 @@ def contains_store(df: DataFrame, col: str, store: ShardBlobStore | str,
                 idx = order[lo:hi]
                 f = _load_shard(path, store_id, kind, s, cap, shas[s])
                 hit[idx] = f.contains_many(pk[idx])
-            yield pd.Series(hit)
+            yield pa.array(hit)
 
     if colocate:
         # 4x shards of partitions keeps the hash-partition balls-in-bins

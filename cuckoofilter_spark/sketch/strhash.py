@@ -3,7 +3,7 @@
 The reference's canonical string-item path is "SpookyHash the bytes,
 then treat the 64-bit value as the item" (cuckoofilter.h:69 shows
 exactly this with HashUtil::SpookyHash; hashutil.h:21-50 is the full
-byte-string surface). ``keys_to_u64`` deliberately refuses non-integer
+byte-string surface). ``keys_u64`` deliberately refuses non-integer
 key columns and tells callers to keyify Spark-side — these UDFs are
 that keyify step when bit-parity with the reference's hashes matters
 (e.g. probing a filter blob built by the C++ library). When parity is
@@ -64,7 +64,7 @@ def _wrap32(fn, *args):
 def spooky64_col(col, seed: int = 0) -> Column:
     """SpookyHash V2 Hash64 of a string/binary column (bit-exact vs
     HashUtil::SpookyHash, hashutil.cc:583-586). Returns the hash as
-    int64 (the uint64 bit pattern — keys_to_u64 reinterprets)."""
+    int64 (the uint64 bit pattern — keys_u64 reinterprets)."""
     c = F.col(col) if isinstance(col, str) else col
     return _wrap64(bytehash.spooky_hash64, seed)(c)
 
@@ -80,8 +80,3 @@ def murmur32_col(col, seed: int = 0) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return _wrap32(bytehash.murmur2_32, seed)(c)
 
-
-def superfast_col(col) -> Column:
-    """Hsieh SuperFastHash (HashUtil::SuperFastHash) — int64 in [0,2^32)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return _wrap32(bytehash.superfast_hash)(c)

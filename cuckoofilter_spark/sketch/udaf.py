@@ -7,33 +7,38 @@ A builder hands the engine a kernel factory (plus the kernel class when
 the factory is not the class), and the kernel's own ``add_many``,
 ``merge``, ``to_bytes`` and ``from_bytes`` are the whole protocol:
 
-- **update** is ``add_many`` of one Arrow batch of the key column: the
-  flattened uint64 keys (``keys_to_u64`` for an integer column,
-  ``tokens_to_u64`` for ``array<int>``), or float64 values for a kernel
-  whose class sets ``takes_values`` (KLL, t-digest);
+- **update** is ``add_many`` of one Arrow batch of the key column: its
+  uint64 keys (``keys_u64``, which flattens an ``array<int>`` column),
+  or float64 values for a kernel whose class sets ``takes_values``
+  (KLL, t-digest);
 - **merge** and **decode** are the class's ``merge`` and ``from_bytes``.
   One function (``_merge_blobs``) merges blobs in arrival order for the
   tree levels, the grouped merge and the driver's final merge.
 
 Three shapes share it:
 
-- **Global tree** (``aggregate_sketch``): ``mapInPandas`` over the
+- **Global tree** (``aggregate_sketch``): ``mapInArrow`` over the
   projected key column only (Catalyst prunes the scan to it); each task
   folds its batches into one kernel and emits one blob, so the shuffle
   carries one blob per partition, whatever the row count. While more
   than ``fanout`` blobs remain, ``groupBy(pid % ceil(P/fanout))``
-  merges them (the treeAggregate shape, so the driver never receives
-  more than ``fanout`` blobs even at 10^5 partitions); the driver
-  merges the rest.
+  ``.applyInArrow`` merges them (the treeAggregate shape, so the
+  driver never receives more than ``fanout`` blobs even at 10^5
+  partitions); the driver merges the rest.
 - **Grouped** (``grouped_aggregate_sketch``): each task keeps one
   kernel per group it sees and emits ``(group, blob)`` partials; one
-  blob-only ``groupBy(group)`` merges each group's partials.
+  blob-only ``groupBy(group).applyInArrow`` merges each group's
+  partials.
 - **By key** (``membership._sharded_build_blobs``): for kernels that do
   not merge (cuckoo, xor, shingle, tail, crate) the partial is the
   task's deduplicated keys, packed per key shard; one
-  ``groupBy(shard)`` builds each shard's kernel from all of its keys.
+  ``groupBy(shard).applyInArrow`` builds each shard's kernel from all
+  of its keys.
   ``distinct_keys_u64`` is the same shape with the sorted keys as the
   payload.
+
+Workers see Arrow batches only, never pandas: keys stay exact 64-bit
+integers and group ids keep their own Arrow type.
 
 Associativity and commutativity of the kernel merge (tested bit-exact
 in tests/test_kernels.py) make the tree shape legal.
@@ -53,7 +58,8 @@ import zipimport
 from collections.abc import Callable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -74,7 +80,7 @@ def drop_archive_finders() -> None:
 
     Call it as the first statement of each library Python worker
     function (a plain call: a decorator could hide the type hints an
-    iterator ``pandas_udf`` takes its UDF type from).
+    iterator ``arrow_udf`` takes its UDF type from).
     """
     from pyspark import SparkFiles
 
@@ -89,12 +95,12 @@ def drop_archive_finders() -> None:
 def _null_safe_key(df: DataFrame, col: str):
     """(column, null_filter) for a sketch key projection.
 
-    NULL handling must happen JVM-side, BEFORE Arrow: a scalar bigint
-    column with NULLs reaches pandas as float64 (keys_to_u64 then
-    raises a misleading type error), and a NULL ELEMENT inside an
-    array<int> cell reaches pandas as NaN in a float64 array, which an
-    unsafe int64 cast turns into INT64_MIN — a garbage key silently
-    inserted. So: drop NULL rows, strip NULL elements.
+    NULL handling must happen JVM-side, BEFORE Arrow: a NULL in an
+    Arrow integer array has no int64 value. Converted to numpy it still
+    arrives as NaN in float64, which an unsafe int64 cast turns into
+    INT64_MIN, and ``keys_u64`` reads it as key 0 — either way a garbage
+    key silently inserted. So: drop NULL rows, strip NULL elements of
+    array<int> cells.
     """
     from pyspark.sql import types as T
 
@@ -104,22 +110,29 @@ def _null_safe_key(df: DataFrame, col: str):
     return c, c.isNotNull()
 
 
-def keys_to_u64(s: pd.Series) -> np.ndarray:
-    """Normalize an Arrow-delivered key Series to uint64 (bit-view of int64).
+def keys_u64(arr: pa.Array) -> np.ndarray:
+    """One Arrow batch of a key column -> uint64 keys (bit-view of int64).
 
-    int32/int64 are widened to int64 then reinterpreted; the same
-    normalization runs at build and probe time so signedness never
-    matters. Floats/strings must be keyified Spark-side first
-    (``F.xxhash64`` — JVM, vectorized) — raise rather than guess.
+    An ``array<int>`` column is flattened with ``flatten()``, which
+    honours a sliced array's offsets (``.values`` would return the
+    parent's whole child array). int8/16/32 are sign-extended to int64,
+    then every key is bit-viewed, so build and probe agree whatever the
+    signedness. A NULL becomes key 0, the shard ``shard_col`` routes it
+    to; builds never see one (``_null_safe_key``). Floats and strings
+    must be keyified Spark-side first (``F.xxhash64`` — JVM,
+    vectorized): raise rather than guess.
     """
-    if not pd.api.types.is_integer_dtype(s.dtype):
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
+        arr = arr.flatten()
+    if not pa.types.is_integer(arr.type):
         raise TypeError(
-            f"sketch keys must be integers (got {s.dtype}); "
+            f"sketch keys must be integers (got {arr.type}); "
             "hash other types Spark-side with F.xxhash64(...) first")
-    return s.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
-
-
-_INT_TYPES = ("byte", "short", "int", "bigint", "long", "integer", "smallint", "tinyint")
+    if arr.null_count:
+        arr = arr.fill_null(0)
+    return arr.to_numpy().astype(np.int64, copy=False).view(np.uint64)
 
 
 def require_key_col(df: DataFrame, col: str) -> bool:
@@ -144,19 +157,6 @@ def require_key_col(df: DataFrame, col: str) -> bool:
     return False
 
 
-def tokens_to_u64(s: pd.Series) -> np.ndarray:
-    """Flatten an array<int> column batch to one uint64 key vector.
-
-    Arrow already delivers each cell as a numpy array; concatenate with a
-    target dtype does the widening in one C pass instead of a per-row
-    ``np.asarray(..., int64)`` copy (3.3s -> ~0.15s on an 8.7M-token batch).
-    """
-    arrs = [a for a in s if a is not None and len(a)]
-    if not arrs:
-        return np.empty(0, dtype=np.uint64)
-    return np.concatenate(arrs, dtype=np.int64, casting="unsafe").view(np.uint64)
-
-
 def approx_distinct_capacity(df: DataFrame, col: str,
                              headroom: float = 1.15, slack: int = 64) -> int:
     """Distinct-cardinality estimate for sizing a filter when the
@@ -173,17 +173,24 @@ def approx_distinct_capacity(df: DataFrame, col: str,
     return int(n * headroom) + int(slack)
 
 
-def _values_f64(s: pd.Series) -> np.ndarray:
-    return s.to_numpy(dtype=np.float64, na_value=np.nan)
-
-
-def _batch_input(df: DataFrame, col: str, cls) -> Callable[[pd.Series], np.ndarray]:
+def _add_input(df: DataFrame, col: str, cls) -> Callable[[pa.Array], np.ndarray]:
     """What the update step hands ``add_many``: float64 values for a
     ``takes_values`` kernel, else the batch's uint64 keys (validated
     driver-side by ``require_key_col``)."""
     if getattr(cls, "takes_values", False):
-        return _values_f64
-    return tokens_to_u64 if require_key_col(df, col) else keys_to_u64
+        return lambda arr: arr.to_numpy(zero_copy_only=False).astype(np.float64)
+    require_key_col(df, col)
+    return keys_u64
+
+
+def _row_groups(groups: pa.Array):
+    """``(value, row indices)`` per distinct value of ``groups``, in
+    first-seen order; NULL is a value of its own."""
+    enc = pc.dictionary_encode(groups, null_encoding="encode")
+    codes = enc.indices.to_numpy()
+    order = np.argsort(codes, kind="stable")
+    bounds = np.searchsorted(codes[order], np.arange(1, len(enc.dictionary)))
+    return zip(enc.dictionary.to_pylist(), np.split(order, bounds))
 
 
 def _merge_blobs(cls, blobs) -> object:
@@ -197,15 +204,16 @@ def _merge_blobs(cls, blobs) -> object:
     return kern
 
 
-def _merge_group(cls, finalize=None) -> Callable[[pd.DataFrame], pd.DataFrame]:
-    """``applyInPandas`` body merging one group's ``(g, blob)`` rows into
+def _merge_group(cls, finalize=None) -> Callable[[pa.Table], pa.Table]:
+    """``applyInArrow`` body merging one group's ``(g, blob)`` rows into
     one row, keeping ``g``."""
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_group(table: pa.Table) -> pa.Table:
         drop_archive_finders()
-        kern = _merge_blobs(cls, pdf["blob"])
+        kern = _merge_blobs(cls, table.column("blob").to_pylist())
         if finalize is not None:
             kern = finalize(kern) or kern
-        return pd.DataFrame({"g": pdf["g"].iloc[:1], "blob": [kern.to_bytes()]})
+        return pa.table({"g": table.column("g").slice(0, 1),
+                         "blob": pa.array([kern.to_bytes()], pa.binary())})
 
     return merge_group
 
@@ -222,16 +230,17 @@ def aggregate_sketch(df: DataFrame, col: str, make: Callable[[], object],
     ``approx_distinct_capacity``'s sizing convention.
     """
     cls = cls or make
-    to_input = _batch_input(df, col, cls)
+    to_input = _add_input(df, col, cls)
     kc, nn = _null_safe_key(df, col)
     proj = df.where(nn).select(kc.alias("k"))
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         drop_archive_finders()
         kern = make()
-        for pdf in batches:
-            kern.add_many(to_input(pdf["k"]))
-        yield pd.DataFrame({"blob": [kern.to_bytes()]})
+        for b in batches:
+            kern.add_many(to_input(b.column("k")))
+        yield pa.RecordBatch.from_pydict(
+            {"blob": pa.array([kern.to_bytes()], pa.binary())})
 
     # key partials DENSE (0..P-1) so every tree level's pmod buckets are
     # balanced: one blob row per input partition, still sitting in that
@@ -240,7 +249,7 @@ def aggregate_sketch(df: DataFrame, col: str, make: Callable[[], object],
     # partitionId << 33, and pmod(p << 33, groups) is 0 for every p
     # whenever groups is even, which would collapse the whole tree into
     # ONE merge task (the degenerate shape this stage exists to avoid).
-    blob_df = proj.mapInPandas(partial, schema="blob binary").select(
+    blob_df = proj.mapInArrow(partial, schema="blob binary").select(
         F.spark_partition_id().cast("long").alias("g"), "blob")
 
     # each merged row keeps its group id: ids are dense 0..groups-1, so
@@ -252,7 +261,7 @@ def aggregate_sketch(df: DataFrame, col: str, make: Callable[[], object],
         blob_df = (
             blob_df.withColumn("g", F.pmod(F.col("g"), F.lit(groups)))
             .groupBy("g")
-            .applyInPandas(merge_group, "g long, blob binary")
+            .applyInArrow(merge_group, "g long, blob binary")
         )
         level = groups
 
@@ -289,14 +298,8 @@ def grouped_aggregate_sketch(
 
     ``make``/``cls`` are ``aggregate_sketch``'s. ``finalize``
     (optional) post-processes each merged kernel before serialization
-    (e.g. MG ``compact``).
-
-    Group column must be string or integral. Integer groups travel
-    through the pandas stages as their exact STRING form and are cast
-    back at the end: a nullable int64 column entering mapInPandas
-    becomes float64 in pandas, silently rounding group ids above 2^53
-    (the same Arrow/pandas upcast trap as sketch/strhash.py) — the
-    string round-trip is lossless for every int64.
+    (e.g. MG ``compact``). Group column must be string or integral; the
+    group keeps its type through both stages.
     """
     from pyspark.sql import types as T
 
@@ -306,28 +309,27 @@ def grouped_aggregate_sketch(
             f"group column {group_col!r} has type {dt.simpleString()}; "
             "grouped sketches support string or integer groups")
     cls = cls or make
-    to_input = _batch_input(df, col, cls)
-    gtype = dt.simpleString()
-    schema = "g string, blob binary"
+    to_input = _add_input(df, col, cls)
+    schema = T.StructType([T.StructField("g", dt),
+                           T.StructField("blob", T.BinaryType())])
     kc, nn = _null_safe_key(df, col)
-    proj = df.where(nn).select(F.col(group_col).cast("string").alias("g"),
-                               kc.alias("k"))
+    proj = df.where(nn).select(F.col(group_col).alias("g"), kc.alias("k"))
 
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         drop_archive_finders()
         kerns: dict = {}
-        for pdf in batches:
-            for g, sub in pdf.groupby("g", dropna=False, sort=False):
-                g = None if pd.isna(g) else g
+        for b in batches:
+            gtype = b.schema.field("g").type
+            for g, rows in _row_groups(b.column("g")):
                 kern = kerns.get(g)
                 if kern is None:
                     kern = kerns[g] = make()
-                kern.add_many(to_input(sub["k"]))
+                kern.add_many(to_input(b.column("k").take(rows)))
         if kerns:
-            yield pd.DataFrame(
-                {"g": pd.Series(list(kerns.keys()), dtype=object),
-                 "blob": [k.to_bytes() for k in kerns.values()]})
+            yield pa.RecordBatch.from_pydict(
+                {"g": pa.array(list(kerns), gtype),
+                 "blob": pa.array([k.to_bytes() for k in kerns.values()],
+                                  pa.binary())})
 
-    out = (proj.mapInPandas(partials, schema=schema).groupBy("g")
-           .applyInPandas(_merge_group(cls, finalize), schema))
-    return out.select(F.col("g").cast(gtype).alias("g"), "blob")
+    return (proj.mapInArrow(partials, schema=schema).groupBy("g")
+            .applyInArrow(_merge_group(cls, finalize), schema))

@@ -32,12 +32,13 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import BinaryType, StructField, StructType
 
 from ..kernels.cuckoo import CuckooFilter
-from ..sketch.udaf import keys_to_u64
+from ..sketch.udaf import keys_u64
 
 _STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 _SHARD_COL = "__cfdedup_shard"
@@ -87,7 +88,7 @@ def streaming_dedup(
                 raise ValueError(
                     f"streaming_dedup: NULL in key column {key_col!r}; "
                     "filter NULLs or keyify with F.xxhash64 upstream")
-            keys = keys_to_u64(pdf[key_col])
+            keys = keys_u64(pa.Array.from_pandas(pdf[key_col]))
             first = ~pd.Series(keys).duplicated().to_numpy()
             cand = keys[first]
             fresh = ~cf.contains_many(cand)

@@ -29,7 +29,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..kernels.cms import CountMinSketch
 from ..kernels.hll import HyperLogLog
@@ -304,8 +304,8 @@ def migrate_legacy_pickle_state(state_dir: str) -> str:
 def tumbling_window_col(ts_col, duration: str):
     """Event-time tumbling-window key for windowed sketch rollups:
     the window START as epoch seconds (a long Column, whole-stage
-    codegen, no Python — integer group keys ride the grouped protocol's
-    string-encoded path safely).  Use as the ``group_col`` of a
+    codegen, no Python — integer group keys keep their type through the
+    grouped protocol).  Use as the ``group_col`` of a
     ``GroupedStreamingSketchState`` to keep one mergeable sketch per
     event-time window over an unbounded stream.
 
@@ -322,18 +322,3 @@ def tumbling_window_col(ts_col, duration: str):
     c = F.col(ts_col) if isinstance(ts_col, str) else ts_col
     return F.window(c, duration).getField("start").cast("long")
 
-
-def stream_token_sketches(spark: SparkSession, stream_df: DataFrame,
-                          state_root: str, checkpoint_root: str,
-                          seed: int = 0x5EED) -> list:
-    """Convenience: maintain HLL(tokens) + CMS(tokens) + KLL(n_tok) over
-    a token stream; returns the started queries."""
-    qs = []
-    for kind, col, params in (
-        ("hll", "tokens", {"p": 14, "seed": seed}),
-        ("cms", "tokens", {"eps": 0.0005, "delta": 0.01, "seed": seed}),
-        ("kll", "n_tok", {"k": 200, "seed": seed}),
-    ):
-        st = StreamingSketchState(os.path.join(state_root, kind), kind, col, **params)
-        qs.append(st.attach(stream_df, os.path.join(checkpoint_root, kind)))
-    return qs

@@ -117,11 +117,10 @@ def audit(plan: str) -> dict:
     return {
         "shuffle_ex": ex_all - bc,
         "broadcast_ex": bc,
-        "py_stages": (plan.count("ArrowEvalPython")
-                      + plan.count("BatchEvalPython")
-                      + plan.count("MapInPandas")
-                      + plan.count("FlatMapGroupsInPandas")
-                      + plan.count("FlatMapCoGroupsInPandas")),
+        "py_stages": sum(plan.count(node) for node in (
+            "ArrowEvalPython", "BatchEvalPython",
+            "MapInPandas", "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas",
+            "MapInArrow", "FlatMapGroupsInArrow", "FlatMapCoGroupsInArrow")),
         # tree strings mark fused spans as "*(N) Node"; formatted
         # explain uses "[codegen id : N]" — count either
         "codegen_spans": len(set(re.findall(r"\*\((\d+)\)", plan))

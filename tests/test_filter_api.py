@@ -51,7 +51,7 @@ def test_capacity_contract(spark, keyset):
 def test_adversarial_keys_all_families(spark):
     """Extreme int64 keys (negatives, min/max, duplicates) build and
     probe with zero false negatives in every family — signedness is
-    normalized once (keys_to_u64 bit-view) at build AND probe."""
+    normalized once (keys_u64 bit-view) at build AND probe."""
     keys = [0, 1, -1, 2**63 - 1, -(2**63), 42, 42, -99999999999]
     df = spark.createDataFrame([(k,) for k in keys], "k long")
     probe = spark.createDataFrame(

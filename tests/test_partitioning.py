@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -53,11 +54,11 @@ def test_salted_repartition_balances_hot_source(spark, toks):
 def test_salted_group_apply_matches_unsalted(spark, toks):
     """Per-source HLL via the skew-safe two-stage fold == direct fold."""
     from cuckoofilter_spark.kernels.hll import HyperLogLog
-    from cuckoofilter_spark.sketch.udaf import tokens_to_u64
+    from cuckoofilter_spark.sketch.udaf import keys_u64
 
     def make_partial(pdf: pd.DataFrame) -> bytes:
         h = HyperLogLog(p=12, seed=9)
-        h.add_many(tokens_to_u64(pdf["tokens"]))
+        h.add_many(keys_u64(pa.Array.from_pandas(pdf["tokens"])))
         return h.to_bytes()
 
     def merge_partials(blobs):
@@ -85,7 +86,7 @@ def test_salted_group_apply_matches_unsalted(spark, toks):
     for src in ("web", "code", "books", "wiki"):
         pdf = toks.where(F.col("source") == src).select("source", "tokens").toPandas()
         h = HyperLogLog(p=12, seed=9)
-        h.add_many(tokens_to_u64(pdf["tokens"]))
+        h.add_many(keys_u64(pa.Array.from_pandas(pdf["tokens"])))
         assert got[src] == pytest.approx(h.estimate()), src
 
     # the degenerate salt still returns correct estimates (merge of 1)

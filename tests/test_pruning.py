@@ -152,3 +152,17 @@ def test_duplicate_index_rows_never_double_read(spark, keyed_table):
     pruned = pruned_parquet(spark, keyed_table, doubled, probe)
     exact = pruned.where(F.col("key").isin(probe))
     assert exact.count() == 3  # one row per existing probe key, no dupes
+
+
+def test_null_array_elements_not_indexed(spark, tmp_path):
+    """A NULL element of an array key column is not a key: the file
+    holding ``[1, NULL, 3]`` indexes two keys, and a probe for the
+    INT64_MIN a NULL would decode to prunes it."""
+    path = str(tmp_path / "arr")
+    spark.createDataFrame([([1, None, 3],)], "key array<bigint>") \
+        .coalesce(1).write.mode("overwrite").parquet(path)
+    idx = file_sketch_index(spark, path, "key", seed=5)
+    (row,) = idx.collect()
+    assert row.n_keys == 2
+    assert prune_files(spark, idx, [1]) == [row.file]
+    assert prune_files(spark, idx, [np.iinfo(np.int64).min]) == []

@@ -121,12 +121,12 @@ def test_contains_sharded_store_plan_zero_exchange(spark):
             ._jdf.queryExecution().executedPlan().toString())
     assert "ArrowEvalPython" in plan
     assert "Exchange" not in plan  # covers Broadcast + shuffle
-    assert "FlatMapCoGroupsInPandas" not in plan
+    assert "FlatMapCoGroupsIn" not in plan
 
 
 def test_contains_sharded_cogroup_plan(spark):
     """Plan shape of the cogroup fallback (no shared FS): one
-    FlatMapCoGroupsInPandas over hash exchanges on the shard id; no
+    FlatMapCoGroupsInArrow over hash exchanges on the shard id; no
     BroadcastExchange anywhere."""
     from cuckoofilter_spark.sketch.api import build_filter
     from cuckoofilter_spark.sketch.membership import \
@@ -136,7 +136,7 @@ def test_contains_sharded_cogroup_plan(spark):
     filt = build_filter(keys, "k", kind="cuckoo", capacity=2000)
     plan = (_contains_sharded_cogroup(probe, "k", filt, out_col="m")
             ._jdf.queryExecution().executedPlan().toString())
-    assert "FlatMapCoGroupsInPandas" in plan
+    assert "FlatMapCoGroupsInArrow" in plan
     assert "BroadcastExchange" not in plan
 
 
@@ -706,12 +706,11 @@ def test_multimap_sharded_lookup_matches_broadcast(spark):
 
 
 def test_sharded_probe_null_keys_consistent(spark):
-    """NULL probe keys get the SAME treatment on every delivery: a
-    TypeError naming the keyify hint (Arrow hands a NULL-bearing long
-    column to pandas as float64, which keys_to_u64 refuses on
-    broadcast, store, and cogroup paths alike — no path may silently
-    answer from a mis-routed shard). Coalescing NULLs away first works
-    on all paths and agrees."""
+    """NULL probe keys get the SAME treatment on every delivery: each
+    answers a NULL as key 0 (``keys_u64`` decodes NULL to 0 and
+    ``shard_col`` routes it to key 0's shard), so broadcast, store and
+    cogroup paths agree with a coalesced probe — no path may silently
+    answer from a mis-routed shard."""
     from cuckoofilter_spark.sketch.api import (build_filter, contains_col,
                                                contains_sharded)
     from cuckoofilter_spark.sketch.membership import \
@@ -721,29 +720,22 @@ def test_sharded_probe_null_keys_consistent(spark):
     filt = build_filter(keys, "k", kind="cuckoo")
     probe = spark.createDataFrame(
         [(None,), (0,), (1,), (999999,)], "k long")
-    import pyspark.errors
 
-    for path in (
-        lambda: probe.withColumn(
-            "m", contains_col(spark, filt, "k")).collect(),
-        lambda: contains_sharded(probe, "k", filt, out_col="m").collect(),
-        lambda: _contains_sharded_cogroup(
-            probe, "k", filt, out_col="m").collect(),
-    ):
-        with pytest.raises(Exception, match="xxhash64"):
-            path()
+    def answers(df):
+        return [sorted((-1 if r["k"] is None else r["k"], r["m"])
+                       for r in out.collect()) for out in (
+            df.withColumn("m", contains_col(spark, filt, "k")),
+            contains_sharded(df, "k", filt, out_col="m"),
+            _contains_sharded_cogroup(df, "k", filt, out_col="m"))]
 
-    # coalesced probes answer identically everywhere (NULL -> 0, the
-    # same normalization keys_to_u64 applies to nullable-int batches)
-    cp = probe.select(F.coalesce("k", F.lit(0)).alias("k"))
-    b = sorted((r["k"], r["m"]) for r in cp.withColumn(
-        "m", contains_col(spark, filt, "k")).collect())
-    s = sorted((r["k"], r["m"]) for r in contains_sharded(
-        cp, "k", filt, out_col="m").collect())
-    c = sorted((r["k"], r["m"]) for r in _contains_sharded_cogroup(
-        cp, "k", filt, out_col="m").collect())
+    b, s, c = answers(probe)
     assert b == s == c
-    assert b[0] == (0, True)
+    assert b[0] == (-1, True)  # NULL answered as key 0, a member
+    cp = probe.select(F.coalesce("k", F.lit(0)).alias("k"))
+    cb, cs, cc = answers(cp)
+    assert cb == cs == cc
+    assert [m for _, m in b] == [m for _, m in cb]
+    assert cb[0] == (0, True)
 
 
 # -- pd_find alternates pairwise-equal (crate.h:380-387 check_pd) ------------

@@ -317,7 +317,7 @@ def test_jvm_blocked_bloom_guards(spark):
     with pytest.raises(ValueError, match="already present"):
         blocked_bloom_jvm_flag(spark, f, df2, "k")
     # non-integer key column refused eagerly (driver-side), matching
-    # the keys_to_u64 convention — not a mid-job executor CAST error
+    # the keys_u64 convention — not a mid-job executor CAST error
     df3 = spark.range(5).select(F.col("id").cast("string").alias("k"))
     with pytest.raises(TypeError, match="integer"):
         blocked_bloom_jvm_filter(spark, f, df3, "k")
