@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..kernels.hashing import U64, splitmix64
+from ..sketch.udaf import drop_archive_finders
 
 MEDIA_SCHEMA = (
     "media_id string, kind string, payload binary, "
@@ -103,6 +104,7 @@ def media_table(spark: SparkSession, num_media: int, seed: int = 42,
         else spark.range(num_media)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         for pdf in batches:
             rows = {"media_id": [], "kind": [], "payload": [], "meta": []}
             for i in pdf["id"].to_numpy():
@@ -132,6 +134,7 @@ def extract_features(df: DataFrame) -> DataFrame:
     """Decode + per-media feature vector (mean/std/quartiles of samples,
     per channel for images) — one Arrow pass, payloads never shuffled."""
     def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         for pdf in batches:
             out = {"media_id": [], "kind": [], "n_bytes": [], "features": []}
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -158,6 +161,7 @@ def resize_images(df: DataFrame, new_w: int, new_h: int) -> DataFrame:
     """Nearest-neighbor resize of image payloads; non-images pass through.
     Output schema == input schema (payload + meta rewritten)."""
     def rz(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         for pdf in batches:
             pays, metas = [], []
             for payload, meta in zip(pdf["payload"], pdf["meta"]):
@@ -198,6 +202,7 @@ def sample_video_frames(df: DataFrame, every_ms: int = 500) -> DataFrame:
     fps = 4
 
     def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         for pdf in batches:
             out = {"media_id": [], "frame_idx": [], "ts_ms": [], "frame": []}
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):

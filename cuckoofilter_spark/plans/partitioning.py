@@ -33,6 +33,8 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..sketch.udaf import drop_archive_finders
+
 
 def hash_partition_by_doc(df: DataFrame, num_partitions: int,
                           col: str = "doc_id") -> DataFrame:
@@ -89,6 +91,7 @@ def salted_group_apply(
     salted = df.withColumn("__salt", salt_col(sk, salt, seed))
 
     def stage1(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_archive_finders()
         k = pdf[key].iloc[0]
         blob = make_partial(pdf.drop(columns=["__salt"]))
         return pd.DataFrame({key: [k], "partial": [blob]})
@@ -97,6 +100,7 @@ def salted_group_apply(
                 .applyInPandas(stage1, f"{partial_schema}, partial binary"))
 
     def stage2(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_archive_finders()
         out = merge_partials(list(pdf["partial"]))
         out[key] = pdf[key].iloc[0]  # the key column is authoritative here
         return out
@@ -107,6 +111,7 @@ def salted_group_apply(
 def partition_skew_stats(df: DataFrame) -> DataFrame:
     """Rows per physical partition — the before/after salting check."""
     def count_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1

@@ -35,8 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels.cuckoo import CuckooFilter, CuckooFullError
-from ..sketch.udaf import (_null_safe_key, _row_groups, drop_archive_finders,
-                           keys_u64, require_key_col)
+from ..sketch.udaf import _row_groups, drop_archive_finders, keys_u64, require_key_col
 
 _INDEX_SCHEMA = "file string, n_keys long, blob binary"
 
@@ -82,9 +81,8 @@ def _index_files(spark: SparkSession, path: str, files: list[str], col: str,
 
 def _index_df(df: DataFrame, col: str, bits: int, seed: int) -> DataFrame:
     require_key_col(df, col)
-    kc, nn = _null_safe_key(df, col)
-    base = df.where(nn).select(F.col("_metadata.file_path").alias("file"),
-                               kc.alias("k"))
+    base = df.where(F.col(col).isNotNull()).select(
+        F.col("_metadata.file_path").alias("file"), F.col(col).alias("k"))
 
     def partial_blobs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         drop_archive_finders()

@@ -191,11 +191,10 @@ def _sharded_partials(df: DataFrame, col: str, num_shards: int,
     keys so probes agree.
     """
     from ..kernels.hashing import simple_mix_split
-    from .udaf import _null_safe_key, require_key_col
+    from .udaf import require_key_col
 
     require_key_col(df, col)
-    kc, nn = _null_safe_key(df, col)
-    base = df.where(nn).select(kc.alias("k"))
+    base = df.where(F.col(col).isNotNull()).select(F.col(col).alias("k"))
     transform = (None if hash_seed is None
                  else (lambda seg: simple_mix_split(seg, hash_seed)))
 

@@ -40,6 +40,11 @@ Three shapes share it:
 Workers see Arrow batches only, never pandas: keys stay exact 64-bit
 integers and group ids keep their own Arrow type.
 
+NULL keys add nothing to a build, and no per-element JVM expression
+sits in front of a worker: a codegen'd ``isNotNull`` row filter drops
+NULL rows, and ``keys_u64`` drops the NULL elements (Arrow validity
+bits) of an ``array<int>`` column after flattening.
+
 Associativity and commutativity of the kernel merge (tested bit-exact
 in tests/test_kernels.py) make the tree shape legal.
 
@@ -92,40 +97,25 @@ def drop_archive_finders() -> None:
             sys.path_importer_cache.pop(path, None)
 
 
-def _null_safe_key(df: DataFrame, col: str):
-    """(column, null_filter) for a sketch key projection.
-
-    NULL handling must happen JVM-side, BEFORE Arrow: a NULL in an
-    Arrow integer array has no int64 value. Converted to numpy it still
-    arrives as NaN in float64, which an unsafe int64 cast turns into
-    INT64_MIN, and ``keys_u64`` reads it as key 0 — either way a garbage
-    key silently inserted. So: drop NULL rows, strip NULL elements of
-    array<int> cells.
-    """
-    from pyspark.sql import types as T
-
-    c = F.col(col)
-    if isinstance(df.schema[col].dataType, T.ArrayType):
-        return F.filter(c, lambda x: x.isNotNull()), c.isNotNull()
-    return c, c.isNotNull()
-
-
 def keys_u64(arr: pa.Array) -> np.ndarray:
     """One Arrow batch of a key column -> uint64 keys (bit-view of int64).
 
     An ``array<int>`` column is flattened with ``flatten()``, which
     honours a sliced array's offsets (``.values`` would return the
-    parent's whole child array). int8/16/32 are sign-extended to int64,
+    parent's whole child array) and skips NULL list slots; NULL
+    elements are then dropped. int8/16/32 are sign-extended to int64,
     then every key is bit-viewed, so build and probe agree whatever the
-    signedness. A NULL becomes key 0, the shard ``shard_col`` routes it
-    to; builds never see one (``_null_safe_key``). Floats and strings
-    must be keyified Spark-side first (``F.xxhash64`` — JVM,
-    vectorized): raise rather than guess.
+    signedness. A NULL scalar (a probe key; builds drop NULL rows
+    JVM-side) becomes key 0, the shard ``shard_col`` routes it to.
+    Floats and strings must be keyified Spark-side first
+    (``F.xxhash64`` — JVM, vectorized): raise rather than guess.
     """
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
         arr = arr.flatten()
+        if arr.null_count:
+            arr = arr.drop_null()
     if not pa.types.is_integer(arr.type):
         raise TypeError(
             f"sketch keys must be integers (got {arr.type}); "
@@ -225,14 +215,13 @@ def aggregate_sketch(df: DataFrame, col: str, make: Callable[[], object],
     ``make()`` builds an empty kernel and ``cls`` is its class (omit it
     when ``make`` is the class). ``fanout`` is the tree's merge width.
 
-    NULL keys contribute nothing (rows dropped, array elements
-    stripped — JVM-side, see ``_null_safe_key``), matching
+    NULL keys contribute nothing (NULL rows dropped JVM-side by a row
+    filter, NULL array elements dropped by ``keys_u64``), matching
     ``approx_distinct_capacity``'s sizing convention.
     """
     cls = cls or make
     to_input = _add_input(df, col, cls)
-    kc, nn = _null_safe_key(df, col)
-    proj = df.where(nn).select(kc.alias("k"))
+    proj = df.where(F.col(col).isNotNull()).select(F.col(col).alias("k"))
 
     def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         drop_archive_finders()
@@ -312,8 +301,8 @@ def grouped_aggregate_sketch(
     to_input = _add_input(df, col, cls)
     schema = T.StructType([T.StructField("g", dt),
                            T.StructField("blob", T.BinaryType())])
-    kc, nn = _null_safe_key(df, col)
-    proj = df.where(nn).select(F.col(group_col).alias("g"), kc.alias("k"))
+    proj = df.where(F.col(col).isNotNull()).select(
+        F.col(group_col).alias("g"), F.col(col).alias("k"))
 
     def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         drop_archive_finders()

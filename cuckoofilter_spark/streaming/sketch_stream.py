@@ -142,6 +142,24 @@ class _SketchStateBase:
         d = self._read()
         return -1 if d is None else d["batch_id"]
 
+    def load(self):
+        """The state's kernels, decoded by the subclass's ``_decode``."""
+        return self._decode(self._read())
+
+    def update(self, batch_df: DataFrame, batch_id: int) -> None:
+        """foreachBatch body: exactly-once via the recorded batch id.
+
+        Replayed micro-batches (restart after failure between partial
+        computation and state commit) are skipped — merging the same
+        partial twice would double CMS counts. One parse of state.bin
+        serves the guard and the merge.
+        """
+        d = self._read()
+        if d is not None and batch_id <= d["batch_id"]:
+            return
+        entries, meta = self._merge_batch(batch_df, self._decode(d))
+        self._commit(entries, batch_id, **meta)
+
     def _commit(self, entries: list, batch_id: int, **meta) -> None:
         """``entries``: [(group_key_or_None, blob_bytes)]."""
         hdr = json.dumps({
@@ -186,29 +204,19 @@ class _SketchStateBase:
 class StreamingSketchState(_SketchStateBase):
     """Single-blob mergeable sketch state for foreachBatch sinks."""
 
-    def load(self):
+    def _decode(self, d: dict | None):
         """Current sketch (or None before the first commit)."""
-        d = self._read()
         if d is None:
             return None
         cls, _build = _KINDS[self.kind]
         return cls.from_bytes(d["entries"][0][1])
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch body: exactly-once via the recorded batch id.
-
-        Replayed micro-batches (restart after failure between partial
-        computation and state commit) are skipped — merging the same
-        partial twice would double CMS counts.
-        """
-        if batch_id <= self.last_batch_id():
-            return
+    def _merge_batch(self, batch_df: DataFrame, cur):
         cls, build = _KINDS[self.kind]
         partial = build(batch_df, self.col, **self.params)
-        cur = self.load()
         merged = partial if cur is None else cls.merge(cur, partial)
         self._compact_if_mg(self.kind, merged)
-        self._commit([(None, merged.to_bytes())], batch_id)
+        return [(None, merged.to_bytes())], {}
 
 
 class GroupedStreamingSketchState(_SketchStateBase):
@@ -229,33 +237,29 @@ class GroupedStreamingSketchState(_SketchStateBase):
         super().__init__(state_dir, kind, col, **params)
         self.group_col = group_col
 
-    def load(self) -> dict:
+    def _decode(self, d: dict | None) -> dict:
         """{group_value: kernel} — group values in their original type
         (the grouped protocol casts back on output); None = NULL group."""
-        d = self._read()
         if d is None:
             return {}
         cls, _ = _KINDS[self.kind]
         return {_untag_key(t): cls.from_bytes(b) for t, b in d["entries"]}
 
-    def update(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self.last_batch_id():
-            return
+    def _merge_batch(self, batch_df: DataFrame, cur: dict):
         from ..sketch.udaf import grouped_aggregate_sketch
 
         cls, _build = _KINDS[self.kind]
         partial_rows = grouped_aggregate_sketch(
             batch_df, self.group_col, self.col, lambda: self._make(cls), cls,
         ).collect()
-        cur = self.load()
         for r in partial_rows:
             part = cls.from_bytes(bytes(r["blob"]))
             g = r["g"]
             merged = part if g not in cur else cls.merge(cur[g], part)
             self._compact_if_mg(self.kind, merged)
             cur[g] = merged
-        self._commit([(g, k.to_bytes()) for g, k in cur.items()],
-                     batch_id, group_col=self.group_col, n_groups=len(cur))
+        return ([(g, k.to_bytes()) for g, k in cur.items()],
+                {"group_col": self.group_col, "n_groups": len(cur)})
 
     def _make(self, cls):
         if self.kind == "cms":  # CMS sizes from (eps, delta), not (width, depth)

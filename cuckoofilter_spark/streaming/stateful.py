@@ -31,6 +31,7 @@ from pyspark.sql.types import (BinaryType, DoubleType, LongType,
                                StructField, StructType)
 
 from ..kernels.hll import HyperLogLog
+from ..sketch.udaf import drop_archive_finders
 
 _STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 
@@ -70,6 +71,7 @@ def streaming_distinct_by_key(
 
     def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState
                ) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         import numpy as np
 
         if state.hasTimedOut:

@@ -1,9 +1,11 @@
 """Library Python workers take and return Arrow batches, never pandas.
 
 One decoder (``udaf.keys_u64``) turns an Arrow key column into uint64
-keys; the converted modules import no pandas; caller columns passed
-through a worker keep their exact 64-bit values; the checkpointed cuckoo
-build runs the same by-key scaffold as ``cuckoo_build``.
+keys and drops the NULL elements of a list column, so no per-element
+JVM expression sits in front of a build; the converted modules import
+no pandas; caller columns passed through a worker keep their exact
+64-bit values; the checkpointed cuckoo build runs the same by-key
+scaffold as ``cuckoo_build``.
 """
 import ast
 import os
@@ -47,6 +49,23 @@ def test_keys_u64_null_is_key_zero():
     got = keys_u64(pa.array([2**63 - 1, None, INT64_MIN], pa.int64()))
     np.testing.assert_array_equal(
         got, np.array([2**63 - 1, 0, INT64_MIN], dtype=np.int64).view(np.uint64))
+
+
+def test_keys_u64_drops_null_list_slots_and_elements():
+    """A build's list column adds only its non-NULL elements, in order:
+    a NULL slot adds nothing even when its offsets span child values,
+    and the slice's offsets are honoured. A NULL scalar is still key 0."""
+    values = pa.array([1, None, 3, 98, 99, 4, None, -5, 6, 7], pa.int32())
+    offsets = pa.array([0, 3, 5, 6, 7, 7, 9, 9, 10], pa.int32())
+    mask = pa.array([False, True, False, False, False, False, True, False])
+    lists = pa.ListArray.from_arrays(offsets, values, mask=mask)
+    assert lists.to_pylist() == [[1, None, 3], None, [4], [None], [],
+                                 [-5, 6], None, [7]]
+    for arr, want in ((lists, [1, 3, 4, -5, 6, 7]),
+                      (lists.slice(1, 6), [4, -5, 6])):
+        np.testing.assert_array_equal(
+            keys_u64(arr), np.array(want, dtype=np.int64).view(np.uint64))
+    assert keys_u64(pa.array([None, 2], pa.int64())).tolist() == [0, 2]
 
 
 def test_keys_u64_refuses_strings():
@@ -104,3 +123,31 @@ def test_checkpointed_build_is_cuckoo_build(spark, tmp_path):
     probe = np.array([1, 3, 4, INT64_MIN], dtype=np.int64).view(np.uint64)
     assert ck.contains_u64(probe).tolist() == [True, True, True, False]
     assert ck.blobs == cuckoo_build(df, "k", **kw).blobs
+
+
+def test_array_key_projections_have_no_lambda(spark):
+    """NULLs of an ``array<int>`` key column leave JVM-side only as whole
+    rows (a codegen'd ``isNotNull``): no higher-order function rewrites
+    the array between the scan and the sketch worker."""
+    from cuckoofilter_spark.kernels.hll import HyperLogLog
+    from cuckoofilter_spark.sketch.membership import _sharded_partials
+    from cuckoofilter_spark.sketch.udaf import grouped_aggregate_sketch
+
+    df = spark.createDataFrame([(1, [1, None, 3]), (2, None)],
+                               "g int, tokens array<int>")
+    for out in (_sharded_partials(df, "tokens", 32),
+                grouped_aggregate_sketch(df, "g", "tokens", HyperLogLog)):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "isnotnull(tokens" in plan, plan
+        assert "lambdafunction" not in plan, plan
+
+
+def test_null_array_elements_add_nothing_to_register_sketches(spark):
+    from cuckoofilter_spark.sketch.aggregates import cms_sketch, hll_sketch
+
+    with_null = spark.createDataFrame([([1, None, 3],), ([4, 5],)],
+                                      "k array<int>")
+    without = spark.createDataFrame([([1, 3],), ([4, 5],)], "k array<int>")
+    for build in (hll_sketch, cms_sketch):
+        assert (build(with_null, "k").to_bytes()
+                == build(without, "k").to_bytes()), build.__name__

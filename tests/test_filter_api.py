@@ -83,8 +83,8 @@ def test_array_token_column_all_families(spark):
 
 @pytest.mark.parametrize("kind", ["cuckoo", "xor_sharded", "tail"])
 def test_sharded_build_ignores_null_array_elements(spark, kind):
-    """A NULL element inside an array cell is stripped JVM-side: it used
-    to reach pandas as NaN, and the int64 cast turned it into a garbage
+    """A NULL element inside an array cell is dropped by the Arrow key
+    decoder (``keys_u64``): it used to reach pandas as NaN, and the int64 cast turned it into a garbage
     INT64_MIN key (num_items 5, contains(INT64_MIN) True)."""
     df = spark.createDataFrame([([1, None, 3],), ([4, 5],)], "k array<long>")
     filt = build_filter(df, "k", kind=kind)

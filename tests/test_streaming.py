@@ -41,6 +41,29 @@ def test_cms_replay_guard_protects_counts(spark, tmp_path):
     assert st.load().total == total_once  # counts not doubled
 
 
+@pytest.mark.parametrize("grouped", [False, True])
+def test_update_parses_state_once(spark, tmp_path, grouped):
+    """One ``_read`` of state.bin per ``update``: the replay guard and
+    the merge share it, on a first commit, a merge and a replay."""
+    from cuckoofilter_spark.streaming.sketch_stream import (
+        GroupedStreamingSketchState)
+
+    df = spark.range(2000).selectExpr("concat('s', id % 2) AS src",
+                                      "id % 300 AS t")
+    kw = dict(eps=0.01, delta=0.01, seed=3)
+    st = (GroupedStreamingSketchState(str(tmp_path), "cms", "src", "t", **kw)
+          if grouped else StreamingSketchState(str(tmp_path), "cms", "t", **kw))
+    reads, read = [], st._read
+    st._read = lambda: reads.append(1) or read()
+    for batch_id in (0, 1, 1):
+        reads.clear()
+        st.update(df, batch_id)
+        assert len(reads) == 1, batch_id
+    cur = st.load()
+    total = (sum(k.total for k in cur.values()) if grouped else cur.total)
+    assert total == 2 * 2000
+
+
 def test_real_stream_file_source(spark, tmp_path):
     # write the token table as a parquet "stream" directory, read it as a
     # stream, run one availableNow pass through foreachBatch
