@@ -190,3 +190,119 @@ def test_golden_blob_tree_merge(spark, tables, tmp_path, name):
     _, build = BUILDS[name]
     assert tables["tree"].rdd.getNumPartitions() == 40
     assert build(tables["tree"], tmp_path) == GOLDEN[name]
+
+
+# -- probe answers: the (k, hit) rows of every probe delivery ---------------
+#
+# Every family build_filter offers, built on the flat and tiny tables,
+# answers 2k probe keys (half drawn from the table, half outside its key
+# range) through contains_col. The sharded kinds also answer through
+# contains_sharded's store delivery and the cogroup delivery, which must
+# give the same rows; their store manifest's kind and store_id are pinned
+# too, so the persisted store format is kept.
+
+from cuckoofilter_spark.sketch.api import build_filter, contains_col, \
+    filter_families
+from cuckoofilter_spark.sketch.store import ShardBlobStore
+
+SHARDED = ("cuckoo", "cuckoo_semisort", "cuckoo_stable", "shingle", "tail",
+           "crate", "xor_sharded")
+
+
+@pytest.fixture(scope="module")
+def built(tables):
+    cache = {}
+
+    def get(table, kind):
+        if (table, kind) not in cache:
+            cache[table, kind] = build_filter(tables[table], "k", kind=kind,
+                                              seed=7)
+        return cache[table, kind]
+
+    return get
+
+
+def _probe_keys(spark, table):
+    present = sorted(r["k"] for r in table.select("k").distinct().collect())
+    keys = ([present[i * len(present) // 1000] for i in range(1000)]
+            + [10**6 + 7919 * i for i in range(1000)])
+    return spark.createDataFrame([(k,) for k in keys], "k long")
+
+
+PROBE_GOLDEN = {
+    "flat_blocked_bloom": "44c3d67855d4ebaa",
+    "flat_blocked_bloom64": "44c3d67855d4ebaa",
+    "flat_blocked_bloom_jvm": "44c3d67855d4ebaa",
+    "flat_bloom": "1657b864414b6efa",
+    "flat_crate": "40bcf0c6dc5c351f",
+    "flat_cuckoo": "d4c04014ba87e2b3",
+    "flat_cuckoo_jvm": "5fe24fe82534577c",
+    "flat_cuckoo_semisort": "44c3d67855d4ebaa",
+    "flat_cuckoo_stable": "972af17845c9ab1d",
+    "flat_fixed_blocked_bloom": "3e2d49c9f09aee22",
+    "flat_gcs": "bef0f350ef14265a",
+    "flat_grow_bloom": "44c3d67855d4ebaa",
+    "flat_shingle": "3aba425ebf4b095c",
+    "flat_tail": "44c3d67855d4ebaa",
+    "flat_xor": "2159731edcbb1151",
+    "flat_xor_sharded": "f9137d62994a92bd",
+    "flat_xorplus": "930f6bb09634ae80",
+    "tiny_blocked_bloom": "20de25c5720e8e16",
+    "tiny_blocked_bloom64": "20de25c5720e8e16",
+    "tiny_blocked_bloom_jvm": "20de25c5720e8e16",
+    "tiny_bloom": "20de25c5720e8e16",
+    "tiny_crate": "20de25c5720e8e16",
+    "tiny_cuckoo": "20de25c5720e8e16",
+    "tiny_cuckoo_jvm": "20de25c5720e8e16",
+    "tiny_cuckoo_semisort": "20de25c5720e8e16",
+    "tiny_cuckoo_stable": "20de25c5720e8e16",
+    "tiny_fixed_blocked_bloom": "20de25c5720e8e16",
+    "tiny_gcs": "20de25c5720e8e16",
+    "tiny_grow_bloom": "20de25c5720e8e16",
+    "tiny_shingle": "20de25c5720e8e16",
+    "tiny_tail": "20de25c5720e8e16",
+    "tiny_xor": "66822b6282578c24",
+    "tiny_xor_sharded": "c1cdc83d23883a1b",
+    "tiny_xorplus": "e194186a76116033",
+}
+
+STORE_GOLDEN = {
+    "flat_crate": ("crate", "d91f2df86648a54d"),
+    "flat_cuckoo": ("cuckoo", "077b033cb4b85008"),
+    "flat_cuckoo_semisort": ("cuckoo", "7d9bfcdab6b86009"),
+    "flat_cuckoo_stable": ("cuckoo", "0c8477ec0be8b0c3"),
+    "flat_shingle": ("shingle", "bb67847eac86d378"),
+    "flat_tail": ("tail", "4c17dda9f4d02e66"),
+    "flat_xor_sharded": ("xor", "94462b139059a855"),
+    "tiny_crate": ("crate", "856a0a15ffe990d5"),
+    "tiny_cuckoo": ("cuckoo", "2ad4fd6a1b8b5dc6"),
+    "tiny_cuckoo_semisort": ("cuckoo", "37905acf71c206b2"),
+    "tiny_cuckoo_stable": ("cuckoo", "5aa3d38dcf8ac998"),
+    "tiny_shingle": ("shingle", "1ff8604f45c2b062"),
+    "tiny_tail": ("tail", "ba6346bb4f2ec5ae"),
+    "tiny_xor_sharded": ("xor", "5c6c7d70427dc040"),
+}
+
+
+@pytest.mark.parametrize("table,kind", [(t, k) for t in ("flat", "tiny")
+                                        for k in filter_families()])
+def test_golden_probe(spark, tables, built, table, kind):
+    probe = _probe_keys(spark, tables[table])
+    got = probe.withColumn("hit", contains_col(spark, built(table, kind), "k"))
+    assert _rows(got, "k", "hit") == PROBE_GOLDEN[f"{table}_{kind}"]
+
+
+@pytest.mark.parametrize("table,kind", [(t, k) for t in ("flat", "tiny")
+                                        for k in SHARDED])
+def test_golden_sharded_probe(spark, tables, built, tmp_path, table, kind):
+    filt = built(table, kind)
+    probe = _probe_keys(spark, tables[table])
+    path = str(tmp_path / "store")
+    store = _rows(mem.contains_sharded(probe, "k", filt, out_col="hit",
+                                       store=path), "k", "hit")
+    cogroup = _rows(mem._contains_sharded_cogroup(probe, "k", filt, "hit"),
+                    "k", "hit")
+    manifest = ShardBlobStore.open(path)
+    assert store == cogroup == PROBE_GOLDEN[f"{table}_{kind}"]
+    assert ((manifest.kind, manifest.store_id[:16])
+            == STORE_GOLDEN[f"{table}_{kind}"])
