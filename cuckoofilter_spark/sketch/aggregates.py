@@ -21,6 +21,7 @@ from ..kernels.cms import CountMinSketch
 from ..kernels.hll import HyperLogLog
 from ..kernels.kll import KLLSketch
 from ..kernels.mg import MisraGries
+from .membership import _blob_method_col, contains_col
 from .udaf import aggregate_sketch, drop_archive_finders, grouped_aggregate_sketch
 
 
@@ -159,7 +160,6 @@ def cqf_sketch(df: DataFrame, col: str, q: int = 20, r: int = 28,
 def cqf_count_col(spark: SparkSession, sketch, col) -> Column:
     """Exact-at-fingerprint-resolution count Column (qf_count_key_value)."""
     from ..kernels.cqf import CountingQuotientFilter
-    from .membership import _blob_method_col
 
     return _blob_method_col(spark, sketch, col, CountingQuotientFilter,
                             method="count_many", rettype=T.LongType())
@@ -196,15 +196,6 @@ def blocked_bloom_sketch(df: DataFrame, col: str, capacity: int,
         BlockedBloomFilter)
 
 
-def blocked_bloom_contains_col(spark: SparkSession, filt, col) -> Column:
-    """Boolean membership Column against a broadcast blocked-Bloom blob."""
-    from ..kernels.blocked_bloom import BlockedBloomFilter
-    from .membership import _blob_method_col
-
-    return _blob_method_col(spark, filt, col, BlockedBloomFilter,
-                            method="contains_many")
-
-
 def blocked_bloom_jvm_sketch(df: DataFrame, col: str, capacity: int,
                              seed: int = 0x5EED,
                              bits_per_key: int | None = None
@@ -220,17 +211,6 @@ def blocked_bloom_jvm_sketch(df: DataFrame, col: str, capacity: int,
         lambda: JvmBlockedBloomFilter.create(capacity, seed=seed,
                                              bits_per_key=bits_per_key),
         JvmBlockedBloomFilter)
-
-
-def blocked_bloom_jvm_contains_col(spark: SparkSession, filt, col) -> Column:
-    """Boolean membership Column for the JVM-hash variant through the
-    BLOB path (Arrow probe) — the parity twin of the pure-JVM join in
-    sketch/membership.py; answers are bit-identical by construction."""
-    from ..kernels.blocked_bloom import JvmBlockedBloomFilter
-    from .membership import _blob_method_col
-
-    return _blob_method_col(spark, filt, col, JvmBlockedBloomFilter,
-                            method="contains_many")
 
 
 def blocked_bloom64_sketch(df: DataFrame, col: str, capacity: int,
@@ -249,15 +229,6 @@ def blocked_bloom64_sketch(df: DataFrame, col: str, capacity: int,
         BlockedBloomFilter64)
 
 
-def blocked_bloom64_contains_col(spark: SparkSession, filt, col) -> Column:
-    """Boolean membership Column against a broadcast 64B-block blob."""
-    from ..kernels.blocked_bloom import BlockedBloomFilter64
-    from .membership import _blob_method_col
-
-    return _blob_method_col(spark, filt, col, BlockedBloomFilter64,
-                            method="contains_many")
-
-
 def fixed_blocked_bloom_sketch(df: DataFrame, col: str, capacity: int,
                                seed: int = 0x5EED,
                                bits_per_key: int = 12
@@ -272,16 +243,6 @@ def fixed_blocked_bloom_sketch(df: DataFrame, col: str, capacity: int,
         lambda: FixedBlockedBloomFilter.create(capacity, seed=seed,
                                                bits_per_key=bits_per_key),
         FixedBlockedBloomFilter)
-
-
-def fixed_blocked_bloom_contains_col(spark: SparkSession, filt,
-                                     col) -> Column:
-    """Boolean membership Column against a broadcast fixed-fpp blob."""
-    from ..kernels.blocked_bloom import FixedBlockedBloomFilter
-    from .membership import _blob_method_col
-
-    return _blob_method_col(spark, filt, col, FixedBlockedBloomFilter,
-                            method="contains_many")
 
 
 def grow_blocked_bloom_sketch(df: DataFrame, col: str,
@@ -305,27 +266,13 @@ def grow_blocked_bloom_sketch(df: DataFrame, col: str,
     return f
 
 
-def grow_blocked_bloom_contains_col(spark: SparkSession, filt, col) -> Column:
-    """Boolean membership Column against a broadcast growable
-    blocked-Bloom blob (Find = OR over all levels)."""
-    from ..kernels.blocked_bloom import GrowBlockedBloomFilter
-    from .membership import _blob_method_col
-
-    return _blob_method_col(spark, filt, col, GrowBlockedBloomFilter,
-                            method="contains_many")
-
-
-def bloom_contains_col(spark: SparkSession, filt: BloomFilter, col) -> Column:
-    """Boolean membership Column against a broadcast Bloom blob."""
-    from .membership import _blob_method_col
-
-    return _blob_method_col(spark, filt, col, BloomFilter,
-                            method="contains_many")
-
-
 def cms_lookup_col(spark: SparkSession, sketch: CountMinSketch, col) -> Column:
     """Estimated frequency Column against a broadcast CMS blob."""
-    from .membership import _blob_method_col
-
     return _blob_method_col(spark, sketch, col, CountMinSketch,
                             method="query_many", rettype=T.LongType())
+
+
+# per-family names of the one membership probe, kept for existing callers
+bloom_contains_col = blocked_bloom_contains_col = \
+    blocked_bloom64_contains_col = fixed_blocked_bloom_contains_col = \
+    grow_blocked_bloom_contains_col = contains_col

@@ -4,10 +4,12 @@ The reference normalizes every structure behind one adapter so harness
 code is family-generic (benchmarks/filter-api.h:13-63: ConstructFromAddCount /
 Add / Contain specialized per Table type). This module is that adapter
 for the Spark layer: one ``build_filter(df, col, kind=...)`` entry over
-every implemented family and one ``contains_col(spark, filt, col)``
-probe that dispatches on the built object's type — so pipeline code
-(and benchmarks) can switch families with a string, exactly like the
-reference's template parameter.
+every implemented family, and the probes ``contains_col(spark, filt,
+col)`` (broadcast) and ``contains_sharded(df, col, filt)`` (shard by
+shard, no broadcast) from ``sketch/membership.py``, which ask the built
+object how to answer instead of switching on its type — so pipeline
+code (and benchmarks) can switch families with a string, exactly like
+the reference's template parameter.
 
 Families and their Spark builders:
 
@@ -24,7 +26,9 @@ scale should pass the known cardinality — the reference's add_count).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from .membership import contains_col, contains_sharded  # noqa: F401
 
 
 def _need_capacity(df, col, capacity):
@@ -196,59 +200,3 @@ def build_filter(df: DataFrame, col: str, kind: str = "cuckoo",
         raise ValueError(
             f"unknown filter kind {kind!r}; one of {sorted(_BUILDERS)}")
     return builder(df, col, capacity, seed, **params)
-
-
-def contains_col(spark: SparkSession, filt, col) -> Column:
-    """Membership probe Column for any object ``build_filter`` returns
-    (dispatch on type — the FilterAPI Contain leg)."""
-    from ..kernels.blocked_bloom import BlockedBloomFilter, \
-        BlockedBloomFilter64, FixedBlockedBloomFilter, \
-        GrowBlockedBloomFilter, JvmBlockedBloomFilter
-    from ..kernels.bloom import BloomFilter
-    from ..kernels.gcs import GcsFilter
-    from ..kernels.xor import XorFilter
-    from ..kernels.xorplus import XorFilterPlus
-    from . import aggregates as agg, gcsfilter, membership as mem
-
-    dispatch = (
-        (mem.ShardedCuckooFilter, mem.cuckoo_contains_col),
-        (mem.ShardedShingleFilter, mem.shingle_contains_col),
-        (mem.ShardedTailFilter, mem.tail_contains_col),
-        (mem.ShardedCrateFilter, mem.crate_contains_col),
-        (mem.ShardedXorFilter, mem.xor_sharded_contains_col),
-        (XorFilterPlus, mem.xorplus_contains_col),
-        (XorFilter, mem.xor_contains_col),
-        (GcsFilter, gcsfilter.gcs_contains_col),
-        (GrowBlockedBloomFilter, agg.grow_blocked_bloom_contains_col),
-        (BlockedBloomFilter64, agg.blocked_bloom64_contains_col),
-        (FixedBlockedBloomFilter, agg.fixed_blocked_bloom_contains_col),
-        # Jvm subclass BEFORE the base class: the base blob path would
-        # refuse the SBFV magic worker-side
-        (JvmBlockedBloomFilter, agg.blocked_bloom_jvm_contains_col),
-        (BlockedBloomFilter, agg.blocked_bloom_contains_col),
-        (BloomFilter, agg.bloom_contains_col),
-    )
-    for cls, fn in dispatch:
-        if isinstance(filt, cls):
-            return fn(spark, filt, col)
-    raise TypeError(f"no probe registered for {type(filt).__name__}")
-
-
-def contains_sharded(df: DataFrame, col: str, filt,
-                     out_col: str = "member",
-                     store: str | None = None,
-                     max_cached_shards: int | None = None,
-                     colocate: bool = False) -> DataFrame:
-    """Shard-partitioned membership probe — the no-broadcast scale path.
-
-    Returns ``df`` + boolean ``out_col``. Works for every sharded
-    family (cuckoo/shingle/tail/crate/xor_sharded); with a blob
-    ``store`` (shared-FS path; auto temp dir in local mode) per-worker
-    filter memory is bounded by ``max_cached_shards`` and
-    ``colocate=True`` bounds each task to O(1) shards — regardless of
-    total filter size. See ``sketch.membership.contains_sharded``.
-    """
-    from .membership import contains_sharded as _impl
-
-    return _impl(df, col, filt, out_col=out_col, store=store,
-                 max_cached_shards=max_cached_shards, colocate=colocate)

@@ -26,9 +26,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..kernels.gcs import GcsFilter
+from .membership import contains_col
 from .udaf import drop_archive_finders, keys_u64, require_key_col
 
 
@@ -104,8 +105,5 @@ def gcs_build(df: DataFrame, col: str, log2fpp: int = 10, log2bucket: int = 4,
     return proto
 
 
-def gcs_contains_col(spark: SparkSession, filt: GcsFilter, col) -> Column:
-    """Boolean membership Column against a broadcast GCS blob."""
-    from .membership import _blob_method_col
-
-    return _blob_method_col(spark, filt, col, GcsFilter)
+# the membership probe under this family's name, kept for existing callers
+gcs_contains_col = contains_col

@@ -20,6 +20,19 @@ SURVEY.md §3.4): **shard by key**.
   numpy gathers (the reference's batched ``Contain64``
   (cuckoo-batch-prefetch.h:109-139) is subsumed by Arrow batching).
 
+Every probe asks the filter object what to do, never its type (the
+reference's one ``FilterAPI<Table>`` adapter, benchmarks/filter-api.h:
+13-63). The sharded families share one class, ``_ShardedFilter``: its
+one router ``_by_shard`` answers each shard with that shard's kernel,
+and each family only declares its kernel class and store ``kind``
+(``kinds``), whether probe keys are first mixed with
+``simple_mix_split`` (``prehashed``), and its item count. The three
+deliveries read those declarations: the broadcast probe
+(``contains_col``) ships the filter itself, the store
+(``sketch/store.py``) and the cogroup delivery resolve a ``kind``
+through ``_family``. Every other filter is one blob answered by its
+own class's ``contains_many``.
+
 At 10^12 keys: num_shards ~ a few thousand keeps each shard's keys and
 table inside one task's memory; the single shuffle is the same volume a
 ``distinct()`` would pay, and no driver collect ever carries row data —
@@ -40,8 +53,13 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
-from ..kernels.cuckoo import CuckooFilter
-from ..kernels.hashing import U64, xxhash64_long
+from ..kernels.crate import CrateFilter
+from ..kernels.cuckoo import KICK_CONST, CuckooFilter, JvmCuckooFilter
+from ..kernels.hashing import U64, simple_mix_split, sorted_member, \
+    xxhash64_long
+from ..kernels.shingle import _PAD, ShingleFilter
+from ..kernels.tail import TailFilter
+from ..kernels.xor import XorFilter
 from .udaf import drop_archive_finders, keys_u64
 
 _CHUNK = 1 << 18  # all kernels chunked: sandbox DRAM bandwidth saturates fast
@@ -69,6 +87,18 @@ def shard_col(col, num_shards: int) -> Column:
             .bitwiseAND(F.lit(num_shards - 1)).cast("int"))
 
 
+def _by_shard(keys: np.ndarray, num_shards: int) -> list:
+    """``(shard, positions)`` for every shard some key routes to, the
+    positions in key order: one argsort plus one searchsorted. The one
+    router of every per-shard loop — probes, deletes, the build's
+    packing, the store probe and the multimap."""
+    sh = shard_of(keys, num_shards)
+    order = np.argsort(sh, kind="stable")
+    bounds = np.searchsorted(sh[order], np.arange(num_shards + 1))
+    return [(s, order[bounds[s]:bounds[s + 1]])
+            for s in range(num_shards) if bounds[s] < bounds[s + 1]]
+
+
 def _check_blob_seeds(kernel_cls, blobs: list[bytes], seed: int) -> None:
     """Shard blobs must agree with the wrapper's probe seed — the blobs
     hold PRE-HASHED content, so a mismatched seed probes a different
@@ -81,7 +111,20 @@ def _check_blob_seeds(kernel_cls, blobs: list[bytes], seed: int) -> None:
                 f"shard blob hashed under seed {s}, probe seed {seed}")
 
 
-class _FlatProbe:
+class _ChunkedProbe:
+    """Chunk loop of the one-pass flat probes: ``_contains_chunk`` runs
+    on at most ``_CHUNK`` keys at a time."""
+
+    def contains_u64(self, keys: np.ndarray) -> np.ndarray:
+        if keys.size <= _CHUNK:
+            return self._contains_chunk(keys)
+        out = np.empty(keys.size, dtype=bool)
+        for lo in range(0, keys.size, _CHUNK):
+            out[lo:lo + _CHUNK] = self._contains_chunk(keys[lo:lo + _CHUNK])
+        return out
+
+
+class _FlatProbe(_ChunkedProbe):
     """One-pass probe across all shards of a sharded cuckoo filter.
 
     The shard tables are concatenated into one array with per-shard row
@@ -114,9 +157,6 @@ class _FlatProbe:
         self.tag_mask = U64((1 << self.bits) - 1)
 
     def _contains_chunk(self, keys: np.ndarray) -> np.ndarray:
-        from ..kernels.hashing import simple_mix_split
-        from ..kernels.cuckoo import KICK_CONST
-
         sh = shard_of(keys, self.num_shards)
         nb = self.nb[sh]
         h = self.kernel_cls.key_hash64(keys, self.seed)
@@ -148,13 +188,57 @@ class _FlatProbe:
                       & ((i1 == self.vict_index[sh]) | (i2 == self.vict_index[sh])))
         return found
 
-    def contains_u64(self, keys: np.ndarray) -> np.ndarray:
-        if keys.size <= _CHUNK:
-            return self._contains_chunk(keys)
-        out = np.empty(keys.size, dtype=bool)
-        for lo in range(0, keys.size, _CHUNK):
-            out[lo:lo + _CHUNK] = self._contains_chunk(keys[lo:lo + _CHUNK])
-        return out
+
+class _ShingleFlatProbe(_ChunkedProbe):
+    """One-pass probe across shingle shards: per-shard A|B tables are
+    concatenated into one flat array with per-shard offsets (same trick
+    as _FlatProbe), so an Arrow batch costs one hash pass + four
+    gathers."""
+
+    def __init__(self, blobs: list[bytes], kernel_cls=ShingleFilter):
+        filters = [kernel_cls.from_bytes(b) for b in blobs]
+        f0 = filters[0]
+        if any(f._params()[1:] != f0._params()[1:] for f in filters):
+            raise ValueError("shards disagree on (slot_bits, seed)")
+        self.num_shards = len(filters)
+        self.fp_bits = f0.fp_bits
+        self.seed = f0.seed
+        self.fp_hash = f0.fp_hash
+        self.m = np.array([f.m for f in filters], dtype=np.uint64)
+        span = np.array([2 * (f.m + _PAD) for f in filters], dtype=np.int64)
+        self.half = np.array([f.m + _PAD for f in filters], dtype=np.int64)
+        self.offsets = np.zeros(self.num_shards, dtype=np.int64)
+        np.cumsum(span[:-1], out=self.offsets[1:])
+        self.flat = np.concatenate([f.tables.reshape(-1) for f in filters])
+        # per-shard kick-overflow spill lists (kernel side list; rare)
+        self.spills = [f.spill for f in filters]
+        self.any_spill = any(s.size for s in self.spills)
+
+    def _contains_chunk(self, keys: np.ndarray) -> np.ndarray:
+        sh = shard_of(keys, self.num_shards)
+        m = self.m[sh]
+        h = simple_mix_split(keys, self.seed)
+        idx = ((h >> U64(self.fp_bits)) & (m - U64(1))).astype(np.int64)
+        fp = (h & U64((1 << self.fp_bits) - 1)).astype(np.uint16)
+        fp = fp + (fp == 0)
+        idx2 = ((idx.astype(np.uint64)
+                 ^ ((self.fp_hash * fp.astype(np.uint64)) >> U64(self.fp_bits)))
+                & (m - U64(1))).astype(np.int64)
+        a = self.offsets[sh] + idx
+        b = self.offsets[sh] + self.half[sh] + idx2
+        v0 = (fp.astype(np.uint16) << 1)
+        v1 = v0 | 1
+        res = ((self.flat[a] == v0) | (self.flat[a + 1] == v1)
+               | (self.flat[b] == v0) | (self.flat[b + 1] == v1))
+        if self.any_spill:
+            enc = (idx.astype(np.uint64) << U64(16)) | fp.astype(np.uint64)
+            for s, sp in enumerate(self.spills):
+                if not sp.size:
+                    continue
+                where = np.flatnonzero(sh == s)
+                hit = sorted_member(sp, enc[where])
+                res[where[hit]] = True
+        return res
 
 
 def _pack_shards(keys: np.ndarray, num_shards: int, transform=None):
@@ -163,17 +247,12 @@ def _pack_shards(keys: np.ndarray, num_shards: int, transform=None):
     ``transform(seg)`` maps each shard's raw keys to the shipped payload
     (e.g. simple_mix_split for pre-hashed filter domains); sharding is
     always on the RAW key so probes shard the same way."""
-    sh = shard_of(keys, num_shards)
-    order = np.argsort(sh, kind="stable")
-    keys, sh = keys[order], sh[order]
-    bounds = np.searchsorted(sh, np.arange(num_shards + 1))
     shards, blobs = [], []
-    for s in range(num_shards):
-        seg = keys[bounds[s]:bounds[s + 1]]
-        if seg.size:
-            shards.append(s)
-            blobs.append((transform(seg) if transform is not None
-                          else seg).tobytes())
+    for s, idx in _by_shard(keys, num_shards):
+        seg = keys[idx]
+        shards.append(s)
+        blobs.append((transform(seg) if transform is not None
+                      else seg).tobytes())
     return shards, blobs
 
 
@@ -190,7 +269,6 @@ def _sharded_partials(df: DataFrame, col: str, num_shards: int,
     (the pre-hashed input domain of tail/crate); sharding stays on raw
     keys so probes agree.
     """
-    from ..kernels.hashing import simple_mix_split
     from .udaf import require_key_col
 
     require_key_col(df, col)
@@ -249,33 +327,90 @@ def _sharded_build_blobs(df: DataFrame, col: str, num_shards: int,
                          num_shards, make_shard, dedupe=hash_seed is None)
 
 
-class ShardedCuckooFilter:
-    """num_shards independent cuckoo filters addressed by a key hash."""
+def _rebuild(cls, blobs: list[bytes], params: dict):
+    return cls(blobs, **params)
 
-    def __init__(self, blobs: list[bytes], bits: int, seed: int,
-                 kernel_cls=CuckooFilter):
+
+class _ShardedFilter:
+    """num_shards independent kernel filters addressed by ``shard_of``.
+
+    A family declares four things and inherits the rest:
+
+    - ``kinds``: store kind name -> kernel class, the first the default
+      (a family with two kernels takes ``kernel_cls``);
+    - ``prehashed``: the shards hold ``simple_mix_split(key, seed)``
+      (the pre-hashed input domain of tail/crate), so probes mix raw
+      keys first — routing stays on the raw key;
+    - ``count``: the kernel attribute holding its item count;
+    - ``flat_probe`` (optional): a one-pass probe over all shards, used
+      as ``contains_u64`` instead of the per-shard router.
+
+    Pickling ships only ``(class, blobs, params)`` — never decoded
+    tables or a store handle.
+    """
+
+    kinds: dict = {}
+    prehashed = False
+    count = "num_items"
+    flat_probe = None
+
+    def __init__(self, blobs: list[bytes], seed: int, kernel_cls=None):
         self.num_shards = len(blobs)
         if self.num_shards & (self.num_shards - 1):
             raise ValueError("num_shards must be a power of two")
-        self.bits = bits
+        self.kernel_cls = kernel_cls or next(iter(self.kinds.values()))
+        self.kind = next((k for k, c in self.kinds.items()
+                          if c is self.kernel_cls), None)
+        if self.kind is None:
+            raise ValueError(f"{type(self).__name__} has no kind for "
+                             f"kernel {self.kernel_cls.__name__}")
         self.seed = seed
-        self.kernel_cls = kernel_cls
         self.blobs = blobs
-        self._filters: list[CuckooFilter | None] = [None] * self.num_shards
-        self._flat: _FlatProbe | None = None
+        if self.prehashed:
+            _check_blob_seeds(self.kernel_cls, blobs, seed)
+        self._filters: list = [None] * self.num_shards
+        self._flat = None
 
-    def _filter(self, s: int) -> CuckooFilter:
+    def _args(self) -> dict:
+        """Constructor arguments besides ``blobs``."""
+        return {"seed": self.seed}
+
+    def __reduce__(self):
+        return _rebuild, (type(self), self.blobs, self._args())
+
+    def _filter(self, s: int):
         if self._filters[s] is None:
             self._filters[s] = self.kernel_cls.from_bytes(self.blobs[s])
         return self._filters[s]
 
+    @classmethod
+    def shard_probe(cls, kernel, keys: np.ndarray, seed: int) -> np.ndarray:
+        """Answer raw keys against one shard's decoded kernel."""
+        return kernel.contains_many(
+            simple_mix_split(keys, seed) if cls.prehashed else keys)
+
+    @classmethod
+    def probe_shards(cls, keys: np.ndarray, num_shards: int, seed: int,
+                     kernel_of) -> np.ndarray:
+        """Answer raw keys shard by shard, ``kernel_of(s)`` giving shard
+        ``s``'s decoded kernel — this object's blobs, or a store's
+        files."""
+        out = np.zeros(keys.size, dtype=bool)
+        for s, idx in _by_shard(keys, num_shards):
+            out[idx] = cls.shard_probe(kernel_of(s), keys[idx], seed)
+        return out
+
     def contains_u64(self, keys: np.ndarray) -> np.ndarray:
+        if self.flat_probe is None:
+            return self.probe_shards(keys, self.num_shards, self.seed,
+                                     self._filter)
         if self._flat is None:
-            self._flat = _FlatProbe(self.blobs, self.kernel_cls)
+            self._flat = self.flat_probe(self.blobs, self.kernel_cls)
         return self._flat.contains_u64(keys)
 
     def delete_u64(self, keys: np.ndarray) -> np.ndarray:
-        """Bulk Delete (cuckoofilter.h:206-238) across shards.
+        """Bulk Delete across shards (cuckoofilter.h:206-238,
+        shingle.h:201-207).
 
         Caller must guarantee presence (reference README.md:21) —
         deleting a never-added key can erase a colliding fingerprint.
@@ -283,26 +418,55 @@ class ShardedCuckooFilter:
         refreshes the serialized blobs so subsequent broadcasts see the
         deletion (anti-join maintenance, SURVEY §2.1 #6).
         """
-        sh = shard_of(keys, self.num_shards)
+        if not hasattr(self.kernel_cls, "delete_many"):
+            raise TypeError(f"{self.kind} filters do not support delete")
         out = np.zeros(keys.size, dtype=bool)
-        for s in np.unique(sh):
-            m = sh == s
-            f = self._filter(int(s))
-            out[m] = f.delete_many(keys[m])
-            self.blobs[int(s)] = f.to_bytes()
+        for s, idx in _by_shard(keys, self.num_shards):
+            f = self._filter(s)
+            out[idx] = f.delete_many(keys[idx])
+            self.blobs[s] = f.to_bytes()
         self._flat = None  # probe structure is stale after a delete
         self._auto_store = None  # so is any auto-written blob store
         return out
 
     def num_items(self) -> int:
-        return sum(self._filter(s).num_items for s in range(self.num_shards))
+        return sum(getattr(self._filter(s), self.count)
+                   for s in range(self.num_shards))
 
     def size_in_bytes(self) -> int:
         return sum(len(b) for b in self.blobs)
 
     def bits_per_item(self) -> float:
-        n = self.num_items()
-        return 8.0 * self.size_in_bytes() / max(1, n)
+        return 8.0 * self.size_in_bytes() / max(1, self.num_items())
+
+    def expected_fpp(self) -> float:
+        return sum(self._filter(s).expected_fpp()
+                   for s in range(self.num_shards)) / max(1, self.num_shards)
+
+
+def _family(kind: str):
+    """``(sharded class, kernel class)`` a store ``kind`` names, read off
+    the families' ``kinds`` declarations."""
+    for cls in _ShardedFilter.__subclasses__():
+        if kind in cls.kinds:
+            return cls, cls.kinds[kind]
+    raise ValueError(f"no sharded filter family for kind {kind!r}")
+
+
+class ShardedCuckooFilter(_ShardedFilter):
+    """num_shards independent cuckoo filters addressed by a key hash."""
+
+    kinds = {"cuckoo": CuckooFilter, "cuckoo_jvm": JvmCuckooFilter}
+    flat_probe = _FlatProbe
+
+    def __init__(self, blobs: list[bytes], bits: int, seed: int,
+                 kernel_cls=CuckooFilter):
+        super().__init__(blobs, seed, kernel_cls)
+        self.bits = bits
+
+    def _args(self) -> dict:
+        return {"bits": self.bits, "seed": self.seed,
+                "kernel_cls": self.kernel_cls}
 
     def load_factor(self) -> float:
         tags = sum(self._filter(s).size_in_tags() for s in range(self.num_shards))
@@ -421,24 +585,39 @@ def _broadcast_probe_col(spark: SparkSession, payload, load, col,
     return probe(F.col(col).cast("long") if isinstance(col, str) else col)
 
 
-def _load_cuckoo_probe(v):
-    from ..kernels import cuckoo
-
-    return _FlatProbe(v[0], getattr(cuckoo, v[1])).contains_u64
-
-
-def cuckoo_contains_col(spark: SparkSession, filt: ShardedCuckooFilter, col) -> Column:
-    """Boolean Column: approximate membership of ``col`` in the filter.
-
-    Broadcasts the blobs once; each worker deserializes them into ONE
-    flat probe structure cached across tasks; each Arrow batch is
-    answered by a single hash pass + two table gathers (no per-row
-    Python, no per-shard sub-batches).
-    """
-    # kernel class rides as its NAME (cloudpickle pickles classes by
-    # value when captured, dragging module globals — CLAUDE.md trap)
+def _blob_method_col(spark: SparkSession, obj, col, cls,
+                     method: str = "contains_many",
+                     rettype=None) -> Column:
+    """Column applying ``cls.from_bytes(blob).<method>`` to a key batch
+    — the broadcast probe of every single-blob kernel (membership
+    booleans, CMS/CQF counts)."""
     return _broadcast_probe_col(
-        spark, (filt.blobs, filt.kernel_cls.__name__), _load_cuckoo_probe, col)
+        spark, obj.to_bytes(), lambda b: getattr(cls.from_bytes(b), method),
+        col, rettype)
+
+
+def contains_col(spark: SparkSession, filt, col) -> Column:
+    """Boolean Column: approximate membership of ``col`` in any filter
+    ``build_filter`` returns — the FilterAPI Contain leg.
+
+    A sharded filter is itself the broadcast payload (it pickles as its
+    blobs and parameters); each worker decodes it once, cached across
+    tasks, and answers each Arrow batch with ``contains_u64`` — for
+    cuckoo and shingle one hash pass plus a few gathers over one flat
+    table (no per-row Python, no per-shard sub-batches). Any other
+    filter is one blob answered by its exact class's ``contains_many``.
+    """
+    if isinstance(filt, _ShardedFilter):
+        return _broadcast_probe_col(spark, filt, lambda f: f.contains_u64,
+                                    col)
+    if hasattr(filt, "contains_many"):
+        return _blob_method_col(spark, filt, col, type(filt))
+    raise TypeError(f"no probe registered for {type(filt).__name__}")
+
+
+# per-family names of the one probe, kept for existing callers
+cuckoo_contains_col = shingle_contains_col = tail_contains_col = \
+    crate_contains_col = xor_contains_col = xorplus_contains_col = contains_col
 
 
 def approx_semi_join(
@@ -450,7 +629,7 @@ def approx_semi_join(
     distributed analogue of ``df.filter(cf_contains(key))`` — a
     build-once broadcast pre-filter that replaces a full shuffle join.
     """
-    return fact.where(cuckoo_contains_col(spark, filt, fact_col))
+    return fact.where(contains_col(spark, filt, fact_col))
 
 
 def cuckoo_delete(filt: ShardedCuckooFilter, df: DataFrame, col: str) -> int:
@@ -479,7 +658,7 @@ def distinct_keys_u64(df: DataFrame, col: str, num_shards: int = 64) -> np.ndarr
         [np.frombuffer(b, dtype=np.uint64) for b in blobs]))
 
 
-class ShardedXorFilter:
+class ShardedXorFilter(_ShardedFilter):
     """num_shards independent xor filters addressed by a key hash.
 
     The scale form of the static xor build: the peel
@@ -497,48 +676,8 @@ class ShardedXorFilter:
     probe always uses the blob's own recorded hasher.
     """
 
-    def __init__(self, blobs: list[bytes], seed: int):
-        from ..kernels.xor import XorFilter
-
-        self.num_shards = len(blobs)
-        if self.num_shards & (self.num_shards - 1):
-            raise ValueError("num_shards must be a power of two")
-        self.seed = seed
-        self.blobs = blobs
-        self._filters: list | None = None
-        self._cls = XorFilter
-
-    def _load(self):
-        if self._filters is None:
-            self._filters = [self._cls.from_bytes(b) for b in self.blobs]
-        return self._filters
-
-    def contains_u64(self, keys: np.ndarray) -> np.ndarray:
-        # one argsort bucketing instead of a full-array mask per shard
-        # (the contains_store/get_many pattern)
-        filters = self._load()
-        sh = shard_of(keys, self.num_shards)
-        out = np.zeros(keys.size, dtype=bool)
-        order = np.argsort(sh, kind="stable")
-        bounds = np.searchsorted(sh[order], np.arange(self.num_shards + 1))
-        for s in range(self.num_shards):
-            idx = order[bounds[s]:bounds[s + 1]]
-            if idx.size:
-                out[idx] = filters[s].contains_many(keys[idx])
-        return out
-
-    def num_items(self) -> int:
-        return sum(f.size for f in self._load())
-
-    def size_in_bytes(self) -> int:
-        return sum(len(b) for b in self.blobs)
-
-    def bits_per_item(self) -> float:
-        return 8.0 * self.size_in_bytes() / max(1, self.num_items())
-
-    def expected_fpp(self) -> float:
-        fs = self._load()
-        return sum(f.expected_fpp() for f in fs) / max(1, len(fs))
+    kinds = {"xor": XorFilter}
+    count = "size"
 
 
 def xor_build_sharded(df: DataFrame, col: str, fp_bits: int = 8,
@@ -552,21 +691,11 @@ def xor_build_sharded(df: DataFrame, col: str, fp_bits: int = 8,
     full AddAll peel (xorfilter.h:122-279) privately. The driver
     collects num_shards fingerprint blobs — never keys.
     """
-    from ..kernels.xor import XorFilter
-
     def make_shard(keys: np.ndarray) -> bytes:
         return XorFilter.build(keys, fp_bits=fp_bits, seed=seed).to_bytes()
 
     blobs = _sharded_build_blobs(df, col, num_shards, make_shard)
     return ShardedXorFilter(blobs, seed=seed)
-
-
-def xor_sharded_contains_col(spark: SparkSession, filt: ShardedXorFilter,
-                             col) -> Column:
-    """Broadcast-probe Column for a sharded xor filter (route by shard,
-    3 gathers in the owning shard's fingerprint array)."""
-    return _broadcast_probe_col(spark, (filt.blobs, filt.seed),
-                                lambda v: ShardedXorFilter(*v).contains_u64, col)
 
 
 # -- shard-partitioned probe (no whole-filter broadcast) ---------------------
@@ -584,63 +713,9 @@ def xor_sharded_contains_col(spark: SparkSession, filt: ShardedXorFilter,
 # batch there hides DRAM latency, the shard route here hides the
 # broadcast ceiling.
 #
-# Probe functions are module-level (picklable by reference through the
-# shipped package zip — never by value) taking (blob, raw keys, seed).
-
-def _probe_blob_cuckoo(blob: bytes, keys: np.ndarray, seed: int) -> np.ndarray:
-    return CuckooFilter.from_bytes(blob).contains_many(keys)
-
-
-def _probe_blob_shingle(blob: bytes, keys: np.ndarray, seed: int) -> np.ndarray:
-    from ..kernels.shingle import ShingleFilter
-
-    return ShingleFilter.from_bytes(blob).contains_many(keys)
-
-
-def _probe_blob_tail(blob: bytes, keys: np.ndarray, seed: int) -> np.ndarray:
-    from ..kernels.hashing import simple_mix_split
-    from ..kernels.tail import TailFilter
-
-    return TailFilter.from_bytes(blob).contains_many(
-        simple_mix_split(keys, seed))
-
-
-def _probe_blob_crate(blob: bytes, keys: np.ndarray, seed: int) -> np.ndarray:
-    from ..kernels.hashing import simple_mix_split
-    from ..kernels.crate import CrateFilter
-
-    return CrateFilter.from_bytes(blob).contains_many(
-        simple_mix_split(keys, seed))
-
-
-def _probe_blob_xor(blob: bytes, keys: np.ndarray, seed: int) -> np.ndarray:
-    from ..kernels.xor import XorFilter
-
-    return XorFilter.from_bytes(blob).contains_many(keys)
-
-
-_SHARD_PROBES = {
-    "cuckoo": _probe_blob_cuckoo,
-    "shingle": _probe_blob_shingle,
-    "tail": _probe_blob_tail,
-    "crate": _probe_blob_crate,
-    "xor": _probe_blob_xor,
-}
-
-
-def _shard_probe_kind(filt) -> str:
-    if isinstance(filt, ShardedCuckooFilter):
-        return "cuckoo"
-    if isinstance(filt, ShardedShingleFilter):
-        return "shingle"
-    if isinstance(filt, ShardedTailFilter):
-        return "tail"
-    if isinstance(filt, ShardedCrateFilter):
-        return "crate"
-    if isinstance(filt, ShardedXorFilter):
-        return "xor"
-    raise TypeError(
-        f"no shard-partitioned probe for {type(filt).__name__}")
+# Both deliveries hand the worker the filter's store ``kind``, a string;
+# the worker resolves it through ``_family`` to the family's shard probe
+# and kernel class (no class or bound method rides in the payload).
 
 
 def contains_sharded(df: DataFrame, col: str, filt,
@@ -669,11 +744,14 @@ def contains_sharded(df: DataFrame, col: str, filt,
       cluster, but pays the cogroup machinery (measured ~17 s at the
       same 20M probes, when it ran on pandas).
 
-    Any Sharded* family (cuckoo, shingle, tail, crate, xor) works;
-    answers are bit-identical across broadcast/store/cogroup paths.
+    Every sharded family works (store kinds cuckoo, cuckoo_jvm,
+    shingle, tail, crate, xor); answers are bit-identical across the
+    broadcast, store and cogroup paths.
     """
-    spark = df.sparkSession
-    is_local = spark.sparkContext.master.startswith("local")
+    if not isinstance(filt, _ShardedFilter):
+        raise TypeError(
+            f"no shard-partitioned probe for {type(filt).__name__}")
+    is_local = df.sparkSession.sparkContext.master.startswith("local")
     if store is not None or is_local:
         from .store import ShardBlobStore, contains_store
 
@@ -698,44 +776,54 @@ def contains_sharded(df: DataFrame, col: str, filt,
     return _contains_sharded_cogroup(df, col, filt, out_col)
 
 
-def _contains_sharded_cogroup(df: DataFrame, col: str, filt,
-                              out_col: str = "member") -> DataFrame:
-    """Cogroup delivery: one hash exchange on the JVM-computed shard id
-    joins each probe group with exactly its shard's blob row; the task
-    deserializes that ONE blob and answers its rows. No broadcast, no
-    shared-FS requirement — the universal (slower) sharded probe."""
-    kind = _shard_probe_kind(filt)
-    seed = int(getattr(filt, "seed", 0))
-    num_shards = filt.num_shards
+def _cogroup_by_shard(df: DataFrame, col: str, blobs: list[bytes],
+                      out_field: T.StructField, answer) -> DataFrame:
+    """Cogroup delivery shared by the sharded filters and the multimap:
+    one hash exchange on the JVM-computed shard id joins each probe
+    group with exactly its shard's blob row, and the task answers its
+    rows with ``answer(rows, keys, blob)`` -> rows + ``out_field``
+    (``blob`` is None for a group without probe rows, so no blob is
+    decoded for it). No broadcast, no shared-FS requirement."""
     if "_shard" in df.columns:
         raise ValueError("df already has a _shard column")
-    spark = df.sparkSession
-    blob_df = spark.createDataFrame(
-        [(s, bytearray(b)) for s, b in enumerate(filt.blobs)],
+    blob_df = df.sparkSession.createDataFrame(
+        [(s, bytearray(b)) for s, b in enumerate(blobs)],
         "shard int, blob binary")
-
     # shard id is pure JVM arithmetic (shard_col == shard_of bit-exact),
     # so the only Python crossing in the whole plan is the cogroup probe;
     # the caller's columns pass through as Arrow, exact whatever their type
-    keyed = df.withColumn("_shard", shard_col(col, num_shards))
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.BooleanType())])
-    colname = col
+    keyed = df.withColumn("_shard", shard_col(col, len(blobs)))
+    out_schema = T.StructType(list(df.schema.fields) + [out_field])
 
     def probe_group(left: pa.Table, right: pa.Table) -> pa.Table:
         drop_archive_finders()
-        out = left.drop_columns(["_shard"])
-        if left.num_rows and right.num_rows:
-            fn = _SHARD_PROBES[kind]
-            hit = fn(right.column("blob")[0].as_py(),
-                     keys_u64(left.column(colname)), seed)
-        else:
-            hit = np.zeros(out.num_rows, dtype=bool)
-        return out.append_column(out_col, pa.array(hit, pa.bool_()))
+        rows = left.drop_columns(["_shard"])
+        blob = (right.column("blob")[0].as_py()
+                if left.num_rows and right.num_rows else None)
+        return answer(rows, keys_u64(rows.column(col)), blob)
 
     return (keyed.groupBy("_shard")
             .cogroup(blob_df.groupBy("shard"))
             .applyInArrow(probe_group, out_schema))
+
+
+def _contains_sharded_cogroup(df: DataFrame, col: str, filt,
+                              out_col: str = "member") -> DataFrame:
+    """Cogroup delivery of ``contains_sharded``: each task deserializes
+    ONE shard blob and answers its rows with the family's shard probe —
+    the universal (slower) sharded probe."""
+    kind, seed = filt.kind, filt.seed
+
+    def answer(rows: pa.Table, keys: np.ndarray, blob) -> pa.Table:
+        if blob is None:
+            hit = np.zeros(keys.size, dtype=bool)
+        else:
+            fam, kernel_cls = _family(kind)
+            hit = fam.shard_probe(kernel_cls.from_bytes(blob), keys, seed)
+        return rows.append_column(out_col, pa.array(hit, pa.bool_()))
+
+    return _cogroup_by_shard(df, col, filt.blobs,
+                             T.StructField(out_col, T.BooleanType()), answer)
 
 
 def xor_build(df: DataFrame, col: str, fp_bits: int = 8, seed: int = 0x5EED):
@@ -747,8 +835,6 @@ def xor_build(df: DataFrame, col: str, fp_bits: int = 8, seed: int = 0x5EED):
     fp_bits 8/16 are the xorfilter.h configs; 10/14 the XorFilter2
     storage-generic ones (xorfilter_2.h).
     """
-    from ..kernels.xor import XorFilter
-
     return XorFilter.build(distinct_keys_u64(df, col), fp_bits=fp_bits, seed=seed)
 
 
@@ -762,31 +848,6 @@ def xorplus_build(df: DataFrame, col: str, fp_bits: int = 8, seed: int = 0x5EED)
                                seed=seed)
 
 
-def _blob_method_col(spark: SparkSession, obj, col, cls,
-                     method: str = "contains_many",
-                     rettype=None) -> Column:
-    """Column applying ``cls.from_bytes(blob).<method>`` to a key batch
-    — the broadcast probe of every single-blob kernel (membership
-    booleans, CMS/CQF counts)."""
-    return _broadcast_probe_col(
-        spark, obj.to_bytes(), lambda b: getattr(cls.from_bytes(b), method),
-        col, rettype)
-
-
-def xor_contains_col(spark: SparkSession, filt, col) -> Column:
-    """Boolean membership Column against a broadcast xor-filter blob."""
-    from ..kernels.xor import XorFilter
-
-    return _blob_method_col(spark, filt, col, XorFilter)
-
-
-def xorplus_contains_col(spark: SparkSession, filt, col) -> Column:
-    """Boolean membership Column against a broadcast xor+ blob."""
-    from ..kernels.xorplus import XorFilterPlus
-
-    return _blob_method_col(spark, filt, col, XorFilterPlus)
-
-
 def approx_anti_join(
     spark: SparkSession, fact: DataFrame, fact_col: str, filt: ShardedCuckooFilter
 ) -> DataFrame:
@@ -795,122 +856,26 @@ def approx_anti_join(
     Complement caveat: drops epsilon false positives (rows wrongly
     believed present) — standard Bloom-anti-join semantics.
     """
-    return fact.where(~cuckoo_contains_col(spark, filt, fact_col))
+    return fact.where(~contains_col(spark, filt, fact_col))
 
 
 # -- Shingle (overlapping-bucket cuckoo, shingle.h) -------------------------
-class _ShingleFlatProbe:
-    """One-pass probe across shingle shards: per-shard A|B tables are
-    concatenated into one flat array with per-shard offsets (same trick
-    as _FlatProbe), so an Arrow batch costs one hash pass + four
-    gathers."""
-
-    def __init__(self, blobs: list[bytes]):
-        from ..kernels.shingle import _PAD, ShingleFilter
-
-        filters = [ShingleFilter.from_bytes(b) for b in blobs]
-        f0 = filters[0]
-        if any(f._params()[1:] != f0._params()[1:] for f in filters):
-            raise ValueError("shards disagree on (slot_bits, seed)")
-        self.num_shards = len(filters)
-        self.fp_bits = f0.fp_bits
-        self.seed = f0.seed
-        self.fp_hash = f0.fp_hash
-        self.m = np.array([f.m for f in filters], dtype=np.uint64)
-        span = np.array([2 * (f.m + _PAD) for f in filters], dtype=np.int64)
-        self.half = np.array([f.m + _PAD for f in filters], dtype=np.int64)
-        self.offsets = np.zeros(self.num_shards, dtype=np.int64)
-        np.cumsum(span[:-1], out=self.offsets[1:])
-        self.flat = np.concatenate([f.tables.reshape(-1) for f in filters])
-        # per-shard kick-overflow spill lists (kernel side list; rare)
-        self.spills = [f.spill for f in filters]
-        self.any_spill = any(s.size for s in self.spills)
-
-    def _contains_chunk(self, keys: np.ndarray) -> np.ndarray:
-        from ..kernels.hashing import simple_mix_split
-
-        sh = shard_of(keys, self.num_shards)
-        m = self.m[sh]
-        h = simple_mix_split(keys, self.seed)
-        idx = ((h >> U64(self.fp_bits)) & (m - U64(1))).astype(np.int64)
-        fp = (h & U64((1 << self.fp_bits) - 1)).astype(np.uint16)
-        fp = fp + (fp == 0)
-        idx2 = ((idx.astype(np.uint64)
-                 ^ ((self.fp_hash * fp.astype(np.uint64)) >> U64(self.fp_bits)))
-                & (m - U64(1))).astype(np.int64)
-        a = self.offsets[sh] + idx
-        b = self.offsets[sh] + self.half[sh] + idx2
-        v0 = (fp.astype(np.uint16) << 1)
-        v1 = v0 | 1
-        res = ((self.flat[a] == v0) | (self.flat[a + 1] == v1)
-               | (self.flat[b] == v0) | (self.flat[b + 1] == v1))
-        if self.any_spill:
-            from ..kernels.hashing import sorted_member
-
-            enc = (idx.astype(np.uint64) << U64(16)) | fp.astype(np.uint64)
-            for s, sp in enumerate(self.spills):
-                if not sp.size:
-                    continue
-                where = np.flatnonzero(sh == s)
-                hit = sorted_member(sp, enc[where])
-                res[where[hit]] = True
-        return res
-
-    def contains_u64(self, keys: np.ndarray) -> np.ndarray:
-        if keys.size <= _CHUNK:
-            return self._contains_chunk(keys)
-        out = np.empty(keys.size, dtype=bool)
-        for lo in range(0, keys.size, _CHUNK):
-            out[lo:lo + _CHUNK] = self._contains_chunk(keys[lo:lo + _CHUNK])
-        return out
-
-
-class ShardedShingleFilter:
+class ShardedShingleFilter(_ShardedFilter):
     """num_shards independent shingle filters addressed by a key hash —
     the same shard-by-key distribution as ShardedCuckooFilter (both of
     a key's overlapping buckets live in one shard's private tables, so
     kick chains never cross shards)."""
 
+    kinds = {"shingle": ShingleFilter}
+    count = "filled"
+    flat_probe = _ShingleFlatProbe
+
     def __init__(self, blobs: list[bytes], slot_bits: int, seed: int):
-        self.num_shards = len(blobs)
-        if self.num_shards & (self.num_shards - 1):
-            raise ValueError("num_shards must be a power of two")
+        super().__init__(blobs, seed)
         self.slot_bits = slot_bits
-        self.seed = seed
-        self.blobs = blobs
-        self._flat: _ShingleFlatProbe | None = None
 
-    def contains_u64(self, keys: np.ndarray) -> np.ndarray:
-        if self._flat is None:
-            self._flat = _ShingleFlatProbe(self.blobs)
-        return self._flat.contains_u64(keys)
-
-    def delete_u64(self, keys: np.ndarray) -> np.ndarray:
-        """Bulk Delete (shingle.h:201-207) across shards; caller
-        guarantees presence. Refreshes blobs for later broadcasts."""
-        from ..kernels.shingle import ShingleFilter
-
-        sh = shard_of(keys, self.num_shards)
-        out = np.zeros(keys.size, dtype=bool)
-        for s in np.unique(sh):
-            m = sh == s
-            f = ShingleFilter.from_bytes(self.blobs[int(s)])
-            out[m] = f.delete_many(keys[m])
-            self.blobs[int(s)] = f.to_bytes()
-        self._flat = None
-        self._auto_store = None
-        return out
-
-    def num_items(self) -> int:
-        from ..kernels.shingle import ShingleFilter
-
-        return sum(ShingleFilter.from_bytes(b).filled for b in self.blobs)
-
-    def size_in_bytes(self) -> int:
-        return sum(len(b) for b in self.blobs)
-
-    def bits_per_item(self) -> float:
-        return 8.0 * self.size_in_bytes() / max(1, self.num_items())
+    def _args(self) -> dict:
+        return {"slot_bits": self.slot_bits, "seed": self.seed}
 
     def expected_fpp(self) -> float:
         return 4.0 / (1 << self.slot_bits)
@@ -927,7 +892,6 @@ def shingle_build(
     """Build a sharded shingle filter over an integer key column — one
     groupBy(shard) shuffle of packed key blobs, the cuckoo_build plan
     shape applied to the overlapping-bucket structure."""
-    from ..kernels.shingle import ShingleFilter
     from .udaf import approx_distinct_capacity
 
     if capacity is None:
@@ -944,15 +908,8 @@ def shingle_build(
     return ShardedShingleFilter(blobs, slot_bits=slot_bits, seed=seed)
 
 
-def shingle_contains_col(spark: SparkSession, filt: ShardedShingleFilter,
-                         col) -> Column:
-    """Boolean membership Column against broadcast shingle shards."""
-    return _broadcast_probe_col(
-        spark, filt.blobs, lambda v: _ShingleFlatProbe(v).contains_u64, col)
-
-
 # -- Tail filter (adaptive-epsilon growing AMQ, tail-filter.hpp) ------------
-class ShardedTailFilter:
+class ShardedTailFilter(_ShardedFilter):
     """num_shards independent tail filters addressed by a key hash.
 
     Unlike every other sharded structure here the tail filter needs NO
@@ -962,43 +919,9 @@ class ShardedTailFilter:
     Shards upsize independently; the probe keeps per-shard filters
     (epochs differ, so a flat one-pass table is not applicable)."""
 
-    def __init__(self, blobs: list[bytes], seed: int):
-        from ..kernels.tail import TailFilter
-
-        self.num_shards = len(blobs)
-        if self.num_shards & (self.num_shards - 1):
-            raise ValueError("num_shards must be a power of two")
-        self.seed = seed
-        self.blobs = blobs
-        self._filters: list | None = None
-        self._cls = TailFilter
-        _check_blob_seeds(TailFilter, blobs, seed)
-
-    def _load(self):
-        if self._filters is None:
-            self._filters = [self._cls.from_bytes(b) for b in self.blobs]
-        return self._filters
-
-    def contains_u64(self, keys: np.ndarray) -> np.ndarray:
-        from ..kernels.hashing import simple_mix_split
-
-        filters = self._load()
-        h = simple_mix_split(keys, self.seed)
-        sh = shard_of(keys, self.num_shards)
-        out = np.zeros(keys.size, dtype=bool)
-        for s in np.unique(sh):
-            m = sh == s
-            out[m] = filters[int(s)].contains_many(h[m])
-        return out
-
-    def num_items(self) -> int:
-        return sum(f.ndv for f in self._load())
-
-    def size_in_bytes(self) -> int:
-        return sum(len(b) for b in self.blobs)
-
-    def bits_per_item(self) -> float:
-        return 8.0 * self.size_in_bytes() / max(1, self.num_items())
+    kinds = {"tail": TailFilter}
+    prehashed = True
+    count = "ndv"
 
     def expected_fpp(self) -> float:
         """Structure-derived bound: sum over pairs of 2^-(key_bits +
@@ -1006,9 +929,8 @@ class ShardedTailFilter:
         the stored content, unlike the design epsilon (FPR grows one
         ~2^-(tb+1) term per upsize past 2^lgm)."""
         total = 0.0
-        for f in self._load():
+        for f in map(self._filter, range(self.num_shards)):
             if f.pairs.size:
-                w = np.uint64(f.tb + 1)
                 t = f.pairs & np.uint64((1 << (f.tb + 1)) - 1)
                 lb = t & (~t + np.uint64(1))
                 sent = np.log2(lb.astype(np.float64))
@@ -1032,8 +954,6 @@ def tail_build(
     adaptively (tail-filter.hpp:88-124), so the plan is a single
     groupBy(shard) shuffle of packed hash blobs with no
     approx_count_distinct pre-pass."""
-    from ..kernels.tail import TailFilter
-
     # hash_seed: ship the HASH, not the raw key (the filter's input
     # domain — tail-filter.hpp:119 takes a pre-hashed uint64)
     def make_shard(hashes: np.ndarray) -> bytes:
@@ -1046,59 +966,14 @@ def tail_build(
     return ShardedTailFilter(blobs, seed=seed)
 
 
-def tail_contains_col(spark: SparkSession, filt: ShardedTailFilter,
-                      col) -> Column:
-    """Boolean membership Column against broadcast tail-filter shards."""
-    return _broadcast_probe_col(spark, (filt.blobs, filt.seed),
-                                lambda v: ShardedTailFilter(*v).contains_u64, col)
-
-
 # -- Crate / pocket dictionaries (crate.h, arXiv:1911.05060) ----------------
-class ShardedCrateFilter:
+class ShardedCrateFilter(_ShardedFilter):
     """num_shards independent crate filters addressed by a key hash;
     each shard's spare dict stays private to its bucket range."""
 
-    def __init__(self, blobs: list[bytes], seed: int):
-        from ..kernels.crate import CrateFilter
-
-        self.num_shards = len(blobs)
-        if self.num_shards & (self.num_shards - 1):
-            raise ValueError("num_shards must be a power of two")
-        self.seed = seed
-        self.blobs = blobs
-        self._filters: list | None = None
-        self._cls = CrateFilter
-        _check_blob_seeds(CrateFilter, blobs, seed)
-
-    def _load(self):
-        if self._filters is None:
-            self._filters = [self._cls.from_bytes(b) for b in self.blobs]
-        return self._filters
-
-    def contains_u64(self, keys: np.ndarray) -> np.ndarray:
-        from ..kernels.hashing import simple_mix_split
-
-        filters = self._load()
-        h = simple_mix_split(keys, self.seed)
-        sh = shard_of(keys, self.num_shards)
-        out = np.zeros(keys.size, dtype=bool)
-        for s in np.unique(sh):
-            m = sh == s
-            out[m] = filters[int(s)].contains_many(h[m])
-        return out
-
-    def num_items(self) -> int:
-        return sum(f.ndv for f in self._load())
-
-    def size_in_bytes(self) -> int:
-        return sum(len(b) for b in self.blobs)
-
-    def bits_per_item(self) -> float:
-        return 8.0 * self.size_in_bytes() / max(1, self.num_items())
-
-    def expected_fpp(self) -> float:
-        fs = self._load()
-        return sum(f.expected_fpp() for f in fs) / max(1, len(fs))
+    kinds = {"crate": CrateFilter}
+    prehashed = True
+    count = "ndv"
 
 
 def crate_build(
@@ -1111,7 +986,6 @@ def crate_build(
     """Build sharded pocket-dictionary filters over an integer key
     column — one groupBy(shard) shuffle of packed hash blobs
     (crate.h:429-436 sizing: buckets = capacity/44, spare ~1.3%)."""
-    from ..kernels.crate import CrateFilter
     from .udaf import approx_distinct_capacity
 
     if capacity is None:
@@ -1131,13 +1005,6 @@ def crate_build(
     blobs = _sharded_build_blobs(df, col, num_shards, make_shard,
                                  hash_seed=seed)
     return ShardedCrateFilter(blobs, seed=seed)
-
-
-def crate_contains_col(spark: SparkSession, filt: ShardedCrateFilter,
-                       col) -> Column:
-    """Boolean membership Column against broadcast crate shards."""
-    return _broadcast_probe_col(spark, (filt.blobs, filt.seed),
-                                lambda v: ShardedCrateFilter(*v).contains_u64, col)
 
 
 # -- JVM-native blocked-Bloom probe (zero Python in the probe path) ---------
@@ -1311,8 +1178,6 @@ def cuckoo_jvm_build(
     """``cuckoo_build`` with the JVM-probeable kernel (single-table,
     non-stable — the probe arithmetic the JVM path compiles; same
     one-shuffle sharded build scaffold)."""
-    from ..kernels.cuckoo import JvmCuckooFilter
-
     if bits > 16:
         raise ValueError("JVM probe packs tags into 64-bit words; "
                          "bits must be <= 16")
@@ -1329,8 +1194,6 @@ def _cf_jvm_tables(spark: SparkSession, filt: ShardedCuckooFilter):
     tags LSB-first; cells with more entries span extra rows (the semi
     join makes row multiplicity harmless). Driver cost is the same
     bytes the Python probe broadcasts."""
-    from ..kernels.cuckoo import JvmCuckooFilter
-
     cached = getattr(filt, "_jvm_dfs", None)
     if cached is not None and cached[0] is spark:
         return cached[1], cached[2]

@@ -7,8 +7,11 @@ structure).  Build ships packed (key, value) uint64 pairs per
 through the exchange — then one ``groupBy(shard)`` builds each shard's
 CSR kernel and the driver collects ``num_shards`` blobs (the same
 blob-only collect contract as every sharded filter build,
-``membership._sharded_build_blobs``).  Probe broadcasts the blobs once
-and answers each Arrow batch with shard-bucketed searchsorted gathers.
+``membership._sharded_build_blobs``).  Probes run on the sharded
+filters' scaffold: the broadcast probe (``membership._broadcast_probe_col``)
+answers each Arrow batch with shard-bucketed searchsorted gathers routed
+by ``membership._by_shard``, and the shard-partitioned lookup is the
+filters' cogroup delivery (``membership._cogroup_by_shard``).
 """
 from __future__ import annotations
 
@@ -20,7 +23,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..kernels.dysect import QuotientMultimap
-from .membership import _build_shards, _cached_probe, shard_of
+from .membership import _broadcast_probe_col, _build_shards, _by_shard, \
+    _cogroup_by_shard
 from .udaf import drop_archive_finders, keys_u64, require_key_col
 
 
@@ -43,35 +47,27 @@ class ShardedMultimap:
         """Batch Find across shards, results in probe order.
 
         Probes are bucketed by shard (each key lives in exactly one
-        shard), answered per shard, and scattered back — counts align
-        with the input, flat values are CSR-concatenated in input
-        order.
+        shard, routed by ``_by_shard``), answered per shard, and
+        scattered back — counts align with the input, flat values are
+        CSR-concatenated in input order.
         """
         keys = np.ascontiguousarray(keys, dtype=np.uint64)
         counts = np.zeros(keys.size, dtype=np.int64)
         if not keys.size:
             return counts, np.empty(0, dtype=np.uint64)
-        sh = shard_of(keys, self.num_shards)
-        order = np.argsort(sh, kind="stable")
-        bounds = np.searchsorted(sh[order], np.arange(self.num_shards + 1))
-        vals_by_probe: list[np.ndarray | None] = [None] * self.num_shards
-        for s in range(self.num_shards):
-            seg = order[bounds[s]:bounds[s + 1]]
-            if not seg.size:
-                continue
+        found = []
+        for s, seg in _by_shard(keys, self.num_shards):
             c, flat = self._map(s).get_many(keys[seg])
             counts[seg] = c
-            vals_by_probe[s] = flat
+            found.append((seg, flat))
         # scatter flat values back to input order: one pass building
         # the destination offsets of every (probe, value) pair
         cum = np.zeros(keys.size + 1, dtype=np.int64)
         np.cumsum(counts, out=cum[1:])
         flat_out = np.empty(cum[-1], dtype=np.uint64)
-        for s in range(self.num_shards):
-            flat = vals_by_probe[s]
-            if flat is None or not flat.size:
+        for seg, flat in found:
+            if not flat.size:
                 continue
-            seg = order[bounds[s]:bounds[s + 1]]
             lens = counts[seg]
             tot = int(lens.sum())
             scum = np.zeros(seg.size, dtype=np.int64)
@@ -83,6 +79,16 @@ class ShardedMultimap:
 
     def count_many(self, keys: np.ndarray) -> np.ndarray:
         return self.get_many(keys)[0]
+
+    def _values_list(self, keys: np.ndarray) -> pa.ListArray:
+        """``get_many`` as one Arrow list per probe key."""
+        counts, flat = self.get_many(keys)
+        offsets = np.zeros(counts.size + 1, dtype=np.int32)
+        np.cumsum(counts, out=offsets[1:])
+        # bit-view back to int64 (values >= 2^63 must round-trip, same
+        # normalization as keys_u64's int64 bit-view)
+        return pa.ListArray.from_arrays(pa.array(offsets),
+                                        pa.array(flat.view(np.int64)))
 
     def num_items(self) -> int:
         return sum(self._map(s).num_items() for s in range(self.num_shards))
@@ -118,17 +124,12 @@ def multimap_build(df: DataFrame, key_col: str, val_col: str,
             vs.append(keys_u64(b.column("v")))
         keys = np.concatenate(ks) if ks else np.empty(0, dtype=np.uint64)
         vals = np.concatenate(vs) if vs else np.empty(0, dtype=np.uint64)
-        sh = shard_of(keys, num_shards)
-        order = np.argsort(sh, kind="stable")
-        bounds = np.searchsorted(sh[order], np.arange(num_shards + 1))
         shards, blobs = [], []
-        for s in range(num_shards):
-            seg = order[bounds[s]:bounds[s + 1]]
-            if seg.size:
-                inter = np.empty(2 * seg.size, dtype=np.uint64)
-                inter[0::2], inter[1::2] = keys[seg], vals[seg]
-                shards.append(s)
-                blobs.append(inter.tobytes())
+        for s, seg in _by_shard(keys, num_shards):
+            inter = np.empty(2 * seg.size, dtype=np.uint64)
+            inter[0::2], inter[1::2] = keys[seg], vals[seg]
+            shards.append(s)
+            blobs.append(inter.tobytes())
         yield pa.RecordBatch.from_pydict(
             {"shard": pa.array(shards, pa.int32()),
              "payload": pa.array(blobs, pa.binary())})
@@ -147,22 +148,9 @@ def multimap_values_col(spark: SparkSession, mm: ShardedMultimap,
     Find).  Empty array for absent keys — ``F.explode`` then yields no
     row, the inner-join shape.  Values arrive ascending (the canonical
     Find order, see kernels/dysect.py)."""
-    bc = spark.sparkContext.broadcast(mm.blobs)
-
-    @F.arrow_udf(T.ArrayType(T.LongType()))
-    def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        drop_archive_finders()
-        local = _cached_probe(bc, ShardedMultimap)
-        for arr in it:
-            counts, flat = local.get_many(keys_u64(arr))
-            offsets = np.zeros(counts.size + 1, dtype=np.int32)
-            np.cumsum(counts, out=offsets[1:])
-            # bit-view back to int64 (values >= 2^63 must round-trip,
-            # same normalization as keys_u64's int64 bit-view)
-            yield pa.ListArray.from_arrays(
-                pa.array(offsets), pa.array(flat.view(np.int64)))
-
-    return probe(F.col(col).cast("long") if isinstance(col, str) else col)
+    return _broadcast_probe_col(
+        spark, mm.blobs, lambda b: ShardedMultimap(b)._values_list, col,
+        T.ArrayType(T.LongType()))
 
 
 def multimap_lookup_sharded(df: DataFrame, col: str, mm: ShardedMultimap,
@@ -172,53 +160,29 @@ def multimap_lookup_sharded(df: DataFrame, col: str, mm: ShardedMultimap,
     The multimap is exact storage (~128 bits/pair), so a broadcast
     probe hits the same per-executor memory ceiling the sharded filter
     probe removes: at 10^10 pairs the structure is ~160 GB. This path
-    is the scale form: probe rows hash-exchange on the JVM-computed
-    shard id (``shard_col``, bit-exact twin of the numpy route), each
-    task deserializes exactly ONE shard's CSR blob and emits the
-    exploded (input row, value) pairs — the inner-join shape (keys
-    with no stored values emit nothing), same multiset as
-    ``F.explode(multimap_values_col(...))``.
+    is the scale form: the filters' cogroup delivery
+    (``membership._cogroup_by_shard``) hash-exchanges probe rows on the
+    JVM-computed shard id, each task deserializes exactly ONE shard's
+    CSR blob and emits the exploded (input row, value) pairs — the
+    inner-join shape (keys with no stored values emit nothing), same
+    multiset as ``F.explode(multimap_values_col(...))``.
     """
-    from .membership import shard_col
+    def answer(rows: pa.Table, keys: np.ndarray, blob) -> pa.Table:
+        if blob is None:
+            counts, flat = np.zeros(keys.size, np.int64), np.empty(0, np.uint64)
+        else:
+            counts, flat = QuotientMultimap.from_bytes(blob).get_many(keys)
+        return (rows.take(np.repeat(np.arange(rows.num_rows), counts))
+                .append_column(out_col, pa.array(
+                    np.ascontiguousarray(flat).view(np.int64))))
 
-    spark = df.sparkSession
-    if "_shard" in df.columns:
-        raise ValueError("df already has a _shard column")
-    blob_df = spark.createDataFrame(
-        [(s, bytearray(b)) for s, b in enumerate(mm.blobs)],
-        "shard int, blob binary")
-    keyed = df.withColumn("_shard", shard_col(col, mm.num_shards))
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.LongType())])
-    colname = col
-
-    def lookup_group(left: pa.Table, right: pa.Table) -> pa.Table:
-        drop_archive_finders()
-        left = left.drop_columns(["_shard"])
-        if not left.num_rows or not right.num_rows:
-            return left.slice(0, 0).append_column(
-                out_col, pa.array([], pa.int64()))
-        m = QuotientMultimap.from_bytes(right.column("blob")[0].as_py())
-        counts, flat = m.get_many(keys_u64(left.column(colname)))
-        out = left.take(np.repeat(np.arange(left.num_rows), counts))
-        return out.append_column(
-            out_col, pa.array(np.ascontiguousarray(flat).view(np.int64)))
-
-    return (keyed.groupBy("_shard")
-            .cogroup(blob_df.groupBy("shard"))
-            .applyInArrow(lookup_group, out_schema))
+    return _cogroup_by_shard(df, col, mm.blobs,
+                             T.StructField(out_col, T.LongType()), answer)
 
 
 def multimap_count_col(spark: SparkSession, mm: ShardedMultimap,
                        col) -> Column:
     """long Column: number of values stored under ``col`` (0 if absent)."""
-    bc = spark.sparkContext.broadcast(mm.blobs)
-
-    @F.arrow_udf(T.LongType())
-    def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        drop_archive_finders()
-        local = _cached_probe(bc, ShardedMultimap)
-        for arr in it:
-            yield pa.array(local.count_many(keys_u64(arr)))
-
-    return probe(F.col(col).cast("long") if isinstance(col, str) else col)
+    return _broadcast_probe_col(
+        spark, mm.blobs, lambda b: ShardedMultimap(b).count_many, col,
+        T.LongType())

@@ -10,12 +10,16 @@ The store probe is the scale path that is ALSO broadcast-speed:
 - the filter is persisted once as one blob file per shard plus a
   ``manifest.json`` (kind, seed, num_shards, per-shard sha256) on a
   filesystem every executor can read — local disk in local mode, a
-  shared/distributed FS (NFS, HDFS/S3 via a mount) on a cluster;
-- the probe is a plain iterator ``arrow_udf``: each Arrow batch
-  computes shard routes (the same XXH64 route as ``shard_col``),
-  argsort-groups keys by shard, and answers each group against that
-  shard's filter, loaded lazily from the store and LRU-cached per
-  worker (``max_cached_shards`` bounds worker memory);
+  shared/distributed FS (NFS, HDFS/S3 via a mount) on a cluster. The
+  ``kind`` is the filter's own (``cuckoo``, ``cuckoo_jvm``,
+  ``shingle``, ``tail``, ``crate``, ``xor``); a worker resolves it
+  through ``membership._family`` to the family's kernel class and
+  shard probe, so this module holds no per-family code;
+- the probe is a plain iterator ``arrow_udf``: each Arrow batch runs
+  the family's ``probe_shards`` — the shared router (the same XXH64
+  route as ``shard_col``, one argsort per batch) answers each shard's
+  keys against that shard's filter, loaded lazily from the store and
+  LRU-cached per worker (``max_cached_shards`` bounds worker memory);
 - ``colocate=True`` prepends a ``repartition`` on the shard route so
   each task touches O(1) shards — with a small cache cap this bounds
   per-task filter memory to a few shards no matter the filter size
@@ -35,7 +39,6 @@ import tempfile
 from collections import OrderedDict
 from typing import Iterator
 
-import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -46,27 +49,6 @@ _FMT_VERSION = 1
 
 def _shard_fname(s: int) -> str:
     return f"shard_{s:05d}.blob"
-
-
-def _loader(kind: str):
-    """from_bytes constructor per family — import-lazy so the store
-    module never drags every kernel into a worker that probes one."""
-    if kind == "cuckoo":
-        from ..kernels.cuckoo import CuckooFilter
-        return CuckooFilter.from_bytes
-    if kind == "shingle":
-        from ..kernels.shingle import ShingleFilter
-        return ShingleFilter.from_bytes
-    if kind == "tail":
-        from ..kernels.tail import TailFilter
-        return TailFilter.from_bytes
-    if kind == "crate":
-        from ..kernels.crate import CrateFilter
-        return CrateFilter.from_bytes
-    if kind == "xor":
-        from ..kernels.xor import XorFilter
-        return XorFilter.from_bytes
-    raise ValueError(f"no store loader for filter kind {kind!r}")
 
 
 class ShardBlobStore:
@@ -100,10 +82,7 @@ class ShardBlobStore:
         """Persist a Sharded* filter (driver-side; blobs are already on
         the driver). Idempotent: same content at ``path`` is kept,
         different content raises rather than silently overwriting."""
-        from .membership import _shard_probe_kind
-
-        kind = _shard_probe_kind(filt)
-        seed = int(getattr(filt, "seed", 0))
+        kind, seed = filt.kind, int(filt.seed)
         shas = [hashlib.sha256(b).hexdigest() for b in filt.blobs]
         store_id = cls._content_id(kind, seed, shas)
         if path is None:
@@ -161,7 +140,9 @@ def _load_shard(path: str, store_id: str, kind: str, shard: int,
         raise IOError(
             f"shard {shard} at {path} does not match its manifest sha — "
             "the store was modified after writing")
-    f = _loader(kind)(blob)
+    from .membership import _family
+
+    f = _family(kind)[1].from_bytes(blob)
     _WORKER_LRU[key] = f
     while len(_WORKER_LRU) > max(1, cap):
         _WORKER_LRU.popitem(last=False)
@@ -176,9 +157,9 @@ def contains_store(df: DataFrame, col: str, store: ShardBlobStore | str,
     persisted shard store — no broadcast, no cogroup, broadcast-speed.
 
     Per Arrow batch: ONE xxhash64 route pass (identical to
-    ``shard_col``), one argsort group-by-shard, one ``contains_many``
-    per shard present in the batch against the lazily-loaded,
-    LRU-cached shard filter. ``max_cached_shards`` bounds each worker
+    ``shard_col``), one argsort group-by-shard, one shard probe per
+    shard present in the batch against the lazily-loaded, LRU-cached
+    shard filter. ``max_cached_shards`` bounds each worker
     to that many deserialized shards (default: all — right whenever
     the filter fits worker memory). ``colocate=True`` repartitions the
     probe rows by shard route first, so each task sees O(1) shards and
@@ -194,29 +175,17 @@ def contains_store(df: DataFrame, col: str, store: ShardBlobStore | str,
     seed, num_shards = store.seed, store.num_shards
     shas = list(store.shard_sha)
     cap = num_shards if max_cached_shards is None else int(max_cached_shards)
-    premix = kind in ("tail", "crate")
 
     @F.arrow_udf(T.BooleanType())
     def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         drop_archive_finders()
-        from ..kernels.hashing import simple_mix_split
-        from .membership import shard_of
+        from .membership import _family
 
+        fam = _family(kind)[0]
         for arr in it:
-            ks = keys_u64(arr)
-            sh = shard_of(ks, num_shards)
-            pk = simple_mix_split(ks, seed) if premix else ks
-            hit = np.zeros(ks.size, dtype=bool)
-            order = np.argsort(sh, kind="stable")
-            bounds = np.searchsorted(sh[order], np.arange(num_shards + 1))
-            for s in range(num_shards):
-                lo, hi = int(bounds[s]), int(bounds[s + 1])
-                if lo == hi:
-                    continue
-                idx = order[lo:hi]
-                f = _load_shard(path, store_id, kind, s, cap, shas[s])
-                hit[idx] = f.contains_many(pk[idx])
-            yield pa.array(hit)
+            yield pa.array(fam.probe_shards(
+                keys_u64(arr), num_shards, seed,
+                lambda s: _load_shard(path, store_id, kind, s, cap, shas[s])))
 
     if colocate:
         # 4x shards of partitions keeps the hash-partition balls-in-bins

@@ -25,9 +25,9 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (BinaryType, DoubleType, LongType,
+from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, LongType,
                                StructField, StructType)
 
 from ..kernels.hll import HyperLogLog
@@ -64,8 +64,16 @@ def streaming_distinct_by_key(
     boundaries (asserted in tests against the one-shot batch build).
 
     ``token_col`` may be an int column or an array<int> column (token
-    sequences); arrays are flattened inside the state function.
+    sequences); arrays are flattened inside the state function. NULL
+    array elements add nothing (the library's build rule); a NULL row
+    fails the micro-batch with a ValueError.
     """
+    if isinstance(stream_df.schema[token_col].dataType, ArrayType):
+        # drop NULL elements JVM-side: one NULL would make pandas turn
+        # the whole batch's lists into float64 (NULL -> INT64_MIN, tokens
+        # above 2^53 rounded); array_compact keeps a NULL row NULL
+        stream_df = stream_df.withColumn(token_col,
+                                         F.array_compact(token_col))
     timeout = (GroupStateTimeout.ProcessingTimeTimeout if idle_timeout_ms
                else GroupStateTimeout.NoTimeout)
 

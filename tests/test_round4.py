@@ -13,7 +13,7 @@ def _probe_frames(spark, n_mem=20000, n_probe=40000):
     return keys, probe
 
 
-FAMILIES = ["cuckoo", "shingle", "tail", "crate", "xor_sharded"]
+FAMILIES = ["cuckoo", "cuckoo_jvm", "shingle", "tail", "crate", "xor_sharded"]
 
 
 @pytest.mark.parametrize("kind", FAMILIES)

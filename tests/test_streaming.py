@@ -146,6 +146,33 @@ def test_stateful_per_key_distinct(spark, tmp_path):
     assert len(got) >= 2  # several sources actually streamed
 
 
+def test_stateful_per_key_distinct_skips_null_elements(spark, tmp_path):
+    """A NULL array element adds nothing to the per-key HLL, and the
+    other tokens of its batch stay exact 64-bit integers (a NULL used to
+    turn the batch's lists into float64: NULL became INT64_MIN and
+    tokens above 2^53 were rounded)."""
+    from cuckoofilter_spark.streaming.stateful import streaming_distinct_by_key
+
+    rows = spark.createDataFrame(
+        [("a", [1, None, 2**53 + 1]), ("a", [4])],
+        "source string, tokens array<bigint>")
+    src = str(tmp_path / "src")
+    rows.coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(rows.schema).parquet(src)
+    out = streaming_distinct_by_key(stream, "source", "tokens", p=12, seed=9)
+    q = (out.writeStream.format("memory").queryName("perkey_nulls")
+         .outputMode("update")
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(180)
+    assert not q.isActive
+    (got,) = spark.sql("SELECT estimate FROM perkey_nulls").collect()
+    want = HyperLogLog(p=12, seed=9)
+    want.add_many(np.array([1, 2**53 + 1, 4], dtype=np.uint64))
+    assert got["estimate"] == want.estimate()
+    assert round(got["estimate"], 2) == 3.00
+
+
 def test_streaming_dedup_null_key_fails_explicitly(spark, tmp_path):
     """A NULL key must fail the micro-batch with the explicit
     streaming_dedup error (an AMQ has no NULL slot), not a NaN-cast
