@@ -43,6 +43,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from .membership import _family, shard_col
+
 MANIFEST = "manifest.json"
 _FMT_VERSION = 1
 
@@ -140,8 +142,6 @@ def _load_shard(path: str, store_id: str, kind: str, shard: int,
         raise IOError(
             f"shard {shard} at {path} does not match its manifest sha — "
             "the store was modified after writing")
-    from .membership import _family
-
     f = _family(kind)[1].from_bytes(blob)
     _WORKER_LRU[key] = f
     while len(_WORKER_LRU) > max(1, cap):
@@ -168,7 +168,6 @@ def contains_store(df: DataFrame, col: str, store: ShardBlobStore | str,
     """
     if isinstance(store, str):
         store = ShardBlobStore.open(store)
-    from .membership import shard_col
     from .udaf import drop_archive_finders, keys_u64
 
     path, store_id, kind = store.path, store.store_id, store.kind
@@ -179,8 +178,6 @@ def contains_store(df: DataFrame, col: str, store: ShardBlobStore | str,
     @F.arrow_udf(T.BooleanType())
     def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         drop_archive_finders()
-        from .membership import _family
-
         fam = _family(kind)[0]
         for arr in it:
             yield pa.array(fam.probe_shards(
