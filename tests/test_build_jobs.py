@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cuckoofilter_spark.sketch import aggregates as agg, membership as mem
-from cuckoofilter_spark.sketch.api import build_filter
+from cuckoofilter_spark.sketch.api import build_filter, filter_families
 
 _GROUP = itertools.count()
 
@@ -80,3 +80,33 @@ CALLS = {
 def test_builder_jobs_and_tasks(spark, table, name):
     call, want = CALLS[name]
     assert _jobs_tasks(spark, lambda: call(table)) == want
+
+
+# build_filter with capacity omitted, for every kind: each family's own
+# sizing rule (a pre-pass, none, or gcs's distinct count) and its build.
+FACADE = {
+    "blocked_bloom": (3, 13),
+    "blocked_bloom64": (3, 13),
+    "blocked_bloom_jvm": (3, 13),
+    "bloom": (3, 13),
+    "crate": (4, 18),
+    "cuckoo": (4, 18),
+    "cuckoo_jvm": (4, 18),
+    "cuckoo_semisort": (4, 18),
+    "cuckoo_stable": (4, 18),
+    "fixed_blocked_bloom": (3, 13),
+    "gcs": (6, 30),
+    "grow_bloom": (2, 9),
+    "shingle": (4, 18),
+    "tail": (2, 9),
+    "xor": (2, 9),
+    "xor_sharded": (2, 9),
+    "xorplus": (2, 9),
+}
+
+
+@pytest.mark.parametrize("kind", filter_families())
+def test_build_filter_jobs_and_tasks(spark, table, kind):
+    got = _jobs_tasks(spark, lambda: build_filter(table, "k", kind=kind,
+                                                  seed=7))
+    assert got == FACADE[kind]

@@ -306,3 +306,74 @@ def test_golden_sharded_probe(spark, tables, built, tmp_path, table, kind):
     assert store == cogroup == PROBE_GOLDEN[f"{table}_{kind}"]
     assert ((manifest.kind, manifest.store_id[:16])
             == STORE_GOLDEN[f"{table}_{kind}"])
+
+
+# -- facade blobs: build_filter with capacity omitted -----------------------
+#
+# Every kind build_filter offers, with capacity omitted so each family's
+# own sizing rule runs, on the flat and tiny tables' scalar key ``k`` and
+# on the flat table's array column ``t`` (NULL elements included).
+
+FACADE_CASES = (("flat", "k"), ("tiny", "k"), ("flat", "t"))
+
+FACADE_GOLDEN = {
+    "flat_k_blocked_bloom": "a5eec03cdf0f97eb",
+    "flat_k_blocked_bloom64": "106a6f394dcc370f",
+    "flat_k_blocked_bloom_jvm": "1c4c0036238e0b78",
+    "flat_k_bloom": "5e64a9f89b6c78ca",
+    "flat_k_crate": "e070153acc880be6",
+    "flat_k_cuckoo": "031c4f14dcb7325b",
+    "flat_k_cuckoo_jvm": "95106b6db7ecc669",
+    "flat_k_cuckoo_semisort": "436ae3bb6e15e602",
+    "flat_k_cuckoo_stable": "8af00d5bb8e72ded",
+    "flat_k_fixed_blocked_bloom": "40ca4fc192317f7a",
+    "flat_k_gcs": "150e236a2ad8f41d",
+    "flat_k_grow_bloom": "f62b7111e403a271",
+    "flat_k_shingle": "3595367a7af7ef3c",
+    "flat_k_tail": "e358e6ad275b2556",
+    "flat_k_xor": "2371f5c378ad98a7",
+    "flat_k_xor_sharded": "84c70b9de27a79f3",
+    "flat_k_xorplus": "feb25d1c201b13c8",
+    "flat_t_blocked_bloom": "cff3bec5d5cf4e0e",
+    "flat_t_blocked_bloom64": "c5e6753bc1557453",
+    "flat_t_blocked_bloom_jvm": "60c52c285b733c31",
+    "flat_t_bloom": "e0b2232721965cf3",
+    "flat_t_crate": "899daef820d16cd6",
+    "flat_t_cuckoo": "84db3c69ac1c4fec",
+    "flat_t_cuckoo_jvm": "0ecb151d992cfeaa",
+    "flat_t_cuckoo_semisort": "eb8c1fde0027e889",
+    "flat_t_cuckoo_stable": "b1f2d5158350a4f2",
+    "flat_t_fixed_blocked_bloom": "30e971ced4e343ba",
+    "flat_t_gcs": "5faa851bfcc09684",
+    "flat_t_grow_bloom": "87f43a81c46a59be",
+    "flat_t_shingle": "3a563a946f1f3827",
+    "flat_t_tail": "c2b01565eae598e1",
+    "flat_t_xor": "14b1a46055e7dc51",
+    "flat_t_xor_sharded": "85eb5fca0f610d86",
+    "flat_t_xorplus": "5db3752a3393367c",
+    "tiny_k_blocked_bloom": "86393fd048da4471",
+    "tiny_k_blocked_bloom64": "4b9f2c116afb30c6",
+    "tiny_k_blocked_bloom_jvm": "75d943f35be5cd56",
+    "tiny_k_bloom": "9d0f272fda673612",
+    "tiny_k_crate": "7f385b6c87e9e6e4",
+    "tiny_k_cuckoo": "1ada748bfbee3de3",
+    "tiny_k_cuckoo_jvm": "18dedbb9c4e61301",
+    "tiny_k_cuckoo_semisort": "07a6c499dca6de88",
+    "tiny_k_cuckoo_stable": "683a930c61aa3e39",
+    "tiny_k_fixed_blocked_bloom": "373123f2b8a876ee",
+    "tiny_k_gcs": "a41b7d5d706a0b5f",
+    "tiny_k_grow_bloom": "7454b3f010767a3a",
+    "tiny_k_shingle": "195273f7747e9911",
+    "tiny_k_tail": "578b36c2cdb01340",
+    "tiny_k_xor": "33d452b229713eb8",
+    "tiny_k_xor_sharded": "f21e250d77ac6fe4",
+    "tiny_k_xorplus": "d46792e536300926",
+}
+
+
+@pytest.mark.parametrize("table,col,kind", [(t, c, k) for t, c in FACADE_CASES
+                                            for k in filter_families()])
+def test_golden_facade_blob(spark, tables, built, table, col, kind):
+    filt = (built(table, kind) if col == "k"
+            else build_filter(tables[table], col, kind=kind, seed=7))
+    assert _blob(filt) == FACADE_GOLDEN[f"{table}_{col}_{kind}"]
