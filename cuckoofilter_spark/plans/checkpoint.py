@@ -44,9 +44,9 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..kernels.cuckoo import CuckooFilter
-from ..sketch.membership import (ShardedCuckooFilter, _build_shards,
-                                 _cuckoo_shard_maker, _sharded_partials)
+from ..sketch.membership import (_FAMILIES, ShardedCuckooFilter,
+                                 _build_shards, _shard_maker,
+                                 _sharded_partials)
 
 
 def _manifest_path(ckpt_dir: str) -> str:
@@ -164,10 +164,14 @@ def cuckoo_build_checkpointed(
          .write.mode("overwrite").parquet(partials))
         _write_manifest(ckpt_dir, dict(params, stage1_committed_at=time.time()))
 
-    # Stage 2: build each shard from the checkpoint alone
+    # Stage 2: build each shard from the checkpoint alone, with the
+    # cuckoo family's own make_shard
+    cuckoo = _FAMILIES["cuckoo"]
+    make_shard = _shard_maker(cuckoo, capacity, {
+        **cuckoo.params, "bits": bits, "seed": seed, "num_shards": num_shards})
     blobs = _build_shards(
         spark.read.parquet(partials).select("shard", "payload"), num_shards,
-        _cuckoo_shard_maker(CuckooFilter, capacity, bits, seed, num_shards))
+        make_shard)
     return ShardedCuckooFilter(blobs, bits=bits, seed=seed)
 
 

@@ -15,20 +15,16 @@ need at 10^12 rows:
   (per-source sketches, per-source applyInPandas) would put 79% of all
   rows in one task. Salting appends a deterministic per-row salt in
   [0, S) to the partitioning key, splitting each hot group S ways.
-- ``salted_group_apply``: two-stage skew-safe grouped aggregation for
-  mergeable sketch states: stage 1 groups by (key, salt) and folds each
-  sub-group to a partial blob; stage 2 groups the (at most S per key)
-  partials by key and merges. Correct for exactly the
-  associative/commutative merges the UDAF contract already requires.
-  Spark's AQE skew-join splitting does this for joins automatically,
-  but NOT for applyInPandas aggregations — hence the explicit helper.
+  Grouped sketch builds need no second stage for this: their partials
+  are per-task blobs (``udaf.grouped_aggregate_sketch``), so a hot
+  group costs one small blob per task, not one task's worth of rows.
 - ``partition_skew_stats``: observability — rows per partition /
   per-group, to decide when salting is warranted.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -67,45 +63,6 @@ def salted_repartition(df: DataFrame, key: str, num_partitions: int,
     """
     sk = salt_key or key
     return df.repartition(num_partitions, F.col(key), salt_col(sk, salt, seed))
-
-
-def salted_group_apply(
-    df: DataFrame,
-    key: str,
-    make_partial: Callable[[pd.DataFrame], bytes],
-    merge_partials: Callable[[list[bytes]], pd.DataFrame],
-    partial_schema: str,
-    final_schema: str,
-    salt: int = 8,
-    salt_key: str | None = None,
-    seed: int = 0x5EED,
-) -> DataFrame:
-    """Two-stage skew-safe grouped fold for mergeable states.
-
-    Stage 1: groupBy(key, salt) -> one partial blob per sub-group
-    (each at most ~1/salt of a hot group). Stage 2: groupBy(key) over
-    the <= salt partials -> merged final row. Legal exactly when the
-    fold is associative+commutative — the library's UDAF contract.
-    """
-    sk = salt_key or key
-    salted = df.withColumn("__salt", salt_col(sk, salt, seed))
-
-    def stage1(pdf: pd.DataFrame) -> pd.DataFrame:
-        drop_archive_finders()
-        k = pdf[key].iloc[0]
-        blob = make_partial(pdf.drop(columns=["__salt"]))
-        return pd.DataFrame({key: [k], "partial": [blob]})
-
-    partials = (salted.groupBy(key, "__salt")
-                .applyInPandas(stage1, f"{partial_schema}, partial binary"))
-
-    def stage2(pdf: pd.DataFrame) -> pd.DataFrame:
-        drop_archive_finders()
-        out = merge_partials(list(pdf["partial"]))
-        out[key] = pdf[key].iloc[0]  # the key column is authoritative here
-        return out
-
-    return partials.groupBy(key).applyInPandas(stage2, final_schema)
 
 
 def partition_skew_stats(df: DataFrame) -> DataFrame:

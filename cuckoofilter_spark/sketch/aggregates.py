@@ -1,4 +1,7 @@
-"""Column-level sketch aggregates: HLL, count-min, KLL, Bloom.
+"""Column-level sketch aggregates: HLL, count-min, KLL, Misra-Gries,
+AMS, CQF, t-digest. The Bloom filter families build through
+``membership.build_filter``; their ``*_sketch`` names here are aliases
+of it.
 
 Each builder hands ``udaf.aggregate_sketch`` (or its grouped form) a
 kernel factory and the kernel class; the engine derives update, merge
@@ -11,17 +14,17 @@ Spark-side explode, which would multiply shuffle rows by ~250x).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
-from ..kernels.bloom import BloomFilter
 from ..kernels.cms import CountMinSketch
 from ..kernels.hll import HyperLogLog
 from ..kernels.kll import KLLSketch
 from ..kernels.mg import MisraGries
-from .membership import _blob_method_col, contains_col
+from .membership import _blob_method_col, build_filter, contains_col
 from .udaf import aggregate_sketch, drop_archive_finders, grouped_aggregate_sketch
 
 
@@ -173,106 +176,20 @@ def tdigest_sketch(df: DataFrame, col: str, delta: float = 200.0) -> "TDigest":
     return aggregate_sketch(df, col, lambda: TDigest(delta=delta), TDigest)
 
 
-def bloom_sketch(df: DataFrame, col: str, capacity: int, bits_per_item: int = 10,
-                 seed: int = 0x5EED) -> BloomFilter:
-    """Distributed Bloom build (bloom.h semantics, OR-mergeable)."""
-    return aggregate_sketch(
-        df, col, lambda: BloomFilter.create(capacity, bits_per_item, seed=seed),
-        BloomFilter)
-
-
-def blocked_bloom_sketch(df: DataFrame, col: str, capacity: int,
-                         seed: int = 0x5EED,
-                         bits_per_key: int | None = None) -> "BlockedBloomFilter":
-    """Distributed blocked-Bloom build (simd-block.h semantics,
-    OR-mergeable 256-bit buckets). ``bits_per_key=8`` matches the
-    reference benchmark's 2^ceil(log2(n))-byte sizing."""
-    from ..kernels.blocked_bloom import BlockedBloomFilter
-
-    return aggregate_sketch(
-        df, col,
-        lambda: BlockedBloomFilter.create(capacity, seed=seed,
-                                          bits_per_key=bits_per_key),
-        BlockedBloomFilter)
-
-
-def blocked_bloom_jvm_sketch(df: DataFrame, col: str, capacity: int,
-                             seed: int = 0x5EED,
-                             bits_per_key: int | None = None
-                             ) -> "JvmBlockedBloomFilter":
-    """Distributed build of the JVM-probeable blocked Bloom (same
-    simd-block.h bucket layout as blocked_bloom_sketch; key hash =
-    Spark xxhash64 so the probe side compiles to codegen + one
-    broadcast join — see sketch/membership.blocked_bloom_jvm_filter)."""
-    from ..kernels.blocked_bloom import JvmBlockedBloomFilter
-
-    return aggregate_sketch(
-        df, col,
-        lambda: JvmBlockedBloomFilter.create(capacity, seed=seed,
-                                             bits_per_key=bits_per_key),
-        JvmBlockedBloomFilter)
-
-
-def blocked_bloom64_sketch(df: DataFrame, col: str, capacity: int,
-                           seed: int = 0x5EED,
-                           bits_per_key: int | None = None
-                           ) -> "BlockedBloomFilter64":
-    """Distributed 64-byte-block blocked-Bloom build (SimdBlockFilter64,
-    simd-block.h:213-375): 512-bit buckets, 8 one-bit probes one per
-    64-bit lane; OR-mergeable like the 256-bit variant."""
-    from ..kernels.blocked_bloom import BlockedBloomFilter64
-
-    return aggregate_sketch(
-        df, col,
-        lambda: BlockedBloomFilter64.create(capacity, seed=seed,
-                                            bits_per_key=bits_per_key),
-        BlockedBloomFilter64)
-
-
-def fixed_blocked_bloom_sketch(df: DataFrame, col: str, capacity: int,
-                               seed: int = 0x5EED,
-                               bits_per_key: int = 12
-                               ) -> "FixedBlockedBloomFilter":
-    """Distributed fixed-fpp blocked-Bloom build (SimdBlockFilterFixed,
-    simd-block-fixed-fpp.h:43-138): exact non-pow2 directory sized at
-    ``capacity * bits_per_key`` bits, Lemire-reduced bucket index."""
-    from ..kernels.blocked_bloom import FixedBlockedBloomFilter
-
-    return aggregate_sketch(
-        df, col,
-        lambda: FixedBlockedBloomFilter.create(capacity, seed=seed,
-                                               bits_per_key=bits_per_key),
-        FixedBlockedBloomFilter)
-
-
-def grow_blocked_bloom_sketch(df: DataFrame, col: str,
-                              initial_capacity: int = 1024,
-                              seed: int = 0x5EED) -> "GrowBlockedBloomFilter":
-    """Size-unknown AMQ build (growable-simd-block.h:22-74, Pagh et al.):
-    the filter takes NO capacity parameter — it is fed the distinct key
-    stream and opens doubling blocked-Bloom levels as each level's
-    insert budget exhausts. The distinct keys arrive via the
-    vocab-bounded two-stage distinct (``distinct_keys_u64`` — driver
-    memory = key universe, the broadcast-build-side contract); the
-    growth loop itself is inherently sequential (each level's existence
-    depends on everything inserted before it), so this family has no
-    tree-merge UDAF — the reference structure is single-writer too."""
-    from ..kernels.blocked_bloom import GrowBlockedBloomFilter
-    from .membership import distinct_keys_u64
-
-    keys = distinct_keys_u64(df, col)
-    f = GrowBlockedBloomFilter(initial_capacity=initial_capacity, seed=seed)
-    f.add_many(keys)
-    return f
-
-
 def cms_lookup_col(spark: SparkSession, sketch: CountMinSketch, col) -> Column:
     """Estimated frequency Column against a broadcast CMS blob."""
     return _blob_method_col(spark, sketch, col, CountMinSketch,
                             method="query_many", rettype=T.LongType())
 
 
-# per-family names of the one membership probe, kept for existing callers
+# per-family names of the one filter build and the one membership probe,
+# kept for existing callers
+bloom_sketch = partial(build_filter, kind="bloom")
+blocked_bloom_sketch = partial(build_filter, kind="blocked_bloom")
+blocked_bloom64_sketch = partial(build_filter, kind="blocked_bloom64")
+fixed_blocked_bloom_sketch = partial(build_filter, kind="fixed_blocked_bloom")
+blocked_bloom_jvm_sketch = partial(build_filter, kind="blocked_bloom_jvm")
+grow_blocked_bloom_sketch = partial(build_filter, kind="grow_bloom")
 bloom_contains_col = blocked_bloom_contains_col = \
     blocked_bloom64_contains_col = fixed_blocked_bloom_contains_col = \
     grow_blocked_bloom_contains_col = contains_col

@@ -14,6 +14,11 @@ bucket-group encodes independently and the concatenated stream is
 bit-identical to a single-node encode of the whole sorted sequence —
 asserted in tests against ``GcsFilter.build``.
 
+``build_filter(kind="gcs")`` runs this plan; ``gcs_build`` is its
+alias. The plan stays outside the by-key shape of the other static
+builds: a key's bucket range depends on the global distinct count, so
+that count must be known before any fingerprint is made.
+
 Scale: the only full-data shuffles are the ``distinct()`` dedupe and
 the range partitioning by bucket — both standard Catalyst exchanges;
 the grouped encode emits one packed row per bucket-group and the
@@ -23,23 +28,25 @@ driver assembles ~num_buckets/group_size rows of a few KB.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernels.gcs import GcsFilter
-from .membership import contains_col
+from .membership import build_filter, contains_col
 from .udaf import drop_archive_finders, keys_u64, require_key_col
 
 
-def gcs_build(df: DataFrame, col: str, log2fpp: int = 10, log2bucket: int = 4,
-              seed: int = 0x5EED, buckets_per_group: int = 4096,
-              layout: int = 3) -> GcsFilter:
-    """Build a GcsFilter with the distributed sort-encode plan."""
+def _sort_encode(df: DataFrame, col: str, log2fpp: int, log2bucket: int,
+                 seed: int, buckets_per_group: int, layout: int) -> GcsFilter:
+    """Build a GcsFilter with the distributed sort-encode plan: gcs's
+    shape in ``membership._FAMILIES``. An ``array<int>`` column is
+    exploded first, so its elements are the keys as in every other
+    family."""
     if require_key_col(df, col):
-        raise TypeError("gcs_build takes a scalar integer column; explode or "
-                        "flatten token arrays upstream")
+        df = df.select(F.explode(col).alias(col))
     uniq = df.select(F.col(col).cast("long").alias("k")) \
              .where(F.col(col).isNotNull()).distinct()
     n = uniq.count()
@@ -105,5 +112,7 @@ def gcs_build(df: DataFrame, col: str, log2fpp: int = 10, log2bucket: int = 4,
     return proto
 
 
-# the membership probe under this family's name, kept for existing callers
+# the one filter build and the one membership probe under this family's
+# names, kept for existing callers
+gcs_build = partial(build_filter, kind="gcs")
 gcs_contains_col = contains_col

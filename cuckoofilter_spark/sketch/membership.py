@@ -1,4 +1,4 @@
-"""Distributed cuckoo-filter build and membership probes.
+"""Filter builds and membership probes.
 
 The cuckoo filter is not loss-free under arbitrary merges (unlike
 Bloom), so the distributed build does NOT use the global tree shape of
@@ -20,18 +20,21 @@ SURVEY.md §3.4): **shard by key**.
   numpy gathers (the reference's batched ``Contain64``
   (cuckoo-batch-prefetch.h:109-139) is subsumed by Arrow batching).
 
-Every probe asks the filter object what to do, never its type (the
-reference's one ``FilterAPI<Table>`` adapter, benchmarks/filter-api.h:
-13-63). The sharded families share one class, ``_ShardedFilter``: its
-one router ``_by_shard`` answers each shard with that shard's kernel,
-and each family only declares its kernel class and store ``kind``
-(``kinds``), whether probe keys are first mixed with
-``simple_mix_split`` (``prehashed``), and its item count. The three
-deliveries read those declarations: the broadcast probe
-(``contains_col``) ships the filter itself, the store
+Every family is one declaration on each side (the reference's one
+``FilterAPI<Table>`` adapter, benchmarks/filter-api.h:13-63), and
+neither side switches on a type. Probe: the sharded families share one
+class, ``_ShardedFilter``: its one router ``_by_shard`` answers each
+shard with that shard's kernel, and each family only declares its
+kernel class and store ``kind`` (``kinds``), whether probe keys are
+first mixed with ``simple_mix_split`` (``prehashed``), and its item
+count. The three deliveries read those declarations: the broadcast
+probe (``contains_col``) ships the filter itself, the store
 (``sketch/store.py``) and the cogroup delivery resolve a ``kind``
 through ``_family``. Every other filter is one blob answered by its
-own class's ``contains_many``.
+own class's ``contains_many``. Build: every kind ``build_filter``
+offers is one ``_Family`` row (its shape, kernel, capacity rule and
+parameter defaults), and ``build_filter`` calls the row's shape with
+no per-family branch; the per-family builder names are aliases of it.
 
 At 10^12 keys: num_shards ~ a few thousand keeps each shard's keys and
 table inside one task's memory; the single shuffle is the same volume a
@@ -47,20 +50,29 @@ bulk (the reference's Contain is exactly this primitive, SURVEY §2.6).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
+from ..kernels.blocked_bloom import BlockedBloomFilter, \
+    BlockedBloomFilter64, FixedBlockedBloomFilter, GrowBlockedBloomFilter, \
+    JvmBlockedBloomFilter, _SALTS
+from ..kernels.bloom import BloomFilter
 from ..kernels.crate import CrateFilter
 from ..kernels.cuckoo import KICK_CONST, CuckooFilter, JvmCuckooFilter
+from ..kernels.gcs import GcsFilter
 from ..kernels.hashing import U64, simple_mix_split, sorted_member, \
     xxhash64_long
 from ..kernels.shingle import _PAD, ShingleFilter
 from ..kernels.tail import TailFilter
 from ..kernels.xor import XorFilter
-from .udaf import drop_archive_finders, keys_u64
+from ..kernels.xorplus import XorFilterPlus
+from .udaf import aggregate_sketch, approx_distinct_capacity, \
+    drop_archive_finders, keys_u64, require_key_col
 
 _CHUNK = 1 << 18  # all kernels chunked: sandbox DRAM bandwidth saturates fast
 
@@ -269,8 +281,6 @@ def _sharded_partials(df: DataFrame, col: str, num_shards: int,
     (the pre-hashed input domain of tail/crate); sharding stays on raw
     keys so probes agree.
     """
-    from .udaf import require_key_col
-
     require_key_col(df, col)
     base = df.where(F.col(col).isNotNull()).select(F.col(col).alias("k"))
     transform = (None if hash_seed is None
@@ -334,10 +344,12 @@ def _rebuild(cls, blobs: list[bytes], params: dict):
 class _ShardedFilter:
     """num_shards independent kernel filters addressed by ``shard_of``.
 
-    A family declares four things and inherits the rest:
+    A family declares five things and inherits the rest:
 
     - ``kinds``: store kind name -> kernel class, the first the default
       (a family with two kernels takes ``kernel_cls``);
+    - ``keeps``: the build parameters the object records, passed by
+      keyword (cuckoo's ``bits``, shingle's ``slot_bits``);
     - ``prehashed``: the shards hold ``simple_mix_split(key, seed)``
       (the pre-hashed input domain of tail/crate), so probes mix raw
       keys first — routing stays on the raw key;
@@ -350,11 +362,13 @@ class _ShardedFilter:
     """
 
     kinds: dict = {}
+    keeps: tuple = ()
     prehashed = False
     count = "num_items"
     flat_probe = None
 
-    def __init__(self, blobs: list[bytes], seed: int, kernel_cls=None):
+    def __init__(self, blobs: list[bytes], seed: int, kernel_cls=None,
+                 **kept):
         self.num_shards = len(blobs)
         if self.num_shards & (self.num_shards - 1):
             raise ValueError("num_shards must be a power of two")
@@ -364,6 +378,10 @@ class _ShardedFilter:
         if self.kind is None:
             raise ValueError(f"{type(self).__name__} has no kind for "
                              f"kernel {self.kernel_cls.__name__}")
+        if set(self.keeps) ^ kept.keys():
+            raise TypeError(f"{type(self).__name__} keeps {self.keeps}; "
+                            f"got {sorted(kept)}")
+        self.__dict__.update(kept)
         self.seed = seed
         self.blobs = blobs
         if self.prehashed:
@@ -373,7 +391,8 @@ class _ShardedFilter:
 
     def _args(self) -> dict:
         """Constructor arguments besides ``blobs``."""
-        return {"seed": self.seed}
+        return {"seed": self.seed, "kernel_cls": self.kernel_cls,
+                **{k: getattr(self, k) for k in self.keeps}}
 
     def __reduce__(self):
         return _rebuild, (type(self), self.blobs, self._args())
@@ -457,16 +476,8 @@ class ShardedCuckooFilter(_ShardedFilter):
     """num_shards independent cuckoo filters addressed by a key hash."""
 
     kinds = {"cuckoo": CuckooFilter, "cuckoo_jvm": JvmCuckooFilter}
+    keeps = ("bits",)
     flat_probe = _FlatProbe
-
-    def __init__(self, blobs: list[bytes], bits: int, seed: int,
-                 kernel_cls=CuckooFilter):
-        super().__init__(blobs, seed, kernel_cls)
-        self.bits = bits
-
-    def _args(self) -> dict:
-        return {"bits": self.bits, "seed": self.seed,
-                "kernel_cls": self.kernel_cls}
 
     def load_factor(self) -> float:
         tags = sum(self._filter(s).size_in_tags() for s in range(self.num_shards))
@@ -486,58 +497,336 @@ class ShardedCuckooFilter(_ShardedFilter):
         }
 
 
-def cuckoo_build(
-    df: DataFrame,
-    col: str,
-    capacity: int | None = None,
-    bits: int = 12,
-    seed: int = 0x5EED,
-    num_shards: int = 32,
-    mode: str = "single",
-    stable: bool = False,
-) -> ShardedCuckooFilter:
-    """Build a sharded cuckoo filter over an integer key column.
+class ShardedXorFilter(_ShardedFilter):
+    """num_shards independent xor filters addressed by a key hash.
 
-    One shuffle (groupBy shard). ``capacity`` defaults to an exact
-    distinct count when omitted (costs one extra aggregate job) —
-    callers at scale should pass the known/estimated cardinality.
+    The scale form of the static xor build: the peel
+    (xorfilter.h:122-279) is sequential *per filter*, but nothing says
+    there must be one filter — sharding by key gives each shard an
+    independent peel that runs INSIDE its groupBy(shard) task, so the
+    driver never materializes the key set (the ``xor_build`` driver
+    peel collects every distinct key; at 10^10+ distinct grams neither
+    the collect nor a single-machine peel survives). Space is unchanged
+    (1.23n cells per shard sums to 1.23n) and probes stay 3 gathers —
+    routed to the owning shard's fingerprint array.
+
+    Per-shard peels retry independently (seed + attempt recorded in
+    each blob header), so shards may settle on different attempts; a
+    probe always uses the blob's own recorded hasher.
     """
-    return _cuckoo_build(CuckooFilter, df, col, capacity, bits, seed,
-                         num_shards, mode=mode, stable=stable)
+
+    kinds = {"xor": XorFilter}
+    count = "size"
 
 
-def _cuckoo_build(kernel_cls, df: DataFrame, col: str, capacity: int | None,
-                  bits: int, seed: int, num_shards: int,
-                  **create_kw) -> ShardedCuckooFilter:
-    from .udaf import approx_distinct_capacity
+# -- Shingle (overlapping-bucket cuckoo, shingle.h) -------------------------
+class ShardedShingleFilter(_ShardedFilter):
+    """num_shards independent shingle filters addressed by a key hash —
+    the same shard-by-key distribution as ShardedCuckooFilter (both of
+    a key's overlapping buckets live in one shard's private tables, so
+    kick chains never cross shards)."""
 
-    # _sharded_build_blobs does the map-side combine: one packed-key
-    # blob per (partition, shard) — at 10^12 tokens the exchange is
-    # bounded by P x vocab x 8 bytes, no Python UDF in the exchange,
-    # one groupBy(shard) shuffle total.
-    if capacity is None:
-        capacity = approx_distinct_capacity(df, col)
-    make_shard = _cuckoo_shard_maker(kernel_cls, capacity, bits, seed,
-                                     num_shards, **create_kw)
-    blobs = _sharded_build_blobs(df, col, num_shards, make_shard)
-    return ShardedCuckooFilter(blobs, bits=bits, seed=seed,
-                               kernel_cls=kernel_cls)
+    kinds = {"shingle": ShingleFilter}
+    keeps = ("slot_bits",)
+    count = "filled"
+    flat_probe = _ShingleFlatProbe
+
+    def expected_fpp(self) -> float:
+        return 4.0 / (1 << self.slot_bits)
 
 
-def _cuckoo_shard_maker(kernel_cls, capacity: int, bits: int, seed: int,
-                        num_shards: int, **create_kw):
-    """``make_shard`` of the sharded cuckoo build: each shard's table
-    sized ``capacity / num_shards`` (at least 64, and never below its
-    own key count)."""
-    shard_cap = max(64, capacity // num_shards)
+# -- Tail filter (adaptive-epsilon growing AMQ, tail-filter.hpp) ------------
+class ShardedTailFilter(_ShardedFilter):
+    """num_shards independent tail filters addressed by a key hash.
+
+    The tail filter needs NO capacity estimate (tail-filter.hpp:119-124
+    upsizes itself as ndv crosses powers of two), so the build refuses
+    a capacity and runs no approx_count_distinct pre-pass — each shard
+    just grows.
+    Shards upsize independently; the probe keeps per-shard filters
+    (epochs differ, so a flat one-pass table is not applicable)."""
+
+    kinds = {"tail": TailFilter}
+    prehashed = True
+    count = "ndv"
+
+    def expected_fpp(self) -> float:
+        """Structure-derived bound: sum over pairs of 2^-(key_bits +
+        significant tail bits) plus the graduated-key mass — exact for
+        the stored content, unlike the design epsilon (FPR grows one
+        ~2^-(tb+1) term per upsize past 2^lgm)."""
+        total = 0.0
+        for f in map(self._filter, range(self.num_shards)):
+            if f.pairs.size:
+                t = f.pairs & np.uint64((1 << (f.tb + 1)) - 1)
+                lb = t & (~t + np.uint64(1))
+                sent = np.log2(lb.astype(np.float64))
+                sig = f.tb - sent
+                total += float((2.0 ** -(f.key_bits + sig)).sum())
+            if f.bitset is not None and f.bitset.size:
+                total += float(f.bitset.sum()) / f.bitset.size
+        return total / max(1, self.num_shards)
+
+
+# -- Crate / pocket dictionaries (crate.h, arXiv:1911.05060) ----------------
+class ShardedCrateFilter(_ShardedFilter):
+    """num_shards independent crate filters addressed by a key hash;
+    each shard's spare dict stays private to its bucket range."""
+
+    kinds = {"crate": CrateFilter}
+    prehashed = True
+    count = "ndv"
+
+
+# -- build: one declaration per filter family -------------------------------
+#
+# The build twin of the probe declarations above: every kind
+# ``build_filter`` offers is one ``_Family`` row of ``_FAMILIES``, and
+# ``build_filter`` resolves the row and calls its shape — no per-family
+# branch. A shape is one way the engine (sketch/udaf.py) builds:
+#
+# - ``_tree``: ``aggregate_sketch`` over the kernel made for
+#   ``capacity`` keys — the OR-mergeable Bloom kinds;
+# - ``_by_key``: ``_sharded_build_blobs``, one kernel per key shard
+#   made from all of its keys, wrapped in the ``_ShardedFilter`` class
+#   whose ``kinds`` hold the kernel (a ``prehashed`` class's shards are
+#   fed ``simple_mix_split(key, seed)``);
+# - ``_driver``: one kernel over ``distinct_keys_u64`` on the driver —
+#   the builds that are sequential by nature (the xor peel, growing
+#   Bloom levels);
+# - ``_gcs``: gcs's own sort-encode plan (sketch/gcsfilter.py). It
+#   cannot run by key: its bucket ranges depend on the global distinct
+#   count, which must be known before any fingerprint is made.
+
+
+def _create(kernel, size: int, **params):
+    """Empty kernel of the kinds with a ``create(max_num_keys)``."""
+    return kernel.create(size, **params)
+
+
+def _unsized(kernel, size, **params):
+    """Empty kernel of the kinds that grow themselves (tail, grow_bloom)."""
+    return kernel(**params)
+
+
+class _Family(NamedTuple):
+    """How ``build_filter`` builds one kind.
+
+    - ``shape``: the engine call, ``shape(df, col, family, capacity,
+      params)``;
+    - ``kernel``: the kernel class;
+    - ``capacity``: the capacity rule, ``rule(df, col, kind, capacity,
+      params) -> capacity``;
+    - ``params``: the kind's parameters with their defaults — the
+      keywords ``build_filter`` takes for it besides ``capacity`` and
+      ``seed``;
+    - ``new``: the empty kernel, ``new(kernel, size, **params)``, keys
+      then added to it; None for a static kernel, built from its whole
+      key set by ``kernel.build(keys, **params)``;
+    - ``check`` (optional): an eager check of the parameters.
+    """
+
+    shape: Callable
+    kernel: type
+    capacity: Callable
+    params: dict
+    new: Callable | None = _create
+    check: Callable | None = None
+
+
+def _sized(headroom: float = 1.15, slack: int = 64):
+    """Capacity rule of the kinds sized from ``capacity`` (a tree kernel's
+    size, the by-key shards' floor): an omitted capacity is one
+    ``approx_count_distinct`` pre-pass times ``headroom``, plus
+    ``slack``."""
+    def rule(df, col, kind, capacity, params):
+        return (approx_distinct_capacity(df, col, headroom, slack)
+                if capacity is None else int(capacity))
+
+    return rule
+
+
+def _refused(df, col, kind, capacity, params):
+    """Capacity rule of the kinds sized from the data itself: the static
+    builds (xor, xor_sharded, xorplus, gcs) and the self-growing tail
+    filter."""
+    if capacity is not None:  # refuse rather than silently drop
+        raise ValueError(
+            f"{kind!r} filters are sized from the data; capacity is not "
+            f"a parameter (got {capacity})")
+
+
+def _mapped(name: str):
+    """Capacity rule of a kind whose ``capacity`` is the default of its
+    parameter ``name`` (grow_bloom's starting level)."""
+    def rule(df, col, kind, capacity, params):
+        if capacity is not None:
+            params.setdefault(name, int(capacity))
+
+    return rule
+
+
+def _holding(fam: _Family, keys: np.ndarray, size: int, params: dict):
+    """A ``fam`` kernel holding ``keys``: built from them if static, else
+    made empty for ``size`` keys and added to."""
+    if fam.new is None:
+        return fam.kernel.build(keys, **params)
+    kern = fam.new(fam.kernel, size, **params)
+    kern.add_many(keys)
+    return kern
+
+
+def _tree(df: DataFrame, col: str, fam: _Family, capacity: int,
+          params: dict):
+    kernel, new = fam.kernel, fam.new
+    return aggregate_sketch(df, col, lambda: new(kernel, capacity, **params),
+                            kernel)
+
+
+def _shard_maker(fam: _Family, capacity: int | None, params: dict):
+    """``make_shard`` of the by-key shape, with the one shard-sizing
+    rule: each shard's kernel is made for ``capacity / num_shards`` keys
+    (at least 64), and never for fewer than the shard's own; a kind
+    without a capacity gets the shard's key count."""
+    params = dict(params)
+    num_shards = params.pop("num_shards")
+    shard_cap = None if capacity is None else max(64, capacity // num_shards)
 
     def make_shard(keys: np.ndarray) -> bytes:
-        filt = kernel_cls.create(max(shard_cap, keys.size), bits=bits,
-                                 seed=seed, **create_kw)
-        filt.add_many(keys)
-        return filt.to_bytes()
+        size = keys.size if shard_cap is None else max(shard_cap, keys.size)
+        return _holding(fam, keys, size, params).to_bytes()
 
     return make_shard
+
+
+def _by_key(df: DataFrame, col: str, fam: _Family, capacity: int | None,
+            params: dict):
+    cls = next(c for c in _ShardedFilter.__subclasses__()
+               if fam.kernel in c.kinds.values())
+    seed = params["seed"]
+    blobs = _sharded_build_blobs(df, col, params["num_shards"],
+                                 _shard_maker(fam, capacity, params),
+                                 hash_seed=seed if cls.prehashed else None)
+    return cls(blobs, seed, fam.kernel, **{k: params[k] for k in cls.keeps})
+
+
+def _driver(df: DataFrame, col: str, fam: _Family, capacity: int | None,
+            params: dict):
+    return _holding(fam, distinct_keys_u64(df, col), capacity, params)
+
+
+def _gcs(df: DataFrame, col: str, fam: _Family, capacity, params: dict):
+    from .gcsfilter import _sort_encode
+
+    return _sort_encode(df, col, **params)
+
+
+def _jvm_bits(params: dict) -> None:
+    if params["bits"] > 16:
+        raise ValueError("JVM probe packs tags into 64-bit words; "
+                         "bits must be <= 16")
+
+
+_CUCKOO = {"bits": 12, "num_shards": 32}
+_BLOCKED = {"bits_per_key": None}
+
+# reference-suite order
+_FAMILIES = {
+    "cuckoo": _Family(_by_key, CuckooFilter, _sized(),
+                      {**_CUCKOO, "mode": "single", "stable": False}),
+    # JVM-probeable variants (round 5): same structures, xxhash64 key
+    # hash — probe via the zero-Python joins below, or through
+    # contains_col (Arrow blob path, identical answers)
+    "cuckoo_jvm": _Family(_by_key, JvmCuckooFilter, _sized(), _CUCKOO,
+                          check=_jvm_bits),
+    "blocked_bloom_jvm": _Family(_tree, JvmBlockedBloomFilter, _sized(),
+                                 _BLOCKED),
+    "cuckoo_semisort": _Family(_by_key, CuckooFilter, _sized(),
+                               {**_CUCKOO, "bits": 13},
+                               partial(_create, mode="semisort")),
+    "cuckoo_stable": _Family(_by_key, CuckooFilter, _sized(), _CUCKOO,
+                             partial(_create, stable=True)),
+    "bloom": _Family(_tree, BloomFilter, _sized(), {"bits_per_item": 10}),
+    "blocked_bloom": _Family(_tree, BlockedBloomFilter, _sized(), _BLOCKED),
+    "blocked_bloom64": _Family(_tree, BlockedBloomFilter64, _sized(),
+                               _BLOCKED),
+    "fixed_blocked_bloom": _Family(_tree, FixedBlockedBloomFilter, _sized(),
+                                   {"bits_per_key": 12}),
+    "grow_bloom": _Family(_driver, GrowBlockedBloomFilter,
+                          _mapped("initial_capacity"),
+                          {"initial_capacity": 1024}, _unsized),
+    "xor": _Family(_driver, XorFilter, _refused, {"fp_bits": 8}, None),
+    "xor_sharded": _Family(_by_key, XorFilter, _refused,
+                           {"fp_bits": 8, "num_shards": 32}, None),
+    "xorplus": _Family(_driver, XorFilterPlus, _refused, {"fp_bits": 8},
+                       None),
+    "gcs": _Family(_gcs, GcsFilter, _refused,
+                   {"log2fpp": 10, "log2bucket": 4,
+                    "buckets_per_group": 4096, "layout": 3}),
+    "shingle": _Family(_by_key, ShingleFilter, _sized(),
+                       {"slot_bits": 12, "num_shards": 8}),
+    "tail": _Family(_by_key, TailFilter, _refused,
+                    {"epsilon": 2.0 ** -16, "lgm": 10, "num_shards": 8},
+                    _unsized),
+    # no headroom or slack: the reference sizes crate buckets at the
+    # exact add_count for its 44/51 fill target (crate.h:429-436); an
+    # approx_count_distinct under-estimate is absorbed by the shard
+    # floor's max(), and an over-estimate would lower fill and inflate
+    # bits/item past the published operating point
+    "crate": _Family(_by_key, CrateFilter, _sized(headroom=1.0, slack=0),
+                     {"num_shards": 8},
+                     lambda kernel, size, **params: kernel(size, **params)),
+}
+
+
+def filter_families() -> tuple:
+    """The buildable family names, reference-suite order."""
+    return tuple(_FAMILIES)
+
+
+def build_filter(df: DataFrame, col: str, kind: str = "cuckoo",
+                 capacity: int | None = None, seed: int = 0x5EED,
+                 **params):
+    """Build any filter family over an integer (or array<int>) key
+    column — the FilterAPI construct/add leg. Returns the family's
+    filter object: pass it to ``contains_col`` for probing;
+    family-specific surfaces (delete, info, to_bytes) stay available on
+    the object itself.
+
+    ``params`` are the kind's own (``_FAMILIES``). ``capacity`` follows
+    the kind's rule: the Bloom kinds size their kernel from it and the
+    by-key kinds (cuckoo*, shingle, crate) each shard, and both run one
+    ``approx_count_distinct`` pre-pass when it is omitted (x 1.15 + 64;
+    crate takes the bare estimate). grow_bloom starts its first level
+    at it. xor, xor_sharded, xorplus, gcs and tail are sized from the
+    data and refuse it. Callers at scale should pass the known
+    cardinality — the reference's add_count.
+    """
+    try:
+        fam = _FAMILIES[kind]
+    except KeyError:
+        raise ValueError(
+            f"unknown filter kind {kind!r}; one of {sorted(_FAMILIES)}")
+    unknown = sorted(params.keys() - fam.params.keys())
+    if unknown:
+        raise TypeError(f"{kind!r} filters take no parameter {unknown}; "
+                        f"theirs are {sorted(fam.params)}")
+    if fam.check is not None:
+        fam.check({**fam.params, **params})
+    capacity = fam.capacity(df, col, kind, capacity, params)
+    return fam.shape(df, col, fam, capacity,
+                     {**fam.params, **params, "seed": seed})
+
+
+# per-family names of the one build, kept for existing callers
+cuckoo_build = partial(build_filter, kind="cuckoo")
+cuckoo_jvm_build = partial(build_filter, kind="cuckoo_jvm")
+xor_build = partial(build_filter, kind="xor")
+xor_build_sharded = partial(build_filter, kind="xor_sharded")
+xorplus_build = partial(build_filter, kind="xorplus")
+shingle_build = partial(build_filter, kind="shingle")
+tail_build = partial(build_filter, kind="tail")
+crate_build = partial(build_filter, kind="crate")
 
 
 # Worker-process cache of deserialized probe structures, keyed by the
@@ -658,46 +947,6 @@ def distinct_keys_u64(df: DataFrame, col: str, num_shards: int = 64) -> np.ndarr
         [np.frombuffer(b, dtype=np.uint64) for b in blobs]))
 
 
-class ShardedXorFilter(_ShardedFilter):
-    """num_shards independent xor filters addressed by a key hash.
-
-    The scale form of the static xor build: the peel
-    (xorfilter.h:122-279) is sequential *per filter*, but nothing says
-    there must be one filter — sharding by key gives each shard an
-    independent peel that runs INSIDE its groupBy(shard) task, so the
-    driver never materializes the key set (the ``xor_build`` driver
-    peel collects every distinct key; at 10^10+ distinct grams neither
-    the collect nor a single-machine peel survives). Space is unchanged
-    (1.23n cells per shard sums to 1.23n) and probes stay 3 gathers —
-    routed to the owning shard's fingerprint array.
-
-    Per-shard peels retry independently (seed + attempt recorded in
-    each blob header), so shards may settle on different attempts; a
-    probe always uses the blob's own recorded hasher.
-    """
-
-    kinds = {"xor": XorFilter}
-    count = "size"
-
-
-def xor_build_sharded(df: DataFrame, col: str, fp_bits: int = 8,
-                      seed: int = 0x5EED,
-                      num_shards: int = 32) -> ShardedXorFilter:
-    """Task-local xor peel per key shard — no driver-side key set.
-
-    Same plan shape as ``cuckoo_build`` (one groupBy(shard) shuffle of
-    packed per-partition key blobs); each shard task np.unique-dedupes
-    its keys (global dedupe is free: sharding is by key) and runs the
-    full AddAll peel (xorfilter.h:122-279) privately. The driver
-    collects num_shards fingerprint blobs — never keys.
-    """
-    def make_shard(keys: np.ndarray) -> bytes:
-        return XorFilter.build(keys, fp_bits=fp_bits, seed=seed).to_bytes()
-
-    blobs = _sharded_build_blobs(df, col, num_shards, make_shard)
-    return ShardedXorFilter(blobs, seed=seed)
-
-
 # -- shard-partitioned probe (no whole-filter broadcast) ---------------------
 #
 # The broadcast probe (_FlatProbe and friends) ships EVERY shard's table
@@ -732,21 +981,25 @@ def contains_sharded(df: DataFrame, col: str, filt,
       path all executors can read): the filter is persisted once as
       one blob file per shard (``sketch.store.ShardBlobStore``) and the
       probe is a plain iterator arrow_udf that lazily loads + LRU
-      caches only the shards its batches touch. Broadcast-speed
-      (measured 1.4 s vs 0.9-1.8 s broadcast at 20M probes), zero
-      exchanges; ``max_cached_shards`` bounds per-worker filter memory
+      caches only the shards its batches touch. Zero exchanges;
+      ``max_cached_shards`` bounds per-worker filter memory
       and ``colocate=True`` repartitions probe rows by shard route so
       each task touches O(1) shards — the form for filters that fit no
       single machine.
     - **cogroup** (fallback when there is no shared filesystem): blobs
       travel as DataFrame rows through a cogroup on the shard id; each
       task deserializes exactly its shard's blob. Correct on any
-      cluster, but pays the cogroup machinery (measured ~17 s at the
-      same 20M probes, when it ran on pandas).
+      cluster, but the exchange moves every probe row.
+
+    Measured with 4M probe keys (half present) against a 32-shard,
+    100,096-byte cuckoo filter at ``local[4]`` (4-core host), wall:
+    broadcast ``contains_col`` 0.79 s, store 1.14 s, cogroup 2.04 s.
 
     Every sharded family works (store kinds cuckoo, cuckoo_jvm,
     shingle, tail, crate, xor); answers are bit-identical across the
-    broadcast, store and cogroup paths.
+    broadcast, store and cogroup paths. Without ``store`` the store
+    is written once per filter content under a per-process temp root
+    that is removed at interpreter exit (``ShardBlobStore.write``).
     """
     if not isinstance(filt, _ShardedFilter):
         raise TypeError(
@@ -763,7 +1016,7 @@ def contains_sharded(df: DataFrame, col: str, filt,
             # cached store is trusted — re-hashing every blob per probe
             # call would cost seconds on the multi-GB filters this
             # path exists for
-            st = ShardBlobStore.write(filt)  # fresh temp-dir store
+            st = ShardBlobStore.write(filt)  # this process's auto store
             filt._auto_store = st
         return contains_store(df, col, st, out_col=out_col,
                               max_cached_shards=max_cached_shards,
@@ -826,28 +1079,6 @@ def _contains_sharded_cogroup(df: DataFrame, col: str, filt,
                              T.StructField(out_col, T.BooleanType()), answer)
 
 
-def xor_build(df: DataFrame, col: str, fp_bits: int = 8, seed: int = 0x5EED):
-    """Distributed-dedupe + driver-peel static xor filter build.
-
-    The peel (xorfilter.h:122-279) is inherently sequential, so it runs
-    driver-side over the distinct key set — executor->driver control
-    crosses exactly once, by design (SURVEY §3.3). Returns a XorFilter.
-    fp_bits 8/16 are the xorfilter.h configs; 10/14 the XorFilter2
-    storage-generic ones (xorfilter_2.h).
-    """
-    return XorFilter.build(distinct_keys_u64(df, col), fp_bits=fp_bits, seed=seed)
-
-
-def xorplus_build(df: DataFrame, col: str, fp_bits: int = 8, seed: int = 0x5EED):
-    """XorFilterPlus build (xorfilter_plus.h): same distributed dedupe +
-    driver peel as ``xor_build``, with the rank9-compressed third block
-    — the space-optimal static AMQ of the reference family."""
-    from ..kernels.xorplus import XorFilterPlus
-
-    return XorFilterPlus.build(distinct_keys_u64(df, col), fp_bits=fp_bits,
-                               seed=seed)
-
-
 def approx_anti_join(
     spark: SparkSession, fact: DataFrame, fact_col: str, filt: ShardedCuckooFilter
 ) -> DataFrame:
@@ -857,154 +1088,6 @@ def approx_anti_join(
     believed present) — standard Bloom-anti-join semantics.
     """
     return fact.where(~contains_col(spark, filt, fact_col))
-
-
-# -- Shingle (overlapping-bucket cuckoo, shingle.h) -------------------------
-class ShardedShingleFilter(_ShardedFilter):
-    """num_shards independent shingle filters addressed by a key hash —
-    the same shard-by-key distribution as ShardedCuckooFilter (both of
-    a key's overlapping buckets live in one shard's private tables, so
-    kick chains never cross shards)."""
-
-    kinds = {"shingle": ShingleFilter}
-    count = "filled"
-    flat_probe = _ShingleFlatProbe
-
-    def __init__(self, blobs: list[bytes], slot_bits: int, seed: int):
-        super().__init__(blobs, seed)
-        self.slot_bits = slot_bits
-
-    def _args(self) -> dict:
-        return {"slot_bits": self.slot_bits, "seed": self.seed}
-
-    def expected_fpp(self) -> float:
-        return 4.0 / (1 << self.slot_bits)
-
-
-def shingle_build(
-    df: DataFrame,
-    col: str,
-    capacity: int | None = None,
-    slot_bits: int = 12,
-    seed: int = 0x5EED,
-    num_shards: int = 8,
-) -> ShardedShingleFilter:
-    """Build a sharded shingle filter over an integer key column — one
-    groupBy(shard) shuffle of packed key blobs, the cuckoo_build plan
-    shape applied to the overlapping-bucket structure."""
-    from .udaf import approx_distinct_capacity
-
-    if capacity is None:
-        capacity = approx_distinct_capacity(df, col)
-    shard_cap = max(64, capacity // num_shards)
-
-    def make_shard(keys: np.ndarray) -> bytes:
-        filt = ShingleFilter.create(max(shard_cap, keys.size),
-                                    slot_bits=slot_bits, seed=seed)
-        filt.add_many(keys)
-        return filt.to_bytes()
-
-    blobs = _sharded_build_blobs(df, col, num_shards, make_shard)
-    return ShardedShingleFilter(blobs, slot_bits=slot_bits, seed=seed)
-
-
-# -- Tail filter (adaptive-epsilon growing AMQ, tail-filter.hpp) ------------
-class ShardedTailFilter(_ShardedFilter):
-    """num_shards independent tail filters addressed by a key hash.
-
-    Unlike every other sharded structure here the tail filter needs NO
-    capacity estimate (tail-filter.hpp:119-124 upsizes itself as ndv
-    crosses powers of two), so the build skips the
-    approx_count_distinct pre-pass entirely — each shard just grows.
-    Shards upsize independently; the probe keeps per-shard filters
-    (epochs differ, so a flat one-pass table is not applicable)."""
-
-    kinds = {"tail": TailFilter}
-    prehashed = True
-    count = "ndv"
-
-    def expected_fpp(self) -> float:
-        """Structure-derived bound: sum over pairs of 2^-(key_bits +
-        significant tail bits) plus the graduated-key mass — exact for
-        the stored content, unlike the design epsilon (FPR grows one
-        ~2^-(tb+1) term per upsize past 2^lgm)."""
-        total = 0.0
-        for f in map(self._filter, range(self.num_shards)):
-            if f.pairs.size:
-                t = f.pairs & np.uint64((1 << (f.tb + 1)) - 1)
-                lb = t & (~t + np.uint64(1))
-                sent = np.log2(lb.astype(np.float64))
-                sig = f.tb - sent
-                total += float((2.0 ** -(f.key_bits + sig)).sum())
-            if f.bitset is not None and f.bitset.size:
-                total += float(f.bitset.sum()) / f.bitset.size
-        return total / max(1, self.num_shards)
-
-
-def tail_build(
-    df: DataFrame,
-    col: str,
-    epsilon: float = 2.0 ** -16,
-    lgm: int = 10,
-    seed: int = 0x5EED,
-    num_shards: int = 8,
-) -> ShardedTailFilter:
-    """Build a sharded tail filter over an integer key column — the one
-    build in the suite with no capacity parameter: shards grow
-    adaptively (tail-filter.hpp:88-124), so the plan is a single
-    groupBy(shard) shuffle of packed hash blobs with no
-    approx_count_distinct pre-pass."""
-    # hash_seed: ship the HASH, not the raw key (the filter's input
-    # domain — tail-filter.hpp:119 takes a pre-hashed uint64)
-    def make_shard(hashes: np.ndarray) -> bytes:
-        filt = TailFilter(lgm=lgm, epsilon=epsilon, seed=seed)
-        filt.add_many(hashes)
-        return filt.to_bytes()
-
-    blobs = _sharded_build_blobs(df, col, num_shards, make_shard,
-                                 hash_seed=seed)
-    return ShardedTailFilter(blobs, seed=seed)
-
-
-# -- Crate / pocket dictionaries (crate.h, arXiv:1911.05060) ----------------
-class ShardedCrateFilter(_ShardedFilter):
-    """num_shards independent crate filters addressed by a key hash;
-    each shard's spare dict stays private to its bucket range."""
-
-    kinds = {"crate": CrateFilter}
-    prehashed = True
-    count = "ndv"
-
-
-def crate_build(
-    df: DataFrame,
-    col: str,
-    capacity: int | None = None,
-    seed: int = 0x5EED,
-    num_shards: int = 8,
-) -> ShardedCrateFilter:
-    """Build sharded pocket-dictionary filters over an integer key
-    column — one groupBy(shard) shuffle of packed hash blobs
-    (crate.h:429-436 sizing: buckets = capacity/44, spare ~1.3%)."""
-    from .udaf import approx_distinct_capacity
-
-    if capacity is None:
-        # no headroom/slack (unlike cuckoo/shingle): the reference sizes
-        # buckets at the exact add_count for its 44/51 fill target
-        # (crate.h:429-436), an ACD under-estimate is absorbed by the
-        # per-shard max() below, and an over-estimate would lower fill
-        # and inflate bits/item past the published operating point
-        capacity = approx_distinct_capacity(df, col, headroom=1.0, slack=0)
-    shard_cap = max(64, int(capacity) // num_shards)
-
-    def make_shard(hashes: np.ndarray) -> bytes:
-        filt = CrateFilter(add_count=max(shard_cap, hashes.size), seed=seed)
-        filt.add_many(hashes)
-        return filt.to_bytes()
-
-    blobs = _sharded_build_blobs(df, col, num_shards, make_shard,
-                                 hash_seed=seed)
-    return ShardedCrateFilter(blobs, seed=seed)
 
 
 # -- JVM-native blocked-Bloom probe (zero Python in the probe path) ---------
@@ -1067,8 +1150,6 @@ def _bb_jvm_project(filt, df: DataFrame, col: str) -> DataFrame:
     refuses to inline a non-cheap alias referenced 16x, so xxhash64 runs
     ONCE per row (the md5-inlining trap from the gram pipelines applies
     to any helper that re-references its argument expression)."""
-    from ..kernels.blocked_bloom import _SALTS
-
     key = F.col(col).cast("long")
     seed = filt.seed if filt.seed < 1 << 63 else filt.seed - (1 << 64)
     # NULL keys route to bucket 0 so the inner join keeps the row; the
@@ -1102,14 +1183,10 @@ def _bb_jvm_project(filt, df: DataFrame, col: str) -> DataFrame:
 
 def _bb_jvm_join(spark: SparkSession, filt, df: DataFrame,
                  col: str) -> tuple[DataFrame, Column]:
-    from ..kernels.blocked_bloom import JvmBlockedBloomFilter
-
     if not isinstance(filt, JvmBlockedBloomFilter):
         raise TypeError(
             "JVM probe requires JvmBlockedBloomFilter (its hash is the "
             "Spark-expressible one); got " + type(filt).__name__)
-    from .udaf import require_key_col
-
     if require_key_col(df, col):  # eager driver-side refusal, not a
         raise TypeError(          # mid-job executor CAST error
             f"column {col!r} is an array; the JVM probe takes scalar keys")
@@ -1165,24 +1242,6 @@ def blocked_bloom_jvm_flag(spark: SparkSession, filt, df: DataFrame,
 
 _CF_JVM_COLS = ("_cf_shard", "_cf_h", "_cf_tag", "_cf_i1", "_cf_sb",
                 "_cf_mask", "_cf_w")
-
-
-def cuckoo_jvm_build(
-    df: DataFrame,
-    col: str,
-    capacity: int | None = None,
-    bits: int = 12,
-    seed: int = 0x5EED,
-    num_shards: int = 32,
-) -> ShardedCuckooFilter:
-    """``cuckoo_build`` with the JVM-probeable kernel (single-table,
-    non-stable — the probe arithmetic the JVM path compiles; same
-    one-shuffle sharded build scaffold)."""
-    if bits > 16:
-        raise ValueError("JVM probe packs tags into 64-bit words; "
-                         "bits must be <= 16")
-    return _cuckoo_build(JvmCuckooFilter, df, col, capacity, bits, seed,
-                         num_shards)
 
 
 def _cf_jvm_tables(spark: SparkSession, filt: ShardedCuckooFilter):
@@ -1270,8 +1329,6 @@ def _cf_jvm_probe_side(spark: SparkSession, filt: ShardedCuckooFilter,
                        df: DataFrame, col: str) -> DataFrame:
     """Probe-side projection + tiny meta join: shard, materialized h,
     TagHash, i1, and the packed long join key _cf_sb."""
-    from .udaf import require_key_col
-
     if require_key_col(df, col):
         raise TypeError(f"column {col!r} is an array; the JVM probe "
                         "takes scalar keys")

@@ -2,10 +2,8 @@
 
 The broadcast probe ships the WHOLE filter to every executor; the
 cogroup probe (``membership.contains_sharded`` fallback) delivers each
-shard's blob to exactly its task but pays the cogroup machinery
-(measured 17-20 s vs 0.9 s broadcast at 20M probes, when it ran on
-pandas — the cogroup exec materializes whole groups as single frames).
-The store probe is the scale path that is ALSO broadcast-speed:
+shard's blob to exactly its task but exchanges every probe row. The
+store probe is the scale path with no exchange at all:
 
 - the filter is persisted once as one blob file per shard plus a
   ``manifest.json`` (kind, seed, num_shards, per-shard sha256) on a
@@ -25,16 +23,19 @@ The store probe is the scale path that is ALSO broadcast-speed:
   per-task filter memory to a few shards no matter the filter size
   (the answer to a 10^10-key filter that fits no executor).
 
-Measured at 20M probes / 32 shards on local[32]: store probe 1.4 s vs
-broadcast 0.9-1.8 s vs cogroup 17-20 s. Distributed analogue of the
-reference's batched Contain64 (cuckoo-batch-prefetch.h:109-139).
+Measured with 4M probe keys (half present) against a 32-shard,
+100,096-byte cuckoo filter at ``local[4]`` (4-core host), wall:
+broadcast 0.79 s, store 1.14 s, cogroup 2.04 s. Distributed analogue of
+the reference's batched Contain64 (cuckoo-batch-prefetch.h:109-139).
 """
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import json
 import os
+import shutil
 import tempfile
 from collections import OrderedDict
 from typing import Iterator
@@ -47,6 +48,19 @@ from .membership import _family, shard_col
 
 MANIFEST = "manifest.json"
 _FMT_VERSION = 1
+
+
+_AUTO_ROOT: str | None = None
+
+
+def _auto_root() -> str:
+    """This process's root of auto-written stores: one temp directory,
+    made on first use and removed at interpreter exit."""
+    global _AUTO_ROOT
+    if _AUTO_ROOT is None:
+        _AUTO_ROOT = tempfile.mkdtemp(prefix="cfspark_store_")
+        atexit.register(shutil.rmtree, _AUTO_ROOT, ignore_errors=True)
+    return _AUTO_ROOT
 
 
 def _shard_fname(s: int) -> str:
@@ -83,12 +97,15 @@ class ShardBlobStore:
     def write(cls, filt, path: str | None = None) -> "ShardBlobStore":
         """Persist a Sharded* filter (driver-side; blobs are already on
         the driver). Idempotent: same content at ``path`` is kept,
-        different content raises rather than silently overwriting."""
+        different content raises rather than silently overwriting.
+        Without ``path`` the store goes to ``<root>/<store_id>`` under
+        this process's ``_auto_root``, so equal filters share one store
+        and none outlives the process."""
         kind, seed = filt.kind, int(filt.seed)
         shas = [hashlib.sha256(b).hexdigest() for b in filt.blobs]
         store_id = cls._content_id(kind, seed, shas)
         if path is None:
-            path = tempfile.mkdtemp(prefix="cfspark_store_")
+            path = os.path.join(_auto_root(), store_id)
         os.makedirs(path, exist_ok=True)
         mpath = os.path.join(path, MANIFEST)
         if os.path.exists(mpath):

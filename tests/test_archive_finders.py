@@ -138,42 +138,3 @@ def test_worker_functions_run_without_spark_archive_finders(spark):
     assert len(dirty) == len(set(dirty)), dirty  # at most a worker's first call
     calls = sum(len(recs) for recs in stages)
     assert calls == 3 * (8 + 16) and calls - len(earlier) >= 24
-
-
-def test_salted_group_apply_stages_run_without_spark_archive_finders(spark):
-    """``salted_group_apply``'s stage-1 callable runs after the drop: it
-    records the Spark-archive finders it sees (then re-creates them, as
-    above) and must see none, on every call."""
-    from pyspark.sql import functions as F
-
-    from cuckoofilter_spark.plans.partitioning import salted_group_apply
-
-    def stage1(pdf):
-        import importlib.util
-        import sys
-        import zipimport
-
-        from pyspark import SparkFiles
-
-        root = SparkFiles._root_directory or "\0"
-        archives = sorted({f.archive for f in list(sys.path_importer_cache.values())
-                           if isinstance(f, zipimport.zipimporter)
-                           and not f.archive.startswith(root)})
-        assert importlib.util.find_spec("_cfs_absent_module") is None
-        return json.dumps(archives).encode()
-
-    def stage2(parts):
-        import pandas as pd
-
-        return pd.DataFrame({"n": [len(parts)],
-                             "seen": [json.dumps([json.loads(p) for p in parts])]})
-
-    df = spark.range(0, 4000, numPartitions=8).select(
-        (F.col("id") % 4).alias("key"), "id")
-    rows = salted_group_apply(df, "key", stage1, stage2, "key long",
-                              "n long, seen string, key long", salt=8,
-                              salt_key="id").collect()
-    assert sorted(r["key"] for r in rows) == [0, 1, 2, 3]
-    seen = [a for r in rows for a in json.loads(r["seen"])]
-    assert len(seen) == sum(r["n"] for r in rows) >= 16
-    assert not any(seen), seen

@@ -43,7 +43,7 @@ def test_capacity_contract(spark, keyset):
     li, part, truth = keyset
     f = build_filter(li, "l_partkey", kind="grow_bloom", capacity=4096)
     assert f.levels[0].num_buckets >= 4096 // 8  # sized from the cap
-    for kind in ("xor", "xorplus", "gcs", "tail"):
+    for kind in ("xor", "xor_sharded", "xorplus", "gcs", "tail"):
         with pytest.raises(ValueError, match="sized from the data"):
             build_filter(li, "l_partkey", kind=kind, capacity=1000)
 

@@ -1,14 +1,11 @@
-"""Partitioning/skew helpers: salted repartition + skew-safe group apply."""
+"""Partitioning/skew helpers: salted repartition and skew stats."""
 
-import numpy as np
-import pandas as pd
-import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from cuckoofilter_spark.plans.partitioning import (
     group_skew_stats, hash_partition_by_doc, partition_skew_stats,
-    salted_group_apply, salted_repartition)
+    salted_repartition)
 from cuckoofilter_spark.sources.tokens import tokens_table
 
 
@@ -51,44 +48,3 @@ def test_salted_repartition_balances_hot_source(spark, toks):
     assert max(r["rows"] for r in nonempty) < 0.45 * total
 
 
-def test_salted_group_apply_matches_unsalted(spark, toks):
-    """Per-source HLL via the skew-safe two-stage fold == direct fold."""
-    from cuckoofilter_spark.kernels.hll import HyperLogLog
-    from cuckoofilter_spark.sketch.udaf import keys_u64
-
-    def make_partial(pdf: pd.DataFrame) -> bytes:
-        h = HyperLogLog(p=12, seed=9)
-        h.add_many(keys_u64(pa.Array.from_pandas(pdf["tokens"])))
-        return h.to_bytes()
-
-    def merge_partials(blobs):
-        h = HyperLogLog.from_bytes(bytes(blobs[0]))
-        for b in blobs[1:]:
-            h = HyperLogLog.merge(h, HyperLogLog.from_bytes(bytes(b)))
-        return pd.DataFrame({"source": [None], "estimate": [h.estimate()]})
-
-    res = salted_group_apply(
-        toks.select("source", "tokens"), "source",
-        make_partial, merge_partials,
-        partial_schema="source string", final_schema="source string, estimate double",
-        salt=4, salt_key="source",  # worst case: salt on the group key itself
-    )
-    # salt on the group key is degenerate (1 sub-group); salt on doc_id splits
-    res2 = salted_group_apply(
-        toks.select("doc_id", "source", "tokens"), "source",
-        lambda pdf: make_partial(pdf), merge_partials,
-        partial_schema="source string", final_schema="source string, estimate double",
-        salt=4, salt_key="doc_id",
-    )
-    got = {r["source"]: r["estimate"] for r in res2.collect()}
-
-    # oracle: direct single-group fold per source
-    for src in ("web", "code", "books", "wiki"):
-        pdf = toks.where(F.col("source") == src).select("source", "tokens").toPandas()
-        h = HyperLogLog(p=12, seed=9)
-        h.add_many(keys_u64(pa.Array.from_pandas(pdf["tokens"])))
-        assert got[src] == pytest.approx(h.estimate()), src
-
-    # the degenerate salt still returns correct estimates (merge of 1)
-    got1 = {r["source"]: r["estimate"] for r in res.collect()}
-    assert got1 == got

@@ -1,5 +1,8 @@
-"""Session defaults follow the host they run on (no session started)."""
+"""Session defaults follow the host they run on (no session started),
+and a session's auto-written filter stores do not outlive its process."""
 import os
+import subprocess
+import sys
 
 import pytest
 
@@ -23,3 +26,41 @@ def test_defaults_follow_the_host(monkeypatch, cpus, phys_gb, mem):
     monkeypatch.setenv("SPARK_DRIVER_MEM", "2g")
     assert session.default_cores() == 8
     assert session.default_driver_mem() == "2g"
+
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_auto_stores_removed_at_exit(tmp_path):
+    """``contains_sharded``'s local-mode stores (one per filter content,
+    so a second after ``delete_u64``) are gone once the process exits."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    script = tmp_path / "drive.py"
+    script.write_text(f"""
+import sys
+sys.path.insert(0, {ROOT!r})
+import numpy as np
+from cuckoofilter_spark.session import get_spark
+from cuckoofilter_spark.sketch.api import build_filter, contains_sharded
+
+spark = get_spark("auto-stores", cores=2, shuffle_partitions=2)
+keys = spark.range(0, 2000).withColumnRenamed("id", "k")
+filt = build_filter(keys, "k", capacity=4000, num_shards=4)
+assert contains_sharded(keys, "k", filt).where("member").count() == 2000
+print(filt._auto_store.path)
+filt.delete_u64(np.arange(10, dtype=np.uint64))
+assert contains_sharded(keys, "k", filt).where("member").count() >= 1990
+print(filt._auto_store.path)
+spark.stop()
+""", encoding="utf-8")
+    env = dict(os.environ, TMPDIR=str(tmp))
+    env.pop("PYSPARK_GATEWAY_PORT", None)
+    env.pop("PYSPARK_GATEWAY_SECRET", None)
+    p = subprocess.run([sys.executable, str(script)], capture_output=True,
+                       text=True, timeout=420, env=env, cwd=str(tmp_path))
+    assert p.returncode == 0, p.stderr[-2000:]
+    stores = p.stdout.split()[-2:]
+    assert len(set(stores)) == 2  # the delete wrote a second store
+    assert all(s.startswith(str(tmp)) for s in stores)
+    assert not list(tmp.glob("cfspark_store_*"))
