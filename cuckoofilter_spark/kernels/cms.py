@@ -28,6 +28,11 @@ _CHUNK = 1 << 18  # keys per kernel pass; keeps temporaries L2/L3-resident
 
 
 class CountMinSketch:
+    # the build engine (sketch/udaf.add_batch) feeds a list batch as its
+    # distinct keys plus counts: add_many(keys, counts) sums the same
+    # table and total as adding every occurrence
+    feed = "counts"
+
     def __init__(self, width: int, depth: int = 4, seed: int = 0x5EED):
         self.width = int(width)
         self.depth = int(depth)

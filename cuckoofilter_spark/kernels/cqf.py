@@ -53,6 +53,10 @@ _CHUNK = 1 << 18
 
 
 class CountingQuotientFilter:
+    # the build engine (sketch/udaf.add_batch) feeds a list batch as its
+    # distinct keys plus counts: the folded multiset is the same
+    feed = "counts"
+
     def __init__(self, q: int = 20, r: int = 28, seed: int = 0x5EED):
         if q + r > 63:
             raise ValueError("q + r must be <= 63")

@@ -39,6 +39,10 @@ def _alpha(m: int) -> float:
 
 
 class HyperLogLog:
+    # a register max ignores repeats: the build engine
+    # (sketch/udaf.add_batch) feeds a list batch's distinct keys only
+    feed = "distinct"
+
     def __init__(self, p: int = 14, seed: int = 0x5EED):
         if not 4 <= p <= 18:
             raise ValueError("p must be in [4, 18]")

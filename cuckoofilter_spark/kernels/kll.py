@@ -35,8 +35,8 @@ def _capacity(k: int, height: int, num_levels: int) -> int:
 
 class KLLSketch:
     # add_many takes float64 values, not uint64 keys: the build engine
-    # (sketch/udaf.py) feeds it the column's numbers as float64
-    takes_values = True
+    # (sketch/udaf.add_batch) feeds it the column's numbers as float64
+    feed = "values"
 
     def __init__(self, k: int = 200, seed: int = 0x5EED):
         self.k = int(k)

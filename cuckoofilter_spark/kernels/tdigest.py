@@ -36,8 +36,8 @@ _CHUNK = 1 << 18
 
 class TDigest:
     # add_many takes float64 values, not uint64 keys: the build engine
-    # (sketch/udaf.py) feeds it the column's numbers as float64
-    takes_values = True
+    # (sketch/udaf.add_batch) feeds it the column's numbers as float64
+    feed = "values"
 
     def __init__(self, delta: float = 200.0):
         self.delta = float(delta)

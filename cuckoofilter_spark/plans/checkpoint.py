@@ -141,6 +141,8 @@ def cuckoo_build_checkpointed(
         # manifests WITHOUT the field are pre-switch and must refuse.
         "shard_fn": "xxh64",
     }
+    cuckoo = _FAMILIES["cuckoo"]
+    cuckoo.check({"num_shards": num_shards})
     manifest = _read_manifest(ckpt_dir)
     partials = _partials_path(ckpt_dir)
 
@@ -166,7 +168,6 @@ def cuckoo_build_checkpointed(
 
     # Stage 2: build each shard from the checkpoint alone, with the
     # cuckoo family's own make_shard
-    cuckoo = _FAMILIES["cuckoo"]
     make_shard = _shard_maker(cuckoo, capacity, {
         **cuckoo.params, "bits": bits, "seed": seed, "num_shards": num_shards})
     blobs = _build_shards(

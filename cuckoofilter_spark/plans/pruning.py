@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels.cuckoo import CuckooFilter, CuckooFullError
-from ..sketch.udaf import _row_groups, drop_archive_finders, keys_u64, require_key_col
+from ..sketch.udaf import _row_groups, drop_archive_finders, folded_u64, require_key_col
 
 _INDEX_SCHEMA = "file string, n_keys long, blob binary"
 
@@ -90,7 +90,7 @@ def _index_df(df: DataFrame, col: str, bits: int, seed: int) -> DataFrame:
         for b in batches:
             for fname, rows in _row_groups(b.column("file")):
                 per_file.setdefault(fname, []).append(
-                    keys_u64(b.column("k").take(rows)))
+                    folded_u64(b.column("k").take(rows)))
         yield pa.RecordBatch.from_pydict({
             "file": pa.array(list(per_file), pa.string()),
             "keys": pa.array([np.unique(np.concatenate(parts)).tobytes()

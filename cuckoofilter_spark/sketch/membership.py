@@ -72,7 +72,7 @@ from ..kernels.tail import TailFilter
 from ..kernels.xor import XorFilter
 from ..kernels.xorplus import XorFilterPlus
 from .udaf import aggregate_sketch, approx_distinct_capacity, \
-    drop_archive_finders, keys_u64, require_key_col
+    drop_archive_finders, folded_u64, keys_u64, require_key_col
 
 _CHUNK = 1 << 18  # all kernels chunked: sandbox DRAM bandwidth saturates fast
 
@@ -271,8 +271,9 @@ def _pack_shards(keys: np.ndarray, num_shards: int, transform=None):
 def _sharded_partials(df: DataFrame, col: str, num_shards: int,
                       hash_seed: int | None = None) -> DataFrame:
     """First half of the by-key shape of the build engine
-    (sketch/udaf.py): per input partition, flatten token arrays,
-    np.unique-dedupe, split by shard, and emit ONE row
+    (sketch/udaf.py): per input partition, fold each batch to its
+    distinct keys (``folded_u64``), np.unique-dedupe them all, split by
+    shard, and emit ONE row
     ``(shard int, payload binary)`` of packed uint64 payloads per
     (partition, shard) — the shuffle moves P x num_shards small blobs
     instead of per-key rows, and no Python UDF sits in the exchange.
@@ -288,7 +289,7 @@ def _sharded_partials(df: DataFrame, col: str, num_shards: int,
 
     def partial_shards(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         drop_archive_finders()
-        parts = [keys_u64(b.column("k")) for b in batches]
+        parts = [folded_u64(b.column("k")) for b in batches]
         keys = np.unique(np.concatenate(parts) if parts
                          else np.empty(0, dtype=np.uint64))
         shards, blobs = _pack_shards(keys, num_shards, transform)
@@ -609,6 +610,16 @@ def _unsized(kernel, size, **params):
     return kernel(**params)
 
 
+def _shards(params: dict) -> None:
+    """Eager check of every kind: a by-key kind's ``num_shards`` is a
+    positive power of two, since ``shard_of`` routes a key by the low
+    bits of its hash."""
+    n = params.get("num_shards", 1)
+    if n < 1 or n & (n - 1):
+        raise ValueError(
+            f"num_shards must be a positive power of two (got {n})")
+
+
 class _Family(NamedTuple):
     """How ``build_filter`` builds one kind.
 
@@ -623,7 +634,8 @@ class _Family(NamedTuple):
     - ``new``: the empty kernel, ``new(kernel, size, **params)``, keys
       then added to it; None for a static kernel, built from its whole
       key set by ``kernel.build(keys, **params)``;
-    - ``check`` (optional): an eager check of the parameters.
+    - ``check``: the eager check of the parameters, run before any
+      Spark job (``_shards`` unless the kind adds its own).
     """
 
     shape: Callable
@@ -631,7 +643,7 @@ class _Family(NamedTuple):
     capacity: Callable
     params: dict
     new: Callable | None = _create
-    check: Callable | None = None
+    check: Callable = _shards
 
 
 def _sized(headroom: float = 1.15, slack: int = 64):
@@ -722,6 +734,7 @@ def _gcs(df: DataFrame, col: str, fam: _Family, capacity, params: dict):
 
 
 def _jvm_bits(params: dict) -> None:
+    _shards(params)
     if params["bits"] > 16:
         raise ValueError("JVM probe packs tags into 64-bit words; "
                          "bits must be <= 16")
@@ -811,8 +824,7 @@ def build_filter(df: DataFrame, col: str, kind: str = "cuckoo",
     if unknown:
         raise TypeError(f"{kind!r} filters take no parameter {unknown}; "
                         f"theirs are {sorted(fam.params)}")
-    if fam.check is not None:
-        fam.check({**fam.params, **params})
+    fam.check({**fam.params, **params})
     capacity = fam.capacity(df, col, kind, capacity, params)
     return fam.shape(df, col, fam, capacity,
                      {**fam.params, **params, "seed": seed})

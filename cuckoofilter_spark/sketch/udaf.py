@@ -7,10 +7,17 @@ A builder hands the engine a kernel factory (plus the kernel class when
 the factory is not the class), and the kernel's own ``add_many``,
 ``merge``, ``to_bytes`` and ``from_bytes`` are the whole protocol:
 
-- **update** is ``add_many`` of one Arrow batch of the key column: its
-  uint64 keys (``keys_u64``, which flattens an ``array<int>`` column),
-  or float64 values for a kernel whose class sets ``takes_values``
-  (KLL, t-digest);
+- **update** (``add_batch``) is ``add_many`` of one Arrow batch of the
+  key column, in the form the kernel class's ``feed`` names: float64
+  values (``"values"``: KLL, t-digest), or uint64 keys decoded by
+  ``keys_u64``, which flattens an ``array<int>`` column. A batch of
+  an ``array<int>`` column is folded before it is decoded
+  (``folded_u64``) for the kernels whose blob a fold cannot change:
+  to its distinct keys for HLL (``"distinct"``), to distinct keys
+  plus counts for ``add_many(keys, counts)`` of CMS and CQF
+  (``"counts"``). So those kernels hash each distinct token once per
+  batch, not every occurrence. Every other kernel (``"keys"``, the
+  default) takes every key, and a scalar column is never folded;
 - **merge** and **decode** are the class's ``merge`` and ``from_bytes``.
   One function (``_merge_blobs``) merges blobs in arrival order for the
   tree levels, the grouped merge and the driver's final merge.
@@ -35,7 +42,8 @@ Three shapes share it:
   ``groupBy(shard).applyInArrow`` builds each shard's kernel from all
   of its keys.
   ``distinct_keys_u64`` is the same shape with the sorted keys as the
-  payload.
+  payload. A partial folds each batch to its distinct keys
+  (``folded_u64``) before it sorts them all.
 
 Workers see Arrow batches only, never pandas: keys stay exact 64-bit
 integers and group ids keep their own Arrow type.
@@ -97,25 +105,37 @@ def drop_archive_finders() -> None:
             sys.path_importer_cache.pop(path, None)
 
 
-def keys_u64(arr: pa.Array) -> np.ndarray:
-    """One Arrow batch of a key column -> uint64 keys (bit-view of int64).
+def _is_list(arr: pa.Array) -> bool:
+    return pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type)
 
-    An ``array<int>`` column is flattened with ``flatten()``, which
-    honours a sliced array's offsets (``.values`` would return the
-    parent's whole child array) and skips NULL list slots; NULL
-    elements are then dropped. int8/16/32 are sign-extended to int64,
-    then every key is bit-viewed, so build and probe agree whatever the
-    signedness. A NULL scalar (a probe key; builds drop NULL rows
-    JVM-side) becomes key 0, the shard ``shard_col`` routes it to.
-    Floats and strings must be keyified Spark-side first
-    (``F.xxhash64`` — JVM, vectorized): raise rather than guess.
-    """
+
+def _flat(arr: pa.Array) -> pa.Array:
+    """One Arrow batch of a key column as one flat array: chunks
+    combined, and an ``array<int>`` column flattened with
+    ``flatten()``, which honours a sliced array's offsets (``.values``
+    would return the parent's whole child array) and skips NULL list
+    slots, then its NULL elements dropped."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    if pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type):
+    if _is_list(arr):
         arr = arr.flatten()
         if arr.null_count:
             arr = arr.drop_null()
+    return arr
+
+
+def keys_u64(arr: pa.Array) -> np.ndarray:
+    """One Arrow batch of a key column -> uint64 keys (bit-view of int64).
+
+    An ``array<int>`` column is flattened and its NULL elements dropped
+    (``_flat``). int8/16/32 are sign-extended to int64, then every key
+    is bit-viewed, so build and probe agree whatever the signedness. A
+    NULL scalar (a probe key; builds drop NULL rows JVM-side) becomes
+    key 0, the shard ``shard_col`` routes it to. Floats and strings
+    must be keyified Spark-side first (``F.xxhash64`` — JVM,
+    vectorized): raise rather than guess.
+    """
+    arr = _flat(arr)
     if not pa.types.is_integer(arr.type):
         raise TypeError(
             f"sketch keys must be integers (got {arr.type}); "
@@ -123,6 +143,29 @@ def keys_u64(arr: pa.Array) -> np.ndarray:
     if arr.null_count:
         arr = arr.fill_null(0)
     return arr.to_numpy().astype(np.int64, copy=False).view(np.uint64)
+
+
+def folded_u64(arr: pa.Array, counts: bool = False):
+    """``keys_u64`` of one batch, folded to its distinct keys first when
+    it is a batch of an ``array<int>`` column.
+
+    The fold is one Arrow hash pass over the flattened elements
+    (``pc.unique``; ``pc.value_counts`` with ``counts``), so the decoder
+    and the kernel see each distinct key once per batch. With
+    ``counts`` it returns ``(keys, counts)``. A scalar batch is decoded
+    as it is, each key once (``counts`` None): a list batch repeats keys
+    of a bounded vocabulary (the token table's batches are ~4% distinct),
+    while on an all-distinct scalar batch the hash pass would cost
+    several times the kernel work it saves.
+    """
+    if not _is_list(arr):
+        keys = keys_u64(arr)
+        return (keys, None) if counts else keys
+    arr = _flat(arr)
+    if not counts:
+        return keys_u64(pc.unique(arr))
+    vc = pc.value_counts(arr)
+    return keys_u64(vc.field("values")), vc.field("counts").to_numpy()
 
 
 def require_key_col(df: DataFrame, col: str) -> bool:
@@ -163,14 +206,37 @@ def approx_distinct_capacity(df: DataFrame, col: str,
     return int(n * headroom) + int(slack)
 
 
-def _add_input(df: DataFrame, col: str, cls) -> Callable[[pa.Array], np.ndarray]:
-    """What the update step hands ``add_many``: float64 values for a
-    ``takes_values`` kernel, else the batch's uint64 keys (validated
-    driver-side by ``require_key_col``)."""
-    if getattr(cls, "takes_values", False):
-        return lambda arr: arr.to_numpy(zero_copy_only=False).astype(np.float64)
-    require_key_col(df, col)
-    return keys_u64
+def add_batch(kern, arr: pa.Array) -> None:
+    """The update step: add one Arrow batch of the key column to
+    ``kern`` in the form its class's ``feed`` names:
+
+    - ``"values"``: float64 values (KLL, t-digest);
+    - ``"distinct"``: the batch's distinct keys (``folded_u64``), for a
+      kernel whose state a repeated key cannot change (HLL);
+    - ``"counts"``: distinct keys plus their counts, as
+      ``add_many(keys, counts)`` (CMS, CQF);
+    - ``"keys"`` (no ``feed``): every key, as ``keys_u64`` decodes it.
+
+    A kernel declares a fold only if its blob is the same either way;
+    Bloom kinds (which count adds), MG (which compacts per chunk) and
+    AMS keep every key.
+    """
+    feed = getattr(kern, "feed", "keys")
+    if feed == "values":
+        kern.add_many(arr.to_numpy(zero_copy_only=False).astype(np.float64))
+    elif feed == "distinct":
+        kern.add_many(folded_u64(arr))
+    elif feed == "counts":
+        kern.add_many(*folded_u64(arr, counts=True))
+    else:
+        kern.add_many(keys_u64(arr))
+
+
+def _check_input(df: DataFrame, col: str, cls) -> None:
+    """Driver-side: a key column (every kernel but a ``"values"`` one)
+    must be integer or ``array<int>`` (``require_key_col``)."""
+    if getattr(cls, "feed", "keys") != "values":
+        require_key_col(df, col)
 
 
 def _row_groups(groups: pa.Array):
@@ -220,14 +286,14 @@ def aggregate_sketch(df: DataFrame, col: str, make: Callable[[], object],
     ``approx_distinct_capacity``'s sizing convention.
     """
     cls = cls or make
-    to_input = _add_input(df, col, cls)
+    _check_input(df, col, cls)
     proj = df.where(F.col(col).isNotNull()).select(F.col(col).alias("k"))
 
     def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         drop_archive_finders()
         kern = make()
         for b in batches:
-            kern.add_many(to_input(b.column("k")))
+            add_batch(kern, b.column("k"))
         yield pa.RecordBatch.from_pydict(
             {"blob": pa.array([kern.to_bytes()], pa.binary())})
 
@@ -298,7 +364,7 @@ def grouped_aggregate_sketch(
             f"group column {group_col!r} has type {dt.simpleString()}; "
             "grouped sketches support string or integer groups")
     cls = cls or make
-    to_input = _add_input(df, col, cls)
+    _check_input(df, col, cls)
     schema = T.StructType([T.StructField("g", dt),
                            T.StructField("blob", T.BinaryType())])
     proj = df.where(F.col(col).isNotNull()).select(
@@ -313,7 +379,7 @@ def grouped_aggregate_sketch(
                 kern = kerns.get(g)
                 if kern is None:
                     kern = kerns[g] = make()
-                kern.add_many(to_input(b.column("k").take(rows)))
+                add_batch(kern, b.column("k").take(rows))
         if kerns:
             yield pa.RecordBatch.from_pydict(
                 {"g": pa.array(list(kerns), gtype),

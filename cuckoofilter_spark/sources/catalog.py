@@ -16,10 +16,23 @@ semantics at the file-format level) is the tested path.
 only (doc_id, tokens); the KLL/n_tok quantile path reads only n_tok —
 passing the projection here keeps it inside the scan (ReadSchema in the
 physical plan) instead of after it.
+
+A read launches no Spark job where it can avoid one. Without a schema,
+``spark.read.parquet`` runs a job to read the footers; a local Parquet
+table written by Spark (a file, or a directory of data files) is read
+with the schema Spark stored in its footer instead, taken on the driver
+from one file. Other Parquet sources (a URI scheme, partition
+subdirectories, files written without Spark) let Spark infer as before.
 """
 
 from __future__ import annotations
 
+import json
+import os
+from urllib.parse import urlparse
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -42,6 +55,10 @@ _CSV_SCHEMA = T.StructType([
     T.StructField("source", T.StringType()),
 ])
 
+# the footer key Spark stores its own schema under, the one its
+# readSchemaFromFooter prefers to the Parquet schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
 _EXT_FMT = {".parquet": "parquet", ".orc": "orc", ".json": "json",
             ".jsonl": "json", ".csv": "csv"}
 
@@ -60,6 +77,9 @@ def read_sequences(
     path reads as Parquet, and dotted identifiers (catalog.db.table)
     read as Iceberg tables. Projects to ``columns`` (default: the
     canonical four) inside the scan.
+
+    A local Parquet table written by Spark is read with its stored
+    schema (``_stored_schema``), so the read launches no Spark job.
 
     Text formats carry the canonical schema explicitly (never inferred —
     schema inference is a full extra pass over the data and can widen
@@ -81,7 +101,9 @@ def read_sequences(
                 "spark.sql.catalog.* entry must be on the cluster (absent "
                 f"in this sandbox): {exc}") from exc
     elif fmt == "parquet":
-        df = spark.read.parquet(source)
+        stored = _stored_schema(source)
+        reader = spark.read if stored is None else spark.read.schema(stored)
+        df = reader.parquet(source)
     elif fmt == "orc":
         df = spark.read.orc(source)
     elif fmt == "json":
@@ -102,6 +124,38 @@ def read_sequences(
         raise ValueError(f"sequence table at {source!r} is missing "
                          f"canonical columns {missing}")
     return df.select(*[F.col(c) for c in cols])
+
+
+def _stored_schema(source: str) -> T.StructType | None:
+    """The schema Spark stored in a local Parquet table, or None.
+
+    Without a schema, ``spark.read.parquet`` runs one Spark job to read
+    it from the files' footers. For a local file, or a local directory
+    holding only data files, the schema Spark's footer reader would pick
+    is one footer read away on the driver: the Spark key of the first
+    data file (Spark also reads one file, taking the table's files to
+    agree). Anything else — a URI scheme, partition subdirectories,
+    summary files, a file without the Spark key, no data file — gives
+    None, and Spark infers the schema as before (so an empty directory
+    still raises).
+    """
+    if urlparse(source).scheme:
+        return None
+    path = source
+    if os.path.isdir(source):
+        names = os.listdir(source)
+        if {"_metadata", "_common_metadata"} & set(names):
+            return None
+        data = sorted(os.path.join(source, n) for n in names
+                      if not n.startswith(("_", ".")))
+        if not data or not all(map(os.path.isfile, data)):
+            return None
+        path = data[0]
+    try:
+        stored = pq.read_metadata(path).metadata or {}
+        return T.StructType.fromJson(json.loads(stored[_SPARK_SCHEMA_KEY]))
+    except (KeyError, TypeError, OSError, ValueError, pa.ArrowException):
+        return None
 
 
 def write_sequences(df: DataFrame, path: str, fmt: str = "parquet",

@@ -173,7 +173,17 @@ class _SketchStateBase:
             f.write(hdr)
             for _g, b in entries:
                 f.write(b)
+            # the data is on disk before the rename can be, and the
+            # rename before the commit returns: a power loss never
+            # leaves a renamed but empty or torn state.bin
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, self._state_path())  # the ONE atomic commit
+        fd = os.open(self.state_dir, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
         tmp = self._meta_path() + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"batch_id": batch_id, "updated_at": time.time(),

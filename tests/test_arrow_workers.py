@@ -2,10 +2,11 @@
 
 One decoder (``udaf.keys_u64``) turns an Arrow key column into uint64
 keys and drops the NULL elements of a list column, so no per-element
-JVM expression sits in front of a build; the converted modules import
-no pandas; caller columns passed through a worker keep their exact
-64-bit values; the checkpointed cuckoo build runs the same by-key
-scaffold as ``cuckoo_build``.
+JVM expression sits in front of a build; a list batch folded to its
+distinct keys (``udaf.folded_u64``) gives the folding kernels the same
+bytes; the converted modules import no pandas; caller columns passed
+through a worker keep their exact 64-bit values; the checkpointed
+cuckoo build runs the same by-key scaffold as ``cuckoo_build``.
 """
 import ast
 import os
@@ -14,7 +15,10 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from cuckoofilter_spark.sketch.udaf import keys_u64
+from cuckoofilter_spark.kernels.cms import CountMinSketch
+from cuckoofilter_spark.kernels.cqf import CountingQuotientFilter
+from cuckoofilter_spark.kernels.hll import HyperLogLog
+from cuckoofilter_spark.sketch.udaf import add_batch, folded_u64, keys_u64
 
 _PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                     "cuckoofilter_spark")
@@ -71,6 +75,95 @@ def test_keys_u64_drops_null_list_slots_and_elements():
 def test_keys_u64_refuses_strings():
     with pytest.raises(TypeError, match="xxhash64"):
         keys_u64(pa.array(["a", "b"]))
+
+
+def _list_batches():
+    """``array<int>`` batches of every shape a worker meets: each element
+    width, sliced, chunked, NULL list slots and NULL elements, empty
+    arrays, and a batch with no elements at all."""
+    rng = np.random.default_rng(11)
+    out = {}
+    for t in (pa.int8(), pa.int16(), pa.int32(), pa.int64()):
+        hi = min(2**31, 2 ** (t.bit_width - 1))
+        cells = [None if rng.random() < 0.05 else
+                 [None if rng.random() < 0.05 else int(v)
+                  for v in rng.integers(-hi, hi, rng.integers(0, 40))]
+                 for _ in range(300)]
+        cells[7] = []
+        arr = pa.array(cells, pa.list_(t))
+        out[f"{t}"] = arr
+        out[f"{t}-sliced"] = arr.slice(41, 170)
+        out[f"{t}-chunked"] = pa.chunked_array([arr.slice(0, 90),
+                                                arr.slice(200)])
+    out["empty"] = pa.array([[], None, []], pa.list_(pa.int32()))
+    return out
+
+
+_KERNELS = {"hll": lambda: HyperLogLog(p=10, seed=3),
+            "cms": lambda: CountMinSketch(width=257, depth=3, seed=3),
+            "cqf": lambda: CountingQuotientFilter(q=8, r=12, seed=3)}
+
+
+@pytest.mark.parametrize("kernel", sorted(_KERNELS))
+@pytest.mark.parametrize("batch", sorted(_list_batches()))
+def test_folded_feed_is_byte_equal(kernel, batch):
+    """HLL, CMS and CQF fed a list batch's distinct keys (and counts)
+    hold the same bytes as when fed every occurrence."""
+    arr = _list_batches()[batch]
+    folded, every = _KERNELS[kernel](), _KERNELS[kernel]()
+    add_batch(folded, arr)
+    every.add_many(keys_u64(arr))
+    assert folded.to_bytes() == every.to_bytes()
+
+
+def test_folded_u64_is_the_distinct_keys_with_counts():
+    arr = pa.array([[5, None, -1, 5], None, [], [5, 2**40]],
+                   pa.list_(pa.int64())).slice(0, 4)
+    keys, counts = folded_u64(arr, counts=True)
+    got = dict(zip(keys.view(np.int64).tolist(), counts.tolist()))
+    assert got == {5: 3, -1: 1, 2**40: 1}
+    assert sorted(folded_u64(arr).view(np.int64).tolist()) == [-1, 5, 2**40]
+
+
+class _Recorder:
+    """A folding kernel that records what ``add_batch`` hands it."""
+
+    feed = "counts"
+
+    def __init__(self):
+        self.calls = []
+
+    def add_many(self, keys, counts=None):
+        self.calls.append((keys, counts))
+
+
+def test_scalar_column_takes_the_unfolded_feed():
+    """A scalar batch reaches even a folding kernel key by key, in order
+    and with repeats, each counted once (no hash pass)."""
+    arr = pa.array([9, 9, -3, None, 9], pa.int64())
+    rec = _Recorder()
+    add_batch(rec, arr)
+    [(keys, counts)] = rec.calls
+    assert counts is None
+    np.testing.assert_array_equal(keys, keys_u64(arr))
+    rec = _Recorder()
+    add_batch(rec, pa.array([[9, 9, -3]], pa.list_(pa.int64())))
+    [(keys, counts)] = rec.calls
+    assert dict(zip(keys.view(np.int64).tolist(), counts.tolist())) == {
+        9: 2, -3: 1}
+
+
+def test_by_key_partial_payload_is_unchanged():
+    """The by-key partial folds each batch before its sort: the sorted
+    distinct keys, hence every shard payload, are those of the unfolded
+    batches."""
+    from cuckoofilter_spark.sketch.membership import _pack_shards
+
+    batches = list(_list_batches().values())
+    want = np.unique(np.concatenate([keys_u64(b) for b in batches]))
+    got = np.unique(np.concatenate([folded_u64(b) for b in batches]))
+    np.testing.assert_array_equal(got, want)
+    assert _pack_shards(got, 8) == _pack_shards(want, 8)
 
 
 @pytest.mark.parametrize("rel", _ARROW_ONLY)

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from cuckoofilter_spark.sketch.api import build_filter, contains_col, \
     filter_families
+from cuckoofilter_spark.sketch.membership import _FAMILIES
 
 
 @pytest.fixture(scope="module")
@@ -99,3 +100,20 @@ def test_distinct_keys_ignores_null_array_elements(spark):
     df = spark.createDataFrame([([1, None, 3],), ([4, 5],), (None,)],
                                "k array<long>")
     assert distinct_keys_u64(df, "k").view(np.int64).tolist() == [1, 3, 4, 5]
+
+
+@pytest.mark.parametrize("kind", [k for k in filter_families()
+                                  if "num_shards" in _FAMILIES[k].params])
+@pytest.mark.parametrize("num_shards", [6, 0, -4])
+def test_bad_num_shards_raises_before_any_job(spark, jobs_of, kind,
+                                              num_shards):
+    """``num_shards`` must be a positive power of two (``shard_of``
+    routes by the key hash's low bits), refused before the capacity
+    pre-pass or the build runs a job."""
+    df = spark.range(0, 5000, numPartitions=4).select(F.col("id").alias("k"))
+
+    def build():
+        with pytest.raises(ValueError, match="power of two"):
+            build_filter(df, "k", kind=kind, num_shards=num_shards)
+
+    assert jobs_of(build) == 0

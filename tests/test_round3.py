@@ -154,6 +154,67 @@ def test_read_sequences_parquet_and_projection(spark, tmp_path):
         read_sequences(spark, p, columns=("nope",))
 
 
+def _spark_read(spark, p, columns=None):
+    from cuckoofilter_spark.sources.catalog import CANONICAL_COLUMNS
+
+    df = spark.read.parquet(p)
+    return df.select(*(columns or [c for c in CANONICAL_COLUMNS
+                                   if c in df.columns]))
+
+
+def test_read_sequences_takes_the_stored_parquet_schema(spark, jobs_of,
+                                                        tmp_path):
+    """A local table Spark wrote — a directory or one of its files —
+    reads with the schema Spark stored in the footer: no inference job,
+    the schema ``spark.read.parquet`` infers, the rows it reads, and the
+    missing-column ValueError still raised."""
+    import glob
+
+    from cuckoofilter_spark.sources.catalog import read_sequences
+    from cuckoofilter_spark.sources.tokens import tokens_table
+
+    d = str(tmp_path / "seq")
+    tokens_table(spark, 120, seed=5).repartition(3).write.parquet(d)
+    one = sorted(glob.glob(d + "/part-*.parquet"))[0]
+    for src, columns in ((d, None), (one, None), (d, ("tokens", "n_tok"))):
+        out = {}
+        assert jobs_of(lambda: out.update(
+            df=read_sequences(spark, src, columns=columns))) == 0, src
+        want = _spark_read(spark, src, columns)
+        assert out["df"].schema == want.schema, src
+        assert sorted(out["df"].collect()) == sorted(want.collect()), src
+    with pytest.raises(ValueError, match="missing"):
+        read_sequences(spark, d, columns=("nope",))
+
+
+def test_read_sequences_infers_what_spark_did_not_write(spark, tmp_path):
+    """A file pyarrow wrote (no Spark schema in its footer) and a
+    ``source=``-partitioned directory read as ``spark.read.parquet``
+    reads them; an empty directory still raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cuckoofilter_spark.sources.catalog import read_sequences
+    from cuckoofilter_spark.sources.tokens import tokens_table
+
+    f = str(tmp_path / "arrow.parquet")
+    pq.write_table(pa.table({
+        "doc_id": ["a", "b"],
+        "tokens": pa.array([[1, 2], []], pa.list_(pa.int32())),
+        "n_tok": pa.array([2, 0], pa.int32())}), f)
+    d = str(tmp_path / "by_source")
+    tokens_table(spark, 60, seed=6).write.partitionBy("source").parquet(d)
+    for src in (f, d):
+        got = read_sequences(spark, src)
+        want = _spark_read(spark, src)
+        assert got.schema == want.schema, src
+        assert sorted(got.collect()) == sorted(want.collect()), src
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    with pytest.raises(Exception, match="(?i)schema"):
+        read_sequences(spark, str(empty))
+
+
 def test_read_sequences_iceberg_gate(spark):
     from cuckoofilter_spark.sources.catalog import read_sequences
 

@@ -384,3 +384,29 @@ def test_windowed_sketch_rollup_with_late_data(spark, tmp_path):
         assert streamed[g].to_bytes() != closed[g], g  # late rows landed
         est, n = streamed[g].estimate(), 700
         assert abs(est - n) < 0.15 * n
+
+
+def test_commit_fsyncs_file_before_rename_and_directory_after(tmp_path,
+                                                              monkeypatch):
+    """state.bin.tmp reaches the disk before the rename makes it the
+    state, and the directory entry before the commit returns."""
+    import os
+
+    st = StreamingSketchState(str(tmp_path / "st"), "hll", "tokens")
+    calls = []
+    real_replace = os.replace
+
+    def fsync(fd):
+        calls.append(("fsync", os.fstat(fd).st_ino))
+
+    def replace(src, dst):
+        calls.append(("replace", os.stat(src).st_ino, os.path.basename(dst)))
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    st._commit([(None, HyperLogLog(p=10).to_bytes())], 0)
+    ino = os.stat(st._state_path()).st_ino
+    assert calls[:3] == [("fsync", ino), ("replace", ino, "state.bin"),
+                         ("fsync", os.stat(st.state_dir).st_ino)], calls
+    assert st.last_batch_id() == 0
