@@ -15,7 +15,6 @@ def sf_dir():
     return "/root/testdata/sf0.001"
 
 
-
 @pytest.fixture
 def jobs_of(spark):
     """``jobs_of(call)``: the number of Spark jobs ``call()`` launches,
