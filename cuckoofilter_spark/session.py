@@ -15,6 +15,31 @@ from pyspark.sql import SparkSession
 
 _PKG_ROOT = str(pathlib.Path(__file__).resolve().parent.parent)
 
+# Rows per batch of Spark's vectorized Parquet reader
+# (spark.sql.parquet.columnarReaderBatchSize, Spark's default 4096).
+# Each task's reader holds one int vector for the elements of a batch
+# of `tokens: array<int32>`, grown by doubling. At the canonical ~340
+# tokens per row, 4096 rows need ~1.4M ints (~5.6 MB); 256 rows need
+# ~87k (~0.35 MB). A G1 heap allocates any object of half a region or
+# more as a humongous object, outside the young generation, and each
+# such allocation may start a collection; with a 1 GB driver heap the
+# regions are 1 MB. In loops of `build` ops there (16k-doc table,
+# local[4], three sessions per value), 4096 rows gave 7-10 young
+# pauses and 89-107 ms of pauses per op, and 2.6-3.0 JVM cpu-s; 256
+# rows gave 2-4 pauses, 29-46 ms and 2.1-2.5 cpu-s. The `build`
+# workload of perfbench, 4 cores, 10 seeds, each value paired with a
+# 4096-row run made first:
+#   rows   pairs won   items_per_cpu_s, median gain   peak_rss_mb
+#    256   10 of 10    +12.2%                         -14.2%
+#    512    8 of 10    +15.4%                          -7.9%
+#   1024    8 of 10     +8.6%                         -12.2%
+# and 10 more seeds in rotating order: 256 +19.5% (10 of 10), 512
+# +15.6% (10 of 10). Scalar scans showed no cost at 256 rows: `sum` over
+# a TPC-H lineitem column (600k rows) or over `n_tok` took the same JVM
+# CPU and wall time, within run-to-run noise, as at 4096. The Arrow
+# batch below is a separate setting and stays at 8192 rows.
+PARQUET_READER_BATCH_ROWS = 256
+
 
 def default_cores() -> int:
     """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
@@ -63,6 +88,8 @@ def get_spark(app: str = "cuckoofilter-spark", cores: int | None = None,
         # faults in this sandbox cost ~50 MB/s, so peak-memory churn, not
         # batch count, is what hurts
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
+        .config("spark.sql.parquet.columnarReaderBatchSize",
+                str(PARQUET_READER_BATCH_ROWS))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.executorEnv.PYTHONPATH", worker_pp)
         .config("spark.driver.memory", default_driver_mem())

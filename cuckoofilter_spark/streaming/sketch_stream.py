@@ -117,21 +117,34 @@ class _SketchStateBase:
                     "the file AND the stream checkpoint to rebuild from "
                     "scratch.")
 
-    def _read(self) -> dict | None:
-        """Parse state.bin -> {batch_id, entries: [(tagged_key, blob)]}."""
+    def _open(self):
+        """state.bin opened for reading, or None before the first commit."""
         try:
-            with open(self._state_path(), "rb") as f:
-                raw = f.read()
+            return open(self._state_path(), "rb")
         except OSError:
             self._legacy_check()
             return None
-        if raw[:4] != _STATE_MAGIC:
+
+    def _header(self, f) -> dict:
+        """The JSON header after the 8-byte prefix (magic, header length);
+        ``f`` is left at the first blob."""
+        prefix = f.read(8)
+        if prefix[:4] != _STATE_MAGIC:
             raise ValueError(
-                f"{self._state_path()}: bad magic {raw[:4]!r} — not a "
+                f"{self._state_path()}: bad magic {prefix[:4]!r} — not a "
                 "sketch state envelope")
-        hlen = int.from_bytes(raw[4:8], "little")
-        hdr = json.loads(raw[8:8 + hlen].decode("utf-8"))
-        off = 8 + hlen
+        hlen = int.from_bytes(prefix[4:8], "little")
+        return json.loads(f.read(hlen).decode("utf-8"))
+
+    def _read(self) -> dict | None:
+        """Parse state.bin -> {batch_id, entries: [(tagged_key, blob)]}."""
+        f = self._open()
+        if f is None:
+            return None
+        with f:
+            hdr = self._header(f)
+            raw = f.read()
+        off = 0
         entries = []
         for tagged, blen in hdr["entries"]:
             entries.append((tagged, raw[off:off + blen]))
@@ -139,8 +152,12 @@ class _SketchStateBase:
         return {"batch_id": int(hdr["batch_id"]), "entries": entries}
 
     def last_batch_id(self) -> int:
-        d = self._read()
-        return -1 if d is None else d["batch_id"]
+        """The committed batch id, read from the header alone."""
+        f = self._open()
+        if f is None:
+            return -1
+        with f:
+            return int(self._header(f)["batch_id"])
 
     def load(self):
         """The state's kernels, decoded by the subclass's ``_decode``."""

@@ -9,6 +9,7 @@ Usage:
         --conf spark.sql.adaptive.enabled=true \\
         --conf spark.sql.execution.arrow.pyspark.enabled=true \\
         --conf spark.sql.execution.arrow.maxRecordsPerBatch=8192 \\
+        --conf spark.sql.parquet.columnarReaderBatchSize=256 \\
         your_job.py
 
 The zip contains only the library (no tests/bench); executors import

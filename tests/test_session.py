@@ -1,5 +1,7 @@
 """Session defaults follow the host they run on (no session started),
-and a session's auto-written filter stores do not outlive its process."""
+the Parquet reader batch is the session's own and never shows in a
+blob, and a session's auto-written filter stores do not outlive its
+process."""
 import os
 import subprocess
 import sys
@@ -7,6 +9,8 @@ import sys
 import pytest
 
 from cuckoofilter_spark import session
+
+READER_BATCH = "spark.sql.parquet.columnarReaderBatchSize"
 
 
 @pytest.mark.parametrize("cpus,phys_gb,mem", [
@@ -26,6 +30,57 @@ def test_defaults_follow_the_host(monkeypatch, cpus, phys_gb, mem):
     monkeypatch.setenv("SPARK_DRIVER_MEM", "2g")
     assert session.default_cores() == 8
     assert session.default_driver_mem() == "2g"
+
+
+def test_reader_batch_is_pinned(spark):
+    """``get_spark`` sets the Parquet reader batch; ``extra_conf`` wins
+    over it, and ``getOrCreate`` on the running session keeps it."""
+    from pyspark.sql import SparkSession
+
+    want = str(session.PARQUET_READER_BATCH_ROWS)
+    assert spark.conf.get(READER_BATCH) == want
+    assert SparkSession.builder.getOrCreate().conf.get(READER_BATCH) == want
+    try:
+        got = session.get_spark("tests", cores=8, shuffle_partitions=8,
+                                extra_conf={READER_BATCH: 1024})
+        assert got is spark and spark.conf.get(READER_BATCH) == "1024"
+    finally:
+        spark.conf.set(READER_BATCH, want)
+
+
+def test_blobs_do_not_depend_on_reader_batch(spark, tmp_path):
+    """Parquet read in 4096-row batches (Spark's default) or in
+    ``PARQUET_READER_BATCH_ROWS``-row ones gives byte-equal blobs; KLL
+    and t-digest depend on order, so the rows also arrive in the same
+    order. 9001 rows in two files: no file is a whole number of
+    batches at either size."""
+    from cuckoofilter_spark.sketch import aggregates as agg
+    from cuckoofilter_spark.sketch.api import build_filter
+    from cuckoofilter_spark.sources.tokens import tokens_table
+
+    path = str(tmp_path / "tokens")
+    tokens_table(spark, 9001, seed=13, partitions=2).write.parquet(path)
+    df = spark.read.parquet(path)
+
+    def blobs():
+        filt = build_filter(df, "tokens", capacity=60_000, seed=7)
+        return {
+            "hll": agg.hll_sketch(df, "tokens", seed=7).to_bytes(),
+            "cms": agg.cms_sketch(df, "tokens", seed=7).to_bytes(),
+            "cuckoo": b"".join(filt.blobs),
+            "kll": agg.kll_sketch(df, "n_tok", seed=7).to_bytes(),
+            "tdigest": agg.tdigest_sketch(df, "n_tok").to_bytes(),
+        }
+
+    old = spark.conf.get(READER_BATCH)
+    try:
+        spark.conf.set(READER_BATCH, "4096")
+        wide = blobs()
+        spark.conf.set(READER_BATCH, str(session.PARQUET_READER_BATCH_ROWS))
+        short = blobs()
+    finally:
+        spark.conf.set(READER_BATCH, old)
+    assert sorted(k for k in wide if wide[k] != short[k]) == []
 
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -410,3 +410,41 @@ def test_commit_fsyncs_file_before_rename_and_directory_after(tmp_path,
     assert calls[:3] == [("fsync", ino), ("replace", ino, "state.bin"),
                          ("fsync", os.stat(st.state_dir).st_ino)], calls
     assert st.last_batch_id() == 0
+
+
+def test_last_batch_id_reads_only_the_header(tmp_path):
+    """``last_batch_id`` gives the full parse's batch id from the 8-byte
+    prefix and the JSON header, reading no blob, and still refuses a
+    file without the envelope's magic."""
+    from cuckoofilter_spark.kernels.cms import CountMinSketch
+
+    st = StreamingSketchState(str(tmp_path / "st"), "cms", "tokens")
+    assert st.last_batch_id() == -1
+    blob = CountMinSketch.create().to_bytes()
+    st._commit([(None, blob)], 7)
+
+    class Counted:
+        def __init__(self, f):
+            self.f, self.n = f, 0
+
+        def read(self, size=-1):
+            b = self.f.read(size)
+            self.n += len(b)
+            return b
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.f.close()
+
+    opened, real_open = [], st._open
+    st._open = lambda: opened.append(Counted(real_open())) or opened[-1]
+    assert st.last_batch_id() == 7 == st._read()["batch_id"]
+    assert opened[0].n < 1024 < len(blob)
+    assert opened[1].n > len(blob)
+
+    with open(st._state_path(), "r+b") as f:
+        f.write(b"XXXX")
+    with pytest.raises(ValueError, match="bad magic b'XXXX'"):
+        st.last_batch_id()
