@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..kernels.hashing import U64, splitmix64
-from ..sketch.udaf import drop_archive_finders
+from ..sketch.udaf import worker_prologue
 from .text import words
 
 _MERSENNE = (1 << 61) - 1
@@ -218,7 +218,7 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def sig_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        drop_archive_finders()
+        worker_prologue()
         # flattened offsets formulation: ONE (k x shingles) broadcast pass
         # per chunk + minimum.reduceat at doc boundaries, instead of a
         # Python loop dispatching numpy per document — short-doc corpora
@@ -480,7 +480,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str,
 
     @F.pandas_udf(T.LongType())
     def sim_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        drop_archive_finders()
+        worker_prologue()
         # flattened offsets formulation: one (shingles x 64) bit matrix
         # per chunk + add.reduceat at doc boundaries (votes), instead of
         # per-doc numpy dispatch; chunked at 256k word hashes (~16 MB of

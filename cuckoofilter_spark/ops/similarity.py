@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from ..kernels.hashing import U64, splitmix64
-from ..sketch.udaf import drop_archive_finders
+from ..sketch.udaf import worker_prologue
 
 
 def _normalize(m: np.ndarray) -> np.ndarray:
@@ -56,7 +56,7 @@ def cosine_topk_bruteforce(
     ])
 
     def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_archive_finders()
+        worker_prologue()
         ids, qm = bc.value
         for pdf in batches:
             if not len(pdf):
@@ -95,7 +95,7 @@ def srp_signature_col(vec_col, dim: int, nbits: int = 16, seed: int = 0x5EED):
 
     @F.pandas_udf(T.LongType())
     def sig(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        drop_archive_finders()
+        worker_prologue()
         bitpos = np.arange(nbits, dtype=np.uint64)
         for s in it:
             mat = np.vstack([np.asarray(v, dtype=np.float64) for v in s]) if len(s) else np.zeros((0, dim))
@@ -135,7 +135,7 @@ def srp_band_signatures(vec_col, dim: int | None, nbits: int, bands: int,
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def sig(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        drop_archive_finders()
+        worker_prologue()
         planes = planes0
         bitpos = np.arange(nbits, dtype=np.uint64)
         for s in it:
@@ -262,7 +262,7 @@ def ivf_assign_col(spark: SparkSession, centroids: np.ndarray, vec_col):
 
     @F.pandas_udf(T.IntegerType())
     def cell(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        drop_archive_finders()
+        worker_prologue()
         cent = bc.value
         for s in it:
             if not len(s):

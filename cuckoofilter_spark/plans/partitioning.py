@@ -29,7 +29,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..sketch.udaf import drop_archive_finders
+from ..sketch.udaf import worker_prologue
 
 
 def hash_partition_by_doc(df: DataFrame, num_partitions: int,
@@ -68,7 +68,7 @@ def salted_repartition(df: DataFrame, key: str, num_partitions: int,
 def partition_skew_stats(df: DataFrame) -> DataFrame:
     """Rows per physical partition — the before/after salting check."""
     def count_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_archive_finders()
+        worker_prologue()
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1

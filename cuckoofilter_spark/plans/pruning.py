@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels.cuckoo import CuckooFilter, CuckooFullError
-from ..sketch.udaf import _row_groups, drop_archive_finders, folded_u64, require_key_col
+from ..sketch.udaf import _row_groups, folded_u64, require_key_col, worker_prologue
 
 _INDEX_SCHEMA = "file string, n_keys long, blob binary"
 
@@ -85,7 +85,7 @@ def _index_df(df: DataFrame, col: str, bits: int, seed: int) -> DataFrame:
         F.col("_metadata.file_path").alias("file"), F.col(col).alias("k"))
 
     def partial_blobs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        drop_archive_finders()
+        worker_prologue()
         per_file: dict[str, list[np.ndarray]] = {}
         for b in batches:
             for fname, rows in _row_groups(b.column("file")):
@@ -99,7 +99,7 @@ def _index_df(df: DataFrame, col: str, bits: int, seed: int) -> DataFrame:
     packed = base.mapInArrow(partial_blobs, schema="file string, keys binary")
 
     def build_file(table: pa.Table) -> pa.Table:
-        drop_archive_finders()
+        worker_prologue()
         keys = np.unique(np.concatenate(
             [np.frombuffer(b, dtype=np.uint64)
              for b in table.column("keys").to_pylist()]))
@@ -168,7 +168,7 @@ def prune_files(spark: SparkSession, index: DataFrame,
     bc = spark.sparkContext.broadcast(keys)
 
     def probe_rows(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        drop_archive_finders()
+        worker_prologue()
         ks = bc.value
         for b in batches:
             hits = [bool(CuckooFilter.from_bytes(x).contains_many(ks).any())

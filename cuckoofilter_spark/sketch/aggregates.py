@@ -25,7 +25,7 @@ from ..kernels.hll import HyperLogLog
 from ..kernels.kll import KLLSketch
 from ..kernels.mg import MisraGries
 from .membership import _blob_method_col, build_filter, contains_col
-from .udaf import aggregate_sketch, drop_archive_finders, grouped_aggregate_sketch
+from .udaf import aggregate_sketch, grouped_aggregate_sketch, worker_prologue
 
 
 def hll_sketch(df: DataFrame, col: str, p: int = 14,
@@ -62,7 +62,7 @@ def grouped_hll_distinct(df: DataFrame, group_col: str, col: str, p: int = 14,
     """Per-group distinct-count estimates: ``(group, est_distinct)``."""
     @F.arrow_udf(T.DoubleType())
     def est(b: pa.Array) -> pa.Array:
-        drop_archive_finders()
+        worker_prologue()
         return pa.array([HyperLogLog.from_bytes(x).estimate()
                          for x in b.to_pylist()], pa.float64())
 
@@ -82,7 +82,7 @@ def grouped_kll_quantiles(df: DataFrame, group_col: str, col: str,
     qlist = [float(q) for q in qs]
 
     def explode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        drop_archive_finders()
+        worker_prologue()
         for b in batches:
             for i, blob in enumerate(b.column("blob").to_pylist()):
                 sk = KLLSketch.from_bytes(blob)
@@ -107,7 +107,7 @@ def grouped_mg_topk(df: DataFrame, group_col: str, col: str, k: int = 256,
     gtype = df.schema[group_col].dataType.simpleString()
 
     def explode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        drop_archive_finders()
+        worker_prologue()
         for b in batches:
             for i, blob in enumerate(b.column("blob").to_pylist()):
                 mg = MisraGries.from_bytes(blob)

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..kernels.gcs import GcsFilter
 from .membership import build_filter, contains_col
-from .udaf import drop_archive_finders, keys_u64, require_key_col
+from .udaf import keys_u64, require_key_col, worker_prologue
 
 
 def _sort_encode(df: DataFrame, col: str, log2fpp: int, log2bucket: int,
@@ -56,7 +56,7 @@ def _sort_encode(df: DataFrame, col: str, log2fpp: int, log2bucket: int,
         return proto
 
     def fingerprint(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        drop_archive_finders()
+        worker_prologue()
         f = GcsFilter(log2fpp, log2bucket, seed, layout=layout)
         for rb in batches:
             b, v = f._fingerprints(keys_u64(rb.column("k")), n)
@@ -67,7 +67,7 @@ def _sort_encode(df: DataFrame, col: str, log2fpp: int, log2bucket: int,
     fps = uniq.mapInArrow(fingerprint, schema="bucket long, value long, grp long")
 
     def encode_group(table: pa.Table) -> pa.Table:
-        drop_archive_finders()
+        worker_prologue()
         f = GcsFilter(log2fpp, log2bucket, seed, layout=layout)
         grp = table.column("grp")[0].as_py()
         lo = grp * buckets_per_group

@@ -72,7 +72,7 @@ from ..kernels.tail import TailFilter
 from ..kernels.xor import XorFilter
 from ..kernels.xorplus import XorFilterPlus
 from .udaf import aggregate_sketch, approx_distinct_capacity, \
-    drop_archive_finders, folded_u64, keys_u64, require_key_col
+    folded_u64, keys_u64, require_key_col, worker_prologue
 
 _CHUNK = 1 << 18  # all kernels chunked: sandbox DRAM bandwidth saturates fast
 
@@ -288,7 +288,7 @@ def _sharded_partials(df: DataFrame, col: str, num_shards: int,
                  else (lambda seg: simple_mix_split(seg, hash_seed)))
 
     def partial_shards(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        drop_archive_finders()
+        worker_prologue()
         parts = [folded_u64(b.column("k")) for b in batches]
         keys = np.unique(np.concatenate(parts) if parts
                          else np.empty(0, dtype=np.uint64))
@@ -310,7 +310,7 @@ def _build_shards(packed: DataFrame, num_shards: int, make_shard,
     duplicates); pre-hashed payloads keep the kernel's own duplicate
     handling."""
     def build_shard(table: pa.Table) -> pa.Table:
-        drop_archive_finders()
+        worker_prologue()
         keys = np.concatenate([np.frombuffer(b, dtype=np.uint64)
                                for b in table.column("payload").to_pylist()])
         if dedupe:
@@ -878,7 +878,7 @@ def _broadcast_probe_col(spark: SparkSession, payload, load, col,
 
     @F.arrow_udf(rettype)
     def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        drop_archive_finders()
+        worker_prologue()
         fn = _cached_probe(bc, load)
         for arr in it:
             yield pa.array(fn(keys_u64(arr)))
@@ -1061,7 +1061,7 @@ def _cogroup_by_shard(df: DataFrame, col: str, blobs: list[bytes],
     out_schema = T.StructType(list(df.schema.fields) + [out_field])
 
     def probe_group(left: pa.Table, right: pa.Table) -> pa.Table:
-        drop_archive_finders()
+        worker_prologue()
         rows = left.drop_columns(["_shard"])
         blob = (right.column("blob")[0].as_py()
                 if left.num_rows and right.num_rows else None)

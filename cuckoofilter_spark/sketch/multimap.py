@@ -25,7 +25,7 @@ from pyspark.sql import types as T
 from ..kernels.dysect import QuotientMultimap
 from .membership import _broadcast_probe_col, _build_shards, _by_shard, \
     _cogroup_by_shard
-from .udaf import drop_archive_finders, keys_u64, require_key_col
+from .udaf import keys_u64, require_key_col, worker_prologue
 
 
 class ShardedMultimap:
@@ -117,7 +117,7 @@ def multimap_build(df: DataFrame, key_col: str, val_col: str,
             .where(F.col(key_col).isNotNull() & F.col(val_col).isNotNull()))
 
     def partial_shards(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        drop_archive_finders()
+        worker_prologue()
         ks, vs = [], []
         for b in batches:
             ks.append(keys_u64(b.column("k")))

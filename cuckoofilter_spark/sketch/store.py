@@ -185,7 +185,7 @@ def contains_store(df: DataFrame, col: str, store: ShardBlobStore | str,
     """
     if isinstance(store, str):
         store = ShardBlobStore.open(store)
-    from .udaf import drop_archive_finders, keys_u64
+    from .udaf import keys_u64, worker_prologue
 
     path, store_id, kind = store.path, store.store_id, store.kind
     seed, num_shards = store.seed, store.num_shards
@@ -194,7 +194,7 @@ def contains_store(df: DataFrame, col: str, store: ShardBlobStore | str,
 
     @F.arrow_udf(T.BooleanType())
     def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        drop_archive_finders()
+        worker_prologue()
         fam = _family(kind)[0]
         for arr in it:
             yield pa.array(fam.probe_shards(

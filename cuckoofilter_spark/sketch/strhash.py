@@ -24,13 +24,13 @@ import pandas as pd
 from pyspark.sql import Column, functions as F, types as T
 
 from ..kernels import bytehash
-from .udaf import drop_archive_finders
+from .udaf import worker_prologue
 
 
 def _wrap64(fn, seed: int):
     @F.pandas_udf(T.LongType())
     def udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        drop_archive_finders()
+        worker_prologue()
         for s in it:
             mask = s.notna()
             sub = s[mask]  # Series goes straight to the Arrow-flat path
@@ -48,7 +48,7 @@ def _wrap64(fn, seed: int):
 def _wrap32(fn, *args):
     @F.pandas_udf(T.LongType())
     def udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        drop_archive_finders()
+        worker_prologue()
         for s in it:
             mask = s.notna()
             sub = s[mask]

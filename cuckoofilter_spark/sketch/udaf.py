@@ -64,6 +64,7 @@ positional), and the by-key shape shuffles at most P x vocab keys.
 
 from __future__ import annotations
 
+import gc
 import math
 import os
 import sys
@@ -76,33 +77,58 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 
-def drop_archive_finders() -> None:
-    """Drop Spark's own zip-archive finders from the import cache.
+_frozen_modules = 0  # len(sys.modules) at this process's last gc.freeze()
 
-    Before every task a reused Python worker calls
-    ``importlib.invalidate_caches()`` (pyspark ``setup_spark_files``).
-    On CPython 3.11 every cached ``zipimporter`` then re-reads its whole
-    archive directory: a worker holds about a dozen over ``pyspark.zip``
-    and two over the spark-core jar, ~0.2 cpu-s per task — more than a
-    small sketch partial's data work. A dropped finder is re-created on
-    the next import from its path out of zipimport's directory cache, so
-    imports keep working. Archives shipped with the job (``--py-files``,
-    ``addPyFile``) live under the SparkFiles root and keep their
-    finders, so the per-task invalidation still covers them. With no
-    root set, every zip finder is dropped.
+
+def worker_prologue() -> None:
+    """Take pyspark's fixed per-task costs off a reused Python worker.
+
+    A reused worker pays two costs on every task, whatever the task's
+    size:
+
+    - **Import caches.** Before every task pyspark calls
+      ``importlib.invalidate_caches()`` (``setup_spark_files``). On
+      CPython 3.11 every cached ``zipimporter`` then re-reads its whole
+      archive directory: a worker holds about a dozen over
+      ``pyspark.zip`` and two over the spark-core jar, ~0.2 cpu-s per
+      task. The prologue drops Spark's own zip finders from
+      ``sys.path_importer_cache``. A dropped finder is re-created on
+      the next import from its path out of zipimport's directory
+      cache, so imports keep working. Archives shipped with the job
+      (``--py-files``, ``addPyFile``) live under the SparkFiles root
+      and keep their finders, so the per-task invalidation still
+      covers them. With no root set, every zip finder is dropped.
+    - **Garbage collection.** After every task the daemon runs a full
+      ``gc.collect()`` (pyspark ``daemon.py``), which walks every
+      GC-tracked object in the worker: ~75k left by importing pyspark,
+      pyarrow, numpy, pandas and this library, 12-25 ms per task. On a
+      worker (never in the driver) the prologue collects once and then
+      freezes what is left (``gc.freeze()``) the first time it runs in
+      a process, and again only when ``len(sys.modules)`` has changed
+      since. Every later collection, the daemon's and any automatic one
+      inside a task, walks only the objects made since the freeze. A
+      task's cyclic garbage is still collected; only objects alive at a
+      freeze are kept, and freezes stop once the worker has imported
+      what its tasks use.
 
     Call it as the first statement of each library Python worker
     function (a plain call: a decorator could hide the type hints an
     iterator ``arrow_udf`` takes its UDF type from).
     """
+    global _frozen_modules
     from pyspark import SparkFiles
 
-    root = SparkFiles._root_directory if SparkFiles._is_running_on_worker else None
+    on_worker = SparkFiles._is_running_on_worker
+    root = SparkFiles._root_directory if on_worker else None
     keep = os.path.join(os.path.abspath(root), "") if root else None
     for path, finder in list(sys.path_importer_cache.items()):
         if isinstance(finder, zipimport.zipimporter) and not (
                 keep and os.path.abspath(finder.archive).startswith(keep)):
             sys.path_importer_cache.pop(path, None)
+    if on_worker and len(sys.modules) != _frozen_modules:
+        gc.collect()
+        gc.freeze()
+        _frozen_modules = len(sys.modules)
 
 
 def _is_list(arr: pa.Array) -> bool:
@@ -264,7 +290,7 @@ def _merge_group(cls, finalize=None) -> Callable[[pa.Table], pa.Table]:
     """``applyInArrow`` body merging one group's ``(g, blob)`` rows into
     one row, keeping ``g``."""
     def merge_group(table: pa.Table) -> pa.Table:
-        drop_archive_finders()
+        worker_prologue()
         kern = _merge_blobs(cls, table.column("blob").to_pylist())
         if finalize is not None:
             kern = finalize(kern) or kern
@@ -290,7 +316,7 @@ def aggregate_sketch(df: DataFrame, col: str, make: Callable[[], object],
     proj = df.where(F.col(col).isNotNull()).select(F.col(col).alias("k"))
 
     def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        drop_archive_finders()
+        worker_prologue()
         kern = make()
         for b in batches:
             add_batch(kern, b.column("k"))
@@ -371,7 +397,7 @@ def grouped_aggregate_sketch(
         F.col(group_col).alias("g"), F.col(col).alias("k"))
 
     def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        drop_archive_finders()
+        worker_prologue()
         kerns: dict = {}
         for b in batches:
             gtype = b.schema.field("g").type

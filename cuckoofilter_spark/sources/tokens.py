@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..kernels.hashing import U64, splitmix64
-from ..sketch.udaf import drop_archive_finders
+from ..sketch.udaf import worker_prologue
 
 TOKENS_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -86,7 +86,7 @@ def tokens_table(spark: SparkSession, num_docs: int, seed: int = 42,
     rng = spark.range(0, num_docs, numPartitions=partitions) if partitions else spark.range(num_docs)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_archive_finders()
+        worker_prologue()
         for pdf in batches:
             yield tokens_batch(pdf["id"].to_numpy(), seed, vocab_size)
 

@@ -38,7 +38,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import BinaryType, StructField, StructType
 
 from ..kernels.cuckoo import CuckooFilter
-from ..sketch.udaf import drop_archive_finders, keys_u64
+from ..sketch.udaf import keys_u64, worker_prologue
 
 _STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 _SHARD_COL = "__cfdedup_shard"
@@ -75,7 +75,7 @@ def streaming_dedup(
 
     def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState
                ) -> Iterator[pd.DataFrame]:
-        drop_archive_finders()
+        worker_prologue()
         shard = int(key[0])
         cf = (CuckooFilter.from_bytes(bytes(state.get[0])) if state.exists
               else CuckooFilter.create(seed=(seed + shard) & 0xFFFFFFFF,

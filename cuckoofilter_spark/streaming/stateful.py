@@ -31,7 +31,7 @@ from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, LongType,
                                StructField, StructType)
 
 from ..kernels.hll import HyperLogLog
-from ..sketch.udaf import drop_archive_finders
+from ..sketch.udaf import worker_prologue
 
 _STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 
@@ -79,7 +79,7 @@ def streaming_distinct_by_key(
 
     def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState
                ) -> Iterator[pd.DataFrame]:
-        drop_archive_finders()
+        worker_prologue()
         import numpy as np
 
         if state.hasTimedOut:

@@ -1,8 +1,12 @@
-"""Per-task import-cache cost: library worker functions drop Spark's own
-zip-archive finders (``udaf.drop_archive_finders``), so pyspark's
-per-task ``importlib.invalidate_caches()`` stops re-reading
-``pyspark.zip`` and the spark-core jar on every task."""
+"""Fixed per-task costs of a reused Python worker, taken off by
+``udaf.worker_prologue``: it drops Spark's own zip-archive finders, so
+pyspark's per-task ``importlib.invalidate_caches()`` stops re-reading
+``pyspark.zip`` and the spark-core jar on every task, and it freezes the
+worker's import-time heap, so the daemon's after-task ``gc.collect()``
+walks only what the task made."""
 
+import gc
+import importlib
 import json
 import sys
 import zipfile
@@ -12,7 +16,8 @@ import numpy as np
 import pytest
 from pyspark import SparkFiles
 
-from cuckoofilter_spark.sketch.udaf import drop_archive_finders
+from cuckoofilter_spark.sketch import udaf
+from cuckoofilter_spark.sketch.udaf import worker_prologue
 
 _MODS = ("_cfs_zipmod_a", "_cfs_zipmod_b", "_cfs_zipmod_c")
 
@@ -38,6 +43,16 @@ def zipmods(tmp_path, monkeypatch):
         sys.path_importer_cache.pop(p, None)
 
 
+@pytest.fixture
+def unfrozen(monkeypatch):
+    """A process whose heap the prologue has never frozen; any freeze is
+    undone afterwards."""
+    monkeypatch.setattr(udaf, "_frozen_modules", 0)
+    assert gc.get_freeze_count() == 0
+    yield
+    gc.unfreeze()
+
+
 def test_drop_archive_finders_without_root(zipmods, monkeypatch):
     plain, _, _ = zipmods
     monkeypatch.setattr(SparkFiles, "_is_running_on_worker", False)
@@ -45,7 +60,7 @@ def test_drop_archive_finders_without_root(zipmods, monkeypatch):
 
     assert _cfs_zipmod_a.VALUE == "a"
     assert isinstance(sys.path_importer_cache[plain], zipimport.zipimporter)
-    drop_archive_finders()
+    worker_prologue()
     assert plain not in sys.path_importer_cache
     assert not any(isinstance(f, zipimport.zipimporter)
                    for f in sys.path_importer_cache.values())
@@ -55,7 +70,8 @@ def test_drop_archive_finders_without_root(zipmods, monkeypatch):
     assert isinstance(sys.path_importer_cache[plain], zipimport.zipimporter)
 
 
-def test_drop_archive_finders_keeps_sparkfiles_archives(zipmods, monkeypatch):
+def test_drop_archive_finders_keeps_sparkfiles_archives(zipmods, unfrozen,
+                                                      monkeypatch):
     plain, shipped, root = zipmods
     monkeypatch.setattr(SparkFiles, "_is_running_on_worker", True)
     monkeypatch.setattr(SparkFiles, "_root_directory", root)
@@ -63,7 +79,7 @@ def test_drop_archive_finders_keeps_sparkfiles_archives(zipmods, monkeypatch):
     import _cfs_zipmod_c
 
     assert (_cfs_zipmod_a.VALUE, _cfs_zipmod_c.VALUE) == ("a", "c")
-    drop_archive_finders()
+    worker_prologue()
     assert plain not in sys.path_importer_cache
     assert isinstance(sys.path_importer_cache[shipped], zipimport.zipimporter)
 
@@ -138,3 +154,98 @@ def test_worker_functions_run_without_spark_archive_finders(spark):
     assert len(dirty) == len(set(dirty)), dirty  # at most a worker's first call
     calls = sum(len(recs) for recs in stages)
     assert calls == 3 * (8 + 16) and calls - len(earlier) >= 24
+
+
+def test_prologue_never_freezes_the_driver(unfrozen, monkeypatch):
+    monkeypatch.setattr(SparkFiles, "_is_running_on_worker", False)
+    worker_prologue()
+    worker_prologue()
+    assert gc.get_freeze_count() == 0
+
+
+def test_prologue_freezes_a_worker_again_only_after_an_import(
+        unfrozen, monkeypatch, tmp_path):
+    monkeypatch.setattr(SparkFiles, "_is_running_on_worker", True)
+    monkeypatch.setattr(SparkFiles, "_root_directory", str(tmp_path))
+    worker_prologue()
+    first = gc.get_freeze_count()
+    assert first > 1000  # the pytest process's import-time heap
+    assert len(gc.get_objects()) < first // 10
+    worker_prologue()
+    assert gc.get_freeze_count() == first
+
+    (tmp_path / "_cfs_new_module.py").write_text("VALUE = {'a': [1]}\n")
+    monkeypatch.syspath_prepend(str(tmp_path))
+    monkeypatch.delitem(sys.modules, "_cfs_new_module", raising=False)
+    importlib.import_module("_cfs_new_module")
+    worker_prologue()
+    assert gc.get_freeze_count() > first
+
+
+def test_worker_heap_is_frozen_once_imports_settle(spark):
+    """Each task records ``(pid, frozen, unfrozen)`` GC-tracked objects
+    after the library's worker function has started, over three rounds
+    of tree and by-key builds. A worker's heap is frozen from its first
+    call on. Only that call may see many unfrozen objects: its first
+    batch imports a few modules after the freeze, and the next call
+    freezes them. Every other call sees the few objects a task makes,
+    which is all the daemon's after-task collection walks, and the
+    last round adds nothing to any worker's frozen heap. The driver is
+    never frozen."""
+    from cuckoofilter_spark.sketch.membership import _sharded_build_blobs
+    from cuckoofilter_spark.sketch.udaf import aggregate_sketch
+
+    def record():
+        import gc
+        import os
+
+        return [[os.getpid(), gc.get_freeze_count(), len(gc.get_objects())]]
+
+    class Records:
+        """(pid, frozen, unfrozen) per ``add_many`` call."""
+
+        def __init__(self, recs=()):
+            self.recs = list(recs)
+
+        def add_many(self, keys):
+            self.recs += record()
+
+        def to_bytes(self):
+            return json.dumps(self.recs).encode()
+
+        @staticmethod
+        def from_bytes(b):
+            return Records(json.loads(b))
+
+        @staticmethod
+        def merge(a, b):
+            return Records(a.recs + b.recs)
+
+    def shard(keys):
+        kern = Records()
+        kern.add_many(keys)
+        return kern.to_bytes()
+
+    df = spark.range(0, 4000, numPartitions=8).withColumnRenamed("id", "k")
+    rounds = []
+    for _ in range(3):
+        recs = aggregate_sketch(df, "k", Records, fanout=2).recs
+        blobs = _sharded_build_blobs(df, "k", 16, shard)
+        rounds.append(recs + [r for b in blobs for r in json.loads(b)])
+
+    assert [len(recs) for recs in rounds] == [8 + 16] * 3
+    earlier, busy = set(), []
+    for recs in rounds:
+        for pid, frozen, unfrozen in recs:
+            assert frozen > 10_000, (pid, frozen)
+            if unfrozen >= 5_000:  # a first call imports more after the freeze
+                assert pid not in earlier, (pid, unfrozen)
+                busy.append(pid)
+        earlier |= {pid for pid, _, _ in recs}
+    assert len(busy) == len(set(busy)), busy  # at most a worker's first call
+    frozen_after = [{pid: frozen for pid, frozen, _ in recs} for recs in rounds]
+    for before, after in zip(frozen_after[1:], frozen_after[2:]):
+        grew = {pid: (before[pid], after[pid]) for pid in before.keys() & after.keys()
+                if after[pid] > before[pid]}
+        assert not grew, grew
+    assert gc.get_freeze_count() == 0
