@@ -84,36 +84,16 @@ def test_drop_archive_finders_keeps_sparkfiles_archives(zipmods, unfrozen,
     assert isinstance(sys.path_importer_cache[shipped], zipimport.zipimporter)
 
 
-def test_worker_functions_run_without_spark_archive_finders(spark):
-    """Inside a task, after the library's worker function has started,
-    no finder over a Spark archive (pyspark.zip, py4j, spark-core jar)
-    is left for the next task's cache invalidation to re-read.
-
-    The ``Records`` kernel's ``add_many`` records the finders it sees,
-    then re-creates the top-level ones (a lookup of a missing module
-    scans ``sys.path``), so every later call on the same worker sees
-    them unless the library function dropped them first. A fresh worker may record them once:
-    its first batch imports ``concurrent`` after the drop."""
+def _task_records(spark, record):
+    """Three rounds of a tree build over 8 partitions and a by-key build
+    over 16 shards, with a ``Records`` kernel whose ``add_many`` appends
+    ``record()`` as run in the task. Returns each of the six stages'
+    records."""
     from cuckoofilter_spark.sketch.membership import _sharded_build_blobs
     from cuckoofilter_spark.sketch.udaf import aggregate_sketch
 
-    def record():
-        import importlib.util
-        import os
-        import sys
-        import zipimport
-
-        from pyspark import SparkFiles
-
-        root = SparkFiles._root_directory or "\0"
-        archives = sorted({f.archive for f in list(sys.path_importer_cache.values())
-                           if isinstance(f, zipimport.zipimporter)
-                           and not f.archive.startswith(root)})
-        assert importlib.util.find_spec("_cfs_absent_module") is None
-        return [[os.getpid(), archives]]
-
     class Records:
-        """(pid, Spark archives with a finder) per ``add_many`` call."""
+        """``record()`` per ``add_many`` call."""
 
         def __init__(self, recs=()):
             self.recs = list(recs)
@@ -143,6 +123,36 @@ def test_worker_functions_run_without_spark_archive_finders(spark):
         stages.append(aggregate_sketch(df, "k", Records, fanout=2).recs)
         blobs = _sharded_build_blobs(df, "k", 16, shard)
         stages.append([r for b in blobs for r in json.loads(b)])
+    return stages
+
+
+def test_worker_functions_run_without_spark_archive_finders(spark):
+    """Inside a task, after the library's worker function has started,
+    no finder over a Spark archive (pyspark.zip, py4j, spark-core jar)
+    is left for the next task's cache invalidation to re-read.
+
+    The ``Records`` kernel's ``add_many`` records the finders it sees,
+    then re-creates the top-level ones (a lookup of a missing module
+    scans ``sys.path``), so every later call on the same worker sees
+    them unless the library function dropped them first. A fresh worker may record them once:
+    its first batch imports ``concurrent`` after the drop."""
+
+    def record():
+        import importlib.util
+        import os
+        import sys
+        import zipimport
+
+        from pyspark import SparkFiles
+
+        root = SparkFiles._root_directory or "\0"
+        archives = sorted({f.archive for f in list(sys.path_importer_cache.values())
+                           if isinstance(f, zipimport.zipimporter)
+                           and not f.archive.startswith(root)})
+        assert importlib.util.find_spec("_cfs_absent_module") is None
+        return [[os.getpid(), archives]]
+
+    stages = _task_records(spark, record)
 
     earlier, dirty = set(), []
     for recs in stages:
@@ -171,8 +181,9 @@ def test_prologue_freezes_a_worker_again_only_after_an_import(
     first = gc.get_freeze_count()
     assert first > 1000  # the pytest process's import-time heap
     assert len(gc.get_objects()) < first // 10
+    made = [[i] for i in range(1000)]  # alive at the next call
     worker_prologue()
-    assert gc.get_freeze_count() == first
+    assert gc.get_freeze_count() == first and len(made) == 1000
 
     (tmp_path / "_cfs_new_module.py").write_text("VALUE = {'a': [1]}\n")
     monkeypatch.syspath_prepend(str(tmp_path))
@@ -192,8 +203,6 @@ def test_worker_heap_is_frozen_once_imports_settle(spark):
     which is all the daemon's after-task collection walks, and the
     last round adds nothing to any worker's frozen heap. The driver is
     never frozen."""
-    from cuckoofilter_spark.sketch.membership import _sharded_build_blobs
-    from cuckoofilter_spark.sketch.udaf import aggregate_sketch
 
     def record():
         import gc
@@ -201,37 +210,8 @@ def test_worker_heap_is_frozen_once_imports_settle(spark):
 
         return [[os.getpid(), gc.get_freeze_count(), len(gc.get_objects())]]
 
-    class Records:
-        """(pid, frozen, unfrozen) per ``add_many`` call."""
-
-        def __init__(self, recs=()):
-            self.recs = list(recs)
-
-        def add_many(self, keys):
-            self.recs += record()
-
-        def to_bytes(self):
-            return json.dumps(self.recs).encode()
-
-        @staticmethod
-        def from_bytes(b):
-            return Records(json.loads(b))
-
-        @staticmethod
-        def merge(a, b):
-            return Records(a.recs + b.recs)
-
-    def shard(keys):
-        kern = Records()
-        kern.add_many(keys)
-        return kern.to_bytes()
-
-    df = spark.range(0, 4000, numPartitions=8).withColumnRenamed("id", "k")
-    rounds = []
-    for _ in range(3):
-        recs = aggregate_sketch(df, "k", Records, fanout=2).recs
-        blobs = _sharded_build_blobs(df, "k", 16, shard)
-        rounds.append(recs + [r for b in blobs for r in json.loads(b)])
+    stages = _task_records(spark, record)
+    rounds = [tree + by_key for tree, by_key in zip(stages[::2], stages[1::2])]
 
     assert [len(recs) for recs in rounds] == [8 + 16] * 3
     earlier, busy = set(), []
@@ -243,9 +223,8 @@ def test_worker_heap_is_frozen_once_imports_settle(spark):
                 busy.append(pid)
         earlier |= {pid for pid, _, _ in recs}
     assert len(busy) == len(set(busy)), busy  # at most a worker's first call
-    frozen_after = [{pid: frozen for pid, frozen, _ in recs} for recs in rounds]
-    for before, after in zip(frozen_after[1:], frozen_after[2:]):
-        grew = {pid: (before[pid], after[pid]) for pid in before.keys() & after.keys()
-                if after[pid] > before[pid]}
-        assert not grew, grew
+    before, after = ({pid: frozen for pid, frozen, _ in recs} for recs in rounds[1:])
+    grew = {pid: (before[pid], after[pid]) for pid in before.keys() & after.keys()
+            if after[pid] > before[pid]}
+    assert not grew, grew
     assert gc.get_freeze_count() == 0
